@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_iceberg_demo_spark.registry import Registry
-from ai_iceberg_demo_spark.tables import load_table, persist_once
+from ai_iceberg_demo_spark.tables import load_table, long_metrics, persist_once
 
 REGISTRY = Registry()
 
@@ -4180,17 +4180,9 @@ def pipeline_eval_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     def card(df: DataFrame, family: str, mean_col: str, mean_name: str) -> DataFrame:
         agg = df.agg(
             F.count("*").cast("double").alias("n_pairs"),
-            F.round(F.avg(mean_col) + 0.0, 6).alias("m"),
+            F.round(F.avg(mean_col) + 0.0, 6).alias(mean_name),
         )
-        pairs = F.array(
-            F.struct(F.lit("n_pairs").alias("metric"), F.col("n_pairs").alias("value")),
-            F.struct(F.lit(mean_name).alias("metric"), F.col("m").alias("value")),
-        )
-        return agg.select(F.explode(pairs).alias("_m")).select(
-            F.lit(family).alias("family"),
-            F.col("_m.metric").alias("metric"),
-            F.col("_m.value").alias("value"),
-        )
+        return long_metrics(agg, family, ["n_pairs", mean_name])
 
     out = (
         card(t105_bleu_eval(spark, sf_dir), "bleu", "bleu4", "mean_bleu4")
@@ -4417,6 +4409,9 @@ def t111_self_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     "count-distinct (one doc-keyed shuffle, Spark's two-phase "
     "distinct rewrite) — no joins, no sample, no pair space; the "
     "classic wordcount profile at 100 TB.",
+    # per_doc groups by doc_id while the Spark side computes each row's
+    # ratio map-side: the two agree only because documents.doc_id is
+    # unique (pinned in tests/test_dedup.py)
     oracle="""
         WITH g AS MATERIALIZED (
             SELECT doc_id, n, gram FROM (
@@ -4635,21 +4630,6 @@ def _safety_card_oracle() -> str:
     oracle=_safety_card_oracle(),
 )
 def pipeline_safety_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def unpivot(agg: DataFrame, family: str, cols: list[str]) -> DataFrame:
-        pairs = F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("metric"), F.col(c).cast("double").alias("value")
-                )
-                for c in cols
-            ]
-        )
-        return agg.select(F.explode(pairs).alias("_m")).select(
-            F.lit(family).alias("family"),
-            F.col("_m.metric").alias("metric"),
-            F.col("_m.value").alias("value"),
-        )
-
     q = t2_quality_score(spark, sf_dir).agg(
         F.count("*").cast("double").alias("n_docs"),
         F.round(
@@ -4686,9 +4666,9 @@ def pipeline_safety_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_hits").cast("double").alias("total_hits"),
     )
     out = (
-        unpivot(q, "quality", ["n_docs", "keep_rate"])
-        .unionAll(unpivot(lang, "langid", ["declared_match_rate"]))
-        .unionAll(unpivot(pii, "pii", ["docs_redacted", "total_redactions"]))
-        .unionAll(unpivot(bl, "blocklist", ["drop_rate", "total_hits"]))
+        long_metrics(q, "quality", ["n_docs", "keep_rate"])
+        .unionAll(long_metrics(lang, "langid", ["declared_match_rate"]))
+        .unionAll(long_metrics(pii, "pii", ["docs_redacted", "total_redactions"]))
+        .unionAll(long_metrics(bl, "blocklist", ["drop_rate", "total_hits"]))
     )
     return out.orderBy("family", "metric")

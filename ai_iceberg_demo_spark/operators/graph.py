@@ -1207,14 +1207,15 @@ def _g10_oracle() -> str:
     """k-core peel over d26b's mutual edges — wraps the registered
     d26b SQL (which wraps v18c's) verbatim so the substrate can never
     desync from the graph the dedup/label consumers actually use."""
-    from ai_iceberg_demo_spark.vector.similarity import _d26b_oracle
+    from ai_iceberg_demo_spark.vector.similarity import REGISTRY as SIM
 
+    d26b = SIM.specs["d26b_mutual_knn_capped"].oracle
     rounds = "".join(
         ", " + _kcore_round_sql(f"e{i - 1}", i, _KCORE_K)[9:]
         for i in range(1, _KCORE_ROUNDS + 1)
     )
     return f"""
-        WITH mutual AS MATERIALIZED ({_d26b_oracle()}),
+        WITH mutual AS MATERIALIZED ({d26b}),
         e0 AS MATERIALIZED (
             SELECT vec_a AS src, vec_b AS dst FROM mutual
             UNION ALL
@@ -1245,35 +1246,24 @@ def _g10_oracle() -> str:
     "the first sweep. All-integer arithmetic, so the unroll is "
     "exactly SQL-replayable with NO per-round rounding discipline "
     "(g1's float contrast). Scale: the substrate is v18c's capped "
-    "O(k*N) edge set (persisted once, plan-shared with "
-    "d26b/pipeline_graph_quality); each round is one node-keyed "
-    "count agg + two survivor joins — the survivor list is a "
-    "corpus-derived post-aggregate, so both joins pin shuffle_hash "
-    "(the d13 rule), never broadcast. The oracle wraps d26b's "
-    "registered SQL verbatim.",
+    "O(k*N) edge set (persisted once), reduced to mutual pairs by "
+    "d26b's mutual_pairs; each round is two count windows (the "
+    "degree at each endpoint) + one filter over the bidirected "
+    "edges, whose per-node partitions the occupancy cap bounds. The "
+    "oracle wraps d26b's registered SQL verbatim.",
     oracle=_g10_oracle(),
     bench=True,  # r11: heaviest new plan (8.7 s cold sf0.1 rehearse —
     # the v18c substrate + 3 peel rounds); joins the floor guard the
     # round it ships, per the d9b/pipeline_graph_quality precedent.
 )
 def g10_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ai_iceberg_demo_spark.vector.similarity import knn_graph_capped_det
+    from ai_iceberg_demo_spark.vector.similarity import knn_graph_capped_det, mutual_pairs
 
     emb = load_table(spark, "embeddings", sf_dir)
+    # persisted: the bidirected union below reads the mutual pairs twice
     graph = knn_graph_capped_det(emb, k=3).transform(persist_once)
-    # d26b's r12 spelling: (src, dst) is unique per direction, so
-    # mutuality is COUNT(*)=2 over the unordered pair key — one
-    # map-side-partial aggregation replaces the reversed self-join
-    # and its two merge sorts (hash agg spills sort-based under
-    # pressure, so the t106 OOM-safety argument carries over)
-    mutual = (
-        graph.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") == 2)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    mutual = mutual_pairs(graph).select(
+        F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
     )
     edges = mutual.union(
         mutual.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

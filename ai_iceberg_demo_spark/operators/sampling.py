@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_iceberg_demo_spark.registry import Registry
-from ai_iceberg_demo_spark.tables import load_table, persist_once
+from ai_iceberg_demo_spark.tables import load_table, long_metrics, persist_once
 
 REGISTRY = Registry()
 
@@ -2232,21 +2232,6 @@ def _packing_card_oracle() -> str:
     oracle=_packing_card_oracle(),
 )
 def pipeline_packing_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def unpivot(agg: DataFrame, family: str, cols: list[str]) -> DataFrame:
-        pairs = F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("metric"), F.col(c).cast("double").alias("value")
-                )
-                for c in cols
-            ]
-        )
-        return agg.select(F.explode(pairs).alias("_m")).select(
-            F.lit(family).alias("family"),
-            F.col("_m.metric").alias("metric"),
-            F.col("_m.value").alias("value"),
-        )
-
     over = u9_sequence_packing(spark, sf_dir).agg(
         F.count("*").cast("double").alias("n_docs"),
         (F.max("bin_id") + 1).cast("double").alias("n_bins"),
@@ -2301,8 +2286,18 @@ def pipeline_packing_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("boundary_crossers"),
     ).crossJoin(F.broadcast(adj))
     out = (
-        unpivot(over, "overflow", ["n_docs", "n_bins", "boundary_crossers", "total_tokens"])
-        .unionAll(unpivot(exact, "exact_split", ["n_docs", "n_bins", "n_segments", "split_docs"]))
-        .unionAll(unpivot(inc, "incontext", ["n_bins", "boundary_crossers", "same_cell_adjacency"]))
+        long_metrics(
+            over, "overflow", ["n_docs", "n_bins", "boundary_crossers", "total_tokens"]
+        )
+        .unionAll(
+            long_metrics(
+                exact, "exact_split", ["n_docs", "n_bins", "n_segments", "split_docs"]
+            )
+        )
+        .unionAll(
+            long_metrics(
+                inc, "incontext", ["n_bins", "boundary_crossers", "same_cell_adjacency"]
+            )
+        )
     )
     return out.orderBy("family", "metric")

@@ -47,7 +47,7 @@ from ai_iceberg_demo_spark.operators.sampling import (
     pack_positions,
 )
 from ai_iceberg_demo_spark.registry import Registry
-from ai_iceberg_demo_spark.tables import load_table, persist_once
+from ai_iceberg_demo_spark.tables import load_table, long_metrics, persist_once
 
 REGISTRY = Registry()
 
@@ -1224,30 +1224,17 @@ def pipeline_model_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         t65_roc_auc,
     )
 
-    def unpivot(df: DataFrame, family: str, cols: list[str]) -> DataFrame:
-        pairs = F.array(
-            *[
-                F.struct(F.lit(c).alias("metric"), F.col(c).alias("value"))
-                for c in cols
-            ]
-        )
-        return df.select(F.explode(pairs).alias("_m")).select(
-            F.lit(family).alias("family"),
-            F.col("_m.metric").alias("metric"),
-            F.col("_m.value").alias("value"),
-        )
-
-    t47 = unpivot(
+    t47 = long_metrics(
         t47_classifier_eval(spark, sf_dir),
         "threshold",
         ["precision", "recall", "f1", "accuracy"],
     )
-    t64 = unpivot(
+    t64 = long_metrics(
         t64_calibration_bins(spark, sf_dir).filter(F.col("bin") == 0),
         "calibration",
         ["ece", "brier"],
     )
-    t65 = unpivot(t65_roc_auc(spark, sf_dir), "ranking", ["auc", "gini"])
+    t65 = long_metrics(t65_roc_auc(spark, sf_dir), "ranking", ["auc", "gini"])
     return t47.unionByName(t64).unionByName(t65).orderBy("family", "metric")
 
 
@@ -1322,35 +1309,19 @@ def pipeline_experiment(spark: SparkSession, sf_dir: str) -> DataFrame:
         t80_power_analysis,
     )
 
-    def unpivot(df: DataFrame, family: str, cols: list[str]) -> DataFrame:
-        pairs = F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("metric"),
-                    F.col(c).cast("double").alias("value"),
-                )
-                for c in cols
-            ]
-        )
-        return df.select(F.explode(pairs).alias("_m")).select(
-            F.lit(family).alias("family"),
-            F.col("_m.metric").alias("metric"),
-            F.col("_m.value").alias("value"),
-        )
-
-    design = unpivot(
+    design = long_metrics(
         t80_power_analysis(spark, sf_dir).filter(
             F.col("event_type") == "purchase"
         ),
         "design",
         ["n_per_arm_current", "n_per_arm_required", "adequately_powered"],
     )
-    readout = unpivot(
+    readout = long_metrics(
         t27_ab_test(spark, sf_dir),
         "readout",
         ["rate_a", "rate_b", "z_score", "significant"],
     )
-    causal = unpivot(
+    causal = long_metrics(
         t74_diff_in_diff(spark, sf_dir),
         "causal",
         ["did_estimate", "did_se", "planted_effect", "recovered"],
@@ -1421,22 +1392,6 @@ def pipeline_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("double").alias("n_test_days"),
         F.first(F.round(F.col("hi") - F.col("lo"), 4)).alias("interval_width"),
     )
-    unc_long = unc.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("metric"), F.col(c).cast("double").alias("value")
-                    )
-                    for c in ("realized_coverage", "n_test_days", "interval_width")
-                ]
-            )
-        ).alias("_m")
-    ).select(
-        F.lit("uncertainty").alias("family"),
-        F.col("_m.metric").alias("metric"),
-        F.col("_m.value").alias("value"),
-    )
     t79 = t79_ols_forecast(spark, sf_dir).select(
         "mae_ols",
         "mae_naive",
@@ -1444,27 +1399,11 @@ def pipeline_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         "beta_lag1",
         "beta_ma7",
     )
-    model_long = t79.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("metric"), F.col(c).cast("double").alias("value")
-                    )
-                    for c in (
-                        "mae_ols",
-                        "mae_naive",
-                        "beats_naive",
-                        "beta_lag1",
-                        "beta_ma7",
-                    )
-                ]
-            )
-        ).alias("_m")
-    ).select(
-        F.lit("model").alias("family"),
-        F.col("_m.metric").alias("metric"),
-        F.col("_m.value").alias("value"),
+    unc_long = long_metrics(
+        unc, "uncertainty", ["realized_coverage", "n_test_days", "interval_width"]
+    )
+    model_long = long_metrics(
+        t79, "model", ["mae_ols", "mae_naive", "beats_naive", "beta_lag1", "beta_ma7"]
     )
     return unc_long.unionByName(model_long).orderBy("family", "metric")
 

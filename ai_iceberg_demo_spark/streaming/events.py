@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_iceberg_demo_spark.registry import Registry
-from ai_iceberg_demo_spark.tables import load_table, persist_once
+from ai_iceberg_demo_spark.tables import load_table, long_metrics, persist_once
 
 REGISTRY = Registry()
 
@@ -4568,21 +4568,6 @@ def pipeline_drift_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_iceberg_demo_spark.functions.text import t70_js_divergence
     from ai_iceberg_demo_spark.vector.clustering import v16_embedding_drift
 
-    def unpivot(agg: DataFrame, family: str, cols: list[str]) -> DataFrame:
-        pairs = F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("metric"), F.col(c).cast("double").alias("value")
-                )
-                for c in cols
-            ]
-        )
-        return agg.select(F.explode(pairs).alias("_m")).select(
-            F.lit(family).alias("family"),
-            F.col("_m.metric").alias("metric"),
-            F.col("_m.value").alias("value"),
-        )
-
     psi = t84_psi_drift(spark, sf_dir).agg(
         F.count("*").cast("double").alias("n_types"),
         F.sum(F.when(F.col("verdict") == "act", 1).otherwise(0))
@@ -4607,9 +4592,9 @@ def pipeline_drift_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.max(F.abs(F.col("z"))) + 0.0, 6).alias("max_abs_z"),
     )
     out = (
-        unpivot(psi, "psi", ["n_types", "n_act", "max_psi"])
-        .unionAll(unpivot(jsd, "jsd", ["n_pairs", "max_jsd_normalized"]))
-        .unionAll(unpivot(ks, "ks", ["n_types", "n_drifted", "max_ks_d"]))
-        .unionAll(unpivot(emb, "embedding", ["n_dims", "n_drifted", "max_abs_z"]))
+        long_metrics(psi, "psi", ["n_types", "n_act", "max_psi"])
+        .unionAll(long_metrics(jsd, "jsd", ["n_pairs", "max_jsd_normalized"]))
+        .unionAll(long_metrics(ks, "ks", ["n_types", "n_drifted", "max_ks_d"]))
+        .unionAll(long_metrics(emb, "embedding", ["n_dims", "n_drifted", "max_abs_z"]))
     )
     return out.orderBy("family", "metric")

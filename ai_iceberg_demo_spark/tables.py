@@ -55,6 +55,18 @@ def persist_once(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
         return df
     return df.persist(level) if level is not None else df.persist()
 
+
+def long_metrics(df: DataFrame, family: str, cols: list[str]) -> DataFrame:
+    """(family, metric, value) rows, one per column in ``cols`` per row
+    of ``df``, value cast to double — the long format every governance
+    card publishes. One ``stack`` expression string, so building it
+    costs a handful of py4j round trips instead of ~100 column calls."""
+    pairs = ", ".join(f"'{c}', CAST(`{c}` AS DOUBLE)" for c in cols)
+    return df.selectExpr(
+        f"'{family}' AS family", f"stack({len(cols)}, {pairs}) AS (metric, value)"
+    )
+
+
 # Small dimension tables that should always be broadcast in joins.
 BROADCAST_TABLES = {"region", "nation", "supplier", "part", "customer"}
 

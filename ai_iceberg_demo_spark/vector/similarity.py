@@ -26,7 +26,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from ai_iceberg_demo_spark.registry import Registry
-from ai_iceberg_demo_spark.tables import fan_out_small_input, load_table, persist_once
+from ai_iceberg_demo_spark.tables import (
+    fan_out_small_input,
+    load_table,
+    long_metrics,
+    persist_once,
+)
 
 REGISTRY = Registry()
 
@@ -1830,19 +1835,37 @@ def v28_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def v18b_knn_graph_det(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, "embeddings", sf_dir)
+    return knn_graph_det(emb, k=3).orderBy("src", F.desc("score"), "dst")
+
+
+def _rerank_topk(
+    keys: DataFrame, emb: DataFrame, key_cols: list[str], k: int
+) -> DataFrame:
+    """(src, dst, score): exact-rerank top-k among bucket-collision
+    candidates — the one tail of every deterministic k-NN graph. Two
+    vectors are candidates iff their ``keys`` rows (vec_id, *key_cols)
+    agree on every key column in some table. Every join here is corpus
+    x corpus — the keyed self-join and both embedding payload joins
+    carry pinned shuffle_hash hints (the d13 rule).
+
+    CONTRACT: the returned edge set is UNIQUE per direction — at most
+    one (src, dst) row — because candidates are .distinct()ed before
+    the rank window and the window emits each (src, dst) once.
+    ``mutual_pairs`` relies on this: it detects reciprocity as
+    COUNT(*) = 2 over the unordered pair key, which duplicate
+    same-direction edges would fake (pinned in tests/test_similarity.py)."""
     from pyspark.sql import Window as W
 
-    emb = load_table(spark, "embeddings", sf_dir)
-    # the signature table meets itself in the bucket self-join —
-    # persist so the md5 signature build runs once, not per side
-    sigs = _md5_sig_table(emb).transform(persist_once)
+    # the key table meets itself in the bucket self-join — persist so
+    # the signature build runs once, not per side
+    keyed = keys.transform(persist_once)
     cand = (
-        sigs.alias("a")
+        keyed.alias("a")
         .join(
-            sigs.alias("b"),
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.b") == F.col("b.b"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
+            keyed.alias("b").hint("shuffle_hash"),
+            [F.col(f"a.{c}") == F.col(f"b.{c}") for c in key_cols]
+            + [F.col("a.vec_id") != F.col("b.vec_id")],
         )
         .select(F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst"))
         .distinct()
@@ -1850,8 +1873,8 @@ def v18b_knn_graph_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     ea = emb.select(F.col("vec_id").alias("src"), F.col("embedding").alias("va"))
     eb = emb.select(F.col("vec_id").alias("dst"), F.col("embedding").alias("vb"))
     scored = (
-        cand.join(ea, "src")
-        .join(eb, "dst")
+        cand.join(ea.hint("shuffle_hash"), "src")
+        .join(eb.hint("shuffle_hash"), "dst")
         .select(
             "src",
             "dst",
@@ -1861,10 +1884,15 @@ def v18b_knn_graph_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("src").orderBy(F.desc("score"), F.asc("dst"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
+        .filter(F.col("rn") <= k)
         .select("src", "dst", "score")
-        .orderBy("src", F.desc("score"), "dst")
     )
+
+
+def knn_graph_det(emb: DataFrame, k: int = 3) -> DataFrame:
+    """v18b's core: the UNCAPPED exactness anchor — exact-rerank top-k
+    among collisions in the raw md5 (t, b) buckets."""
+    return _rerank_topk(_md5_sig_table(emb), emb, ["t", "b"], k)
 
 
 # ---------------------------------------------------------------------------
@@ -2031,50 +2059,8 @@ def _md5_capped_keys(emb: DataFrame) -> DataFrame:
 
 def knn_graph_capped_det(emb: DataFrame, k: int = 3) -> DataFrame:
     """v18c's core: exact-rerank top-k among CAPPED-bucket collision
-    candidates. Every join here is corpus x corpus — the keyed
-    self-join and both embedding payload joins carry pinned
-    shuffle_hash hints (the d13 rule).
-
-    CONTRACT (r12 ADVICE): the returned edge set is UNIQUE per
-    direction — at most one (src, dst) row — because candidates are
-    .distinct()ed before the rank window and the window emits each
-    (src, dst) once. BOTH mutual-edge consumers (d26b and g10) rely on
-    this: they detect reciprocity as COUNT(*) = 2 over the unordered
-    pair key, which duplicate same-direction edges would fake. If
-    candidate generation ever stops deduplicating, restore a distinct
-    here or revert those consumers to the reversed self-join."""
-    from pyspark.sql import Window as W
-
-    keyed = _md5_capped_keys(emb).transform(persist_once)
-    cand = (
-        keyed.alias("a")
-        .join(
-            keyed.alias("b").hint("shuffle_hash"),
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.sub") == F.col("b.sub"))
-            & (F.col("a.salt") == F.col("b.salt"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst"))
-        .distinct()
-    )
-    ea = emb.select(F.col("vec_id").alias("src"), F.col("embedding").alias("va"))
-    eb = emb.select(F.col("vec_id").alias("dst"), F.col("embedding").alias("vb"))
-    scored = (
-        cand.join(ea.hint("shuffle_hash"), "src")
-        .join(eb.hint("shuffle_hash"), "dst")
-        .select(
-            "src",
-            "dst",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("score"),
-        )
-    )
-    w = W.partitionBy("src").orderBy(F.desc("score"), F.asc("dst"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("src", "dst", "score")
-    )
+    candidates — v18b's tail over the (t, sub, salt) capped keys."""
+    return _rerank_topk(_md5_capped_keys(emb), emb, ["t", "sub", "salt"], k)
 
 
 @REGISTRY.register(
@@ -2099,7 +2085,8 @@ def knn_graph_capped_det(emb: DataFrame, k: int = 3) -> DataFrame:
     "<=2048 rows at 4+4 bits) so their broadcasts hold at 100 TB; "
     "the keyed self-join and payload joins carry pinned shuffle_hash "
     "hints (the d13 rule). v18b (uncapped anchor) stays registered "
-    "and untouched; agreement vs it is pinned in tests/test_r10_ops.py.",
+    "and runs the same rerank tail (_rerank_topk) over its raw (t, b) "
+    "keys; agreement vs it is pinned in tests/test_r10_ops.py.",
     oracle=_v18c_graph_sql() + " ORDER BY src, score DESC, dst",
 )
 def v18c_knn_graph_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2974,13 +2961,33 @@ def v32_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _d26_oracle() -> str:
-    """Wrap v18b's exact oracle: mutual pairs are edges present in
-    BOTH directions of the same graph — the composition reuses the
-    registered SQL verbatim (pipeline_model_eval's discipline)."""
-    v18b = REGISTRY.specs["v18b_knn_graph_det"].oracle
+def mutual_pairs(graph: DataFrame) -> DataFrame:
+    """(vec_a, vec_b, score): edges of a k-NN ``graph`` present in BOTH
+    directions, deduped to a<b, scored by the forward edge. (src, dst)
+    is unique per direction in every ``_rerank_topk`` graph, so
+    mutuality is COUNT(*) = 2 over the unordered pair key — one
+    map-side-partial aggregation of the O(k*N) edges, where a reversed
+    self-join would sort both sides (hash agg spills sort-based under
+    pressure, so it is as OOM-safe as the merge join)."""
+    und = graph.select(
+        F.least("src", "dst").alias("vec_a"),
+        F.greatest("src", "dst").alias("vec_b"),
+        F.when(F.col("src") < F.col("dst"), F.col("score")).alias("s_fwd"),
+    )
+    return (
+        und.groupBy("vec_a", "vec_b")
+        .agg(F.count("*").alias("_n"), F.max("s_fwd").alias("score"))
+        .filter(F.col("_n") == 2)
+        .select("vec_a", "vec_b", "score")
+    )
+
+
+def _mutual_oracle(graph_query: str) -> str:
+    """Mutual pairs over a registered graph query — wraps its SQL
+    verbatim so the two can never desync."""
+    graph = REGISTRY.specs[graph_query].oracle
     return f"""
-        WITH graph AS ({v18b})
+        WITH graph AS ({graph})
         SELECT a.src AS vec_a, a.dst AS vec_b, a.score
         FROM graph a JOIN graph b
           ON b.src = a.dst AND b.dst = a.src
@@ -3001,45 +3008,14 @@ def _d26_oracle() -> str:
     "neighbors are the high-precision candidate tier SemDeDup-style "
     "pipelines verify first — asymmetric edges are mostly hub "
     "artifacts. The oracle WRAPS v18b's registered SQL verbatim so "
-    "the two can never desync; the Spark side is the graph "
-    "self-joined on reversed (src,dst) — O(k·N) edge rows keyed by "
-    "vec id, never the corpus.",
-    oracle=_d26_oracle(),
+    "the two can never desync; the Spark side reduces the O(k·N) "
+    "edge set over the unordered pair key (mutual_pairs, shared "
+    "with d26b and g10) — never the corpus.",
+    oracle=_mutual_oracle("v18b_knn_graph_det"),
 )
 def d26_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the graph meets its own reversal — persist or the exact kNN
-    # build (the expensive corpus×corpus part) executes twice (v32's
-    # fan-out lesson; measured 8 parquet scans → 4)
-    graph = (
-        v18b_knn_graph_det(spark, sf_dir)
-        .select("src", "dst", "score")
-        .transform(persist_once)
-    )
-    rev = graph.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst"), F.lit(1).alias("_r")
-    )
-    return (
-        graph.join(rev, ["src", "dst"])
-        .filter(F.col("src") < F.col("dst"))
-        .select(
-            F.col("src").alias("vec_a"), F.col("dst").alias("vec_b"), "score"
-        )
-        .orderBy("vec_a", "vec_b")
-    )
-
-
-def _d26b_oracle() -> str:
-    """d26's mutual-pair logic over the CAPPED graph — wraps v18c's
-    registered SQL verbatim so the two can never desync."""
-    v18c = REGISTRY.specs["v18c_knn_graph_capped"].oracle
-    return f"""
-        WITH graph AS ({v18c})
-        SELECT a.src AS vec_a, a.dst AS vec_b, a.score
-        FROM graph a JOIN graph b
-          ON b.src = a.dst AND b.dst = a.src
-        WHERE a.src < a.dst
-        ORDER BY a.src, a.dst
-    """
+    emb = load_table(spark, "embeddings", sf_dir)
+    return mutual_pairs(knn_graph_det(emb, k=3)).orderBy("vec_a", "vec_b")
 
 
 @REGISTRY.register(
@@ -3054,36 +3030,15 @@ def _d26b_oracle() -> str:
     "reciprocity semantics as d26 (hub artifacts lose their one-way "
     "edges); the substrate is the capped graph, so the whole plan is "
     "linear at scale AND hash-oracled. The oracle wraps v18c's "
-    "registered SQL verbatim; the Spark side (r12) reduces the "
-    "persisted O(k*N) edge set over the unordered pair key — "
-    "mutuality is COUNT(*)=2 inside one aggregation (edges are "
-    "unique per direction), so the former reversed self-join and "
-    "its two merge sorts are gone; never the corpus.",
-    oracle=_d26b_oracle(),
+    "registered SQL verbatim; the Spark side is d26's mutual_pairs "
+    "over the capped graph — mutuality is COUNT(*)=2 inside one "
+    "aggregation of the O(k*N) edges (unique per direction), never "
+    "the corpus.",
+    oracle=_mutual_oracle("v18c_knn_graph_capped"),
 )
 def d26b_mutual_knn_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12 optimization (guide §2.4): (src, dst) is unique in the graph
-    # (per-src top-k over distinct dsts), so "edge present in BOTH
-    # directions" is a COUNT over the unordered pair key — one
-    # map-side-partial aggregation of the O(k*N) edges replaces the
-    # reversed self-join (which sorted BOTH sides under its merge pin).
-    # The forward (a<b) edge's score rides along as the only non-null
-    # s_fwd. Hash agg spills sort-based under pressure, so the merge
-    # pin's OOM-safety argument carries over with one sort fewer.
     emb = load_table(spark, "embeddings", sf_dir)
-    graph = knn_graph_capped_det(emb, k=3).transform(persist_once)
-    und = graph.select(
-        F.least("src", "dst").alias("vec_a"),
-        F.greatest("src", "dst").alias("vec_b"),
-        F.when(F.col("src") < F.col("dst"), F.col("score")).alias("s_fwd"),
-    )
-    return (
-        und.groupBy("vec_a", "vec_b")
-        .agg(F.count("*").alias("_n"), F.max("s_fwd").alias("score"))
-        .filter(F.col("_n") == 2)
-        .select("vec_a", "vec_b", "score")
-        .orderBy("vec_a", "vec_b")
-    )
+    return mutual_pairs(knn_graph_capped_det(emb, k=3)).orderBy("vec_a", "vec_b")
 
 
 # ---------------------------------------------------------------------------
@@ -3091,10 +3046,57 @@ def d26b_mutual_knn_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _v33_oracle() -> str:
-    v18b = REGISTRY.specs["v18b_knn_graph_det"].oracle
+def neighbor_votes(graph: DataFrame, labels: DataFrame) -> DataFrame:
+    """(src, nbr_label, v): how many of each src's graph neighbors carry
+    each label — one (src, label)-keyed partial agg over the O(k*N)
+    edges with the (vec_id, label) table joined by vec id."""
+    return (
+        graph.select("src", "dst")
+        .join(labels.withColumnRenamed("vec_id", "dst"), "dst")
+        .groupBy("src", F.col("label").alias("nbr_label"))
+        .agg(F.count("*").alias("v"))
+    )
+
+
+def majority_label(votes: DataFrame) -> DataFrame:
+    """(src, neighbor_label, n_agree, n_nbrs): each src's most-voted
+    neighbor label (ties to the lowest label), its vote count and the
+    src's total neighbor count."""
+    from pyspark.sql import Window as W
+
+    wr = W.partitionBy("src").orderBy(F.desc("v"), F.asc("nbr_label"))
+    return (
+        votes.withColumn("rn", F.row_number().over(wr))
+        .withColumn("n_nbrs", F.sum("v").over(W.partitionBy("src")))
+        .filter(F.col("rn") == 1)
+        .select(
+            "src",
+            F.col("nbr_label").alias("neighbor_label"),
+            F.col("v").alias("n_agree"),
+            "n_nbrs",
+        )
+    )
+
+
+def _class_accuracy(maj: DataFrame, labels: DataFrame) -> DataFrame:
+    """(label, n, knn_accuracy): per true class, the share of vectors
+    whose neighbor-majority label is their own."""
+    scored = maj.join(labels.withColumnRenamed("vec_id", "src"), "src").select(
+        F.col("label").alias("true_label"),
+        F.when(F.col("neighbor_label") == F.col("label"), 1.0)
+        .otherwise(0.0)
+        .alias("hit"),
+    )
+    return scored.groupBy(F.col("true_label").cast("int").alias("label")).agg(
+        F.count("*").cast("bigint").alias("n"),
+        F.round(F.avg("hit"), 6).alias("knn_accuracy"),
+    )
+
+
+def _knn_classifier_oracle(graph_query: str) -> str:
+    graph = REGISTRY.specs[graph_query].oracle
     return f"""
-        WITH graph AS ({v18b}), votes AS (
+        WITH graph AS ({graph}), votes AS (
             SELECT g.src, l.label AS nbr_label, COUNT(*) AS v
             FROM graph g JOIN embeddings l ON l.vec_id = g.dst
             GROUP BY g.src, l.label
@@ -3133,83 +3135,13 @@ def _v33_oracle() -> str:
     "is where that shows. The oracle wraps v18b's registered SQL "
     "verbatim; voting is one (src, label)-keyed partial agg over "
     "O(k·N) edges with the label table joined by vec id.",
-    oracle=_v33_oracle(),
+    oracle=_knn_classifier_oracle("v18b_knn_graph_det"),
 )
 def v33_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, "embeddings", sf_dir)
-    graph = v18b_knn_graph_det(spark, sf_dir).select("src", "dst")
     labels = emb.select("vec_id", "label")
-    votes = (
-        graph.join(labels.withColumnRenamed("vec_id", "dst"), "dst")
-        .groupBy("src", F.col("label").alias("nbr_label"))
-        .agg(F.count("*").alias("v"))
-    )
-    w = W.partitionBy("src").orderBy(F.desc("v"), F.asc("nbr_label"))
-    pred = (
-        votes.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("src", F.col("nbr_label").alias("pred_label"))
-    )
-    scored = pred.join(
-        labels.withColumnRenamed("vec_id", "src"), "src"
-    ).select(
-        F.col("label").alias("true_label"),
-        F.when(F.col("pred_label") == F.col("label"), 1.0)
-        .otherwise(0.0)
-        .alias("hit"),
-    )
-    return (
-        scored.groupBy(F.col("true_label").cast("int").alias("label"))
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.round(F.avg("hit"), 6).alias("knn_accuracy"),
-        )
-        .orderBy("label")
-    )
-
-
-def _capped_votes(emb: DataFrame) -> DataFrame:
-    """(src, nbr_label, v) neighbor-label vote counts over the capped
-    k-NN graph — the shared tail of v33b (classifier readout) and v24c
-    (label-noise flags). One spelling so the two consumers' plans are
-    canonically identical and pipeline_graph_quality's persist is hit
-    by both."""
-    graph = knn_graph_capped_det(emb, k=3).select("src", "dst")
-    labels = emb.select("vec_id", "label")
-    return (
-        graph.join(labels.withColumnRenamed("vec_id", "dst"), "dst")
-        .groupBy("src", F.col("label").alias("nbr_label"))
-        .agg(F.count("*").alias("v"))
-    )
-
-
-def _v33b_oracle() -> str:
-    v18c = REGISTRY.specs["v18c_knn_graph_capped"].oracle
-    return f"""
-        WITH graph AS ({v18c}), votes AS (
-            SELECT g.src, l.label AS nbr_label, COUNT(*) AS v
-            FROM graph g JOIN embeddings l ON l.vec_id = g.dst
-            GROUP BY g.src, l.label
-        ), pred AS (
-            SELECT src, nbr_label AS pred_label FROM (
-                SELECT src, nbr_label,
-                       ROW_NUMBER() OVER (PARTITION BY src
-                                          ORDER BY v DESC, nbr_label) AS rn
-                FROM votes) WHERE rn = 1
-        ), scored AS (
-            SELECT e.label AS true_label,
-                   CASE WHEN p.pred_label = e.label THEN 1.0 ELSE 0.0 END
-                       AS hit
-            FROM pred p JOIN embeddings e ON e.vec_id = p.src
-        )
-        SELECT CAST(true_label AS INT) AS label,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               ROUND(AVG(hit), 6) AS knn_accuracy
-        FROM scored GROUP BY true_label
-        ORDER BY label
-    """
+    votes = neighbor_votes(knn_graph_det(emb, k=3), labels)
+    return _class_accuracy(majority_label(votes), labels).orderBy("label")
 
 
 @REGISTRY.register(
@@ -3224,35 +3156,32 @@ def _v33b_oracle() -> str:
     "label), accuracy per class. Identical voting semantics to v33; "
     "the oracle wraps v18c's registered SQL verbatim. Voting is one "
     "(src,label)-keyed partial agg over O(k*N) edges.",
-    oracle=_v33b_oracle(),
+    oracle=_knn_classifier_oracle("v18c_knn_graph_capped"),
 )
 def v33b_knn_classifier_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, "embeddings", sf_dir)
-    # r12: the votes frame is persisted with v24c's EXACT spelling
-    # (_capped_votes) — inside pipeline_graph_quality the two consumers
-    # then share one plan-identical cache instead of each re-running
-    # the graph⋈labels join + (src, label) agg per timed run
-    votes = _capped_votes(emb).transform(persist_once)
     labels = emb.select("vec_id", "label")
-    w = W.partitionBy("src").orderBy(F.desc("v"), F.asc("nbr_label"))
-    pred = (
-        votes.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("src", F.col("nbr_label").alias("pred_label"))
-    )
-    scored = pred.join(labels.withColumnRenamed("vec_id", "src"), "src").select(
-        F.col("label").alias("true_label"),
-        F.when(F.col("pred_label") == F.col("label"), 1.0).otherwise(0.0).alias("hit"),
-    )
-    return (
-        scored.groupBy(F.col("true_label").cast("int").alias("label"))
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.round(F.avg("hit"), 6).alias("knn_accuracy"),
+    votes = neighbor_votes(knn_graph_capped_det(emb, k=3), labels)
+    return _class_accuracy(majority_label(votes), labels).orderBy("label")
+
+
+def _noise_verdicts(maj: DataFrame, labels: DataFrame) -> DataFrame:
+    """v24c's per-vector audit row: own label, neighbor majority label,
+    agreement and neighbor counts, and the flagged/ok verdict (flagged
+    = 3 unanimous neighbors, all differing from the own label)."""
+    own = labels.select(F.col("vec_id").alias("src"), F.col("label").alias("own"))
+    return maj.join(own, "src").select(
+        "src",
+        F.col("own").cast("int").alias("own_label"),
+        F.col("neighbor_label").cast("int").alias("neighbor_label"),
+        F.col("n_agree").cast("int").alias("n_agree"),
+        F.col("n_nbrs").cast("int").alias("n_neighbors"),
+        F.when(
+            (F.col("n_agree") == 3) & (F.col("neighbor_label") != F.col("own")),
+            F.lit("flagged"),
         )
-        .orderBy("label")
+        .otherwise(F.lit("ok"))
+        .alias("verdict"),
     )
 
 
@@ -3302,45 +3231,10 @@ def _v24c_oracle() -> str:
     oracle=_v24c_oracle(),
 )
 def v24c_label_noise_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, "embeddings", sf_dir)
-    # r12: same persisted votes spelling as v33b (_capped_votes) — in
-    # the graph card the graph⋈labels join + (src, label) agg runs
-    # once for both consumers instead of per family per timed run
-    votes = _capped_votes(emb).transform(persist_once)
     labels = emb.select("vec_id", "label")
-    wr = W.partitionBy("src").orderBy(F.desc("v"), F.asc("nbr_label"))
-    ws = W.partitionBy("src")
-    maj = (
-        votes.withColumn("rn", F.row_number().over(wr))
-        .withColumn("n_nbrs", F.sum("v").over(ws))
-        .filter(F.col("rn") == 1)
-        .select(
-            "src",
-            F.col("nbr_label").alias("neighbor_label"),
-            F.col("v").alias("n_agree"),
-            "n_nbrs",
-        )
-    )
-    own = labels.select(F.col("vec_id").alias("src"), F.col("label").alias("own"))
-    return (
-        maj.join(own, "src")
-        .select(
-            "src",
-            F.col("own").cast("int").alias("own_label"),
-            F.col("neighbor_label").cast("int").alias("neighbor_label"),
-            F.col("n_agree").cast("int").alias("n_agree"),
-            F.col("n_nbrs").cast("int").alias("n_neighbors"),
-            F.when(
-                (F.col("n_agree") == 3) & (F.col("neighbor_label") != F.col("own")),
-                F.lit("flagged"),
-            )
-            .otherwise(F.lit("ok"))
-            .alias("verdict"),
-        )
-        .orderBy("src")
-    )
+    votes = neighbor_votes(knn_graph_capped_det(emb, k=3), labels)
+    return _noise_verdicts(majority_label(votes), labels).orderBy("src")
 
 
 def _graph_quality_oracle() -> str:
@@ -3399,37 +3293,29 @@ def _graph_quality_oracle() -> str:
     "a curation pipeline publishes when the graph index is rebuilt, "
     "before dedup/labeling consumers trust it. The oracle REUSES the "
     "four parts' exact oracle strings as subqueries so the card can "
-    "never drift from its parts; the Spark side calls the registered "
-    "operators — their shared signature substrate is persisted once "
-    "(persist_once's plan-identical cache), so the expensive keying "
-    "work runs once and only the O(k*N) graph tails re-execute per "
-    "family.",
+    "never drift from its parts; the Spark side builds the capped "
+    "graph and its neighbor votes ONCE, persists both, and passes "
+    "them to the same builders the parts use (mutual_pairs, "
+    "majority_label and the v33b/v24c tails), so the expensive keying "
+    "work runs once and each family is an O(k*N) tail over a "
+    "persisted frame.",
     oracle=_graph_quality_oracle(),
     bench=True,  # r11: heaviest registered plan (10.8 s sf0.1) — the
     # composed 100 TB graph-governance path joins the floor guard per
     # the r10 verdict's marching order #3.
 )
 def pipeline_graph_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def unpivot(df: DataFrame, family: str, cols: list[str]) -> DataFrame:
-        pairs = F.array(
-            *[
-                F.struct(F.lit(c).alias("metric"), F.col(c).cast("double").alias("value"))
-                for c in cols
-            ]
-        )
-        return df.select(F.explode(pairs).alias("_m")).select(
-            F.lit(family).alias("family"),
-            F.col("_m.metric").alias("metric"),
-            F.col("_m.value").alias("value"),
-        )
-
-    graph = v18c_knn_graph_capped(spark, sf_dir).transform(persist_once)
+    emb = load_table(spark, "embeddings", sf_dir)
+    labels = emb.select("vec_id", "label")
+    graph = knn_graph_capped_det(emb, k=3).transform(persist_once)
+    # the classification and label-QA families both read the votes
+    maj = majority_label(neighbor_votes(graph, labels).transform(persist_once))
     sub = graph.agg(
         F.count("*").cast("double").alias("n_edges"),
         F.round(F.avg("score"), 6).alias("avg_score"),
-    ).transform(persist_once)  # feeds the substrate family AND mutual_rate
+    )
     mut = (
-        d26b_mutual_knn_capped(spark, sf_dir)
+        mutual_pairs(graph)
         .agg(F.count("*").cast("double").alias("n_mutual_pairs"))
         .crossJoin(F.broadcast(sub.select("n_edges")))
         .select(
@@ -3439,12 +3325,12 @@ def pipeline_graph_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    cls = v33b_knn_classifier_capped(spark, sf_dir).agg(
+    cls = _class_accuracy(maj, labels).agg(
         F.round(
             F.sum(F.col("n") * F.col("knn_accuracy")) / F.sum("n"), 6
         ).alias("knn_accuracy_overall")
     )
-    qa = v24c_label_noise_capped(spark, sf_dir).agg(
+    qa = _noise_verdicts(maj, labels).agg(
         F.sum(F.when(F.col("verdict") == "flagged", 1).otherwise(0))
         .cast("double")
         .alias("n_flagged"),
@@ -3456,10 +3342,10 @@ def pipeline_graph_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.avg("n_agree"), 6).alias("avg_n_agree"),
     )
     return (
-        unpivot(sub, "substrate", ["n_edges", "avg_score"])
-        .unionByName(unpivot(mut, "precision_tier", ["n_mutual_pairs", "mutual_rate"]))
-        .unionByName(unpivot(cls, "classification", ["knn_accuracy_overall"]))
-        .unionByName(unpivot(qa, "label_qa", ["n_flagged", "flag_rate", "avg_n_agree"]))
+        long_metrics(sub, "substrate", ["n_edges", "avg_score"])
+        .unionByName(long_metrics(mut, "precision_tier", ["n_mutual_pairs", "mutual_rate"]))
+        .unionByName(long_metrics(cls, "classification", ["knn_accuracy_overall"]))
+        .unionByName(long_metrics(qa, "label_qa", ["n_flagged", "flag_rate", "avg_n_agree"]))
         .orderBy("family", "metric")
     )
 

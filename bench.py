@@ -23,6 +23,7 @@ REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -46,6 +47,47 @@ def read_loadavg() -> list[float]:
         return []
 
 
+def time_query(spark, spec, sf_dir: str, runs: int) -> float:
+    """Best-of-``runs`` seconds for one registered query, fully
+    materialized through the noop sink — the one timing loop bench.py,
+    tools/time_queries.py and the sweep's floor guard share.
+
+    Steady-state timing: ONE UNTIMED WARM RUN, then best of N timed
+    runs. The warm run absorbs per-plan one-time costs — whole-stage-
+    codegen JIT, broadcast thread-pool spin-up, shuffle service init
+    for the widest pipelines — that a long-lived cluster pays once but
+    that best-of-2 alone couldn't amortize for the heaviest plans (r5:
+    pipeline_interactive read 1.9–2.0× its floor in-suite yet converged
+    to ~1.1× after one warm execution). The guard measures plans, not
+    JIT.
+
+    Per-query cache isolation (r12): persisted diamonds SHARED between
+    queries (the v18c/g10 graph substrate) made per-query numbers
+    order-dependent — whichever family member ran first paid the
+    substrate build for everyone after (r11→r12: v18c 2.1 s → 0.74 s
+    and g10 3.0 s → 3.7 s from the reorder alone, zero code diff).
+    Clearing the cache BEFORE the warm run makes every number
+    self-contained: the warm run rebuilds the query's own diamonds (and
+    the session-lifetime table persists), the timed runs reuse them —
+    the steady state a long-lived cluster job sees, in whatever order
+    queries are listed."""
+    from ai_iceberg_demo_spark.tables import clear_table_cache
+
+    spark.catalog.clearCache()
+    clear_table_cache(spark)
+    sc = spark.sparkContext
+    sc.setJobDescription(f"warm: {spec.name}")
+    spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    best = float("inf")
+    for i in range(runs):
+        sc.setJobDescription(f"timed{i}: {spec.name}")
+        t0 = time.perf_counter()
+        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        best = min(best, time.perf_counter() - t0)
+    sc.setJobDescription(None)
+    return best
+
+
 def main() -> None:
     from ai_iceberg_demo_spark.registry import all_registries
     from ai_iceberg_demo_spark.session import get_spark
@@ -58,40 +100,10 @@ def main() -> None:
     # numbers measure the plans, not session startup
     spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).count()
 
-    # steady-state timing: ONE UNTIMED WARM RUN per query, then best of
-    # N timed runs. The warm run absorbs per-plan one-time costs —
-    # whole-stage-codegen JIT, broadcast thread-pool spin-up, shuffle
-    # service init for the widest pipelines — that a long-lived cluster
-    # pays once but that best-of-2 alone couldn't amortize for the
-    # heaviest plans (r5: pipeline_interactive read 1.9–2.0× its floor
-    # in-suite yet converged to ~1.1× after one warm execution). The
-    # guard measures plans, not JIT.
-    # Per-query cache isolation (r12): the registry's driver-window
-    # rotation reorders the bench set every round, and persisted
-    # diamonds SHARED between queries (the v18c/g10 graph substrate)
-    # made per-query numbers order-dependent — whichever family member
-    # ran first paid the substrate build for everyone after (r11→r12:
-    # v18c 2.1 s → 0.74 s and g10 3.0 s → 3.7 s from the reorder alone,
-    # zero code diff). Clearing the cache BEFORE each query's untimed
-    # warm run makes every number self-contained: the warm run rebuilds
-    # that query's own diamonds (and the session-lifetime table
-    # persists), the timed runs reuse them — same steady-state a
-    # long-lived cluster job sees, in whatever order the registry
-    # happens to list queries.
-    from ai_iceberg_demo_spark.tables import clear_table_cache
-
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
-    timings: dict[str, float] = {}
-    for name, spec in specs.items():
-        spark.catalog.clearCache()
-        clear_table_cache(spark)
-        spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+    timings = {
+        name: round(time_query(spark, spec, SF_DIR, RUNS), 3)
+        for name, spec in specs.items()
+    }
 
     out = {
         "metric": "bench_headline_total",

@@ -36,3 +36,17 @@ def test_bag_of_words_dedup_catches_reordered_plants(spark):
     assert r["n_docs"] >= r["n_exact_unique"] >= r["n_bag_unique"]
     assert r["n_order_only_dups"] > 0
     assert r["plants_caught"] is True
+
+
+def test_documents_fixture_has_unique_doc_ids(spark):
+    """minhash_sigs emits one signature per input ROW and t114 computes
+    per-row distinct ratios against an oracle that groups by doc_id —
+    both are correct only while documents.doc_id is unique."""
+    import pyspark.sql.functions as PF
+
+    from ai_iceberg_demo_spark.tables import load_table
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, "documents", SF_DIR)
+    n, n_ids = docs.agg(PF.count("*"), PF.countDistinct("doc_id")).first()
+    assert n > 0 and n == n_ids

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from ai_iceberg_demo_spark.tables import load_table
 from ai_iceberg_demo_spark.vector.similarity import ann_topk, cosine_topk
@@ -472,3 +473,33 @@ def test_tombstone_search_never_serves_deleted_and_flags_promotions(spark):
             assert (r["vec_id"] not in top5_all) == r["promoted"], r
             exact = next(s for s, vid in scored if vid == r["vec_id"])
             assert abs(exact - r["score"]) < 2e-6
+
+
+@pytest.mark.parametrize("builder", ["knn_graph_det", "knn_graph_capped_det"])
+def test_knn_graph_edges_are_unique_per_direction(spark, builder):
+    """mutual_pairs detects reciprocity as COUNT(*) = 2 over the
+    unordered pair key, which a duplicate same-direction edge would
+    fake — so every graph it reads must emit each (src, dst) once."""
+    from ai_iceberg_demo_spark.vector import similarity
+
+    emb = load_table(spark, "embeddings", SF_DIR)
+    graph = getattr(similarity, builder)(emb, k=3)
+    n, n_pairs = graph.agg(F.count("*"), F.countDistinct("src", "dst")).first()
+    assert n > 0 and n == n_pairs
+
+
+def test_graph_quality_builds_capped_keys_once(spark, monkeypatch):
+    """The card builds its capped graph once and passes it to every
+    family, instead of re-deriving it per registered part."""
+    from ai_iceberg_demo_spark.vector import similarity
+
+    calls = []
+    build = similarity._md5_capped_keys
+
+    def counting(emb):
+        calls.append(1)
+        return build(emb)
+
+    monkeypatch.setattr(similarity, "_md5_capped_keys", counting)
+    similarity.pipeline_graph_quality(spark, SF_DIR)
+    assert len(calls) == 1

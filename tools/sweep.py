@@ -38,7 +38,6 @@ def main() -> int:
     # load evidence with every run (r11 verdict #3): this VM hosts a
     # co-tenant process whose load explains 2x zero-diff swings; print
     # start/end loadavg so any flagged timing carries its context
-    sys.path.insert(0, str(REPO))
     from bench import read_loadavg
 
     print(f"loadavg at sweep start: {read_loadavg()}")
@@ -74,13 +73,11 @@ def main() -> int:
 
 
 def _check_bench_floor(spark, sf_dir: str, floor_path: Path | None = None) -> list[str]:
-    """Re-time of the floor queries with bench.py's EXACT r12
-    methodology — per-query cache isolation (clearCache +
-    clear_table_cache), one untimed warm run that rebuilds the query's
-    own persisted diamonds, then timed best-of-2 against the warm
-    cache — so the guard's numbers are self-contained and comparable
-    to the floors regardless of registry/floor-file ordering. Returns
-    names breaching max_ratio × floor.
+    """Re-time the floor queries with bench.py's exact loop
+    (``bench.time_query``: per-query cache isolation, one untimed warm
+    run, timed best-of-2), so the guard's numbers are self-contained
+    and comparable to the floors regardless of ordering. Returns names
+    breaching max_ratio × floor.
 
     Machine-drift normalization: the recorded floors were measured on
     one day's hardware/thermal state; a uniformly slower box would trip
@@ -102,7 +99,7 @@ def _check_bench_floor(spark, sf_dir: str, floor_path: Path | None = None) -> li
         return []
 
     from ai_iceberg_demo_spark.registry import all_registries
-    from ai_iceberg_demo_spark.tables import clear_table_cache
+    from bench import time_query
 
     specs = all_registries().specs
     max_ratio = floor["max_ratio"]
@@ -114,14 +111,7 @@ def _check_bench_floor(spark, sf_dir: str, floor_path: Path | None = None) -> li
             print(f"REGRESS {name}: in bench_floor.json but not registered")
             regressed.append(name)
             continue
-        spark.catalog.clearCache()
-        clear_table_cache(spark)
-        specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
+        best = time_query(spark, specs[name], sf_dir, 2)
         ratios[name] = best / floor_t
         times[name] = best
     if not ratios:

@@ -2,58 +2,36 @@
 
 Usage: python tools/time_queries.py <name> [name ...]
 
-Per query: clear caches, one untimed warm noop run, then best-of-N
-(SPARK_GRAFT_BENCH_RUNS, default 2) timed noop runs. Prints one line
-per query plus loadavg, so isolated before/after readings carry their
-own load evidence (r11 verdict #3).
+Per query: ``bench.time_query`` — clear caches, one untimed warm noop
+run, then best-of-N (SPARK_GRAFT_BENCH_RUNS, default 2) timed noop
+runs. Prints one line per query plus loadavg, so isolated
+before/after readings carry their own load evidence (r11 verdict #3).
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 from pathlib import Path
 
-REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def loadavg() -> str:
-    try:
-        with open("/proc/loadavg") as f:
-            return " ".join(f.read().split()[:3])
-    except OSError:
-        return "?"
+from bench import RUNS, SF_DIR, read_loadavg, time_query  # noqa: E402
 
 
 def main() -> int:
     from ai_iceberg_demo_spark.registry import all_registries
     from ai_iceberg_demo_spark.session import get_spark
-    from ai_iceberg_demo_spark.tables import clear_table_cache
 
     spark = get_spark("time_queries")
-    reg = all_registries()
+    specs = all_registries().specs
     spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).count()
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
-    print(f"loadavg start: {loadavg()}")
+    print(f"loadavg start: {read_loadavg()}")
     total = 0.0
     for name in sys.argv[1:]:
-        spec = reg.specs[name]
-        spark.catalog.clearCache()
-        clear_table_cache(spark)
-        spark.sparkContext.setJobDescription(f"warm: {name}")
-        spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        best = float("inf")
-        for i in range(runs):
-            spark.sparkContext.setJobDescription(f"timed{i}: {name}")
-            t0 = time.perf_counter()
-            spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
+        best = time_query(spark, specs[name], SF_DIR, RUNS)
         total += best
-        print(f"{name:36s} {best:8.3f} s   (loadavg {loadavg()})")
+        print(f"{name:36s} {best:8.3f} s   (loadavg {read_loadavg()})")
     print(f"TOTAL {total:.3f} s")
     return 0
 
