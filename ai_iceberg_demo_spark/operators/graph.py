@@ -3,9 +3,10 @@
 The reference stores a property graph in Neo4j and traverses it with
 Cypher (`openai_agents/memory/neo4j_memory.py:379-381,512-513`); its
 analytics stop at 1-hop joins. This module adds the iterative-algorithm
-family a graph of 100 TB scale needs, complementing d6's connected
-components (`vector/dedup.py:665`): PageRank as repeated
-sparse-matrix × vector products expressed relationally.
+family a graph of 100 TB scale needs: PageRank as repeated
+sparse-matrix × vector products expressed relationally, and the one
+connected-components operator (Hash-to-Min, ``connected_components``)
+that g8 and the dedup cluster queries (d6, d9, d9b, d16, d20) share.
 
 Spark-first shape per iteration:
 - ``contrib = edges ⋈ rank ON src`` (shuffle on the uniform src key;
@@ -26,7 +27,7 @@ the simple variant keeps every term a local expression.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ai_iceberg_demo_spark.registry import Registry
@@ -815,25 +816,38 @@ def g7_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def hash_to_min_components(
-    edges: DataFrame, max_rounds: int = 16, stats: dict | None = None
+def connected_components(
+    pairs: DataFrame,
+    src: str = "a_id",
+    dst: str = "b_id",
+    max_rounds: int = 16,
+    stats: dict | None = None,
 ) -> DataFrame:
-    """Hash-to-Min connected components (Rastogi et al. 2013): each
-    node's cluster starts as itself + neighbors; per round every
-    cluster ships its MIN to all members and its members to the min.
-    Converges in O(log n) ROUNDS (d6's min-label propagation needs
-    O(diameter) — on chain graphs that's the difference between ~4
-    rounds and ~40). Convergence detected by the per-node min-label
-    checksum, which strictly decreases until the fixed point — no
-    driver-side data, one scalar per round. Caveat at 100 TB: the min
-    node of a component accumulates the whole component in its
-    cluster array (fine for chain/cluster graphs like event sessions;
-    for planet-scale components switch to the two-phase
-    large-star/small-star variant whose per-node state is O(degree)).
-    Returns (u, component_id) for every node incident to an edge."""
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    """Connected components of an undirected pair list by Hash-to-Min
+    (Rastogi et al. 2013): each node's cluster starts as itself + its
+    neighbors; per round every cluster ships its MIN to all members and
+    its members to the min. Converges in O(log diameter) rounds, each
+    one cluster-keyed shuffle. Returns (id, lbl) for every node that
+    appears in a pair, lbl = the min id of its component (singletons
+    are the caller's left join).
+
+    Convergence: each round's eager ``localCheckpoint`` also computes
+    an XOR digest of every (node, min-label) pair through an
+    ``Observation``, so a round runs its checkpoint and no probe job.
+    XOR never overflows under ANSI mode, and labels are unique per
+    node, so the digest is a set digest: the labeling is a fixed point
+    when two rounds digest alike. A stage retry may re-apply a
+    partition's XOR to the observed value; that only makes two equal
+    labelings look different (one extra round). Stopping early would
+    need a 64-bit collision. Running out of ``max_rounds`` raises.
+
+    Caveat at 100 TB: the min node of a component holds the whole
+    component in its cluster array. Verified near-dup pairs and event
+    chains bound that; unverified candidate pairs (d6) do not — there
+    the two-phase large-star/small-star variant, whose per-node state
+    is O(degree), is the planet-component spelling."""
+    edges = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    sym = edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     clusters = (
         sym.groupBy("u")
         .agg(F.collect_set("v").alias("nb"))
@@ -841,58 +855,41 @@ def hash_to_min_components(
         .localCheckpoint(eager=True)
     )
     prev = None
-    rounds = 0
-    converged = False
-    for _ in range(max_rounds):
-        rounds += 1
+    for rounds in range(1, max_rounds + 1):
         m = clusters.select("u", F.array_min("c").alias("m"), "c")
         to_min = m.select(F.col("m").alias("dst"), F.col("c").alias("vals"))
         to_all = m.select(F.explode("c").alias("dst"), F.array("m").alias("vals"))
+        digest = Observation()
         clusters = (
             to_min.unionByName(to_all)
             .select("dst", F.explode("vals").alias("v"))
             .groupBy("dst")
             .agg(F.array_sort(F.collect_set("v")).alias("c"))
             .select(F.col("dst").alias("u"), "c")
+            .observe(digest, F.expr("bit_xor(xxhash64(u, array_min(c)))").alias("x"))
             .localCheckpoint(eager=True)
         )
-        # Stronger than a per-node min-label sum (which could alias a
-        # still-moving labeling): XOR-digest every (u, min-label) pair
-        # (xor never overflows under ANSI; pairs are unique per u, so
-        # this is a proper set digest). The labeling is a fixed point
-        # exactly when no pair changed.
-        checksum = clusters.agg(
-            F.expr("bit_xor(xxhash64(u, array_min(c)))")
-        ).first()[0]
-        if checksum == prev:
-            converged = True
-            break
-        prev = checksum
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["converged"] = converged
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"hash_to_min_components exhausted max_rounds={max_rounds} "
-            "without reaching the fixed point — component ids may be "
-            "unconverged; raise max_rounds (rounds needed ~ log2(diameter))",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return clusters.select("u", F.array_min("c").alias("component_id"))
+        cur = digest.get["x"]
+        if cur == prev:  # an empty pair list digests to NULL: one round
+            if stats is not None:
+                stats["rounds"] = rounds
+            return clusters.select(F.col("u").alias("id"), F.array_min("c").alias("lbl"))
+        prev = cur
+    raise RuntimeError(
+        f"connected_components did not converge in max_rounds={max_rounds}; "
+        "raise max_rounds (rounds needed ~ log2(diameter))"
+    )
 
 
 @REGISTRY.register(
     name="g8_logstep_components",
-    survey_ref="graph extra (CC in O(log d) rounds; d6's scale sibling)",
+    survey_ref="graph extra (CC in O(log d) rounds; shared with the dedup clusters)",
     doc="connected components of the per-user event CHAIN graph "
     "(consecutive events of a user are edges; the component IS the "
     "user's full event chain) via Hash-to-Min — O(log diameter) "
-    "rounds where d6's min-label propagation pays O(diameter); event "
-    "chains are tens of hops deep, exactly the regime that gap "
-    "matters in. The algorithm never sees user_id — it must RECOVER "
+    "rounds, the regime event chains tens of hops deep need; the dedup "
+    "cluster queries (d6, d9, d9b, d16, d20) run the same operator. "
+    "The algorithm never sees user_id — it must RECOVER "
     "the chains from the anonymous edge list — while the oracle "
     "computes the ground truth directly as min(event_id) over each "
     "user's events (single-event users are singleton components). "
@@ -918,7 +915,9 @@ def g8_logstep_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("v").isNotNull())
         .select(F.col("event_id").alias("u"), "v")
     )
-    comp = hash_to_min_components(edges)
+    comp = connected_components(edges, src="u", dst="v").select(
+        F.col("id").alias("u"), F.col("lbl").alias("component_id")
+    )
     # singleton chains (one-event users) have no edges — they are their
     # own component
     return (

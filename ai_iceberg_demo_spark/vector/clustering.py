@@ -16,9 +16,8 @@ Spark-first design:
   per-(cell,dim) avg → re-assemble with sort+transform. Shuffle rows
   per Lloyd round are O(vectors × dim) compact doubles; k×dim output
   stays broadcastable;
-- each round ``localCheckpoint``s (d6's pattern) so plan depth stays
-  O(1); on a real cluster swap for ``checkpoint()`` to durable
-  storage.
+- each round ``localCheckpoint``s so plan depth stays O(1); on a
+  real cluster swap for ``checkpoint()`` to durable storage.
 
 Determinism: centroid init = the first k corpus vectors (vec_id < k),
 distances rounded to 4 before the argmin with cell_id as tie-break —
@@ -197,7 +196,10 @@ def _assign2_sql(src: str, k_sql: str) -> str:
 
 
 def kmeans_train(
-    corpus: DataFrame, k: int = KMEANS_K, n_iter: int = KMEANS_ITER
+    corpus: DataFrame,
+    k: int = KMEANS_K,
+    n_iter: int = KMEANS_ITER,
+    round_dp: int | None = None,
 ) -> DataFrame:
     """Lloyd's algorithm, DataFrame-native: assign → per-dim mean →
     new centroids, ``n_iter`` rounds. Centroid recompute explodes to
@@ -206,7 +208,9 @@ def kmeans_train(
     array_sort+transform — never a driver-side collect of vectors.
     Empty cells keep their previous centroid (left join + coalesce),
     matching scikit-learn's no-relocation behavior for this fixture.
-    Returns the final (cell_id, centroid) table."""
+    ``round_dp`` rounds every recomputed mean to that many decimals:
+    the quantization that makes a fixed unroll replay exactly in SQL
+    (v11c). Returns the final (cell_id, centroid) table."""
     dcorpus = corpus.select("vec_id", as_double(F.col("embedding")).alias("embedding"))
     centroids = seed_centroids(corpus, k).localCheckpoint(eager=True)
     for _ in range(n_iter):
@@ -214,7 +218,8 @@ def kmeans_train(
         dims = assigned.select(
             "cell_id", F.posexplode("embedding").alias("dim_i", "x")
         )
-        dim_means = dims.groupBy("cell_id", "dim_i").agg(F.avg("x").alias("m"))
+        mean = F.avg("x") if round_dp is None else F.round(F.avg("x"), round_dp)
+        dim_means = dims.groupBy("cell_id", "dim_i").agg(mean.alias("m"))
         new_cen = dim_means.groupBy("cell_id").agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("dim_i", "m"))), lambda s: s["m"]
@@ -896,36 +901,6 @@ _V11C_ROUNDS = 2
 _V11C_DP = 6  # centroid rounding per round — what makes the unroll replayable
 
 
-def kmeans_train_rounded(
-    corpus: DataFrame, k: int = KMEANS_K, n_iter: int = _V11C_ROUNDS
-) -> DataFrame:
-    """Lloyd's algorithm with centroids ROUNDED to 6 decimals after
-    every recompute — numerically a hair off `kmeans_train`, but the
-    rounding quantizes away cross-engine float-sum noise, so a fixed
-    unroll replays exactly in SQL (g1/g2's discipline applied to
-    clustering). Same distributed shape as kmeans_train: posexplode
-    partial means, broadcast centroids, localCheckpoint per round."""
-    dcorpus = corpus.select("vec_id", as_double(F.col("embedding")).alias("embedding"))
-    centroids = seed_centroids(corpus, k).localCheckpoint(eager=True)
-    for _ in range(n_iter):
-        assigned = kmeans_assign(dcorpus, centroids).join(dcorpus, "vec_id")
-        dims = assigned.select("cell_id", F.posexplode("embedding").alias("dim_i", "x"))
-        dim_means = dims.groupBy("cell_id", "dim_i").agg(
-            F.round(F.avg("x"), _V11C_DP).alias("m")
-        )
-        new_cen = dim_means.groupBy("cell_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim_i", "m"))), lambda s: s["m"]
-            ).alias("centroid")
-        )
-        centroids = (
-            centroids.select("cell_id", F.col("centroid").alias("_prev"))
-            .join(new_cen, "cell_id", "left")
-            .select("cell_id", F.coalesce("centroid", "_prev").alias("centroid"))
-        ).localCheckpoint(eager=True)
-    return centroids
-
-
 def _v11c_round_sql(prev_cen: str, idx: int) -> str:
     """One Lloyd round in SQL: assign against ``prev_cen`` (rounded-
     distance argmin, v11's rule), then per-(cell, dim) rounded means
@@ -992,7 +967,7 @@ def _v11c_round_sql(prev_cen: str, idx: int) -> str:
 )
 def v11c_kmeans_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = load_table(spark, "embeddings", sf_dir)
-    centroids = kmeans_train_rounded(corpus)
+    centroids = kmeans_train(corpus, n_iter=_V11C_ROUNDS, round_dp=_V11C_DP)
     final = kmeans_assign(corpus, centroids)
     return final.groupBy(F.col("cell_id").cast("bigint").alias("cell_id")).agg(
         F.count("*").cast("bigint").alias("n_vecs"),

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_iceberg_demo_spark.functions.text import _URL_NORM_SQL
+from ai_iceberg_demo_spark.operators.graph import connected_components
 from ai_iceberg_demo_spark.registry import Registry
 from ai_iceberg_demo_spark.tables import load_table, persist_once
 from ai_iceberg_demo_spark.vector.similarity import (
@@ -796,50 +797,17 @@ def d5_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def connected_components(pairs: DataFrame, src: str = "a_id", dst: str = "b_id", max_iter: int = 25) -> DataFrame:
-    """Connected components over an undirected pair list by min-label
-    propagation: every node starts labeled with its own id; each round
-    pushes labels across edges and keeps the per-node min; fixpoint in
-    ≤ diameter rounds. Returns (id, lbl) for every node that appears in
-    a pair (singletons are the caller's left-join).
-
-    Each round is two shuffles (join + min-agg), all distributed — no
-    driver-side graph. The convergence probe is a 1-row sum (labels
-    only ever decrease, so an unchanged sum IS the fixpoint).
-    ``localCheckpoint`` truncates the per-iteration lineage so planning
-    stays O(1) per round; on a cluster prefer ``checkpoint()`` to a
-    reliable store (localCheckpoint pins executors). Near-dup clusters
-    have tiny diameters (dup groups, not social graphs), so rounds ≈ 3.
-    """
-    fwd = pairs.select(F.col(src).alias("esrc"), F.col(dst).alias("edst"))
-    edges = fwd.union(pairs.select(F.col(dst).alias("esrc"), F.col(src).alias("edst")))
-    edges = edges.repartition("esrc").localCheckpoint(eager=True)
-    labels = edges.select(F.col("esrc").alias("id")).distinct().withColumn("lbl", F.col("id"))
-    labels = labels.localCheckpoint(eager=True)
-    prev = labels.agg(F.sum("lbl")).first()[0]
-    for _ in range(max_iter):
-        # labels are node-count-sized — corpus-scaled; never broadcast
-        msgs = edges.join(labels.hint("shuffle_hash"), edges.esrc == labels.id).select(
-            F.col("edst").alias("id"), "lbl"
-        )
-        labels = (
-            labels.union(msgs).groupBy("id").agg(F.min("lbl").alias("lbl"))
-        ).localCheckpoint(eager=True)
-        cur = labels.agg(F.sum("lbl")).first()[0]
-        if cur == prev:
-            break
-        prev = cur
-    return labels
-
-
 @REGISTRY.register(
     name="d6_dedup_components",
     survey_ref="training-data",
     doc="near-dup CLUSTERS: d3's LSH candidate pairs closed into "
-    "connected components by distributed min-label propagation "
-    "(component_id = min doc_id in the cluster; singletons keep their "
-    "own id). This is the step that turns pairwise candidates into the "
-    "keep-one-per-cluster decision a corpus dedup actually ships. "
+    "connected components by Hash-to-Min (operators.graph."
+    "connected_components: O(log diameter) rounds, one shuffle each; "
+    "component_id = min doc_id in the cluster; singletons keep their "
+    "own id). Candidates are unverified, so one component's min node "
+    "can hold a large cluster array (SCALE.md). This is the step that "
+    "turns pairwise candidates into the keep-one-per-cluster decision "
+    "a corpus dedup actually ships. "
     "Oracle: DuckDB recursive CTE over the identical pair list.",
     oracle=f"""
         WITH RECURSIVE pairs AS ({_D3_PAIRS_SQL}),
@@ -879,7 +847,7 @@ def d6_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="quality-aware canonical selection: d2's VERIFIED near-dup pairs "
     "(exact Jaccard ≥ 0.8, not d3's unverified candidates — candidates "
     "chain through shared boilerplate into one giant component) are "
-    "closed into clusters (d6's min-label components) and each cluster "
+    "closed into clusters (d6's Hash-to-Min components) and each cluster "
     "keeps its HIGHEST-QUALITY member (t2's C4-style scoring; ties to "
     "the lowest doc_id) instead of the arbitrary min-id — the decision "
     "a production corpus dedup actually ships: drop the worse copies, "
@@ -1018,7 +986,7 @@ _CANONICAL_TAIL_SQL = """edges AS (
     "candidates (d2b's shape — O(candidates·shingles/doc), never d2's "
     "Σdf² all-shingle self-join, the tier that is inherently quadratic "
     "in fixture copies and DNF'd at sf10), verified pairs close into "
-    "clusters (d6's min-label components), and each cluster keeps its "
+    "clusters (d6's Hash-to-Min components), and each cluster keeps its "
     "highest-quality member (d9's t2-scored max_by(struct) argmax, "
     "ties to the lowest doc_id). Every stage is the banded/bucketed "
     "form: candidate generation is an equi-join on band keys, verify "
@@ -1743,8 +1711,8 @@ def d14_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus complement. Per size: cluster count, docs covered, and "
     "n_removable = docs − clusters (the mass a keep-one-per-cluster "
     "dedup deletes) — the one-table answer to 'how duplicated is this "
-    "corpus and what do we get back'. Components run min-label "
-    "propagation (2 shuffles/round, rounds ≈ cluster diameter); the "
+    "corpus and what do we get back'. Components run Hash-to-Min "
+    "(1 shuffle/round, rounds ≈ log2 of the cluster diameter); the "
     "histogram aggregates the component-size table, which is "
     "clusters-sized, not corpus-sized. Totals come from 1-row aggs "
     "cross-joined — no driver math.",

@@ -1,51 +1,9 @@
-"""D6: distributed connected components == union-find ground truth."""
+"""Dedup verify and rewrite operators (d2b, d10, d11, d12): invariants
+the oracle can't see."""
 
 from __future__ import annotations
 
-from ai_iceberg_demo_spark.vector.dedup import connected_components, d3_minhash_lsh
 from tests.conftest import SF_DIR
-
-
-def _union_find(pairs):
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {x: find(x) for x in parent}
-
-
-def test_cc_chain_needs_multiple_rounds(spark):
-    """A 6-node path plus a separate pair: min label must travel 5 hops."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11)], ["a_id", "b_id"]
-    )
-    got = {r["id"]: r["lbl"] for r in connected_components(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 10: 10, 11: 10}
-
-
-def test_cc_matches_union_find_on_lsh_pairs(spark):
-    pairs_df = d3_minhash_lsh(spark, SF_DIR)
-    pairs = [(r["a_id"], r["b_id"]) for r in pairs_df.collect()]
-    assert pairs, "fixture should plant near-duplicates"
-    expected = _union_find(pairs)
-    got = {r["id"]: r["lbl"] for r in connected_components(pairs_df).collect()}
-    assert got == expected
-
-
-def test_cc_empty_pairs_yields_no_components(spark):
-    """No candidate pairs -> empty labels; d6's left join then reports
-    every doc as its own singleton component."""
-    pairs = spark.createDataFrame([], "a_id BIGINT, b_id BIGINT")
-    assert connected_components(pairs).count() == 0
 
 
 def test_d2b_is_sound_subset_of_d2(spark):

@@ -1,12 +1,16 @@
-"""PageRank invariants the SQL oracle can't see (mass conservation,
-dangling leak, convergence direction)."""
+"""Graph operator invariants the SQL oracle can't see: PageRank mass
+conservation, dangling leak and convergence direction; connected
+components against union-find, their round and job counts, and their
+failure when they do not converge."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ai_iceberg_demo_spark.operators.graph import (
     DAMPING,
+    connected_components,
     pagerank_iterations,
     purchase_edges,
 )
@@ -98,25 +102,95 @@ def test_modularity_identities_and_null_model(spark):
         assert r["q_contrib"] <= r["internal_edges"] / m + 1e-9
 
 
-def test_hash_to_min_converges_in_log_rounds_on_a_long_chain(spark):
-    """The point of g8 vs d6: a 64-hop path must converge in O(log d)
-    rounds (min-label propagation would need ~63). Components exact,
-    round count pinned well under the diameter."""
-    from ai_iceberg_demo_spark.operators.graph import hash_to_min_components
+def _union_find(pairs):
+    parent = {}
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(100, 163)], "u bigint, v bigint"
-    )
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+_CHAIN_64 = [(i, i + 1) for i in range(100, 163)]
+
+
+@pytest.mark.parametrize(
+    "pairs, max_rounds_used",
+    [
+        # a 6-node path plus a separate pair: the min must travel 5 hops
+        ([(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11)], 5),
+        # a 64-hop path: O(log d) rounds where label propagation needs
+        # ~63; log2(64)=6, plus ~2 extra rounds and one to see the
+        # fixed point
+        (_CHAIN_64, 10),
+    ],
+    ids=["chain6", "chain64"],
+)
+def test_cc_labels_chains_by_min_in_log_rounds(spark, pairs, max_rounds_used):
+    df = spark.createDataFrame(pairs, "a_id bigint, b_id bigint")
     stats = {}
-    comp = {
-        r["u"]: r["component_id"]
-        for r in hash_to_min_components(edges, stats=stats).collect()
-    }
-    assert set(comp) == set(range(100, 164))
-    assert set(comp.values()) == {100}  # one component, labeled by its min
-    # log2(64)=6; hash-to-min needs ~2 extra rounds (+1 to detect the
-    # fixed point via the checksum)
-    assert stats["rounds"] <= 10, stats
+    got = {r["id"]: r["lbl"] for r in connected_components(df, stats=stats).collect()}
+    assert got == _union_find(pairs)
+    assert stats["rounds"] <= max_rounds_used, stats
+
+
+def test_cc_matches_union_find_on_lsh_pairs(spark):
+    from ai_iceberg_demo_spark.vector.dedup import d3_minhash_lsh
+
+    pairs_df = d3_minhash_lsh(spark, SF_DIR)
+    pairs = [(r["a_id"], r["b_id"]) for r in pairs_df.collect()]
+    assert pairs, "fixture should plant near-duplicates"
+    expected = _union_find(pairs)
+    got = {r["id"]: r["lbl"] for r in connected_components(pairs_df).collect()}
+    assert got == expected
+
+
+def test_cc_empty_pairs_yields_no_components(spark):
+    """No candidate pairs -> empty labels; d6's left join then reports
+    every doc as its own singleton component."""
+    pairs = spark.createDataFrame([], "a_id BIGINT, b_id BIGINT")
+    assert connected_components(pairs).count() == 0
+
+
+def test_cc_ids_near_2_pow_62_do_not_overflow(spark):
+    """Under ANSI mode a long sum over these ids overflows; the XOR
+    digest cannot."""
+    base = 1 << 62
+    pairs = [(base + 1, base + 2), (base + 3, base + 2), (base + 10, base + 11)]
+    df = spark.createDataFrame(pairs, "a_id bigint, b_id bigint")
+    got = {r["id"]: r["lbl"] for r in connected_components(df).collect()}
+    assert got == _union_find(pairs)
+
+
+def test_cc_raises_when_max_rounds_is_exhausted(spark):
+    df = spark.createDataFrame(_CHAIN_64, "a_id bigint, b_id bigint")
+    with pytest.raises(RuntimeError, match="max_rounds=2"):
+        connected_components(df, max_rounds=2)
+
+
+def test_cc_runs_only_its_checkpoint_jobs(spark):
+    """Convergence is read from each round's checkpoint job, so the
+    loop runs no probe job: the initial checkpoint plus one per round,
+    each a shuffle-map job and a result job."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame(_CHAIN_64, "a_id bigint, b_id bigint")
+    stats = {}
+    sc.setJobGroup("cc_jobs", "connected_components on a 64-hop chain")
+    try:
+        connected_components(df, stats=stats)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("cc_jobs")
+    assert stats["rounds"] == 7
+    assert len(jobs) == 2 * (stats["rounds"] + 1) == 16
 
 
 def test_g8_components_are_exactly_the_user_chains(spark):

@@ -175,11 +175,8 @@ def test_quality_canonical_keeps_best_member(spark):
     """d9: within every cluster the kept doc has the max quality among
     members (ties to lowest id), and kept_id is itself a member."""
     from ai_iceberg_demo_spark.functions.text import quality_score
-    from ai_iceberg_demo_spark.vector.dedup import (
-        connected_components,
-        d2_ngram_jaccard,
-        d9_quality_canonical,
-    )
+    from ai_iceberg_demo_spark.operators.graph import connected_components
+    from ai_iceberg_demo_spark.vector.dedup import d2_ngram_jaccard, d9_quality_canonical
     from ai_iceberg_demo_spark.tables import load_table
 
     clusters = {r["component_id"]: r for r in d9_quality_canonical(spark, SF_DIR).collect()}
