@@ -32,6 +32,7 @@ from ai_iceberg_demo_spark.operators.mutations import (
     merge_into,
     update_where,
 )
+from ai_iceberg_demo_spark.tables import release_checkpoint
 from ai_iceberg_demo_spark.vector.similarity import cosine_topk
 
 
@@ -144,6 +145,33 @@ class ConversationMemory:
 
     def verify_connection(self) -> bool:
         return self.conversations.sparkSession is not None
+
+
+def _append_once(
+    rows: DataFrame, table: str, count, bucket_by: tuple = ()
+) -> int:
+    """Append ``rows`` to ``table`` computing them ONCE: an eager
+    ``localCheckpoint`` runs the caller's batch, gate, anti-join and
+    hashing in one job, the count and the append read the checkpoint,
+    and ``release_checkpoint`` frees it in a ``finally`` — a long-lived
+    session keeps no persisted frame. A checkpoint rather than
+    ``persist()``: the append never re-runs a lineage that reads
+    ``table`` (SCALE.md, r4), and the checkpoint keeps AQE's coalesced
+    partitions, where a persisted plan keeps every shuffle partition
+    and writes a file per partition (a 4-id tombstone batch: 3 files
+    instead of 1). Returns ``count(rows)``; an empty batch appends
+    nothing."""
+    rows = rows.localCheckpoint(eager=True)
+    try:
+        n = count(rows)
+        if n:
+            writer = rows.write.format("parquet").mode("append")
+            if bucket_by:
+                writer = writer.bucketBy(*bucket_by)
+            writer.saveAsTable(table)
+        return n
+    finally:
+        release_checkpoint(rows)
 
 
 class VectorRAG:
@@ -264,6 +292,7 @@ class VectorRAG:
             centroids.write.format("parquet").mode("overwrite").saveAsTable(
                 f"{name}__centroids"
             )
+            release_checkpoint(centroids)  # probes read the table
             assigned = assign_cells(vectors, spark.table(f"{name}__centroids"))
             assigned.write.format("parquet").mode("errorifexists").bucketBy(
                 min(16, n_cells), "cell_id"
@@ -290,6 +319,12 @@ class VectorRAG:
         appended fraction grows past rebuild policy, which v16's drift
         monitor is the alarm for. Returns the number of vectors
         appended.
+
+        The batch is read ONCE: the gated, anti-joined and hashed (or
+        cell-assigned) rows are checkpointed, counted, appended from
+        the checkpoint and released (``_append_once``), so neither the
+        caller's lineage nor the hashing UDF runs twice, and the
+        session keeps no persisted frame afterwards.
 
         Sessions: reads ride ``new_vectors``' OWN session, not the
         facade's. Under foreachBatch each micro-batch arrives in a
@@ -325,18 +360,15 @@ class VectorRAG:
                 seed=m["seed"],
                 dim=m["dim"],
             )
-            n_new = rows.select("vec_id").distinct().count()
-            rows.write.format("parquet").mode("append").bucketBy(
-                16, "t", "b"
-            ).saveAsTable(name)
+            bucket_by = (16, "t", "b")
         else:
             from ai_iceberg_demo_spark.vector.similarity import assign_cells
 
             rows = assign_cells(fresh, spark.table(f"{name}__centroids"))
-            n_new = rows.select("vec_id").distinct().count()
-            rows.write.format("parquet").mode("append").bucketBy(
-                min(16, int(m["n_cells"])), "cell_id"
-            ).saveAsTable(name)
+            bucket_by = (min(16, int(m["n_cells"])), "cell_id")
+        n_new = _append_once(
+            rows, name, lambda r: r.select("vec_id").distinct().count(), bucket_by
+        )
         owner = self.embeddings.sparkSession
         if owner is not spark:
             owner.catalog.refreshTable(name)
@@ -357,7 +389,9 @@ class VectorRAG:
         — the index rows stay until the next retrain compacts them
         out; re-adding a deleted id requires drop/recreate (upsert
         treats indexed-but-tombstoned ids as existing). Returns the
-        number of newly tombstoned ids; re-deleting is a no-op.
+        number of newly tombstoned ids; re-deleting is a no-op. The new
+        ids are computed once and released after their append, the
+        same bounded checkpoint → count → append → release as upserts.
 
         Same session discipline as upsert_vector_index: reads ride the
         ids batch's session (fresh cache under foreachBatch), and the
@@ -371,10 +405,8 @@ class VectorRAG:
         new = ids.select("vec_id").distinct()
         if spark.catalog.tableExists(tomb):
             new = new.join(spark.table(tomb), "vec_id", "left_anti")
-        new = new.localCheckpoint(eager=True)  # cut lineage before appending
-        n = new.count()
+        n = _append_once(new, tomb, DataFrame.count)
         if n:
-            new.write.format("parquet").mode("append").saveAsTable(tomb)
             owner = self.embeddings.sparkSession
             if owner is not spark:
                 owner.catalog.refreshTable(tomb)
@@ -412,10 +444,22 @@ class VectorRAG:
         set to a table created by create_vector_index, the search routes
         through the persisted index (LSH buckets or IVF cells:
         candidates + exact rerank — the scale path) instead of the
-        exact full scan; the index kind is read from the meta table."""
+        exact full scan; the index kind is read from the meta table.
+
+        An index search resolves its query on the driver: ONE job
+        collects ``query_vec.select("qvec")``, which must hold exactly
+        one row (ValueError otherwise), and the probe is built from
+        that literal vector — literal (t, b) or ``cell_id IN (...)``
+        predicates on the index, a literal rerank — so the caller's
+        frame is never read again. Scores are bit-identical to the
+        exact path's."""
         if index is None:
             return cosine_topk(self.embeddings, query_vec, k=k, min_score=min_score)
-        from ai_iceberg_demo_spark.vector.similarity import ivf_probe, lsh_probe
+        from ai_iceberg_demo_spark.vector.similarity import (
+            collect_query,
+            ivf_probe,
+            lsh_probe,
+        )
 
         spark = self.embeddings.sparkSession
         if not spark.catalog.tableExists(index) or not spark.catalog.tableExists(
@@ -423,6 +467,7 @@ class VectorRAG:
         ):
             raise ValueError(f"vector index {index!r} does not exist — create_vector_index first")
         m = spark.table(f"{index}__meta").collect()[0]
+        query = collect_query(query_vec)
         # soft-deleted ids (delete_vectors) are excluded from the
         # CANDIDATE set, before any top-k truncation — v31's discipline
         idx = spark.table(index)
@@ -433,7 +478,7 @@ class VectorRAG:
             return ivf_probe(
                 idx,
                 spark.table(f"{index}__centroids"),
-                query_vec,
+                query,
                 k=k,
                 n_probe=m["n_probe"],
                 min_score=min_score,
@@ -441,7 +486,7 @@ class VectorRAG:
         return lsh_probe(
             idx,
             self.embeddings,
-            query_vec,
+            query,
             k=k,
             n_tables=m["n_tables"],
             n_planes=m["n_planes"],

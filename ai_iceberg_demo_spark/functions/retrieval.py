@@ -248,7 +248,7 @@ def t23_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.crossJoin(F.broadcast(q))
         .select(
             F.col("vec_id").alias("doc_id"),
-            F.round(cosine(F.col("embedding"), F.col("qvec")), 6).alias("vscore"),
+            F.round(cosine("embedding", "qvec"), 6).alias("vscore"),
         )
         .orderBy(F.desc("vscore"), F.asc("doc_id"))
         .limit(TOPN_PER_LIST)
@@ -350,7 +350,7 @@ def v14_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "embedding",
-            F.round(cosine(F.col("embedding"), F.col("qvec")), 6).alias("rel"),
+            F.round(cosine("embedding", "qvec"), 6).alias("rel"),
         )
         .orderBy(F.desc("rel"), F.asc("vec_id"))
         .limit(20)
@@ -377,7 +377,7 @@ def v14_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("vec_id", "embedding", "rel")
                 .agg(
                     F.max(
-                        F.round(cosine(F.col("embedding"), F.col("sel_emb")), 6)
+                        F.round(cosine("embedding", "sel_emb"), 6)
                     ).alias("maxsim")
                 )
             )

@@ -376,10 +376,10 @@ def pipeline_eval_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lex_flagged = t17_decontamination(spark, sf_dir).select("doc_id")
 
-    base = emb.select("vec_id", as_double(F.col("embedding")).alias("embedding"))
+    base = emb.select("vec_id", as_double("embedding").alias("embedding"))
     bench = with_norm(base.filter(F.col("vec_id") % 10 == 3), "embedding", "bv", "bn")
     corpus = with_norm(base.filter(F.col("vec_id") % 10 != 3), "embedding", "cv", "cn")
-    score = F.round(dot(F.col("cv"), F.col("bv")) / (F.col("cn") * F.col("bn")), 6)
+    score = F.round(dot("cv", "bv") / (F.col("cn") * F.col("bn")), 6)
     sem_flagged = (
         corpus.crossJoin(F.broadcast(bench.select("bv", "bn")))
         .select("vec_id", score.alias("s"))

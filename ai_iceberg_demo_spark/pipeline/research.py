@@ -149,7 +149,7 @@ def pipeline_interactive(
         load_table(spark, "embeddings", sf_dir).filter(F.col("vec_id") < 5), "embedding", "qv", "qn"
     ).select(F.col("vec_id").alias("qid"), "qv", "qn")
     score_expr = F.round(
-        dot(F.col("cv"), F.col("qv")) / (F.col("cn") * F.col("qn")), 6
+        dot("cv", "qv") / (F.col("cn") * F.col("qn")), 6
     ).alias("score")
     if index is None:
         # exact path (the oracle-checked default): norms hoisted per

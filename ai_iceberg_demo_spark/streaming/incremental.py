@@ -493,7 +493,7 @@ def drift_batch_sink(state_dir: str):
 
         spark = batch_df.sparkSession
         dims = batch_df.select(
-            F.posexplode(as_double(F.col("embedding"))).alias("dim_i", "x")
+            F.posexplode(as_double("embedding")).alias("dim_i", "x")
         )
         partials = dims.groupBy("dim_i").agg(
             F.count("*").cast("double").alias("n"),
@@ -571,7 +571,7 @@ def run_drift_stream(
     # stream schema; double everywhere also makes the arithmetic
     # bit-identical to the oracle's CAST(... AS DOUBLE) spelling
     emb = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", as_double(F.col("embedding")).alias("embedding")
+        "vec_id", as_double("embedding").alias("embedding")
     )
     shifted = F.transform(
         F.col("embedding"), lambda x, i: F.when(i == 0, x + F.lit(0.5)).otherwise(x)

@@ -56,6 +56,14 @@ def persist_once(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
     return df.persist(level) if level is not None else df.persist()
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks behind an eager ``localCheckpoint`` of ``df`` now,
+    instead of whenever a JVM GC lets ContextCleaner find them. Only for
+    a frame nothing reads again: a local checkpoint has no lineage to
+    recompute from."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def long_metrics(df: DataFrame, family: str, cols: list[str]) -> DataFrame:
     """(family, metric, value) rows, one per column in ``cols`` per row
     of ``df``, value cast to double — the long format every governance

@@ -32,8 +32,16 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_iceberg_demo_spark.registry import Registry
-from ai_iceberg_demo_spark.tables import load_table, persist_once
-from ai_iceberg_demo_spark.vector.similarity import _COS_SQL, as_double, dot, with_norm
+from ai_iceberg_demo_spark.tables import load_table, persist_once, release_checkpoint
+from ai_iceberg_demo_spark.vector.similarity import (
+    _COS_SQL,
+    _dot,
+    _double,
+    as_double,
+    dot,
+    vec_sql,
+    with_norm,
+)
 
 REGISTRY = Registry()
 
@@ -58,7 +66,7 @@ def seed_centroids(corpus: DataFrame, k: int = KMEANS_K) -> DataFrame:
     """Deterministic init: the first k corpus vectors (the rule
     ``ivf_topk`` already uses for its fixed cells)."""
     return corpus.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cell_id"), as_double(F.col("embedding")).alias("centroid")
+        F.col("vec_id").alias("cell_id"), as_double("embedding").alias("centroid")
     )
 
 
@@ -105,7 +113,7 @@ def two_level_assign(corpus: DataFrame, k: int) -> DataFrame:
     from pyspark.sql import Window as W
 
     c = math.ceil(math.sqrt(k))
-    base = corpus.select("vec_id", as_double(F.col("embedding")).alias("embedding"))
+    base = corpus.select("vec_id", as_double("embedding").alias("embedding"))
     fine = base.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
     )
@@ -211,7 +219,7 @@ def kmeans_train(
     ``round_dp`` rounds every recomputed mean to that many decimals:
     the quantization that makes a fixed unroll replay exactly in SQL
     (v11c). Returns the final (cell_id, centroid) table."""
-    dcorpus = corpus.select("vec_id", as_double(F.col("embedding")).alias("embedding"))
+    dcorpus = corpus.select("vec_id", as_double("embedding").alias("embedding"))
     centroids = seed_centroids(corpus, k).localCheckpoint(eager=True)
     for _ in range(n_iter):
         assigned = kmeans_assign(dcorpus, centroids).join(dcorpus, "vec_id")
@@ -225,11 +233,12 @@ def kmeans_train(
                 F.array_sort(F.collect_list(F.struct("dim_i", "m"))), lambda s: s["m"]
             ).alias("centroid")
         )
-        centroids = (
+        prev, centroids = centroids, (
             centroids.select("cell_id", F.col("centroid").alias("_prev"))
             .join(new_cen, "cell_id", "left")
             .select("cell_id", F.coalesce("centroid", "_prev").alias("centroid"))
         ).localCheckpoint(eager=True)
+        release_checkpoint(prev)  # the new round no longer reads it
     return centroids
 
 
@@ -309,7 +318,7 @@ def salt_near_dups(corpus: DataFrame) -> DataFrame:
     at every SF. The fixture corpus has no natural near-dups (max
     same-label cosine 0.47), so without salting d8 would be a 0-row
     check — the f29/t20 salting convention."""
-    base = corpus.select("vec_id", as_double(F.col("embedding")).alias("embedding"))
+    base = corpus.select("vec_id", as_double("embedding").alias("embedding"))
     twins = base.filter(F.col("vec_id") % 25 == 0).select(
         (F.col("vec_id") + _TWIN_OFFSET).alias("vec_id"),
         F.transform(
@@ -409,7 +418,7 @@ def d8_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         a.join(b, (F.col("ac") == F.col("bc")) & (F.col("kept_id") < F.col("vec_id")))
         .filter(
-            F.round(dot(F.col("av"), F.col("bv")) / (F.col("na") * F.col("nb")), 6)
+            F.round(dot("av", "bv") / (F.col("na") * F.col("nb")), 6)
             >= SEMDEDUP_TAU
         )
         .select("vec_id", "kept_id")
@@ -444,8 +453,7 @@ def pca_components(corpus: DataFrame, vec_col: str = "embedding", k: int = PCA_K
     """
     import numpy as np
 
-    v = as_double(F.col(vec_col))
-    base = corpus.select(v.alias("v"))
+    base = corpus.select(as_double(vec_col).alias("v"))
     n = base.count()
     ei = base.select(F.posexplode("v").alias("i", "xi"))
     mean_rows = ei.groupBy("i").agg(F.sum("xi").alias("s")).collect()
@@ -493,13 +501,14 @@ def pca_components(corpus: DataFrame, vec_col: str = "embedding", k: int = PCA_K
 def v12_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = load_table(spark, "embeddings", sf_dir)
     mean, comps = pca_components(corpus)
-    mean_col = F.array(*[F.lit(x) for x in mean])
-    centered = F.zip_with(as_double(F.col("embedding")), mean_col, lambda x, m: x - m)
-    out_cols = [
-        F.round(dot(centered, F.array(*[F.lit(x) for x in comp])), 4).alias(f"pc{i + 1}")
-        for i, comp in enumerate(comps)
-    ]
-    return corpus.select("vec_id", *out_cols)
+    centered = f"zip_with({_double('embedding')}, {vec_sql(mean)}, (_x, _m) -> _x - _m)"
+    return corpus.selectExpr(
+        "vec_id",
+        *[
+            f"round({_dot(centered, vec_sql(comp))}, 4) AS pc{i + 1}"
+            for i, comp in enumerate(comps)
+        ],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -517,7 +526,7 @@ def dim_stats(corpus: DataFrame) -> DataFrame:
     order cheaper). Returns (dim_i, m, sd).
     """
     dims = corpus.select(
-        as_double(F.col("embedding")).alias("e")
+        as_double("embedding").alias("e")
     ).select(F.posexplode("e").alias("dim_i", "x"))
     mean = F.sum("x") / F.count(F.lit(1))
     var = F.sum(F.col("x") * F.col("x")) / F.count(F.lit(1)) - mean * mean
@@ -544,7 +553,7 @@ def standardize(corpus: DataFrame) -> DataFrame:
         ).alias("_sds"),
     )
     zvec = F.transform(
-        as_double(F.col("embedding")),
+        as_double("embedding"),
         lambda x, i: F.round(
             (x - F.element_at(F.col("_ms"), i + 1))
             / F.element_at(F.col("_sds"), i + 1),
@@ -590,7 +599,7 @@ def standardize(corpus: DataFrame) -> DataFrame:
 def v13_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = load_table(spark, "embeddings", sf_dir)
     dims = corpus.select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
+        "vec_id", as_double("embedding").alias("e")
     ).select("vec_id", F.posexplode("e").alias("dim_i", "x"))
     st = dim_stats(corpus).filter(F.col("sd") > 0)
     return (
@@ -713,9 +722,9 @@ def drift_zscores(a_corpus: DataFrame, b_corpus: DataFrame) -> DataFrame:
     """Drift report between two explicit (vec_id, embedding) slices —
     yesterday's indexed corpus vs today's arrival batch."""
     dims = (
-        a_corpus.select(F.lit("a").alias("slice"), as_double(F.col("embedding")).alias("e"))
+        a_corpus.select(F.lit("a").alias("slice"), as_double("embedding").alias("e"))
         .unionByName(
-            b_corpus.select(F.lit("b").alias("slice"), as_double(F.col("embedding")).alias("e"))
+            b_corpus.select(F.lit("b").alias("slice"), as_double("embedding").alias("e"))
         )
         .select("slice", F.posexplode("e").alias("dim_i", "x"))
     )
@@ -771,7 +780,7 @@ def v16_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus.crossJoin(F.broadcast(n_max))
         .select(
             F.when(F.col("vec_id") < F.col("n") / 2, "a").otherwise("b").alias("slice"),
-            as_double(F.col("embedding")).alias("e"),
+            as_double("embedding").alias("e"),
         )
         .select("slice", F.posexplode("e").alias("dim_i", "x"))
     )
@@ -1072,11 +1081,11 @@ def v12b_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.col("vec_id") % 5 == 0,
             F.transform(
-                as_double(F.col("embedding")),
+                as_double("embedding"),
                 lambda x, i: F.when(i == 0, x + F.lit(0.5)).otherwise(x),
             ),
         )
-        .otherwise(as_double(F.col("embedding")))
+        .otherwise(as_double("embedding"))
         .alias("embedding"),
     )
     dims = emb.select(

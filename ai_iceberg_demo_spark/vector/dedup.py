@@ -784,7 +784,7 @@ def d5_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = side.select(F.col("vec_id").alias("b_id"), F.col("label").alias("bl"), F.col("v").alias("bv"), F.col("n").alias("nb"))
     pairs = (
         a.join(b, F.col("al") == F.col("bl"))
-        .filter(F.round(dot(F.col("av"), F.col("bv")) / (F.col("na") * F.col("nb")), 6) >= 0.98)
+        .filter(F.round(dot("av", "bv") / (F.col("na") * F.col("nb")), 6) >= 0.98)
         .select("a_id", "b_id")
     )
     return pairs.groupBy(F.col("a_id").alias("vec_id")).agg(
@@ -2882,12 +2882,12 @@ def d5b_lsh_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id"), _D5B_TWIN_OFFSET, "vec_id", "_D5B_TWIN_OFFSET"
     )
     emb = raw.select(
-        guarded.alias("vec_id"), as_double(F.col("embedding")).alias("embedding")
+        guarded.alias("vec_id"), as_double("embedding").alias("embedding")
     )
     salted = emb.unionByName(
         raw.filter(F.col("vec_id") % 25 == 0).select(
             (guarded + _D5B_TWIN_OFFSET).alias("vec_id"),
-            as_double(F.col("embedding")).alias("embedding"),
+            as_double("embedding").alias("embedding"),
         )
     )
     planes = md5_planes(_D5B_TABLES, _D5B_PLANES, 64)
@@ -2918,7 +2918,7 @@ def d5b_lsh_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(a, "a_id")
         .join(b, "b_id")
         .filter(
-            F.round(dot(F.col("av"), F.col("bv")) / (F.col("na") * F.col("nb")), 6)
+            F.round(dot("av", "bv") / (F.col("na") * F.col("nb")), 6)
             >= _D5B_COS
         )
         .select("a_id", "b_id")

@@ -41,31 +41,63 @@ REGISTRY = Registry()
 # ---------------------------------------------------------------------------
 
 
-def as_double(vec: Column) -> Column:
-    return F.transform(vec, lambda x: x.cast("double"))
+def _double(vec: str) -> str:
+    return f"transform({vec}, _x -> CAST(_x AS DOUBLE))"
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-sum dot product — JVM-side, bit-compatible with the
-    oracle's list_dot_product over double lists."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
+def _dot(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (_x, _y) -> _x * _y), 0D, (_acc, _v) -> _acc + _v)"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    a, b = as_double(a), as_double(b)
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+def _cosine(a: str, b: str) -> str:
+    a, b = _double(a), _double(b)
+    return f"{_dot(a, b)} / (sqrt({_dot(a, a)}) * sqrt({_dot(b, b)}))"
+
+
+def vec_sql(vec) -> str:
+    """A literal DOUBLE array: every component widened exactly to a
+    double (a float32 value is exactly representable) and written in
+    its shortest round-trip form, so the literal holds the same doubles
+    ``as_double`` would compute from the stored array."""
+    return "array(" + ", ".join(f"{float(x)!r}D" for x in vec) + ")"
+
+
+# The vector library below takes SQL text (a column name is SQL text)
+# and returns ONE ``F.expr``: a Column-built higher-order function costs
+# a py4j round trip per node (~200 for one cosine), a parsed string one.
+# Compose with the ``_double``/``_dot``/``_cosine`` text builders above.
+
+
+def as_double(vec: str) -> Column:
+    """The array ``vec`` (SQL text) with every element cast to double,
+    so Spark and the DuckDB oracle sum identical IEEE doubles."""
+    return F.expr(_double(vec))
+
+
+def dot(a: str, b: str) -> Column:
+    """Sequential-sum dot product of two double arrays (SQL text) —
+    JVM-side, bit-compatible with the oracle's list_dot_product over
+    double lists."""
+    return F.expr(_dot(a, b))
+
+
+def cosine(a: str, b: str) -> Column:
+    """Cosine of two arrays (SQL text: column names, or ``vec_sql``
+    literals), both cast to double first — the arithmetic of
+    ``_COS_SQL``."""
+    return F.expr(_cosine(a, b))
 
 
 def with_norm(df: DataFrame, vec_col: str, vec_out: str, norm_out: str) -> DataFrame:
-    """Project the double-cast vector and its l2 norm ONCE per row.
+    """Project the double-cast vector and its l2 norm ONCE per row
+    (``vec_col`` is SQL text; the outputs are column names).
     Pairwise cosine then becomes dot(av,bv)/(na·nb) — the identical
     arithmetic `cosine()` performs (so results are bit-equal and the
     oracle SQL needs no change), but the two norms are paid O(rows)
     instead of O(pairs). On the label-blocked dedup join this measured
     3.5× end-to-end at sf0.1."""
-    v = as_double(F.col(vec_col))
-    return df.withColumn(vec_out, v).withColumn(
-        norm_out, F.sqrt(dot(F.col(vec_out), F.col(vec_out)))
+    return df.withColumn(vec_out, as_double(vec_col)).withColumn(
+        norm_out, F.expr(f"sqrt({_dot(vec_out, vec_out)})")
     )
 
 
@@ -85,7 +117,7 @@ def cosine_topk(
     Reference: db.index.vector.queryNodes (neo4j_rag.py:256-279).
     `query_vec` must expose a single row with column `qvec`.
     """
-    score = F.round(cosine(F.col("embedding"), F.col("qvec")), 6)
+    score = F.round(cosine("embedding", "qvec"), 6)
     return (
         corpus.crossJoin(F.broadcast(query_vec))
         .select("vec_id", score.alias("score"))
@@ -95,18 +127,39 @@ def cosine_topk(
     )
 
 
-def lsh_bucket(vec: Column, planes: np.ndarray) -> Column:
+def lsh_bucket(vec: str, planes: np.ndarray) -> Column:
     """Random-hyperplane LSH signature: sign bits of `planes @ vec`,
     packed into a BIGINT bucket id. Deterministic given the seed used
     to draw `planes`. At 100 TB the corpus is written bucketed by this
     key (Iceberg bucket partition transform) so an ANN probe touches
     only matching buckets."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        plane_col = F.array(*[F.lit(float(x)) for x in plane])
-        bit = (dot(as_double(vec), plane_col) > 0).cast("long")
-        bucket = bucket + F.shiftleft(bit, i)
-    return bucket
+    bits = [
+        f"shiftleft(CAST({_dot(_double(vec), vec_sql(plane))} > 0 AS BIGINT), {i})"
+        for i, plane in enumerate(planes)
+    ]
+    return F.expr(" + ".join(["CAST(0 AS BIGINT)", *bits]))
+
+
+def signature_kernel(tables: list[np.ndarray], round_digits: int | None = None):
+    """The numpy LSH kernel: a function from an (n × dim) float64 array
+    to its (n × L) int64 bucket ids — (n × dim) @ (dim × L·k) sign
+    bits, packed per table. ``lsh_signatures`` runs it on every Arrow
+    batch and ``lsh_probe`` on the one query row (n = 1), so a query
+    hashed on the driver gets the bits a one-row batch would. A nested
+    function, so the UDF closure pickles it by value."""
+    planes = np.stack(tables)  # (T, K, dim)
+    n_tables_, n_planes_, _dim = planes.shape
+    flat = planes.reshape(n_tables_ * n_planes_, _dim)
+    weights = (1 << np.arange(n_planes_)).astype(np.int64)
+
+    def sign(x: np.ndarray) -> np.ndarray:
+        dots = x @ flat.T
+        if round_digits is not None:
+            dots = np.round(dots, round_digits)
+        bits = (dots > 0).reshape(len(x), n_tables_, n_planes_)
+        return bits @ weights
+
+    return sign
 
 
 def lsh_signatures(
@@ -124,21 +177,13 @@ def lsh_signatures(
     ``round_digits`` rounds each plane·vec dot before the sign test —
     the quantization that makes a signature replayable bit-exactly by
     a SQL engine summing in a different order (v27/v3d's oracles)."""
-    planes = np.stack(tables)  # (T, K, dim)
-    n_tables_, n_planes_, _dim = planes.shape
-    flat = planes.reshape(n_tables_ * n_planes_, _dim)
-    weights = (1 << np.arange(n_planes_)).astype(np.int64)
+    sign = signature_kernel(tables, round_digits)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _sigs(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype=object)
-        x = np.stack(v.to_numpy()).astype(np.float64)
-        dots = x @ flat.T
-        if round_digits is not None:
-            dots = np.round(dots, round_digits)
-        bits = (dots > 0).reshape(len(x), n_tables_, n_planes_)
-        return pd.Series(list(bits @ weights))
+        return pd.Series(list(sign(np.stack(v.to_numpy()).astype(np.float64))))
 
     return _sigs(vec)
 
@@ -221,10 +266,34 @@ def build_lsh_index(
     ).select("t", "b", "vec_id")
 
 
+def collect_query(query_vec: DataFrame) -> list[float]:
+    """Resolve a one-row query frame on the driver: ONE job reads
+    ``qvec``, so a probe built from the returned vector never scans
+    the caller's frame again. Raises ValueError unless the frame holds
+    exactly one row — a 2-row frame would otherwise rank one top-k
+    mixed across both queries, and a 0-row frame return nothing."""
+    rows = query_vec.select("qvec").collect()
+    if len(rows) != 1:
+        raise ValueError(f"query frame must hold exactly one qvec row, got {len(rows)}")
+    return list(rows[0]["qvec"])
+
+
+def _rerank(candidates: DataFrame, query: list[float], k: int, min_score: float) -> DataFrame:
+    """Exact rerank of candidate (vec_id, embedding) rows against the
+    literal query: the same rounded cosine the exact path computes over
+    a broadcast ``qvec`` column, so scores are bit-identical."""
+    return (
+        candidates.selectExpr("vec_id", f"round({_cosine('embedding', vec_sql(query))}, 6) AS score")
+        .filter(F.col("score") >= F.lit(min_score))
+        .orderBy(F.desc("score"), F.asc("vec_id"))
+        .limit(k)
+    )
+
+
 def lsh_probe(
     index: DataFrame,
     corpus: DataFrame,
-    query_vec: DataFrame,
+    query: list[float],
     k: int,
     n_tables: int,
     n_planes: int,
@@ -232,25 +301,19 @@ def lsh_probe(
     dim: int,
     min_score: float = -1.0,
 ) -> DataFrame:
-    """Probe a persisted LSH index: hash the query with the same plane
-    family, equi-join (t, b) against the index for candidates, then
-    exact-rerank candidates by cosine. The corpus is touched only for
-    candidate vec_ids (a semi-join-shaped broadcast at realistic
-    candidate counts)."""
-    tables = lsh_tables(n_tables, n_planes, seed, dim)
-    q_buckets = query_vec.select(
-        F.posexplode(lsh_signatures(F.col("qvec"), tables)).alias("t", "b")
-    )
-    cand_ids = index.join(F.broadcast(q_buckets), ["t", "b"]).select("vec_id").distinct()
-    candidates = corpus.join(cand_ids, "vec_id")
-    score = F.round(cosine(F.col("embedding"), F.col("qvec")), 6)
-    return (
-        candidates.crossJoin(F.broadcast(query_vec))
-        .select("vec_id", score.alias("score"))
-        .filter(F.col("score") >= min_score)
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-    )
+    """Probe a persisted LSH index with a driver-side query vector
+    (``collect_query``): hash it with the build's plane family and
+    kernel, filter the index by a literal (t, b) predicate for
+    candidates, then exact-rerank candidates by cosine. The plan has
+    no Python worker and no query broadcast; a literal predicate is
+    pushed to the scan (at 100 TB it prunes (t, bucket(N, b)) Iceberg
+    partitions at plan time). The corpus is touched only for candidate
+    vec_ids."""
+    sign = signature_kernel(lsh_tables(n_tables, n_planes, seed, dim))
+    sig = sign(np.asarray([query], dtype=np.float64))[0]
+    hit = " OR ".join(f"(t = {t} AND b = {int(b)})" for t, b in enumerate(sig))
+    cand_ids = index.filter(F.expr(hit)).select("vec_id").distinct()
+    return _rerank(corpus.join(cand_ids, "vec_id"), query, k, min_score)
 
 
 def ann_topk(
@@ -285,7 +348,7 @@ def ann_topk(
     q = query_vec.select(
         "qvec", F.posexplode(lsh_signatures(F.col("qvec"), tables)).alias("t", "b")
     )
-    score = F.round(cosine(F.col("embedding"), F.col("qvec")), 6)
+    score = F.round(cosine("embedding", "qvec"), 6)
     candidates = (
         bucketed.join(F.broadcast(q), ["t", "b"])
         .select("vec_id", "embedding", "qvec")
@@ -413,7 +476,7 @@ def j6_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, "embeddings", sf_dir).filter(F.col("vec_id") < 100), "embedding", "pv", "pn"
     ).select(F.col("vec_id").alias("probe_id"), "pv", "pn")
     # norms hoisted per row (with_norm) — only the dot is per pair
-    score = F.round(dot(F.col("cv"), F.col("pv")) / (F.col("cn") * F.col("pn")), 6)
+    score = F.round(dot("cv", "pv") / (F.col("cn") * F.col("pn")), 6)
     return (
         emb.crossJoin(F.broadcast(probe))
         .withColumn("score", score)
@@ -456,7 +519,7 @@ def assign_cells(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
         "vec_id",
         "embedding",
         F.col("cell_id"),
-        (dot(F.col("_cv"), F.col("_zv")) / (F.col("_cn") * F.col("_zn"))).alias("c_score"),
+        (dot("_cv", "_zv") / (F.col("_cn") * F.col("_zn"))).alias("c_score"),
     )
     return scored.groupBy("vec_id").agg(
         F.max_by("cell_id", "c_score").alias("cell_id"),
@@ -479,9 +542,10 @@ def ivf_topk(
     ``vector.clustering.kmeans_train`` — trained cells follow the data's
     density, so probes recover more of the true neighborhood than any
     fixed partition. When omitted, falls back to the first ``n_cells``
-    corpus vectors (deterministic, train-free). Probe: rank cells by
-    query-centroid cosine, scan the best ``n_probe`` cells, exact-rerank
-    candidates.
+    corpus vectors (deterministic, train-free). Probe (``ivf_probe``,
+    with the one-row ``query_vec`` collected by ``collect_query``): rank
+    cells by query-centroid cosine, scan the best ``n_probe`` cells,
+    exact-rerank candidates.
 
     At 100 TB the corpus is written partition-bucketed by cell_id
     (Iceberg partition transform), so a probe reads n_probe partitions
@@ -493,7 +557,7 @@ def ivf_topk(
             F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
         )
     assigned = assign_cells(corpus, centroids)
-    return ivf_probe(assigned, centroids, query_vec, k, n_probe=n_probe)
+    return ivf_probe(assigned, centroids, collect_query(query_vec), k, n_probe=n_probe)
 
 
 def ivf_candidate_pairs(
@@ -515,7 +579,7 @@ def ivf_candidate_pairs(
 
     cell_scores = centroids.crossJoin(
         F.broadcast(probes.select("qid", F.col("qv").alias("_pv")))
-    ).select("qid", "cell_id", cosine(F.col("centroid"), F.col("_pv")).alias("c_score"))
+    ).select("qid", "cell_id", cosine("centroid", "_pv").alias("c_score"))
     w = Window.partitionBy("qid").orderBy(F.desc("c_score"), F.asc("cell_id"))
     cells = (
         cell_scores.withColumn("_rn", F.row_number().over(w))
@@ -528,35 +592,31 @@ def ivf_candidate_pairs(
 def ivf_probe(
     assigned: DataFrame,
     centroids: DataFrame,
-    query_vec: DataFrame,
+    query: list[float],
     k: int,
     n_probe: int = 4,
     min_score: float = -1.0,
 ) -> DataFrame:
-    """Probe a prebuilt IVF index: rank cells by query-centroid cosine,
-    scan the best ``n_probe`` cells, exact-rerank the candidates.
+    """Probe a prebuilt IVF index with a driver-side query vector
+    (``collect_query``): rank cells by query-centroid cosine, scan the
+    best ``n_probe`` cells, exact-rerank the candidates.
 
-    ``assigned`` is the persisted (vec_id, cell_id, embedding) table —
-    bucketed/partitioned by cell_id in production so the probe's
-    equi-join prunes to n_probe partition reads; ``centroids`` is the
-    k×dim table (broadcast twice: once to rank cells, never against the
-    corpus)."""
-    probe_cells = (
-        centroids.crossJoin(F.broadcast(query_vec))
-        .select("cell_id", cosine(F.col("centroid"), F.col("qvec")).alias("c_score"))
+    Ranking is one JVM-only job over the k×dim ``centroids`` table
+    that collects the n_probe cell ids; the index is then read with a
+    literal ``cell_id IN (...)``. ``assigned`` is the persisted
+    (vec_id, cell_id, embedding) table, bucketed by cell_id, so the
+    scan reads only the bucket files holding the n_probe cells (at
+    100 TB: Iceberg ``bucket(N, cell_id)`` partitions pruned at plan
+    time)."""
+    cells = [
+        r["cell_id"]
+        for r in centroids.selectExpr("cell_id", f"{_cosine('centroid', vec_sql(query))} AS c_score")
         .orderBy(F.desc("c_score"), F.asc("cell_id"))
         .limit(n_probe)
-        .select("cell_id")
-    )
-    candidates = assigned.join(F.broadcast(probe_cells), "cell_id")
-    score = F.round(cosine(F.col("embedding"), F.col("qvec")), 6)
-    return (
-        candidates.crossJoin(F.broadcast(query_vec))
-        .select("vec_id", score.alias("score"))
-        .filter(F.col("score") >= F.lit(min_score))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-    )
+        .collect()
+    ]
+    candidates = assigned.filter(F.expr(f"cell_id IN ({', '.join(map(str, cells))})"))
+    return _rerank(candidates, query, k, min_score)
 
 
 @REGISTRY.register(
@@ -624,7 +684,7 @@ def t17b_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
     # r12: the corpus×bench HOF-cosine map work serializes on the
     # single-file fixture scan — fan it out (no-op at cluster scale)
     emb = fan_out_small_input(load_table(spark, "embeddings", sf_dir))
-    base = emb.select("vec_id", as_double(F.col("embedding")).alias("embedding"))
+    base = emb.select("vec_id", as_double("embedding").alias("embedding"))
     bench_raw = base.filter(F.col("vec_id") % 10 == 3)
     # planted twins OF THE BENCHMARK rows — semantic leakage to catch
     twins = bench_raw.select(
@@ -640,7 +700,7 @@ def t17b_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
     bench = with_norm(bench_raw, "embedding", "bv", "bn").select(
         F.col("vec_id").alias("bench_id"), "bv", "bn"
     )
-    score = F.round(dot(F.col("cv"), F.col("bv")) / (F.col("cn") * F.col("bn")), 6)
+    score = F.round(dot("cv", "bv") / (F.col("cn") * F.col("bn")), 6)
     pairs = (
         corpus.crossJoin(F.broadcast(bench))
         .select("vec_id", "bench_id", score.alias("score"))
@@ -884,11 +944,11 @@ def v19_contrastive_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("anchor_id"),
         F.col("label").alias("alabel"),
-        as_double(F.col("embedding")).alias("avec"),
+        as_double("embedding").alias("avec"),
     )
     corpus = with_norm(emb, "embedding", "cv", "cn")
     a = with_norm(anchors, "avec", "av", "an")
-    score = F.round(dot(F.col("cv"), F.col("av")) / (F.col("cn") * F.col("an")), 6)
+    score = F.round(dot("cv", "av") / (F.col("cn") * F.col("an")), 6)
     scored = (
         corpus.crossJoin(F.broadcast(a))
         .filter(F.col("vec_id") != F.col("anchor_id"))
@@ -945,7 +1005,7 @@ def v19_contrastive_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 def v20_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     expl = emb.select(
-        "vec_id", F.posexplode(as_double(F.col("embedding"))).alias("dim", "x")
+        "vec_id", F.posexplode(as_double("embedding")).alias("dim", "x")
     )
     stats = expl.groupBy("dim").agg(F.min("x").alias("lo"), F.max("x").alias("hi"))
     return expl.join(F.broadcast(stats), "dim").select(
@@ -1014,15 +1074,15 @@ _MRL_K = 5
 def v22_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     qv = emb.filter(F.col("vec_id") == 0).select(
-        as_double(F.col("embedding")).alias("qv")
+        as_double("embedding").alias("qv")
     )
 
     def topk(prefix: int | None):
         if prefix is None:
-            a, b = F.col("embedding"), F.col("qv")
+            a, b = "embedding", "qv"
         else:
-            a = F.slice(as_double(F.col("embedding")), 1, prefix)
-            b = F.slice(F.col("qv"), 1, prefix)
+            a = f"slice({_double('embedding')}, 1, {prefix})"
+            b = f"slice(qv, 1, {prefix})"
         score = F.round(cosine(a, b), 6)
         return (
             emb.crossJoin(F.broadcast(qv))
@@ -1160,14 +1220,14 @@ def v24b_label_noise_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.filter(F.col("vec_id") % _V25_PROBES_MOD == 0).select(
         F.col("vec_id").alias("src"),
         F.col("label").alias("own_label"),
-        as_double(F.col("embedding")).alias("qv"),
+        as_double("embedding").alias("qv"),
     )
     scored = emb.join(F.broadcast(probes), emb.vec_id != probes.src).select(
         "src",
         "own_label",
         "vec_id",
         F.col("label").alias("nl"),
-        F.round(cosine(F.col("embedding"), F.col("qv")), 6).alias("s"),
+        F.round(cosine("embedding", "qv"), 6).alias("s"),
     )
     top_w = W.partitionBy("src").orderBy(F.desc("s"), F.asc("vec_id"))
     top3 = scored.withColumn("rn", F.row_number().over(top_w)).filter(
@@ -1297,12 +1357,12 @@ def v25_ivf_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cen = seed_centroids(emb, _V25_CELLS)
     assigned = kmeans_assign(emb, cen).select("vec_id", "cell_id")
     probes = emb.filter(F.col("vec_id") % _V25_PROBES_MOD == 0).select(
-        F.col("vec_id").alias("qid"), as_double(F.col("embedding")).alias("qv")
+        F.col("vec_id").alias("qid"), as_double("embedding").alias("qv")
     )
     n_probes_count = probes.count()
 
     cr_w = W.partitionBy("qid").orderBy(
-        F.desc(F.round(cosine(F.col("centroid"), F.col("qv")), 6)), F.asc("cell_id")
+        F.desc(F.round(cosine("centroid", "qv"), 6)), F.asc("cell_id")
     )
     cellrank = (
         cen.crossJoin(F.broadcast(probes))
@@ -1317,7 +1377,7 @@ def v25_ivf_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(assigned, "vec_id")
         .select(
             "qid", "vec_id", "cell_id",
-            F.round(cosine(F.col("embedding"), F.col("qv")), 6).alias("s"),
+            F.round(cosine("embedding", "qv"), 6).alias("s"),
         )
         .transform(persist_once)
     )
@@ -1468,7 +1528,7 @@ def v27_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_out_small_input(load_table(spark, "embeddings", sf_dir))
     sigs = _md5_sig_table(emb)
     probes = emb.filter(F.col("vec_id") % _V25_PROBES_MOD == 0).select(
-        F.col("vec_id").alias("qid"), as_double(F.col("embedding")).alias("qv")
+        F.col("vec_id").alias("qid"), as_double("embedding").alias("qv")
     )
     n_probes_count = probes.count()
     psigs = (
@@ -1492,7 +1552,7 @@ def v27_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = emb.join(F.broadcast(probes), emb.vec_id != F.col("qid")).select(
         "qid",
         "vec_id",
-        F.round(cosine(F.col("embedding"), F.col("qv")), 6).alias("s"),
+        F.round(cosine("embedding", "qv"), 6).alias("s"),
     ).transform(persist_once)
     ex_w = W.partitionBy("qid").orderBy(F.desc("s"), F.asc("vec_id"))
     exact3 = (
@@ -1539,8 +1599,8 @@ def v27_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="the LSH probe itself, hash-checked: bucket vec_id 0's "
     "embedding with the pinned md5 plane family, collect every "
     "bucket-collision candidate across the 8 tables, exact-rerank by "
-    "rounded cosine, top-5. Same plan shape as lsh_probe / v3b "
-    "(banded (t,b) equi-join + candidate-only rerank, reference "
+    "rounded cosine, top-5. Same arithmetic as lsh_probe / v3b "
+    "((t,b) bucket collisions + candidate-only rerank, reference "
     "neo4j_rag.py:256-279) but with SQL-replayable hyperplanes — the "
     "r5 verdict's 'hash-oracle the LSH probe, not just recall'. At "
     "100 TB the signature relation is the persisted M5 index and the "
@@ -1568,7 +1628,7 @@ def v3d_lsh_probe_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = _md5_sig_table(emb)
     qsig = sigs.filter(F.col("vec_id") == 0).select("t", "b")
     qv = emb.filter(F.col("vec_id") == 0).select(
-        as_double(F.col("embedding")).alias("qv")
+        as_double("embedding").alias("qv")
     )
     cand_ids = (
         sigs.join(F.broadcast(qsig), ["t", "b"])
@@ -1581,7 +1641,7 @@ def v3d_lsh_probe_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qv))
         .select(
             "vec_id",
-            F.round(cosine(F.col("embedding"), F.col("qv")), 6).alias("score"),
+            F.round(cosine("embedding", "qv"), 6).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(5)
@@ -1615,8 +1675,8 @@ def embedding_qa_gate(
     Reference analog: the reference indexes only rows with a non-null
     embedding property (neo4j_rag.py:236-241); this is that discipline
     with the degenerate classes made explicit."""
-    e = as_double(F.col(vec_col))
-    nrm = F.sqrt(dot(e, e))
+    e = _double(vec_col)
+    nrm = F.expr(f"sqrt({_dot(e, e)})")
     verdict = F.when(F.size(F.col(vec_col)) != dim, "wrong_dim").when(
         nrm == 0, "zero_vector"
     )
@@ -1690,7 +1750,7 @@ def embedding_qa_gate(
 )
 def v26_embedding_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
+        "vec_id", as_double("embedding").alias("e")
     )
     spark_planted = emb.unionByName(
         spark.range(1)
@@ -1712,7 +1772,7 @@ def v26_embedding_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     feat = spark_planted.select(
         "vec_id",
         F.size("e").alias("dim"),
-        F.round(F.sqrt(dot(F.col("e"), F.col("e"))), 6).alias("nrm"),
+        F.round(F.sqrt(dot("e", "e")), 6).alias("nrm"),
         F.size(F.filter(F.col("e"), lambda x: x == 0.0)).alias("n_zero"),
     )
     stats = feat.filter((F.col("dim") == 64) & (F.col("nrm") > 0)).agg(
@@ -1777,7 +1837,7 @@ def v28_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.filter(F.col("vec_id").isin(*_V28_PROBE_IDS)).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("qlabel"),
-        as_double(F.col("embedding")).alias("qv"),
+        as_double("embedding").alias("qv"),
     )
     scored = emb.join(
         F.broadcast(probes),
@@ -1786,7 +1846,7 @@ def v28_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qid",
         "vec_id",
         "label",
-        F.round(cosine(F.col("embedding"), F.col("qv")), 6).alias("score"),
+        F.round(cosine("embedding", "qv"), 6).alias("score"),
     )
     w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
@@ -1878,7 +1938,7 @@ def _rerank_topk(
         .select(
             "src",
             "dst",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("score"),
+            F.round(cosine("va", "vb"), 6).alias("score"),
         )
     )
     w = W.partitionBy("src").orderBy(F.desc("score"), F.asc("dst"))
@@ -2210,7 +2270,7 @@ def v29_binary_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("hamming"),
-        F.round(cosine(F.col("pvec"), F.col("embedding")), 6).alias("cos"),
+        F.round(cosine("pvec", "embedding"), 6).alias("cos"),
     )
     ham_top = scored.withColumn(
         "rn", F.row_number().over(W.partitionBy("probe_id").orderBy("hamming", "vec_id"))
@@ -2338,7 +2398,7 @@ def v30_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     emb = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
+        "vec_id", as_double("embedding").alias("v")
     )
     blocks = emb.select(
         "vec_id",
@@ -2487,7 +2547,7 @@ def v31_tombstone_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     tomb = emb.filter(F.col("vec_id") % 50 == 0).select("vec_id")
     probes = emb.filter(F.col("vec_id").isin(*_V31_PROBES)).select(
-        F.col("vec_id").alias("qid"), as_double(F.col("embedding")).alias("qv")
+        F.col("vec_id").alias("qid"), as_double("embedding").alias("qv")
     )
     # persist: the scored scan feeds both the unfiltered ranking (the
     # promotion audit) and the live ranking
@@ -2496,7 +2556,7 @@ def v31_tombstone_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             "vec_id",
-            F.round(cosine(as_double(F.col("embedding")), F.col("qv")), 6).alias(
+            F.round(cosine("embedding", "qv"), 6).alias(
                 "score"
             ),
         )
@@ -2541,8 +2601,8 @@ _V3E_PROBE = 4
     "cell_id) tie-break (assign_cells' max_by is float-tie "
     f"nondeterministic across engines), top-{_V3E_PROBE} probe cells "
     "by rounded query-centroid cosine, exact rerank of the probed "
-    "cells' members, top-5. Same plan shape as ivf_probe / v3c "
-    "(broadcast centroid cross → cell equi-join → candidate-only "
+    "cells' members, top-5. Same arithmetic as ivf_probe / v3c "
+    "(query-centroid ranking → probed cells' members → candidate-only "
     "rerank); the assignment window is vec_id-partitioned — the same "
     "key the index build shuffles on. v3c keeps the TRAINED-centroid "
     "path (recall-tested); this pins the probe arithmetic.",
@@ -2590,10 +2650,10 @@ def v3e_ivf_probe_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_out_small_input(load_table(spark, "embeddings", sf_dir))
     cen = emb.filter(F.col("vec_id") < _V3E_CELLS).select(
         F.col("vec_id").alias("cell_id"),
-        as_double(F.col("embedding")).alias("centroid"),
+        as_double("embedding").alias("centroid"),
     )
     qv = emb.filter(F.col("vec_id") == 0).select(
-        as_double(F.col("embedding")).alias("qv")
+        as_double("embedding").alias("qv")
     )
     c = with_norm(emb, "embedding", "_cv", "_cn")
     z = with_norm(cen, "centroid", "_zv", "_zn")
@@ -2601,7 +2661,7 @@ def v3e_ivf_probe_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "cell_id",
         F.round(
-            dot(F.col("_cv"), F.col("_zv")) / (F.col("_cn") * F.col("_zn")), 6
+            dot("_cv", "_zv") / (F.col("_cn") * F.col("_zn")), 6
         ).alias("s"),
     )
     w_assign = W.partitionBy("vec_id").orderBy(F.desc("s"), F.asc("cell_id"))
@@ -2614,7 +2674,7 @@ def v3e_ivf_probe_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         cen.crossJoin(F.broadcast(qv))
         .select(
             "cell_id",
-            F.round(cosine(F.col("centroid"), F.col("qv")), 6).alias("cs"),
+            F.round(cosine("centroid", "qv"), 6).alias("cs"),
         )
         .orderBy(F.desc("cs"), F.asc("cell_id"))
         .limit(_V3E_PROBE)
@@ -2630,7 +2690,7 @@ def v3e_ivf_probe_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qv))
         .select(
             "vec_id",
-            F.round(cosine(F.col("embedding"), F.col("qv")), 6).alias("score"),
+            F.round(cosine("embedding", "qv"), 6).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(5)
@@ -2784,7 +2844,7 @@ def v32_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     emb = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
+        "vec_id", as_double("embedding").alias("v")
     )
     cen = emb.filter(F.col("vec_id") < _V32_CELLS).select(
         F.col("vec_id").alias("cell_id"), F.col("v").alias("centroid")
@@ -3453,7 +3513,7 @@ def v35_pq_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: the probe×corpus HOF-l2 map work serializes on the
     # single-file fixture scan — fan out (see t17b)
     emb = fan_out_small_input(load_table(spark, "embeddings", sf_dir)).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
+        "vec_id", as_double("embedding").alias("v")
     ).transform(persist_once)
     l2 = lambda a, b: F.sqrt(
         F.aggregate(

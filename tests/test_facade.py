@@ -453,6 +453,135 @@ def test_delete_vectors_soft_deletes_from_every_probe_path(spark):
         assert not spark.catalog.tableExists(f"{name}__tombstones")
 
 
+def _small_index(spark, kind):
+    """A facade over the first 400 fixture vectors with one index of
+    ``kind`` built on them (ivf: 16 cells, 4 probed), plus the full
+    embeddings table the callers draw their queries and batches from."""
+    emb = load_table(spark, "embeddings", SF_DIR)
+    rag = VectorRAG(emb.filter(F.col("vec_id") < 400), load_table(spark, "documents", SF_DIR))
+    name = f"t_once_idx_{kind}"
+    rag.drop_vector_index(name)
+    rag.create_vector_index(name, kind=kind)
+    return rag, name, emb
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_index_calls_leave_no_persisted_frames(spark, kind):
+    """ROADMAP 4(d): a long-lived facade session keeps nothing
+    persisted — creating an index (ivf: k-means checkpoints) and N
+    rounds of search, upsert and delete leave neither a persisted RDD
+    (delete_vectors once leaked a localCheckpoint per call) nor a
+    CacheManager entry behind."""
+    from ai_iceberg_demo_spark.facade import release_caches
+
+    release_caches(spark)
+    rag, name, emb = _small_index(spark, kind)
+    try:
+        qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
+        jsc = spark.sparkContext._jsc
+        for i in range(3):
+            rag.search_similar_results(qv, k=3, min_score=-1.0, index=name).collect()
+            assert rag.upsert_vector_index(emb.filter(F.col("vec_id") == 400 + i), name) == 1
+            victim = spark.createDataFrame([(10 + i,)], "vec_id long")
+            assert rag.delete_vectors(victim, name) == 1
+        assert len(jsc.getPersistentRDDs()) == 0
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    finally:
+        rag.drop_vector_index(name)
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_index_search_requires_exactly_one_query_row(spark, kind):
+    """An index probe ranks ONE query vector: a 0-row frame (once an
+    empty result) and a 2-row frame (once one top-k mixed across both
+    queries) both raise instead."""
+    rag, name, emb = _small_index(spark, kind)
+    try:
+        for n in (0, 2):
+            qv = emb.filter(F.col("vec_id") < n).select(F.col("embedding").alias("qvec"))
+            with pytest.raises(ValueError, match="exactly one"):
+                rag.search_similar_results(qv, k=2, min_score=-1.0, index=name)
+    finally:
+        rag.drop_vector_index(name)
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_index_calls_read_their_input_once(spark, kind):
+    """A search reads its query frame once and an upsert its batch
+    once: both frames are computed by a Python UDF that counts its
+    rows in an accumulator (once 2x: the probe re-read the query for
+    its bucket/cell ranking and its rerank, the upsert re-ran the
+    batch for its count and its append)."""
+    rag, name, emb = _small_index(spark, kind)
+    try:
+        vecs = {
+            r["vec_id"]: list(r["embedding"])
+            for r in emb.filter(F.col("vec_id").isin(0, 450, 451)).collect()
+        }
+        seen = spark.sparkContext.accumulator(0)
+
+        def count_and_fetch(vec_id):
+            seen.add(1)
+            return vecs[vec_id]
+
+        # nondeterministic: the optimizer may neither copy the UDF into
+        # inferred filters nor re-evaluate it, so the count is the
+        # number of times the frame itself is computed
+        fetch = F.udf(count_and_fetch, "array<float>").asNondeterministic()
+
+        qv = spark.range(1).select(fetch("id").alias("qvec"))
+        hits = rag.search_similar_results(qv, k=3, min_score=-1.0, index=name).collect()
+        assert hits[0]["vec_id"] == 0
+        assert seen.value == 1
+
+        batch = spark.createDataFrame([(450,), (451,)], "vec_id long").select(
+            "vec_id", fetch("vec_id").alias("embedding")
+        )
+        assert rag.upsert_vector_index(batch, name) == 2
+        assert seen.value == 1 + 2
+    finally:
+        rag.drop_vector_index(name)
+
+
+def test_index_probe_plans_hash_and_prune_on_the_driver(spark):
+    """The LSH probe filters the index by literal (t, b) pairs — its
+    executed plan runs no Python worker — and the IVF probe's literal
+    ``cell_id IN (...)`` prunes the cell-bucketed index to the bucket
+    files of the probed cells. (Spark 4 prunes bucket files without a
+    bucketed scan, so the plan reads ``Bucketed: false`` and shows no
+    ``SelectedBucketsCount``; the rows the scan reads are the pin.)"""
+    import re
+
+    qv = load_table(spark, "embeddings", SF_DIR).filter(F.col("vec_id") == 0).select(
+        F.col("embedding").alias("qvec")
+    )
+    for kind in ("lsh", "ivf"):
+        rag, name, _ = _small_index(spark, kind)
+        # parquet row-group pruning off: bucket pruning is then the only
+        # thing that can keep the scan from reading every index row
+        spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+        try:
+            probe = rag.search_similar_results(qv, k=3, min_score=-1.0, index=name)
+            assert probe.collect()[0]["vec_id"] == 0
+            plan = probe._jdf.queryExecution().executedPlan()
+            text = plan.toString()
+            if kind == "lsh":
+                assert "ArrowEvalPython" not in text and "BatchEvalPython" not in text
+                continue
+            cells = re.search(r"cell_id#\d+L IN \(([\d,]+)\)", text).group(1)
+            assert len(cells.split(",")) == 4
+            buckets = spark.table(name).selectExpr("pmod(hash(cell_id), 16) AS bkt", "cell_id")
+            in_probed_buckets = buckets.join(
+                buckets.filter(f"cell_id IN ({cells})").select("bkt").distinct(), "bkt"
+            ).count()
+            scan = plan.collectLeaves().apply(0)
+            read = scan.metrics().apply("numOutputRows").value()
+            assert read == in_probed_buckets < spark.table(name).count()
+        finally:
+            spark.conf.set("spark.sql.parquet.filterPushdown", "true")
+            rag.drop_vector_index(name)
+
+
 def test_erasure_pipeline_verifies_zero_residual(spark):
     """pipeline_erasure: every holding table reports erased_ok, the
     before counts agree with s12's inventory, and the subject actually

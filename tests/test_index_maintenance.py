@@ -102,7 +102,7 @@ def test_drifted_batch_retrains_and_recall_is_restored(spark):
         .join(F.broadcast(probes), "qid")
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
-            "qid", "vec_id", F.round(cosine(F.col("embedding"), F.col("qv")), 6).alias("s")
+            "qid", "vec_id", F.round(cosine("embedding", "qv"), 6).alias("s")
         )
         .collect()
     )

@@ -82,7 +82,7 @@ def test_mmr_matches_greedy_replay(spark):
         .select(
             "vec_id",
             "embedding",
-            F.round(cosine(F.col("embedding"), F.col("qvec")), 6).alias("rel"),
+            F.round(cosine("embedding", "qvec"), 6).alias("rel"),
         )
         .orderBy(F.desc("rel"), F.asc("vec_id"))
         .limit(20)

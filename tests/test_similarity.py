@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
@@ -186,11 +187,13 @@ def test_quantization_preserves_cosine_geometry(spark):
 def test_vectorized_signatures_equal_hof_buckets(spark):
     """lsh_signatures (Arrow matmul) must be bit-identical to the
     per-table HOF lsh_bucket across every table — build and probe both
-    rely on this equality."""
+    rely on this equality — and so must the same kernel run on the
+    driver one row at a time, as lsh_probe hashes its query."""
     from ai_iceberg_demo_spark.vector.similarity import (
         lsh_bucket,
         lsh_signatures,
         lsh_tables,
+        signature_kernel,
     )
     from ai_iceberg_demo_spark.tables import load_table
     from tests.conftest import SF_DIR
@@ -198,16 +201,18 @@ def test_vectorized_signatures_equal_hof_buckets(spark):
 
     corpus = load_table(spark, "embeddings", SF_DIR)
     tables = lsh_tables(n_tables=4, n_planes=5, seed=7, dim=64)
-    cols = [lsh_bucket(SF.col("embedding"), p).alias(f"h{t}")
+    cols = [lsh_bucket("embedding", p).alias(f"h{t}")
             for t, p in enumerate(tables)]
     cmp = corpus.select(
-        lsh_signatures(SF.col("embedding"), tables).alias("sig"), *cols
+        "embedding", lsh_signatures(SF.col("embedding"), tables).alias("sig"), *cols
     )
-    bad = cmp.filter(
-        ~((SF.col("sig")[0] == SF.col("h0")) & (SF.col("sig")[1] == SF.col("h1"))
-          & (SF.col("sig")[2] == SF.col("h2")) & (SF.col("sig")[3] == SF.col("h3")))
-    ).count()
-    assert bad == 0
+    sign = signature_kernel(tables)
+    rows = cmp.collect()
+    assert rows
+    for r in rows:
+        hof = [r[f"h{t}"] for t in range(4)]
+        assert list(r["sig"]) == hof
+        assert sign(np.asarray([r["embedding"]], dtype=np.float64))[0].tolist() == hof
 
 
 def test_matryoshka_eval_self_consistency(spark):
