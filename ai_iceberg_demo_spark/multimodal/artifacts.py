@@ -73,9 +73,10 @@ def artifact_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         mime.alias("mime"),
         F.encode("text", "UTF-8").alias("payload"),
         # fake intrinsic dims — deterministic doc_id hash, spanning both
-        # sides of TARGET_WIDTH so resize exercises both branches
-        ((F.col("doc_id") * 37) % 800 + 200).cast("int").alias("width"),
-        ((F.col("doc_id") * 53) % 600 + 150).cast("int").alias("height"),
+        # sides of TARGET_WIDTH so resize exercises both branches;
+        # reduced before multiplying, so no doc_id overflows a long (ANSI)
+        (((F.col("doc_id") % 800) * 37) % 800 + 200).cast("int").alias("width"),
+        (((F.col("doc_id") % 600) * 53) % 600 + 150).cast("int").alias("height"),
     )
 
 
@@ -294,8 +295,8 @@ def print_layout_html(
                ['image/png','image/jpeg','image/webp'][CAST(doc_id % 3 AS INT) + 1] AS mime,
                CAST(OCTET_LENGTH(ENCODE(text)) AS BIGINT) AS n_bytes,
                MD5(text) AS content_md5,
-               CAST((doc_id * 37) % 800 + 200 AS INT) AS width,
-               CAST((doc_id * 53) % 600 + 150 AS INT) AS height
+               CAST(((doc_id % 800) * 37) % 800 + 200 AS INT) AS width,
+               CAST(((doc_id % 600) * 53) % 600 + 150 AS INT) AS height
         FROM documents
     """,
 )
@@ -322,13 +323,13 @@ def v8_artifact_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         SELECT doc_id,
                ['image/png','image/jpeg','image/webp'][CAST(doc_id % 3 AS INT) + 1] AS mime,
-               CAST((doc_id * 37) % 800 + 200 AS INT) AS width,
-               CAST((doc_id * 53) % 600 + 150 AS INT) AS height,
-               CAST(LEAST((doc_id * 37) % 800 + 200, {TARGET_WIDTH}) AS INT) AS new_width,
-               CAST(CASE WHEN (doc_id * 37) % 800 + 200 > {TARGET_WIDTH}
-                    THEN FLOOR({TARGET_WIDTH} * (CAST((doc_id * 53) % 600 + 150 AS DOUBLE)
-                         / CAST((doc_id * 37) % 800 + 200 AS DOUBLE)))
-                    ELSE (doc_id * 53) % 600 + 150 END AS INT) AS new_height,
+               CAST(((doc_id % 800) * 37) % 800 + 200 AS INT) AS width,
+               CAST(((doc_id % 600) * 53) % 600 + 150 AS INT) AS height,
+               CAST(LEAST(((doc_id % 800) * 37) % 800 + 200, {TARGET_WIDTH}) AS INT) AS new_width,
+               CAST(CASE WHEN ((doc_id % 800) * 37) % 800 + 200 > {TARGET_WIDTH}
+                    THEN FLOOR({TARGET_WIDTH} * (CAST(((doc_id % 600) * 53) % 600 + 150 AS DOUBLE)
+                         / CAST(((doc_id % 800) * 37) % 800 + 200 AS DOUBLE)))
+                    ELSE ((doc_id % 600) * 53) % 600 + 150 END AS INT) AS new_height,
                CAST(OCTET_LENGTH(ENCODE(text)) AS BIGINT) AS n_bytes,
                MD5(text) AS content_md5
         FROM documents
@@ -1043,8 +1044,8 @@ def v8h2_av_signature_det(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id, text,
                    ['image/png','image/jpeg','image/webp']
                        [CAST(doc_id % 3 AS INT) + 1] AS mime,
-                   (doc_id * 37) % 800 + 200 AS width,
-                   (doc_id * 53) % 600 + 150 AS height
+                   ((doc_id % 800) * 37) % 800 + 200 AS width,
+                   ((doc_id % 600) * 53) % 600 + 150 AS height
             FROM documents
             WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
         ), cuts AS (

@@ -1266,7 +1266,7 @@ def g10_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = mutual.union(
         mutual.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).transform(persist_once)
+    )
     # r13 (guide §2.4): a peel round needs each edge's CURRENT degree at
     # both endpoints — deg(src) is a count over the src partition, and
     # because the bidirected edge set stays symmetric under peeling

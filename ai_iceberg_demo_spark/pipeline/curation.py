@@ -813,7 +813,13 @@ def _cascade_oracle() -> str:
     oracle=_cascade_oracle(),
 )
 def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ai_iceberg_demo_spark.vector.dedup import minhash_bands, shingles
+    from ai_iceberg_demo_spark.vector.dedup import (
+        JACCARD,
+        band_pairs,
+        minhash_bands,
+        pair_overlaps,
+        shingle_sets,
+    )
 
     docs = load_table(spark, "documents", sf_dir)
     # r13 (guide §6): the planted corpus is ONE scan — %20==0 and
@@ -867,62 +873,9 @@ def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .transform(persist_once)
     )
-    bands = minhash_bands(surv1)
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
-    )
-    # persist: both halves of the candidate-verify join. r13 (guide
-    # §2.4, the d9b spelling): the distinct shingle set and its size
-    # are per-document — array_distinct replaces the (doc, shingle)
-    # distinct exchange, n_sh rides each shingle row, and the separate
-    # sizes aggregation + both size-attach joins fold into the
-    # intersection aggregation (min of a per-doc constant).
-    sh = (
-        surv1.select(
-            "doc_id",
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.array(F.array_distinct(shingles(F.col("text")))),
-                        lambda a: F.transform(
-                            a,
-                            lambda t: F.struct(
-                                t.alias("shingle"),
-                                F.size(a).cast("long").alias("n_sh"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("_e"),
-        )
-        .select("doc_id", "_e.shingle", "_e.n_sh")
-        .transform(persist_once)
-    )
-    inter = (
-        cands.join(sh.alias("sa"), F.col("a_id") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("b_id") == F.col("sb.doc_id"))
-            & (F.col("sb.shingle") == F.col("sa.shingle")),
-        )
-        .groupBy("a_id", "b_id")
-        .agg(
-            F.count("*").alias("n_inter"),
-            F.min(F.col("sa.n_sh")).alias("na"),
-            F.min(F.col("sb.n_sh")).alias("nb"),
-        )
-    )
-    jac = F.col("n_inter").cast("double") / (F.col("na") + F.col("nb") - F.col("n_inter"))
     dropped = (
-        inter.filter(jac >= 0.8)
+        pair_overlaps(band_pairs(minhash_bands(surv1)), shingle_sets(surv1))
+        .filter(F.expr(JACCARD) >= 0.8)
         .select(F.col("b_id").alias("doc_id"))
         .distinct()
     )

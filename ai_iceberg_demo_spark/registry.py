@@ -92,20 +92,8 @@ class Registry:
 #   3. Then never-driver-checked names in registration order; then
 #      staleness tiers.
 #
-# Round 13 window (this list, per ROTATION.md's r13 queue draft):
-# the 3 r12 registrations as first-ever pins in registration order
-# (the audio/video near-dup pair v8h/v8h2 and the distinct-n
-# diversity metric t114 — recomputed against CORRECTNESS_r01–r12:
-# they are the only never-driver-checked names; r13's optimization
-# rewrites are plan-only with hashes verified unchanged at both
-# oracle SFs, so no semantic re-pins jump the queue), then the 12
-# r4-tier overflow names from the r12 cut in name order, then the
-# first 35 of the 47-name r5 staleness tier in name order (the
-# tier's rows-only names v12_pca_project / v18_knn_graph are
-# excluded per policy #1 — each has a hash-oracled twin with driver
-# history). 3 + 12 + 35 = 50; the last 12 r5-tier names
-# (u18_upsample_mix … w7_cumulative_uniques) overflow to the r14
-# draft — see ROTATION.md.
+# This list is the current window; ROTATION.md records why it holds
+# these names in this order.
 _DRIVER_WINDOW_PRIORITY = [
     # 3 r12 registrations (first-ever rows), registration order
     "v8h_av_contour_dedup",

@@ -3643,10 +3643,6 @@ def t84_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("r").alias("rn"),
             (F.count("*") - F.sum("r")).alias("cn"),
         )
-        # the ≤ types×bins stats frame is the query's substrate — the
-        # t102 pair-stats discipline: a monitoring job keeps the binned
-        # counts, not the raw scans, between readouts
-        .transform(persist_once)
     )
     w_t = W.partitionBy("event_type")
     dist = counts.select(

@@ -680,20 +680,18 @@ def drift_from_sliced(dims: DataFrame) -> DataFrame:
     """Per-dimension two-sample z report from a (slice∈{a,b}, dim_i, x)
     frame — the v16 arithmetic, shared with the index-maintenance
     pipeline's drift gate. O(dim) rows through every exchange."""
-    from ai_iceberg_demo_spark.tables import persist_once
-
     mean = F.sum("x") / F.count(F.lit(1))
     var = F.sum(F.col("x") * F.col("x")) / F.count(F.lit(1)) - mean * mean
     # r12 (guide §2.4 + the v32 fan-out lesson): the moments table is
     # O(dim) rows and formerly fed a and b as separate filter branches
-    # — the corpus posexplode + partial agg executed TWICE. Persist the
-    # compact moments once (the t102 pair-stats discipline) and fold
-    # the a⋈b self-join into one pivot-style aggregation per dim.
+    # — the corpus posexplode + partial agg executed TWICE. The a⋈b
+    # self-join folds into one pivot-style aggregation per dim, the
+    # moments table's only reader, so it is not persisted.
     st = dims.groupBy("dim_i", "slice").agg(
         F.count("*").cast("double").alias("n"),
         F.round(mean, 6).alias("m"),
         F.round(var, 6).alias("v"),
-    ).transform(persist_once)
+    )
 
     def side(col: str, s: str):
         return F.max(F.when(F.col("slice") == s, F.col(col)))

@@ -7,7 +7,8 @@ training-data pipeline needs the full dedup toolbox; this module
 implements each as declarative DataFrame ops:
 
 - exact:        fingerprint (md5/xxhash64) groupBy — one shuffle on hash
-- n-gram Jaccard: shingle explode + equi-join on shingle + agg
+- n-gram Jaccard: shingle_sets → all_overlaps (exact all-pairs) or
+                band_pairs → pair_overlaps (at scale) → JACCARD
 - MinHash+LSH:  affine-permutation minhash signatures, banded candidate join
 - SimHash:      bitwise-majority signature + banded hamming join
 - embedding:    cosine ≥ t within blocking buckets (label here; LSH
@@ -76,6 +77,116 @@ def shingles(text: Column, n: int = 3) -> Column:
                     lambda i: F.concat_ws(" ", F.slice(t, i, n)),
                 ),
             ).otherwise(F.array().cast("array<string>")),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Shingle-Jaccard builders: every near-dup query in this family is
+# shingle_sets → (band_pairs →) all_overlaps | pair_overlaps → JACCARD
+# ---------------------------------------------------------------------------
+
+# Jaccard of an overlap row (n_inter, na, nb) — SQL text, one F.expr per use
+JACCARD = "CAST(n_inter AS DOUBLE) / (na + nb - n_inter)"
+
+
+def shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle, n_sh): each document's DISTINCT word-3-gram
+    shingles, with the set's size n_sh on every row. Persisted: both
+    sides of every overlap join read it.
+
+    The set and its size are per-document quantities, so both are
+    map-side array algebra — array_distinct replaces a corpus-sized
+    (doc, shingle) distinct exchange, and n_sh riding each row (+8
+    bytes) replaces a sizes aggregation and its two size-attach joins:
+    the overlap builders recover each side's size as min(n_sh), a
+    per-doc constant, inside their own aggregation. The shingle array
+    is bound once per row (the shingles() outer-transform discipline)
+    so size() can't re-tokenize the document. Contract: unique doc_ids
+    (a repeated id keeps two sets instead of merging them); docs under
+    3 tokens have no rows."""
+    per_doc = F.transform(
+        F.array(F.array_distinct(shingles(F.col("text")))),
+        lambda a: F.transform(
+            a, lambda t: F.struct(t.alias("shingle"), F.size(a).cast("long").alias("n_sh"))
+        ),
+    )
+    return (
+        docs.select("doc_id", F.explode(F.flatten(per_doc)).alias("_e"))
+        .select("doc_id", "_e.shingle", "_e.n_sh")
+        .transform(persist_once)
+    )
+
+
+def band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct (a_id, b_id) LSH candidates, a_id < b_id: the doc pairs
+    whose (band_idx, band_val) keys collide in at least one band of
+    ``bands`` (minhash_bands output). Persists ``bands``: it meets
+    itself in the collision join, and unpersisted the whole MinHash
+    build (shingle explode + 16 min reductions) executes once per side."""
+    bands = bands.transform(persist_once)
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_val") == F.col("b.band_val"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
+        .distinct()
+    )
+
+
+def all_overlaps(sh: DataFrame) -> DataFrame:
+    """(a_id, b_id, n_inter, na, nb) for EVERY doc pair, a_id < b_id,
+    sharing a shingle of ``sh`` (shingle_sets output): the exact
+    all-pairs tier. Its Σdf² intermediate is quadratic in a shingle's
+    document frequency, so it is the fixture-scale exactness anchor;
+    at 100 TB the pairs come from band_pairs through pair_overlaps.
+
+    shuffle_hash: both sides of the shingle self-join are corpus-sized,
+    so a size misestimate must never pick a broadcast (a broadcast of
+    this relation ran out of memory through d9's reuse at sf10); not
+    merge, because the quadratic intermediate dominates before any join
+    strategy matters, so the cheaper no-sort build is right."""
+    a, b = sh.alias("a"), sh.alias("b")
+    return (
+        a.hint("shuffle_hash")
+        .join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
+        .agg(
+            F.count("*").alias("n_inter"),
+            F.min("a.n_sh").alias("na"),
+            F.min("b.n_sh").alias("nb"),
+        )
+    )
+
+
+def pair_overlaps(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+    """(a_id, b_id, n_inter, na, nb) for the given (a_id, b_id) pairs
+    that share at least one shingle of ``sh`` (shingle_sets output):
+    the candidate verify, O(pairs × shingles/doc). A pair with no
+    common shingle has no row. Candidate pairs grow with the corpus,
+    so ``pairs`` is pinned shuffle_hash — a post-aggregate size
+    misestimate must never broadcast it (the d13 rule). The ``sh``
+    sides stay unpinned: AQE sees the persisted relation's
+    materialized size exactly."""
+    return (
+        pairs.hint("shuffle_hash")
+        .join(sh.alias("sa"), F.col("a_id") == F.col("sa.doc_id"))
+        .join(
+            sh.alias("sb"),
+            (F.col("b_id") == F.col("sb.doc_id")) & (F.col("sb.shingle") == F.col("sa.shingle")),
+        )
+        .groupBy("a_id", "b_id")
+        .agg(
+            F.count("*").alias("n_inter"),
+            F.min("sa.n_sh").alias("na"),
+            F.min("sb.n_sh").alias("nb"),
         )
     )
 
@@ -202,38 +313,9 @@ def d2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle construction is heavy per-row map work -> fan out the
     # serial small-file scan (2.9x at sf0.1; inert on real corpora)
     docs = fan_out_small_input(load_table(spark, "documents", sf_dir))
-    # persist: the shingle relation feeds the size table AND both halves
-    # of the intersection self-join — three consumers of an
-    # explode+distinct (a full shuffle) that would otherwise recompute
-    sh = (
-        docs.select("doc_id", F.explode(shingles(F.col("text"))).alias("shingle"))
-        .distinct()
-        .transform(persist_once)
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    # shuffle_hash hint: both sides of the shingle self-join are
-    # corpus-sized; a size misestimate must never pick a broadcast
-    # (this plan OOM'd the driver through d9's reuse at sf10).
-    # shuffle_hash, not merge: d2 is the documented exactness tier at
-    # fixture scale (its Σdf² intermediate is quadratic before any
-    # join strategy matters), so the cheaper no-sort build is right
-    inter = (
-        a.hint("shuffle_hash")
-        .join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb"))
-    jac = F.col("n_inter").cast("double") / (F.col("na") + F.col("nb") - F.col("n_inter"))
+    jac = F.expr(JACCARD)
     return (
-        inter.join(F.broadcast(sa), "a_id")
-        .join(F.broadcast(sb), "b_id")
+        all_overlaps(shingle_sets(docs))
         .filter(jac >= 0.8)
         .select("a_id", "b_id", jac.alias("jaccard"))
     )
@@ -390,25 +472,12 @@ _D3_PAIRS_SQL = f"""WITH {_salted_docs_sql("doc_id % 10 = 0")}
     oracle=_D3_PAIRS_SQL,
 )
 def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # persist: the band relation meets itself in the collision join —
-    # unpersisted, the whole MinHash build (shingle explode + 16
-    # min-aggs) executes once per side
-    bands = minhash_bands(
-        salt_doc_twins(
-            load_table(spark, "documents", sf_dir).filter(F.col("doc_id") % 10 == 0)
+    return band_pairs(
+        minhash_bands(
+            salt_doc_twins(
+                load_table(spark, "documents", sf_dir).filter(F.col("doc_id") % 10 == 0)
+            )
         )
-    ).transform(persist_once)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
     )
 
 
@@ -612,42 +681,9 @@ def d2b_lsh_seeded_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" near duplicate footer variant")).alias("text"),
     )
     docs = fan_out_small_input(sample.unionByName(twins))
-    # both the candidate self-join sides and (below) the shingle
-    # relation's three consumers re-execute without these persists
-    bands = minhash_bands(docs).transform(persist_once)
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
-    )
-    sh = (
-        docs.select("doc_id", F.explode(shingles(F.col("text"))).alias("shingle"))
-        .distinct()
-        .transform(persist_once)
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        cands.join(sh.alias("sa2"), F.col("a_id") == F.col("sa2.doc_id"))
-        .join(
-            sh.alias("sb2"),
-            (F.col("b_id") == F.col("sb2.doc_id"))
-            & (F.col("sb2.shingle") == F.col("sa2.shingle")),
-        )
-        .groupBy("a_id", "b_id")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb"))
-    jac = F.col("n_inter").cast("double") / (F.col("na") + F.col("nb") - F.col("n_inter"))
+    jac = F.expr(JACCARD)
     return (
-        inter.join(F.broadcast(sa), "a_id")
-        .join(F.broadcast(sb), "b_id")
+        pair_overlaps(band_pairs(minhash_bands(docs)), shingle_sets(docs))
         .filter(jac >= 0.8)
         .select("a_id", "b_id", jac.alias("jaccard"))
     )
@@ -828,9 +864,8 @@ def d5_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d6_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = d3_minhash_lsh(spark, sf_dir)
-    comps = connected_components(pairs)
     docs = load_table(spark, "documents", sf_dir).filter(F.col("doc_id") % 10 == 0)
+    comps = connected_components(band_pairs(minhash_bands(salt_doc_twins(docs))))
     return docs.join(comps, docs.doc_id == comps.id, "left").select(
         "doc_id", F.coalesce("lbl", "doc_id").cast("bigint").alias("component_id")
     )
@@ -904,10 +939,14 @@ def d6_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d9_quality_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_iceberg_demo_spark.functions.text import quality_score
+    from ai_iceberg_demo_spark.tables import fan_out_small_input
 
-    pairs = d2_ngram_jaccard(spark, sf_dir).select("a_id", "b_id")
-    comps = connected_components(pairs)
     docs = load_table(spark, "documents", sf_dir)
+    # d2's verified pairs
+    pairs = all_overlaps(shingle_sets(fan_out_small_input(docs))).filter(
+        F.expr(JACCARD) >= 0.8
+    )
+    comps = connected_components(pairs)
     q = docs.select("doc_id", quality_score(F.col("text")).alias("quality"))
     members = comps.join(q, comps.id == q.doc_id).select(
         F.col("lbl").cast("bigint").alias("component_id"), "doc_id", "quality"
@@ -1047,72 +1086,12 @@ def d9b_canonical_at_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, "documents", sf_dir).filter(F.col("doc_id") % 10 == 0)
         )
     ).transform(persist_once)  # feeds bands, shingles, AND the quality scan
-    bands = minhash_bands(docs).transform(persist_once)
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
+    pairs = pair_overlaps(band_pairs(minhash_bands(docs)), shingle_sets(docs)).filter(
+        F.expr(JACCARD) >= 0.8
     )
-    # r13 (guide §2.4): the distinct shingle SET and its size are
-    # per-document quantities, so both are map-side array algebra —
-    # array_distinct replaces the corpus-sized (doc, shingle) distinct
-    # exchange, and n_sh rides every shingle row (+8 bytes) so the
-    # separate sizes aggregation AND both size-attach shuffle_hash
-    # joins disappear: the Jaccard denominator is recovered inside the
-    # intersection aggregation (min of a per-doc constant). The shingle
-    # array is bound once per row (the shingles() outer-transform
-    # discipline) so size() can't re-tokenize the document.
-    sh = (
-        docs.select(
-            "doc_id",
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.array(F.array_distinct(shingles(F.col("text")))),
-                        lambda a: F.transform(
-                            a,
-                            lambda t: F.struct(
-                                t.alias("shingle"),
-                                F.size(a).cast("long").alias("n_sh"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("_e"),
-        )
-        .select("doc_id", "_e.shingle", "_e.n_sh")
-        .transform(persist_once)
-    )
-    # candidate pairs AND the shingle relation both grow with the
-    # corpus — shuffle_hash so a post-aggregate size misestimate can
-    # never broadcast either (the d13 lesson; d2's no-sort reasoning)
-    inter = (
-        cands.hint("shuffle_hash")
-        .join(sh.alias("sa2"), F.col("a_id") == F.col("sa2.doc_id"))
-        .join(
-            sh.alias("sb2"),
-            (F.col("b_id") == F.col("sb2.doc_id"))
-            & (F.col("sb2.shingle") == F.col("sa2.shingle")),
-        )
-        .groupBy("a_id", "b_id")
-        .agg(
-            F.count("*").alias("n_inter"),
-            F.min(F.col("sa2.n_sh")).alias("na"),
-            F.min(F.col("sb2.n_sh")).alias("nb"),
-        )
-    )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_inter")
-    )
-    pairs = inter.filter(jac >= 0.8).select("a_id", "b_id")
     comps = connected_components(pairs)
-    # q is per-doc (corpus-scaled) — same rule as above
+    # q is per-doc (corpus-scaled) — shuffle_hash so a size
+    # misestimate can never broadcast it (the d13 rule)
     q = docs.select("doc_id", quality_score(F.col("text")).alias("quality"))
     members = comps.join(q.hint("shuffle_hash"), comps.id == q.doc_id).select(
         F.col("lbl").cast("bigint").alias("component_id"), "doc_id", "quality"
@@ -1400,33 +1379,8 @@ def d12_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out_small_input(
         base.select("doc_id", "text").unionByName(containers)
     )
-    sh = (
-        docs.select("doc_id", F.explode(shingles(F.col("text"))).alias("shingle"))
-        .distinct()
-        .transform(persist_once)
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    joined = (
-        inter.join(
-            F.broadcast(sizes).withColumnRenamed("doc_id", "a_id").withColumnRenamed("n_sh", "na"),
-            "a_id",
-        )
-        .join(
-            F.broadcast(sizes).withColumnRenamed("doc_id", "b_id").withColumnRenamed("n_sh", "nb"),
-            "b_id",
-        )
-    )
-    jac = F.col("n_inter").cast("double") / (F.col("na") + F.col("nb") - F.col("n_inter"))
+    joined = all_overlaps(shingle_sets(docs))
+    jac = F.expr(JACCARD)
     c_ab = F.col("n_inter").cast("double") / F.col("na")
     c_ba = F.col("n_inter").cast("double") / F.col("nb")
     fwd = joined.filter((c_ab >= _CONTAIN_TAU) & (jac < 0.8)).select(
@@ -1638,18 +1592,7 @@ def d14_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, "documents", sf_dir).filter(F.col("doc_id") % 10 == 0)
     )
     sigs = minhash_sigs(sample).transform(persist_once)
-    bands = minhash_bands(sample)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
-    )
+    cand = band_pairs(minhash_bands(sample))
     agree = sum(
         F.when(F.col(f"sa.h{i}") == F.col(f"sb.h{i}"), 1).otherwise(0)
         for i in range(N_HASHES)
@@ -1660,7 +1603,9 @@ def d14_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a_id", "b_id", (agree / float(N_HASHES)).alias("est_j"))
     )
     # exact Jaccard over the SAME word-3-gram shingles the signatures
-    # hash — estimator and truth measure one metric
+    # hash — estimator and truth measure one metric. Sizes come from
+    # their own table, not pair_overlaps: a candidate with zero shingle
+    # overlap has no overlap row, yet its true Jaccard (0) is reported
     toks = sample.select("doc_id", F.explode(shingles(F.col("text"))).alias("tok")).distinct()
     sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
     ta, tb = toks.alias("ta"), toks.alias("tb")
@@ -1758,16 +1703,20 @@ def d14_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d16_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = d2_ngram_jaccard(spark, sf_dir)
+    from ai_iceberg_demo_spark.tables import fan_out_small_input
+
+    docs = load_table(spark, "documents", sf_dir)
+    # d2's verified pairs
+    pairs = all_overlaps(shingle_sets(fan_out_small_input(docs))).filter(
+        F.expr(JACCARD) >= 0.8
+    )
     comps = connected_components(pairs)
     csize = comps.groupBy("lbl").agg(F.count("*").alias("sz"))
     hist = csize.groupBy(F.col("sz").cast("bigint").alias("cluster_size")).agg(
         F.count("*").cast("bigint").alias("n_clusters"),
         F.sum("sz").cast("bigint").alias("n_docs"),
     )
-    total = load_table(spark, "documents", sf_dir).agg(
-        F.count("*").alias("n_total")
-    )
+    total = docs.agg(F.count("*").alias("n_total"))
     in_comp = comps.agg(F.count("*").alias("n_in"))
     singles = (
         total.crossJoin(in_comp)
@@ -1939,12 +1888,18 @@ def d19_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d20_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = d2_ngram_jaccard(spark, sf_dir)
+    from ai_iceberg_demo_spark.tables import fan_out_small_input
+
+    docs = load_table(spark, "documents", sf_dir)
+    # d2's verified pairs
+    pairs = all_overlaps(shingle_sets(fan_out_small_input(docs))).filter(
+        F.expr(JACCARD) >= 0.8
+    )
     comps = connected_components(pairs)
     csize = comps.groupBy("lbl").agg(F.count("*").alias("sz"))
-    docs = load_table(spark, "documents", sf_dir).select("doc_id")
     return (
-        docs.join(comps, docs.doc_id == comps.id, "left")
+        docs.select("doc_id")
+        .join(comps, docs.doc_id == comps.id, "left")
         .join(F.broadcast(csize), "lbl", "left")
         .select(
             "doc_id",
@@ -2368,36 +2323,11 @@ def d28_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_iceberg_demo_spark.tables import fan_out_small_input
 
     docs = fan_out_small_input(load_table(spark, "documents", sf_dir))
-    sh = (
-        docs.select("doc_id", F.explode(shingles(F.col("text"))).alias("shingle"))
-        .distinct()
-        .transform(persist_once)
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb"))
-    jac = F.col("n_inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_inter")
-    )
-    # size table is doc-count-sized (corpus-scaled) — shuffle_hash, not
-    # an explicit broadcast (the d13 lesson; d28's edge relation is
-    # d2's Σdf² exactness tier, full corpus, so the audit is the
-    # fixture-scale tier — d28b is the banded at-scale spelling)
+    # d2's Σdf² exactness tier over the full corpus, so the audit is the
+    # fixture-scale tier — d28b is the banded at-scale spelling
     allj = (
-        inter.join(sa.hint("shuffle_hash"), "a_id")
-        .join(sb.hint("shuffle_hash"), "b_id")
-        .select("a_id", "b_id", jac.alias("j"))
+        all_overlaps(shingle_sets(docs))
+        .select("a_id", "b_id", F.expr(JACCARD).alias("j"))
         .transform(persist_once)
     )
     strong = allj.filter(F.col("j") >= _D28_TAU)
@@ -2570,51 +2500,10 @@ def d28b_transitivity_at_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     docs = fan_out_small_input(guarded.unionByName(twins)).transform(persist_once)
-    bands = minhash_bands(docs).transform(persist_once)
-    # the bands self-join and the sh second-stage joins below stay
-    # UNPINNED (same as d9b's shared machinery): both read persisted
-    # relations whose MATERIALIZED size AQE sees exactly, so the
-    # broadcast at fixture scale flips to a shuffle join past the 10 MB
-    # threshold on its own — the d13 hazard is size-MISestimated
-    # post-aggregates (paths, closure_j, the size tables), and every
-    # one of those is hinted
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
-    )
-    sh = (
-        docs.select("doc_id", F.explode(shingles(F.col("text"))).alias("shingle"))
-        .distinct()
-        .transform(persist_once)
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        cands.hint("shuffle_hash")
-        .join(sh.alias("sa2"), F.col("a_id") == F.col("sa2.doc_id"))
-        .join(
-            sh.alias("sb2"),
-            (F.col("b_id") == F.col("sb2.doc_id"))
-            & (F.col("sb2.shingle") == F.col("sa2.shingle")),
-        )
-        .groupBy("a_id", "b_id")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    na = sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb"))
-    jac = F.col("n_inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_inter")
-    )
+    sh = shingle_sets(docs)
     strong = (
-        inter.join(na.hint("shuffle_hash"), "a_id")
-        .join(nb.hint("shuffle_hash"), "b_id")
-        .filter(jac >= _D28_TAU)
+        pair_overlaps(band_pairs(minhash_bands(docs)), sh)
+        .filter(F.expr(JACCARD) >= _D28_TAU)
         .select("a_id", "b_id")
         .transform(persist_once)  # feeds the edge doubling AND n_edges
     )
@@ -2636,27 +2525,9 @@ def d28b_transitivity_at_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .transform(persist_once)  # feeds closure pairs AND the final agg
     )
-    closure_pairs = paths.select("a", "c").distinct()
-    closure_inter = (
-        closure_pairs.hint("shuffle_hash")
-        .join(sh.alias("x"), F.col("a") == F.col("x.doc_id"))
-        .join(
-            sh.alias("y"),
-            (F.col("c") == F.col("y.doc_id"))
-            & (F.col("y.shingle") == F.col("x.shingle")),
-        )
-        .groupBy("a", "c")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    nca = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("na"))
-    ncc = sizes.select(F.col("doc_id").alias("c"), F.col("n_sh").alias("nc"))
-    cj = F.col("n_inter").cast("double") / (
-        F.col("na") + F.col("nc") - F.col("n_inter")
-    )
-    closure_j = (
-        closure_inter.join(nca.hint("shuffle_hash"), "a")
-        .join(ncc.hint("shuffle_hash"), "c")
-        .select("a", "c", cj.alias("j"))
+    closure_pairs = paths.select(F.col("a").alias("a_id"), F.col("c").alias("b_id")).distinct()
+    closure_j = pair_overlaps(closure_pairs, sh).select(
+        F.col("a_id").alias("a"), F.col("b_id").alias("c"), F.expr(JACCARD).alias("j")
     )
     # closure_j is a post-aggregate of the corpus-scaled path set —
     # same d13 rule, never trust the fixture-scale size estimate

@@ -1,5 +1,5 @@
-"""Dedup verify and rewrite operators (d2b, d10, d11, d12): invariants
-the oracle can't see."""
+"""Dedup verify and rewrite operators (the shingle-Jaccard builders, d2b,
+d10, d11, d12): invariants the oracle can't see."""
 
 from __future__ import annotations
 
@@ -45,6 +45,65 @@ def test_d2b_is_sound_subset_of_d2(spark):
         p for p, j in exact.items() if j >= 0.95 and p[0] % 10 == 0 and p[1] % 10 == 0
     }
     assert high <= set(natural) | set(twin_pairs)
+
+
+def test_pair_overlaps_match_all_overlaps_on_band_candidates(spark):
+    """The candidate verify and the all-pairs tier agree: on d3's
+    sample, pair_overlaps(band_pairs(bands), sh) is all_overlaps(sh)
+    restricted to the band candidates, on (n_inter, na, nb)."""
+    from pyspark.sql import functions as F
+
+    from ai_iceberg_demo_spark.tables import load_table
+    from ai_iceberg_demo_spark.vector.dedup import (
+        all_overlaps,
+        band_pairs,
+        minhash_bands,
+        pair_overlaps,
+        salt_doc_twins,
+        shingle_sets,
+    )
+
+    docs = salt_doc_twins(
+        load_table(spark, "documents", SF_DIR).filter(F.col("doc_id") % 10 == 0)
+    )
+    sh = shingle_sets(docs)
+    cands = band_pairs(minhash_bands(docs))
+    cols = ["a_id", "b_id", "n_inter", "na", "nb"]
+    got = sorted(tuple(r) for r in pair_overlaps(cands, sh).select(cols).collect())
+    want = sorted(
+        tuple(r)
+        for r in all_overlaps(sh).join(cands, ["a_id", "b_id"], "left_semi").select(cols).collect()
+    )
+    assert got, "planted twins must collide and overlap"
+    assert got == want
+
+
+def test_dedup_queries_call_no_registered_query():
+    """Composite dedup queries build their substrate through the
+    shingle/band builders: no query registered in vector/dedup.py or
+    pipeline/curation.py calls another query registered there through
+    its (spark, sf_dir) function and relies on CacheManager to match
+    the plan. (Curation's report cards that wrap other modules'
+    queries are not covered.)"""
+    import ast
+    import inspect
+
+    from ai_iceberg_demo_spark.pipeline import curation
+    from ai_iceberg_demo_spark.vector import dedup
+
+    mods = (dedup, curation)
+    registered = {s.fn.__name__ for m in mods for s in m.REGISTRY.specs.values()}
+    calls = []
+    for mod in mods:
+        for fn in ast.walk(ast.parse(inspect.getsource(mod))):
+            if not (isinstance(fn, ast.FunctionDef) and fn.name in registered):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call):
+                    callee = getattr(node.func, "id", getattr(node.func, "attr", None))
+                    if callee in registered and callee != fn.name:
+                        calls.append(f"{fn.name} -> {callee}")
+    assert calls == []
 
 
 def test_exact_substring_removal_invariants(spark):

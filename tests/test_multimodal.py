@@ -35,6 +35,21 @@ def test_resize_keeps_aspect_ratio(spark):
         assert (r.new_width, r.new_height) == (r.width, r.height)
 
 
+def test_artifact_dims_do_not_overflow_near_2_pow_62(spark, tmp_path):
+    """The fake dims reduce doc_id before multiplying, so ids near 2^62
+    (100 TB id ranges) give Python's integer answer instead of raising
+    ARITHMETIC_OVERFLOW under ANSI, as (doc_id * 37) % 800 did."""
+    ids = [2**62 + i for i in (0, 1, 7, 799, 12345)]
+    spark.createDataFrame(
+        [(i, "a b c", "en", "web", 5) for i in ids],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    rows = artifact_table(spark, str(tmp_path)).select("doc_id", "width", "height").collect()
+    assert sorted(tuple(r) for r in rows) == [
+        (i, i * 37 % 800 + 200, i * 53 % 600 + 150) for i in ids
+    ]
+
+
 def test_resize_deterministic_across_runs(spark):
     a = resize_images(artifact_table(spark, SF_DIR)).orderBy("doc_id").collect()
     b = resize_images(artifact_table(spark, SF_DIR)).orderBy("doc_id").collect()
