@@ -369,7 +369,7 @@ def pipeline_eval_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_iceberg_demo_spark.functions.text import fingerprint, t17_decontamination
     from ai_iceberg_demo_spark.operators.sampling import hash_pct
     from ai_iceberg_demo_spark.vector.clustering import kmeans_assign, seed_centroids
-    from ai_iceberg_demo_spark.vector.similarity import as_double, dot, with_norm
+    from ai_iceberg_demo_spark.vector.similarity import as_double, cos_normed, with_norm
 
     docs = load_table(spark, "documents", sf_dir)
     emb = load_table(spark, "embeddings", sf_dir)
@@ -379,7 +379,7 @@ def pipeline_eval_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.select("vec_id", as_double("embedding").alias("embedding"))
     bench = with_norm(base.filter(F.col("vec_id") % 10 == 3), "embedding", "bv", "bn")
     corpus = with_norm(base.filter(F.col("vec_id") % 10 != 3), "embedding", "cv", "cn")
-    score = F.round(dot("cv", "bv") / (F.col("cn") * F.col("bn")), 6)
+    score = F.round(cos_normed("cv", "cn", "bv", "bn"), 6)
     sem_flagged = (
         corpus.crossJoin(F.broadcast(bench.select("bv", "bn")))
         .select("vec_id", score.alias("s"))

@@ -138,7 +138,7 @@ def pipeline_interactive(
 ) -> DataFrame:
     from ai_iceberg_demo_spark.operators.skew import salted_topk
     from ai_iceberg_demo_spark.vector.similarity import (
-        dot,
+        cos_normed,
         ivf_candidate_pairs,
         with_norm,
     )
@@ -148,9 +148,7 @@ def pipeline_interactive(
     probes = with_norm(
         load_table(spark, "embeddings", sf_dir).filter(F.col("vec_id") < 5), "embedding", "qv", "qn"
     ).select(F.col("vec_id").alias("qid"), "qv", "qn")
-    score_expr = F.round(
-        dot("cv", "qv") / (F.col("cn") * F.col("qn")), 6
-    ).alias("score")
+    score_expr = F.round(cos_normed("cv", "cn", "qv", "qn"), 6).alias("score")
     if index is None:
         # exact path (the oracle-checked default): norms hoisted per
         # corpus row / per probe; only the dot is per pair

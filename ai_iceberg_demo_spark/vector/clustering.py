@@ -28,7 +28,7 @@ the iterative trainer (v11b) is rows-only (loops aren't SQL).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_iceberg_demo_spark.registry import Registry
@@ -38,7 +38,8 @@ from ai_iceberg_demo_spark.vector.similarity import (
     _dot,
     _double,
     as_double,
-    dot,
+    cos_normed,
+    l2,
     vec_sql,
     with_norm,
 )
@@ -48,18 +49,6 @@ REGISTRY = Registry()
 KMEANS_K = 8
 KMEANS_ITER = 3
 SEMDEDUP_TAU = 0.98  # same near-dup bar as d5 so the two are comparable
-
-
-def l2_dist(a: Column, b: Column) -> Column:
-    """Euclidean distance via sequential fold — same left-to-right
-    IEEE sum DuckDB's LIST_DISTANCE performs; rounded by callers."""
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
 
 
 def seed_centroids(corpus: DataFrame, k: int = KMEANS_K) -> DataFrame:
@@ -77,13 +66,9 @@ def kmeans_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     aggregates map-side — the corpus is shuffled once on vec_id and
     AQE coalesces. Returns (vec_id, cell_id, dist)."""
     scored = (
-        with_norm(corpus, "embedding", "_v", "_n")
+        corpus.select("vec_id", as_double("embedding").alias("_v"))
         .crossJoin(F.broadcast(centroids))
-        .select(
-            "vec_id",
-            "cell_id",
-            F.round(l2_dist(F.col("_v"), F.col("centroid")), 4).alias("dist"),
-        )
+        .select("vec_id", "cell_id", F.round(l2("_v", "centroid"), 4).alias("dist"))
     )
     best = scored.groupBy("vec_id").agg(
         F.min(F.struct("dist", "cell_id")).alias("_best")
@@ -129,7 +114,7 @@ def two_level_assign(corpus: DataFrame, k: int) -> DataFrame:
         fine.crossJoin(F.broadcast(coarse)).select(
             "cell_id",
             "g_id",
-            F.round(l2_dist(F.col("centroid"), F.col("g_cen")), 4).alias("d"),
+            F.round(l2("centroid", "g_cen"), 4).alias("d"),
         ),
         "cell_id",
         "g_id",
@@ -146,7 +131,7 @@ def two_level_assign(corpus: DataFrame, k: int) -> DataFrame:
         .select(
             "vec_id",
             "g_id",
-            F.round(l2_dist(F.col("embedding"), F.col("g_cen")), 4).alias("d"),
+            F.round(l2("embedding", "g_cen"), 4).alias("d"),
         )
         .withColumn("rn", F.row_number().over(vw))
         .filter(F.col("rn") <= _COARSE_PROBE)
@@ -159,7 +144,7 @@ def two_level_assign(corpus: DataFrame, k: int) -> DataFrame:
         .select(
             "vec_id",
             "cell_id",
-            F.round(l2_dist(F.col("embedding"), F.col("centroid")), 4).alias("d"),
+            F.round(l2("embedding", "centroid"), 4).alias("d"),
         )
     )
     return argmin(cand, "vec_id", "cell_id", "cell_id")
@@ -418,8 +403,7 @@ def d8_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         a.join(b, (F.col("ac") == F.col("bc")) & (F.col("kept_id") < F.col("vec_id")))
         .filter(
-            F.round(dot("av", "bv") / (F.col("na") * F.col("nb")), 6)
-            >= SEMDEDUP_TAU
+            F.round(cos_normed("av", "na", "bv", "nb"), 6) >= SEMDEDUP_TAU
         )
         .select("vec_id", "kept_id")
     )
@@ -875,13 +859,9 @@ def v21_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = load_table(spark, "embeddings", sf_dir)
     cen = seed_centroids(corpus)
     scored = (
-        with_norm(corpus, "embedding", "_v", "_n")
+        corpus.select("vec_id", as_double("embedding").alias("_v"))
         .crossJoin(F.broadcast(cen))
-        .select(
-            "vec_id",
-            "cell_id",
-            F.round(l2_dist(F.col("_v"), F.col("centroid")), 4).alias("dist"),
-        )
+        .select("vec_id", "cell_id", F.round(l2("_v", "centroid"), 4).alias("dist"))
     )
     w = W.partitionBy("vec_id").orderBy("dist", "cell_id")
     ranked = scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 2)

@@ -810,7 +810,7 @@ def d4_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d5_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ai_iceberg_demo_spark.vector.similarity import dot, with_norm
+    from ai_iceberg_demo_spark.vector.similarity import cos_normed, with_norm
 
     # norms per ROW (with_norm), dot per pair — bit-equal to cosine()
     # but 3.5× faster on the blocked all-pairs join at sf0.1; persisted
@@ -820,7 +820,7 @@ def d5_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = side.select(F.col("vec_id").alias("b_id"), F.col("label").alias("bl"), F.col("v").alias("bv"), F.col("n").alias("nb"))
     pairs = (
         a.join(b, F.col("al") == F.col("bl"))
-        .filter(F.round(dot("av", "bv") / (F.col("na") * F.col("nb")), 6) >= 0.98)
+        .filter(F.round(cos_normed("av", "na", "bv", "nb"), 6) >= 0.98)
         .select("a_id", "b_id")
     )
     return pairs.groupBy(F.col("a_id").alias("vec_id")).agg(
@@ -2734,7 +2734,7 @@ _D5B_COS = 0.98
 def d5b_lsh_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_iceberg_demo_spark.vector.similarity import (
         as_double,
-        dot,
+        cos_normed,
         lsh_signatures,
         md5_planes,
         with_norm,
@@ -2789,8 +2789,7 @@ def d5b_lsh_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(a, "a_id")
         .join(b, "b_id")
         .filter(
-            F.round(dot("av", "bv") / (F.col("na") * F.col("nb")), 6)
-            >= _D5B_COS
+            F.round(cos_normed("av", "na", "bv", "nb"), 6) >= _D5B_COS
         )
         .select("a_id", "b_id")
     )

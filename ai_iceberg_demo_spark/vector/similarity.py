@@ -54,6 +54,17 @@ def _cosine(a: str, b: str) -> str:
     return f"{_dot(a, b)} / (sqrt({_dot(a, a)}) * sqrt({_dot(b, b)}))"
 
 
+def _cos_normed(av: str, an: str, bv: str, bn: str) -> str:
+    return f"{_dot(av, bv)} / ({an} * {bn})"
+
+
+def _l2(a: str, b: str) -> str:
+    return (
+        f"sqrt(aggregate(zip_with({a}, {b}, (_x, _y) -> (_x - _y) * (_x - _y)),"
+        " 0D, (_acc, _v) -> _acc + _v))"
+    )
+
+
 def vec_sql(vec) -> str:
     """A literal DOUBLE array: every component widened exactly to a
     double (a float32 value is exactly representable) and written in
@@ -65,7 +76,8 @@ def vec_sql(vec) -> str:
 # The vector library below takes SQL text (a column name is SQL text)
 # and returns ONE ``F.expr``: a Column-built higher-order function costs
 # a py4j round trip per node (~200 for one cosine), a parsed string one.
-# Compose with the ``_double``/``_dot``/``_cosine`` text builders above.
+# Compose with the ``_double``/``_dot``/``_cosine``/``_cos_normed``/``_l2``
+# text builders above.
 
 
 def as_double(vec: str) -> Column:
@@ -88,11 +100,25 @@ def cosine(a: str, b: str) -> Column:
     return F.expr(_cosine(a, b))
 
 
+def cos_normed(av: str, an: str, bv: str, bn: str) -> Column:
+    """Cosine of two double arrays whose norms ``an``/``bn`` were
+    projected once per row by ``with_norm`` (all SQL text): the dot is
+    the only per-pair work, and the arithmetic is ``cosine``'s."""
+    return F.expr(_cos_normed(av, an, bv, bn))
+
+
+def l2(a: str, b: str) -> Column:
+    """Euclidean distance of two double arrays (SQL text) as a
+    sequential fold — the same left-to-right IEEE sum DuckDB's
+    LIST_DISTANCE performs; rounded by callers."""
+    return F.expr(_l2(a, b))
+
+
 def with_norm(df: DataFrame, vec_col: str, vec_out: str, norm_out: str) -> DataFrame:
     """Project the double-cast vector and its l2 norm ONCE per row
     (``vec_col`` is SQL text; the outputs are column names).
-    Pairwise cosine then becomes dot(av,bv)/(na·nb) — the identical
-    arithmetic `cosine()` performs (so results are bit-equal and the
+    Pairwise cosine then becomes ``cos_normed``: dot(av,bv)/(na·nb),
+    the identical arithmetic `cosine()` performs (so results are bit-equal and the
     oracle SQL needs no change), but the two norms are paid O(rows)
     instead of O(pairs). On the label-blocked dedup join this measured
     3.5× end-to-end at sf0.1."""
@@ -476,7 +502,7 @@ def j6_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, "embeddings", sf_dir).filter(F.col("vec_id") < 100), "embedding", "pv", "pn"
     ).select(F.col("vec_id").alias("probe_id"), "pv", "pn")
     # norms hoisted per row (with_norm) — only the dot is per pair
-    score = F.round(dot("cv", "pv") / (F.col("cn") * F.col("pn")), 6)
+    score = F.round(cos_normed("cv", "cn", "pv", "pn"), 6)
     return (
         emb.crossJoin(F.broadcast(probe))
         .withColumn("score", score)
@@ -519,7 +545,7 @@ def assign_cells(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
         "vec_id",
         "embedding",
         F.col("cell_id"),
-        (dot("_cv", "_zv") / (F.col("_cn") * F.col("_zn"))).alias("c_score"),
+        cos_normed("_cv", "_cn", "_zv", "_zn").alias("c_score"),
     )
     return scored.groupBy("vec_id").agg(
         F.max_by("cell_id", "c_score").alias("cell_id"),
@@ -700,7 +726,7 @@ def t17b_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
     bench = with_norm(bench_raw, "embedding", "bv", "bn").select(
         F.col("vec_id").alias("bench_id"), "bv", "bn"
     )
-    score = F.round(dot("cv", "bv") / (F.col("cn") * F.col("bn")), 6)
+    score = F.round(cos_normed("cv", "cn", "bv", "bn"), 6)
     pairs = (
         corpus.crossJoin(F.broadcast(bench))
         .select("vec_id", "bench_id", score.alias("score"))
@@ -948,7 +974,7 @@ def v19_contrastive_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = with_norm(emb, "embedding", "cv", "cn")
     a = with_norm(anchors, "avec", "av", "an")
-    score = F.round(dot("cv", "av") / (F.col("cn") * F.col("an")), 6)
+    score = F.round(cos_normed("cv", "cn", "av", "an"), 6)
     scored = (
         corpus.crossJoin(F.broadcast(a))
         .filter(F.col("vec_id") != F.col("anchor_id"))
@@ -1214,50 +1240,26 @@ _V25_PROBES_MOD = 97
     """,
 )
 def v24b_label_noise_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, "embeddings", sf_dir)
     probes = emb.filter(F.col("vec_id") % _V25_PROBES_MOD == 0).select(
-        F.col("vec_id").alias("src"),
-        F.col("label").alias("own_label"),
-        as_double("embedding").alias("qv"),
+        F.col("vec_id").alias("src"), as_double("embedding").alias("qv")
     )
-    scored = emb.join(F.broadcast(probes), emb.vec_id != probes.src).select(
-        "src",
-        "own_label",
-        "vec_id",
-        F.col("label").alias("nl"),
-        F.round(cosine("embedding", "qv"), 6).alias("s"),
-    )
-    top_w = W.partitionBy("src").orderBy(F.desc("s"), F.asc("vec_id"))
-    top3 = scored.withColumn("rn", F.row_number().over(top_w)).filter(
-        F.col("rn") <= 3
-    )
-    votes = top3.groupBy("src", "own_label", "nl").agg(F.count("*").alias("c"))
-    maj_w = W.partitionBy("src").orderBy(F.desc("c"), F.asc("nl"))
-    maj = (
-        votes.withColumn("rn", F.row_number().over(maj_w))
-        .filter(F.col("rn") == 1)
+    # each probe's exact cosine top-3 as a (src, dst) graph on the k-NN
+    # vote tail
+    graph = (
+        emb.join(F.broadcast(probes), emb.vec_id != probes.src)
         .select(
-            "src",
-            F.col("own_label").cast("int").alias("own_label"),
-            F.col("nl").cast("int").alias("neighbor_label"),
-            F.col("c").cast("int").alias("n_agree"),
+            "src", F.col("vec_id").alias("dst"), F.round(cosine("embedding", "qv"), 6).alias("s")
         )
+        .withColumn("rn", F.expr("row_number() OVER (PARTITION BY src ORDER BY s DESC, dst)"))
+        .where("rn <= 3")
     )
-    return maj.select(
-        "src",
-        "own_label",
-        "neighbor_label",
-        "n_agree",
-        F.when(
-            (F.col("n_agree") == 3)
-            & (F.col("neighbor_label") != F.col("own_label")),
-            "flagged",
-        )
-        .otherwise("ok")
-        .alias("verdict"),
-    ).orderBy("src")
+    labels = emb.select("vec_id", "label")
+    return (
+        _noise_verdicts(majority_label(neighbor_votes(graph, labels)), labels)
+        .select("src", "own_label", "neighbor_label", "n_agree", "verdict")
+        .orderBy("src")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2157,11 +2159,50 @@ def v18c_knn_graph_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# The recall@5 tail shared by the compression audits (v29, v30, v32, v35)
+# ---------------------------------------------------------------------------
+
+_RECALL_K = 5
+
+
+def _top5(scored: DataFrame, order: str) -> DataFrame:
+    """Each probe's first _RECALL_K rows of ``scored`` by ``order`` (SQL
+    text), ties to the lowest vec_id."""
+    return scored.withColumn(
+        "rn", F.expr(f"row_number() OVER (PARTITION BY probe_id ORDER BY {order}, vec_id)")
+    ).where(f"rn <= {_RECALL_K}")
+
+
+def recall_tail(
+    top: DataFrame, exact_top: DataFrame, dists: list[str], extra: tuple[str, ...] = ()
+) -> DataFrame:
+    """(probe_id, vec_id, *dists, in_exact_top5, recall5, *extra) over
+    the approximate top rows ``top``, ordered by probe, first distance
+    and vec_id: in_exact_top5 marks the rows whose (probe_id, vec_id)
+    is in ``exact_top``, recall5 is their share of the probe's rows."""
+    hits = exact_top.selectExpr("probe_id", "vec_id", "true AS in_exact")
+    return (
+        top.join(F.broadcast(hits), ["probe_id", "vec_id"], "left")
+        .select(
+            "probe_id",
+            "vec_id",
+            *dists,
+            F.expr("coalesce(in_exact, false) AS in_exact_top5"),
+            F.expr(
+                "round(avg(CASE WHEN in_exact THEN 1.0D ELSE 0.0D END)"
+                " OVER (PARTITION BY probe_id), 2) AS recall5"
+            ),
+            *extra,
+        )
+        .orderBy("probe_id", dists[0], "vec_id")
+    )
+
+
+# ---------------------------------------------------------------------------
 # V29: binary sign quantization + Hamming retrieval audit
 # ---------------------------------------------------------------------------
 
 _V29_PROBES = (0, 1, 2)
-_V29_K = 5
 
 
 @REGISTRY.register(
@@ -2221,14 +2262,12 @@ _V29_K = 5
         FROM ham_top h
         JOIN cos c ON c.probe_id = h.probe_id AND c.vec_id = h.vec_id
         LEFT JOIN cos_top ct ON ct.probe_id = h.probe_id
-                            AND ct.vec_id = h.vec_id AND ct.rn <= {_V29_K}
-        WHERE h.rn <= {_V29_K}
+                            AND ct.vec_id = h.vec_id AND ct.rn <= {_RECALL_K}
+        WHERE h.rn <= {_RECALL_K}
         ORDER BY h.probe_id, h.hamming, h.vec_id
     """,
 )
 def v29_binary_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, "embeddings", sf_dir)
 
     def pack(vec, lo_not_hi: bool):
@@ -2272,35 +2311,8 @@ def v29_binary_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("hamming"),
         F.round(cosine("pvec", "embedding"), 6).alias("cos"),
     )
-    ham_top = scored.withColumn(
-        "rn", F.row_number().over(W.partitionBy("probe_id").orderBy("hamming", "vec_id"))
-    ).filter(F.col("rn") <= _V29_K)
-    cos_top = (
-        scored.withColumn(
-            "crn",
-            F.row_number().over(
-                W.partitionBy("probe_id").orderBy(F.desc("cos"), "vec_id")
-            ),
-        )
-        .filter(F.col("crn") <= _V29_K)
-        .select("probe_id", "vec_id", F.lit(True).alias("in_exact"))
-    )
-    return (
-        ham_top.join(F.broadcast(cos_top), ["probe_id", "vec_id"], "left")
-        .select(
-            "probe_id",
-            "vec_id",
-            "hamming",
-            "cos",
-            F.coalesce("in_exact", F.lit(False)).alias("in_exact_top5"),
-            F.round(
-                F.avg(F.when(F.col("in_exact"), 1.0).otherwise(0.0)).over(
-                    W.partitionBy("probe_id")
-                ),
-                2,
-            ).alias("recall5"),
-        )
-        .orderBy("probe_id", "hamming", "vec_id")
+    return recall_tail(
+        _top5(scored, "hamming"), _top5(scored, "cos DESC"), ["hamming", "cos"]
     )
 
 
@@ -2312,7 +2324,71 @@ _PQ_M = 8       # sub-blocks per vector (64 dims -> 8 blocks of 8)
 _PQ_DSUB = 8    # dims per block
 _PQ_K = 16      # codebook entries per block -> 8 x 4 bits = 4 bytes/vector
 _PQ_PROBES = (0, 1, 2)
-_PQ_TOPK = 5
+
+# The PQ family (v30 flat, v32 IVF-residual, v35's block-count sweep)
+# runs on the builders below. Vector frames are (keys..., v) with v a
+# double array; a probe frame is (probe_id, v).
+
+
+def pq_blocks(vecs: DataFrame, m_blocks: int = _PQ_M) -> DataFrame:
+    """(keys..., m, sub): each row's v split into m_blocks contiguous
+    sub-vectors; every other column of ``vecs`` is kept as a key."""
+    dsub = 64 // m_blocks
+    keys = [c for c in vecs.columns if c != "v"]
+    return vecs.select(
+        *keys, F.expr(f"explode(sequence(0, {m_blocks - 1})) AS m"), "v"
+    ).select(*keys, "m", F.expr(f"slice(v, m * {dsub} + 1, {dsub}) AS sub"))
+
+
+def pq_codebook(blocks: DataFrame, first_id: int = 0) -> DataFrame:
+    """(m, code, cvec): per block, the _PQ_K-entry codebook seeded from
+    the sub-blocks of vec_ids [first_id, first_id + _PQ_K) (the
+    seed_centroids convention), code = vec_id - first_id."""
+    return blocks.where(
+        f"vec_id >= {first_id} AND vec_id < {first_id + _PQ_K}"
+    ).selectExpr("m", f"vec_id - {first_id} AS code", "sub AS cvec")
+
+
+def pq_encode(blocks: DataFrame, codebook: DataFrame) -> DataFrame:
+    """(keys..., m, code): each block's argmin-L2 codebook entry against
+    the broadcast codebook — a partial-aggregable min(struct) on the
+    4-dp rounded distance, ties to the lowest code."""
+    keys = [c for c in blocks.columns if c != "sub"]
+    return (
+        blocks.join(F.broadcast(codebook), "m")
+        .groupBy(*keys)
+        .agg(F.expr(f"min(struct(round({_l2('sub', 'cvec')}, 4) AS d, code)).code AS code"))
+    )
+
+
+def pq_adc(
+    codes: DataFrame, probe_blocks: DataFrame, codebook: DataFrame, on: list[str]
+) -> DataFrame:
+    """(probe_id, vec_id, adc): asymmetric distance from each probe to
+    every coded vector but itself. The probe's LUT holds each of its
+    blocks' squared L2 to every codebook entry of that block and
+    broadcasts; a vector's ADC is the root of the sum of its codes' LUT
+    hits, joined on ``on`` — (m, code), plus (probe_id, cell_id) where
+    the LUT differs per probed cell."""
+    lut = probe_blocks.join(F.broadcast(codebook), "m").withColumn(
+        "d2", F.expr(f"pow({_l2('sub', 'cvec')}, 2D)")
+    )
+    return (
+        codes.join(F.broadcast(lut), on)
+        .where("vec_id != probe_id")
+        .groupBy("probe_id", "vec_id")
+        .agg(F.expr("round(sqrt(sum(d2)), 6) AS adc"))
+    )
+
+
+def exact_l2(vecs: DataFrame, probes: DataFrame) -> DataFrame:
+    """(probe_id, vec_id, l2): each probe's exact L2 (6 dp) to every
+    other vector — the probes broadcast, the corpus is scanned once."""
+    return (
+        vecs.crossJoin(F.broadcast(probes.withColumnRenamed("v", "pv")))
+        .where("vec_id != probe_id")
+        .select("probe_id", "vec_id", F.expr(f"round({_l2('pv', 'v')}, 6) AS l2"))
+    )
 
 
 @REGISTRY.register(
@@ -2389,98 +2465,24 @@ _PQ_TOPK = 5
         FROM adc_top a
         JOIN exact x ON x.probe_id = a.probe_id AND x.vec_id = a.vec_id
         LEFT JOIN exact_top xt ON xt.probe_id = a.probe_id
-                              AND xt.vec_id = a.vec_id AND xt.rn <= {_PQ_TOPK}
-        WHERE a.rn <= {_PQ_TOPK}
+                              AND xt.vec_id = a.vec_id AND xt.rn <= {_RECALL_K}
+        WHERE a.rn <= {_RECALL_K}
         ORDER BY a.probe_id, a.adc, a.vec_id
     """,
 )
 def v30_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", as_double("embedding").alias("v")
     )
-    blocks = emb.select(
-        "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("m"),
-        F.col("v"),
-    ).select(
-        "vec_id", "m", F.slice("v", F.col("m") * _PQ_DSUB + 1, _PQ_DSUB).alias("sub")
-    )
-    codebook = blocks.filter(F.col("vec_id") < _PQ_K).select(
-        "m", F.col("vec_id").alias("code"), F.col("sub").alias("cvec")
-    )
-    l2 = lambda a, b: F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    # encode: blocks x broadcast codebook, argmin as partial-aggregable
-    # min(struct) on the rounded distance (ties to the lowest code)
-    enc = blocks.join(F.broadcast(codebook), "m").select(
-        "vec_id", "m", F.round(l2(F.col("sub"), F.col("cvec")), 4).alias("d"), "code"
-    )
-    codes = (
-        enc.groupBy("vec_id", "m")
-        .agg(F.min(F.struct("d", "code")).alias("b"))
-        .select("vec_id", "m", F.col("b.code").alias("code"))
-    )
-    # probe LUTs: squared block distance to EVERY codebook entry
-    lut = (
-        blocks.filter(F.col("vec_id").isin(*_PQ_PROBES))
-        .select(F.col("vec_id").alias("probe_id"), "m", F.col("sub").alias("psub"))
-        .join(F.broadcast(codebook), "m")
-        .select(
-            "probe_id", "m", "code",
-            F.pow(l2(F.col("psub"), F.col("cvec")), F.lit(2.0)).alias("d2"),
-        )
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["m", "code"])
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .groupBy("probe_id", "vec_id")
-        .agg(F.round(F.sqrt(F.sum("d2")), 6).alias("adc"))
-    )
-    adc_top = adc.withColumn(
-        "rn", F.row_number().over(W.partitionBy("probe_id").orderBy("adc", "vec_id"))
-    ).filter(F.col("rn") <= _PQ_TOPK)
-    probes = emb.filter(F.col("vec_id").isin(*_PQ_PROBES)).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
+    probes = emb.where(f"vec_id IN {_PQ_PROBES}").withColumnRenamed("vec_id", "probe_id")
+    blocks = pq_blocks(emb)
+    codebook = pq_codebook(blocks)
+    adc = pq_adc(pq_encode(blocks, codebook), pq_blocks(probes), codebook, ["m", "code"])
     # exact feeds both exact_top and the final join — persist so the
     # probes × corpus L2 scan runs once
-    exact = (
-        emb.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id", "vec_id", F.round(l2(F.col("pv"), F.col("v")), 6).alias("l2")
-        )
-        .transform(persist_once)
-    )
-    exact_top = (
-        exact.withColumn(
-            "xrn", F.row_number().over(W.partitionBy("probe_id").orderBy("l2", "vec_id"))
-        )
-        .filter(F.col("xrn") <= _PQ_TOPK)
-        .select("probe_id", "vec_id", F.lit(True).alias("in_exact"))
-    )
-    return (
-        exact.join(F.broadcast(adc_top), ["probe_id", "vec_id"])
-        .join(F.broadcast(exact_top), ["probe_id", "vec_id"], "left")
-        .select(
-            "probe_id", "vec_id", "adc", "l2",
-            F.coalesce("in_exact", F.lit(False)).alias("in_exact_top5"),
-            F.round(
-                F.avg(F.when(F.col("in_exact"), 1.0).otherwise(0.0)).over(
-                    W.partitionBy("probe_id")
-                ),
-                2,
-            ).alias("recall5"),
-        )
-        .orderBy("probe_id", "adc", "vec_id")
-    )
+    exact = exact_l2(emb, probes).transform(persist_once)
+    top = exact.join(F.broadcast(_top5(adc, "adc")), ["probe_id", "vec_id"])
+    return recall_tail(top, _top5(exact, "l2"), ["adc", "l2"])
 
 
 # ---------------------------------------------------------------------------
@@ -2660,9 +2662,7 @@ def v3e_ivf_probe_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = c.crossJoin(F.broadcast(z)).select(
         "vec_id",
         "cell_id",
-        F.round(
-            dot("_cv", "_zv") / (F.col("_cn") * F.col("_zn")), 6
-        ).alias("s"),
+        F.round(cos_normed("_cv", "_cn", "_zv", "_zn"), 6).alias("s"),
     )
     w_assign = W.partitionBy("vec_id").orderBy(F.desc("s"), F.asc("cell_id"))
     assign = (
@@ -2802,9 +2802,9 @@ _V32_PROBES = (40, 41, 42)
         ), ceiling AS (
             SELECT xt.probe_id,
                    ROUND(SUM(CASE WHEN a.vec_id IS NOT NULL THEN 1.0
-                                  ELSE 0.0 END) / {_PQ_TOPK}, 2) AS ceiling5
+                                  ELSE 0.0 END) / {_RECALL_K}, 2) AS ceiling5
             FROM (SELECT probe_id, vec_id FROM exact_top
-                  WHERE rn <= {_PQ_TOPK}) xt
+                  WHERE rn <= {_RECALL_K}) xt
             LEFT JOIN adc a ON a.probe_id = xt.probe_id
                            AND a.vec_id = xt.vec_id
             GROUP BY xt.probe_id
@@ -2833,187 +2833,78 @@ _V32_PROBES = (40, 41, 42)
         FROM adc_top a
         JOIN exact x ON x.probe_id = a.probe_id AND x.vec_id = a.vec_id
         LEFT JOIN exact_top xt ON xt.probe_id = a.probe_id
-                              AND xt.vec_id = a.vec_id AND xt.rn <= {_PQ_TOPK}
+                              AND xt.vec_id = a.vec_id AND xt.rn <= {_RECALL_K}
         JOIN ncand n ON n.probe_id = a.probe_id
         JOIN ceiling c ON c.probe_id = a.probe_id
-        WHERE a.rn <= {_PQ_TOPK}
+        WHERE a.rn <= {_RECALL_K}
         ORDER BY a.probe_id, a.adc, a.vec_id
     """,
 )
 def v32_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", as_double("embedding").alias("v")
     )
-    cen = emb.filter(F.col("vec_id") < _V32_CELLS).select(
-        F.col("vec_id").alias("cell_id"), F.col("v").alias("centroid")
-    )
-    l2 = lambda a, b: F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    w_assign = W.partitionBy("vec_id").orderBy("d", "cell_id")
+    cen = emb.where(f"vec_id < {_V32_CELLS}").selectExpr("vec_id AS cell_id", "v AS centroid")
+    probes = emb.where(f"vec_id IN {_V32_PROBES}").withColumnRenamed("vec_id", "probe_id")
+    d = F.round(l2("v", "centroid"), 4).alias("d")
+    residual = F.expr("zip_with(v, centroid, (_x, _y) -> _x - _y) AS v")
+    # each vector's nearest cell and its residual v - centroid
     assign = (
         emb.crossJoin(F.broadcast(cen))
-        .select(
-            "vec_id",
-            "cell_id",
-            F.round(l2(F.col("v"), F.col("centroid")), 4).alias("d"),
-            F.zip_with(F.col("v"), F.col("centroid"), lambda x, y: x - y).alias(
-                "res"
-            ),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cell_id", "res")
+        .select("vec_id", "cell_id", d, residual)
+        .withColumn("rn", F.expr("row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id)"))
+        .where("rn = 1")
+        .drop("d", "rn")
     )
-    rblocks = assign.select(
-        "vec_id",
-        "cell_id",
-        F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("m"),
-        "res",
-    ).select(
-        "vec_id",
-        "cell_id",
-        "m",
-        F.slice("res", F.col("m") * _PQ_DSUB + 1, _PQ_DSUB).alias("sub"),
-    )
-    codebook = rblocks.filter(
-        (F.col("vec_id") >= _V32_CB_LO) & (F.col("vec_id") < _V32_CB_HI)
-    ).select(
-        "m", (F.col("vec_id") - _V32_CB_LO).alias("code"), F.col("sub").alias("cvec")
-    )
-    codes = (
-        rblocks.join(F.broadcast(codebook), "m")
-        .select(
-            "vec_id",
-            "cell_id",
-            "m",
-            F.round(l2(F.col("sub"), F.col("cvec")), 4).alias("d"),
-            "code",
-        )
-        .groupBy("vec_id", "cell_id", "m")
-        .agg(F.min(F.struct("d", "code")).alias("b"))
-        .select("vec_id", "cell_id", "m", F.col("b.code").alias("code"))
-    )
-    probes = emb.filter(F.col("vec_id").isin(*_V32_PROBES)).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
-    w_pc = W.partitionBy("probe_id").orderBy("d", "cell_id")
+    rblocks = pq_blocks(assign)
+    codebook = pq_codebook(rblocks, _V32_CB_LO)
+    # each probe's nearest cells, with the query residual per cell
     probe_cells = (
         probes.crossJoin(F.broadcast(cen))
-        .select(
-            "probe_id",
-            "cell_id",
-            "centroid",
-            "pv",
-            F.round(l2(F.col("pv"), F.col("centroid")), 4).alias("d"),
+        .select("probe_id", "cell_id", d, residual)
+        .withColumn(
+            "rn", F.expr("row_number() OVER (PARTITION BY probe_id ORDER BY d, cell_id)")
         )
-        .withColumn("rn", F.row_number().over(w_pc))
-        .filter(F.col("rn") <= _V32_PROBE)
-        .select("probe_id", "cell_id", "centroid", "pv")
+        .where(f"rn <= {_V32_PROBE}")
+        .drop("d", "rn")
     )
-    # per-cell query residual -> per-(probe, cell) LUT slice
-    lut = (
-        probe_cells.withColumn(
-            "pres", F.zip_with(F.col("pv"), F.col("centroid"), lambda x, y: x - y)
-        )
-        .crossJoin(F.broadcast(codebook))
-        .select(
-            "probe_id",
-            "cell_id",
-            "m",
-            "code",
-            F.pow(
-                l2(
-                    F.slice("pres", F.col("m") * _PQ_DSUB + 1, _PQ_DSUB),
-                    F.col("cvec"),
-                ),
-                F.lit(2.0),
-            ).alias("d2"),
-        )
-    )
-    cand = codes.join(
+    cand = pq_encode(rblocks, codebook).join(
         F.broadcast(probe_cells.select("probe_id", "cell_id")), "cell_id"
-    ).filter(F.col("vec_id") != F.col("probe_id"))
+    )
     # adc fans out to THREE consumers (top-k, candidate counts, the
     # pruning ceiling) and the final recall window; unpersisted, each
     # branch re-executed the whole encode pipeline (assign → rblocks →
     # codes) — the r7 plan showed 36 scans of embeddings and zero
     # ReusedExchange. adc is probes × candidates rows (KBs); the
     # corpus-sized encode now runs exactly once.
-    adc = (
-        cand.join(F.broadcast(lut), ["probe_id", "cell_id", "m", "code"])
-        .groupBy("probe_id", "vec_id")
-        .agg(F.round(F.sqrt(F.sum("d2")), 6).alias("adc"))
-        .transform(persist_once)
-    )
+    adc = pq_adc(
+        cand, pq_blocks(probe_cells), codebook, ["probe_id", "cell_id", "m", "code"]
+    ).transform(persist_once)
     ncand = adc.groupBy("probe_id").agg(
         F.count("*").cast("bigint").alias("n_candidates")
     )
-    adc_top = adc.withColumn(
-        "rn", F.row_number().over(W.partitionBy("probe_id").orderBy("adc", "vec_id"))
-    ).filter(F.col("rn") <= _PQ_TOPK)
     # exact feeds both exact_top and the final join — persist so the
     # probes × corpus L2 scan runs once
-    exact = (
-        emb.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id", "vec_id", F.round(l2(F.col("pv"), F.col("v")), 6).alias("l2")
-        )
-        .transform(persist_once)
-    )
-    exact_top = (
-        exact.withColumn(
-            "xrn",
-            F.row_number().over(W.partitionBy("probe_id").orderBy("l2", "vec_id")),
-        )
-        .filter(F.col("xrn") <= _PQ_TOPK)
-        .select("probe_id", "vec_id", F.lit(True).alias("in_exact"))
-    )
+    exact = exact_l2(emb, probes).transform(persist_once)
+    exact_top = _top5(exact, "l2")
     # pruning-only ceiling: fraction of the exact top-5 that survived
     # into the candidate set at all (what exact rerank inside the
     # probed cells could at best recover)
     ceiling = (
         exact_top.join(
-            adc.select("probe_id", "vec_id", F.lit(1.0).alias("_hit")),
+            adc.selectExpr("probe_id", "vec_id", "1.0D AS _hit"),
             ["probe_id", "vec_id"],
             "left",
         )
         .groupBy("probe_id")
-        .agg(
-            F.round(F.sum(F.coalesce("_hit", F.lit(0.0))) / _PQ_TOPK, 2).alias(
-                "ceiling5"
-            )
-        )
+        .agg(F.expr(f"round(sum(coalesce(_hit, 0.0D)) / {_RECALL_K}, 2) AS ceiling5"))
     )
-    return (
-        exact.join(F.broadcast(adc_top), ["probe_id", "vec_id"])
-        .join(F.broadcast(exact_top), ["probe_id", "vec_id"], "left")
+    top = (
+        exact.join(F.broadcast(_top5(adc, "adc")), ["probe_id", "vec_id"])
         .join(F.broadcast(ncand), "probe_id")
         .join(F.broadcast(ceiling), "probe_id")
-        .select(
-            "probe_id",
-            "vec_id",
-            "adc",
-            "l2",
-            F.coalesce("in_exact", F.lit(False)).alias("in_exact_top5"),
-            F.round(
-                F.avg(F.when(F.col("in_exact"), 1.0).otherwise(0.0)).over(
-                    W.partitionBy("probe_id")
-                ),
-                2,
-            ).alias("recall5"),
-            "ceiling5",
-            "n_candidates",
-        )
-        .orderBy("probe_id", "adc", "vec_id")
     )
+    return recall_tail(top, exact_top, ["adc", "l2"], ("ceiling5", "n_candidates"))
 
 
 # ---------------------------------------------------------------------------
@@ -3111,10 +3002,9 @@ def neighbor_votes(graph: DataFrame, labels: DataFrame) -> DataFrame:
     each label — one (src, label)-keyed partial agg over the O(k*N)
     edges with the (vec_id, label) table joined by vec id."""
     return (
-        graph.select("src", "dst")
-        .join(labels.withColumnRenamed("vec_id", "dst"), "dst")
-        .groupBy("src", F.col("label").alias("nbr_label"))
-        .agg(F.count("*").alias("v"))
+        graph.join(labels.selectExpr("vec_id AS dst", "label AS nbr_label"), "dst")
+        .groupBy("src", "nbr_label")
+        .agg(F.expr("count(*) AS v"))
     )
 
 
@@ -3122,19 +3012,16 @@ def majority_label(votes: DataFrame) -> DataFrame:
     """(src, neighbor_label, n_agree, n_nbrs): each src's most-voted
     neighbor label (ties to the lowest label), its vote count and the
     src's total neighbor count."""
-    from pyspark.sql import Window as W
-
-    wr = W.partitionBy("src").orderBy(F.desc("v"), F.asc("nbr_label"))
     return (
-        votes.withColumn("rn", F.row_number().over(wr))
-        .withColumn("n_nbrs", F.sum("v").over(W.partitionBy("src")))
-        .filter(F.col("rn") == 1)
-        .select(
+        votes.selectExpr(
             "src",
-            F.col("nbr_label").alias("neighbor_label"),
-            F.col("v").alias("n_agree"),
-            "n_nbrs",
+            "nbr_label AS neighbor_label",
+            "v AS n_agree",
+            "sum(v) OVER (PARTITION BY src) AS n_nbrs",
+            "row_number() OVER (PARTITION BY src ORDER BY v DESC, nbr_label) AS rn",
         )
+        .where("rn = 1")
+        .drop("rn")
     )
 
 
@@ -3229,19 +3116,15 @@ def _noise_verdicts(maj: DataFrame, labels: DataFrame) -> DataFrame:
     """v24c's per-vector audit row: own label, neighbor majority label,
     agreement and neighbor counts, and the flagged/ok verdict (flagged
     = 3 unanimous neighbors, all differing from the own label)."""
-    own = labels.select(F.col("vec_id").alias("src"), F.col("label").alias("own"))
-    return maj.join(own, "src").select(
+    own = labels.selectExpr("vec_id AS src", "label AS own")
+    return maj.join(own, "src").selectExpr(
         "src",
-        F.col("own").cast("int").alias("own_label"),
-        F.col("neighbor_label").cast("int").alias("neighbor_label"),
-        F.col("n_agree").cast("int").alias("n_agree"),
-        F.col("n_nbrs").cast("int").alias("n_neighbors"),
-        F.when(
-            (F.col("n_agree") == 3) & (F.col("neighbor_label") != F.col("own")),
-            F.lit("flagged"),
-        )
-        .otherwise(F.lit("ok"))
-        .alias("verdict"),
+        "CAST(own AS INT) AS own_label",
+        "CAST(neighbor_label AS INT) AS neighbor_label",
+        "CAST(n_agree AS INT) AS n_agree",
+        "CAST(n_nbrs AS INT) AS n_neighbors",
+        "CASE WHEN n_agree = 3 AND neighbor_label != own THEN 'flagged' ELSE 'ok' END"
+        " AS verdict",
     )
 
 
@@ -3471,7 +3354,7 @@ def _v35_block_sql(m_blocks: int) -> str:
                         FROM embeddings p JOIN embeddings e
                           ON e.vec_id != p.vec_id
                         WHERE p.vec_id IN {_PQ_PROBES})
-                    WHERE rn <= {_PQ_TOPK}
+                    WHERE rn <= {_RECALL_K}
                 )
                 SELECT x.probe_id,
                        CASE WHEN a.vec_id IS NOT NULL THEN 1.0 ELSE 0.0 END
@@ -3479,7 +3362,7 @@ def _v35_block_sql(m_blocks: int) -> str:
                 FROM exact_top x
                 LEFT JOIN adc_top a ON a.probe_id = x.probe_id
                                    AND a.vec_id = x.vec_id
-                                   AND a.rn <= {_PQ_TOPK}
+                                   AND a.rn <= {_RECALL_K}
             )
     """
 
@@ -3508,94 +3391,30 @@ def _v35_block_sql(m_blocks: int) -> str:
     + " ORDER BY m_blocks",
 )
 def v35_pq_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     # r12: the probe×corpus HOF-l2 map work serializes on the
     # single-file fixture scan — fan out (see t17b)
     emb = fan_out_small_input(load_table(spark, "embeddings", sf_dir)).select(
         "vec_id", as_double("embedding").alias("v")
     ).transform(persist_once)
-    l2 = lambda a, b: F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    probes = emb.filter(F.col("vec_id").isin(*_PQ_PROBES)).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
+    probes = emb.where(f"vec_id IN {_PQ_PROBES}").withColumnRenamed("vec_id", "probe_id")
     exact_top = (
-        emb.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id", "vec_id",
-            F.round(l2(F.col("pv"), F.col("v")), 6).alias("d"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(W.partitionBy("probe_id").orderBy("d", "vec_id")),
-        )
-        .filter(F.col("rn") <= _PQ_TOPK)
-        .select("probe_id", "vec_id")
-        .transform(persist_once)
+        _top5(exact_l2(emb, probes), "l2").select("probe_id", "vec_id").transform(persist_once)
     )
     outs = []
     for m_blocks in _V35_MS:
-        dsub = 64 // m_blocks
-        blocks = emb.select(
-            "vec_id",
-            F.explode(F.sequence(F.lit(0), F.lit(m_blocks - 1))).alias("m"),
-            "v",
-        ).select(
-            "vec_id", "m", F.slice("v", F.col("m") * dsub + 1, dsub).alias("sub")
+        blocks = pq_blocks(emb, m_blocks)
+        codebook = pq_codebook(blocks)
+        adc = pq_adc(
+            pq_encode(blocks, codebook), pq_blocks(probes, m_blocks), codebook, ["m", "code"]
         )
-        codebook = blocks.filter(F.col("vec_id") < _PQ_K).select(
-            "m", F.col("vec_id").alias("code"), F.col("sub").alias("cvec")
-        )
-        codes = (
-            blocks.join(F.broadcast(codebook), "m")
-            .select(
-                "vec_id", "m",
-                F.round(l2(F.col("sub"), F.col("cvec")), 4).alias("d"),
-                "code",
-            )
-            .groupBy("vec_id", "m")
-            .agg(F.min(F.struct("d", "code")).alias("b"))
-            .select("vec_id", "m", F.col("b.code").alias("code"))
-        )
-        lut = (
-            blocks.filter(F.col("vec_id").isin(*_PQ_PROBES))
-            .select(F.col("vec_id").alias("probe_id"), "m", F.col("sub").alias("psub"))
-            .join(F.broadcast(codebook), "m")
-            .select(
-                "probe_id", "m", "code",
-                F.pow(l2(F.col("psub"), F.col("cvec")), F.lit(2.0)).alias("d2"),
-            )
-        )
-        adc_top = (
-            codes.join(F.broadcast(lut), ["m", "code"])
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .groupBy("probe_id", "vec_id")
-            .agg(F.round(F.sqrt(F.sum("d2")), 6).alias("adc"))
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    W.partitionBy("probe_id").orderBy("adc", "vec_id")
-                ),
-            )
-            .filter(F.col("rn") <= _PQ_TOPK)
-            .select("probe_id", "vec_id", F.lit(1.0).alias("_hit"))
-        )
-        rec = (
-            exact_top.join(F.broadcast(adc_top), ["probe_id", "vec_id"], "left")
-            .agg(
+        hits = _top5(adc, "adc").selectExpr("probe_id", "vec_id", "1.0D AS _hit")
+        outs.append(
+            exact_top.join(F.broadcast(hits), ["probe_id", "vec_id"], "left").agg(
                 F.lit(m_blocks).alias("m_blocks"),
-                F.round(F.avg(F.coalesce("_hit", F.lit(0.0))), 4).alias("recall5"),
+                F.expr("round(avg(coalesce(_hit, 0.0D)), 4) AS recall5"),
                 F.lit(m_blocks / 2.0).alias("bytes_per_vector"),
             )
         )
-        outs.append(rec)
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)

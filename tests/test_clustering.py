@@ -236,3 +236,27 @@ def test_power_iteration_converges_to_numpy_top_eigenvector(spark):
     cos = abs(float(v @ top_vec) / (np.linalg.norm(v) * np.linalg.norm(top_vec)))
     assert cos >= 0.9, cos
     assert abs(lam - top_val) / top_val <= 0.1, (lam, top_val)
+
+
+def test_two_level_assignment_agrees_with_brute_force(spark):
+    """v36's 2-probe coarse route vs brute-force nearest-fine-seed:
+    the ISOTROPIC fixture is the worst case for coarse routing (all
+    seeds near-equidistant, boundaries everywhere), measured at 82%
+    agreement — pin ≥0.8 so a routing regression shows up, plus
+    exactly-once coverage. Clustered real embeddings route far
+    better; blocking quality, not exactness, is the contract (d8
+    compares within cells, it never claims nearest-cell optimality)."""
+    import math
+
+    from ai_iceberg_demo_spark.vector.clustering import SEMDEDUP_CELL, v36_two_level_assign
+
+    emb = load_table(spark, "embeddings", SF_DIR)
+    k = max(KMEANS_K, math.ceil(emb.count() / SEMDEDUP_CELL))
+    brute = {
+        r["vec_id"]: r["cell_id"]
+        for r in kmeans_assign(emb, seed_centroids(emb, k=k)).collect()
+    }
+    two = {r["vec_id"]: r["cell_id"] for r in v36_two_level_assign(spark, SF_DIR).collect()}
+    assert set(two) == set(brute)  # every vector assigned exactly once
+    agree = sum(1 for v, c in two.items() if brute[v] == c)
+    assert agree / len(two) >= 0.8, f"agreement {agree}/{len(two)}"

@@ -76,15 +76,6 @@ def test_pipeline_storage_card_covers_the_trio(spark):
     assert zm.loc["unclustered_shipdate", "verdict"] == "sort_or_zorder"
 
 
-def test_v35_curve_covers_all_block_counts_with_valid_recalls(spark):
-    from ai_iceberg_demo_spark.vector.similarity import _V35_MS, v35_pq_tuning_curve
-
-    out = v35_pq_tuning_curve(spark, SF_DIR).toPandas()
-    assert list(out.m_blocks) == list(_V35_MS)
-    assert ((out.recall5 >= 0) & (out.recall5 <= 1)).all()
-    assert (out.bytes_per_vector == [m / 2 for m in _V35_MS]).all()
-
-
 def test_d27_detection_degrades_with_shingle_size(spark):
     from ai_iceberg_demo_spark.vector.dedup import d27_shingle_sensitivity
 

@@ -76,36 +76,6 @@ def test_entity_resolution_matches_are_exactly_the_planted_links(spark):
     )
 
 
-def test_two_level_assignment_agrees_with_brute_force(spark):
-    """v36's 2-probe coarse route vs brute-force nearest-fine-seed:
-    the ISOTROPIC fixture is the worst case for coarse routing (all
-    seeds near-equidistant, boundaries everywhere), measured at 82%
-    agreement — pin ≥0.8 so a routing regression shows up, plus
-    exactly-once coverage. Clustered real embeddings route far
-    better; blocking quality, not exactness, is the contract (d8
-    compares within cells, it never claims nearest-cell optimality)."""
-    import math
-
-    from ai_iceberg_demo_spark.vector.clustering import (
-        KMEANS_K,
-        SEMDEDUP_CELL,
-        kmeans_assign,
-        seed_centroids,
-        v36_two_level_assign,
-    )
-
-    emb = load_table(spark, "embeddings", SF_DIR)
-    k = max(KMEANS_K, math.ceil(emb.count() / SEMDEDUP_CELL))
-    brute = {
-        r["vec_id"]: r["cell_id"]
-        for r in kmeans_assign(emb, seed_centroids(emb, k=k)).collect()
-    }
-    two = {r["vec_id"]: r["cell_id"] for r in v36_two_level_assign(spark, SF_DIR).collect()}
-    assert set(two) == set(brute)  # every vector assigned exactly once
-    agree = sum(1 for v, c in two.items() if brute[v] == c)
-    assert agree / len(two) >= 0.8, f"agreement {agree}/{len(two)}"
-
-
 def test_partition_evolution_spec1_scans_only_what_it_prunes_to(spark):
     """m20: under spec 1 (day, event_type) the read partitions contain
     ONLY the queried type → scan amplification exactly 1.0; under

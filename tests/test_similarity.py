@@ -440,6 +440,30 @@ def test_product_quantization_adc_matches_numpy_codebook(spark):
             assert abs(round(exact, 6) - r["l2"]) < 1e-5
 
 
+def test_v35_curve_covers_all_block_counts_with_valid_recalls(spark):
+    from ai_iceberg_demo_spark.vector.similarity import _V35_MS, v35_pq_tuning_curve
+
+    out = v35_pq_tuning_curve(spark, SF_DIR).toPandas()
+    assert list(out.m_blocks) == list(_V35_MS)
+    assert ((out.recall5 >= 0) & (out.recall5 <= 1)).all()
+    assert (out.bytes_per_vector == [m / 2 for m in _V35_MS]).all()
+
+
+def test_v35_flat_point_is_v30s_mean_recall(spark):
+    """v35's M = 8 point and v30 run the same encoder, ADC and exact
+    scan: its recall5 is v30's per-probe recall5 averaged over the
+    probes."""
+    from ai_iceberg_demo_spark.vector.similarity import (
+        v30_product_quantization,
+        v35_pq_tuning_curve,
+    )
+
+    v30 = v30_product_quantization(spark, SF_DIR).collect()
+    per_probe = {r["probe_id"]: r["recall5"] for r in v30}
+    curve = {r["m_blocks"]: r["recall5"] for r in v35_pq_tuning_curve(spark, SF_DIR).collect()}
+    assert curve[8] == round(sum(per_probe.values()) / len(per_probe), 4)
+
+
 def test_tombstone_search_never_serves_deleted_and_flags_promotions(spark):
     """v31: no tombstoned (vec_id%50==0) id may appear in any result,
     each probe returns exactly 5 live hits, promoted rows are exactly
