@@ -20,7 +20,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_iceberg_demo_spark.registry import Registry
-from ai_iceberg_demo_spark.tables import load_table, long_metrics, persist_once
+from ai_iceberg_demo_spark.tables import (
+    fan_out_by_key,
+    fan_out_small_input,
+    load_table,
+    long_metrics,
+    persist_once,
+)
 
 REGISTRY = Registry()
 
@@ -80,6 +86,11 @@ def quality_score(text: Column) -> Column:
     sw_component = F.when((sw >= 0.05) & (sw <= 0.6), F.lit(1.0)).otherwise(F.lit(0.5))
     # identical IEEE op order on both engines -> bit-identical, no round
     return 0.6 * length_component + 0.4 * sw_component
+
+
+def lang_guess(text: Column) -> Column:
+    """'en' when the text holds the stopword marker "the ", else 'und'."""
+    return F.when(text.contains("the ") | text.startswith("the "), "en").otherwise("und")
 
 
 def fingerprint(text: Column) -> Column:
@@ -207,15 +218,7 @@ def t2_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t3_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    return docs.select(
-        "doc_id",
-        "lang",
-        F.when(
-            F.col("text").contains("the ") | F.col("text").startswith("the "), "en"
-        )
-        .otherwise("und")
-        .alias("lang_guess"),
-    )
+    return docs.select("doc_id", "lang", lang_guess(F.col("text")).alias("lang_guess"))
 
 
 @REGISTRY.register(
@@ -551,6 +554,10 @@ def t17_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_EMAIL_RE = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
+_NUM_RE = r"[0-9]{4,}"
+
+
 @REGISTRY.register(
     name="f29_pii_redaction",
     survey_ref="training-data (scrubbing)",
@@ -579,30 +586,36 @@ def t17_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def f29_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    email_re = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
-    num_re = r"[0-9]{4,}"
     docs = load_table(spark, "documents", sf_dir)
-    salted = docs.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" contact user"),
-                F.col("doc_id").cast("string"),
-                F.lit("@example.com ref "),
-                (F.col("doc_id") * 7919).cast("string"),
-            ),
-        ).otherwise(F.col("text")).alias("text"),
-    )
+    salted = docs.select("doc_id", pii_salted(F.col("doc_id"), F.col("text")).alias("text"))
     return salted.select(
         "doc_id",
         F.regexp_replace(
-            F.regexp_replace("text", email_re, "<EMAIL>"), num_re, "<NUM>"
+            F.regexp_replace("text", _EMAIL_RE, "<EMAIL>"), _NUM_RE, "<NUM>"
         ).alias("redacted"),
-        F.size(F.regexp_extract_all("text", F.lit(email_re), 0)).cast("bigint").alias("n_emails"),
-        F.size(F.regexp_extract_all("text", F.lit(num_re), 0)).cast("bigint").alias("n_numbers"),
+        n_matches(F.col("text"), _EMAIL_RE).alias("n_emails"),
+        n_matches(F.col("text"), _NUM_RE).alias("n_numbers"),
     )
+
+
+def pii_salted(doc_id: Column, text: Column) -> Column:
+    """f29's planted PII: every 5th document gets an email address and a
+    long number appended."""
+    return F.when(
+        doc_id % 5 == 0,
+        F.concat(
+            text,
+            F.lit(" contact user"),
+            doc_id.cast("string"),
+            F.lit("@example.com ref "),
+            (doc_id * 7919).cast("string"),
+        ),
+    ).otherwise(text)
+
+
+def n_matches(text: Column, pattern: str) -> Column:
+    """Number of non-overlapping matches of ``pattern`` in ``text``."""
+    return F.size(F.regexp_extract_all(text, F.lit(pattern), 0)).cast("bigint")
 
 
 @REGISTRY.register(
@@ -975,7 +988,7 @@ def _top_pair(seq_df: DataFrame, col: str) -> DataFrame:
     )
 
 
-def _bpe_round_sql(src_seq: str, pair_cte: str) -> str:
+def _bpe_fold_sql(src_seq: str, pair_cte: str) -> str:
     """DuckDB twin of one merge round over CTE column ``m`` of
     ``src_seq`` using the 1-row pair CTE ``pair_cte``."""
     return f"""
@@ -1019,9 +1032,9 @@ _BPE_PAIR_SQL = """
         WITH toks AS (
             SELECT doc_id, STRING_SPLIT(text, ' ') AS m FROM documents
         ), pair1 AS ({_BPE_PAIR_SQL.format(src="toks")}
-        ), m1 AS ({_bpe_round_sql("toks", "pair1")}
+        ), m1 AS ({_bpe_fold_sql("toks", "pair1")}
         ), pair2 AS ({_BPE_PAIR_SQL.format(src="m1")}
-        ), m2 AS ({_bpe_round_sql("m1", "pair2")}
+        ), m2 AS ({_bpe_fold_sql("m1", "pair2")}
         )
         SELECT t.doc_id,
                CAST(LEN(t.m) AS BIGINT) AS n_tokens_0,
@@ -2707,6 +2720,125 @@ def t97_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Generation-eval substrate: the pair sample, n-grams, clipped overlap, BLEU-4
+# (t98, t105, t106, t109, t111, t114 and pipeline_eval_card build on these)
+# ---------------------------------------------------------------------------
+
+_BLEU_MIN_WORDS = 12  # shortest 4-gram-able pair after 2/3 truncation
+_FOOTER = ["near", "duplicate", "footer", "variant"]  # the planted candidate tail
+_FOOTER_SQL = "array(" + ", ".join(f"'{t}'" for t in _FOOTER) + ")"
+_VARIANT_SQL = "CASE WHEN doc_id % 20 = 0 THEN 'footer' ELSE 'truncated' END AS variant"
+
+# unit -> (length function, the order-n gram starting at 1-based position i)
+_NGRAM_UNITS = {
+    "word": ("size", "concat_ws(' ', slice({col}, i, {n}))"),
+    "char": ("length", "substring({col}, i, {n})"),
+}
+
+
+def eval_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, text) of every 10th document, hash-partitioned by doc_id
+    once (fan_out_by_key). t98, t105 and t106 are doc_id-keyed to the
+    end, so their gram aggregations stay partition-local and only these
+    raw text rows ever shuffle. Not persisted: a persisted repartition
+    hides its partitioning from the outer planner and the downstream
+    exchanges come back, while unpersisted it is one exchange that
+    AQE reuses across the metrics."""
+    docs = load_table(spark, "documents", sf_dir).filter(F.col("doc_id") % 10 == 0)
+    return fan_out_by_key(docs.select("doc_id", "text"), "doc_id")
+
+
+def eval_pairs(sample: DataFrame) -> DataFrame:
+    """(doc_id, tr, tc): t105/t106's reference and candidate token
+    arrays. doc_id % 20 == 0 gets the footer-extended candidate, the
+    rest the first 2/3 of the reference. A doc under 12 words gets an
+    empty reference, so clipped_overlap yields no row for it: a row
+    filter here would be pushed below the sample's exchange and give
+    t105 and t106 an exchange of their own."""
+    toks = sample.selectExpr("doc_id", "split(text, ' ') AS w")
+    return toks.selectExpr(
+        "doc_id",
+        f"CASE WHEN size(w) >= {_BLEU_MIN_WORDS} THEN w"
+        " ELSE CAST(array() AS array<string>) END AS tr",
+        f"CASE WHEN doc_id % 20 = 0 THEN concat(w, {_FOOTER_SQL})"
+        " ELSE slice(w, 1, CAST(floor(2 * size(w) / 3) AS INT)) END AS tc",
+    )
+
+
+def ngrams_sql(col: str, orders, unit: str = "word") -> str:
+    """Spark-SQL expression: the flattened array of (n, gram) structs of
+    column ``col`` for every n in ``orders`` — one explode covers all
+    orders instead of one scan per order. ``unit`` "word" reads ``col``
+    as a token array and joins each gram's tokens with ' '; "char" reads
+    it as a string and takes substrings."""
+    length, gram = _NGRAM_UNITS[unit]
+    cases = [
+        f"CASE WHEN {length}({col}) >= {n} THEN "
+        f"transform(sequence(1, {length}({col}) - {n} + 1), "
+        f"i -> named_struct('n', {n}, 'gram', {gram.format(col=col, n=n)})) "
+        "ELSE cast(array() as array<struct<n:int,gram:string>>) END"
+        for n in orders
+    ]
+    return "flatten(array(" + ", ".join(cases) + "))"
+
+
+def clipped_overlap(pairs: DataFrame, ref: str, cand: str) -> DataFrame:
+    """(doc_id, n, m, r_total, c_total): per doc and n-gram order, the
+    clipped multiset overlap m = Σ_gram min(ref count, cand count) and
+    each side's gram total. ``ref`` and ``cand`` are SQL gram-struct
+    arrays over ``pairs``' columns (ngrams_sql). Both sides explode
+    side-tagged in one pass (rc = 1 ref, 0 cand) and one aggregation
+    gives each gram's (rc, cc); Σ least(rc, cc) equals the ref ⋈ cand
+    gram join, since a gram on one side only adds least(·, 0) = 0. When
+    ``pairs`` is doc_id-partitioned both aggregations are partition-
+    local. Only (doc, n) with grams on both sides are kept, the oracles'
+    ref-total ⋈ cand-total. t105's oracle keys on the candidate total
+    alone, but its references have ≥ 12 words and their candidates ≥ 8,
+    so both totals are > 0 for every n ≤ 4 and its rows are the same."""
+    tagged = (
+        f"concat(transform({ref}, g -> named_struct('n', g.n, 'gram', g.gram, 'rc', 1)), "
+        f"transform({cand}, g -> named_struct('n', g.n, 'gram', g.gram, 'rc', 0)))"
+    )
+    return (
+        pairs.selectExpr("doc_id", f"inline({tagged})")
+        .groupBy("doc_id", "n", "gram")
+        .agg(F.expr("sum(rc) AS rc"), F.expr("count(*) - sum(rc) AS cc"))
+        .groupBy("doc_id", "n")
+        .agg(
+            F.expr("sum(least(rc, cc)) AS m"),
+            F.expr("sum(rc) AS r_total"),
+            F.expr("sum(cc) AS c_total"),
+        )
+        .filter("r_total > 0 AND c_total > 0")
+    )
+
+
+def brevity_sql(c_len: str, r_len: str) -> str:
+    """BLEU's brevity penalty: 1 for a candidate at least as long as its
+    reference, else exp(1 − r/c)."""
+    return (
+        f"CASE WHEN {c_len} >= {r_len} THEN 1.0D "
+        f"ELSE exp(1.0D - CAST({r_len} AS DOUBLE) / {c_len}) END"
+    )
+
+
+def bleu4_sql(c_len: str, r_len: str) -> str:
+    """BLEU-4 from columns p1..p4: BP · (p1·p2·p3·p4)^(1/4), 0 when any
+    precision is 0. The 4th root is sqrt(sqrt(·)), IEEE-exact on both
+    engines where pow(x, 0.25) is libm-dependent."""
+    prod = "p1 * p2 * p3 * p4"
+    return (
+        f"CASE WHEN {prod} > 0 THEN {brevity_sql(c_len, r_len)} * sqrt(sqrt({prod})) "
+        "ELSE 0.0D END"
+    )
+
+
+def _p_wide() -> list[Column]:
+    """p1..p4 pivoted from (n, p) rows."""
+    return [F.expr(f"max(CASE WHEN n = {k} THEN p END) AS p{k}") for k in range(1, 5)]
+
+
+# ---------------------------------------------------------------------------
 # T98: ROUGE-2 — clipped bigram overlap P/R/F1 (generation eval)
 # ---------------------------------------------------------------------------
 
@@ -2767,93 +2899,28 @@ def t97_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t98_rouge2_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12 optimization (guide §2.4/§8): the whole metric is doc_id-keyed,
-    # so ONE keyed exchange of the raw pair rows replaces per-stage
-    # exchanges of exploded bigram rows (~2x text bytes each). Both
-    # sides' bigrams are tagged (rc=1 ref / 0 cand) and exploded in one
-    # pass; per-gram ref/cand counts come from a single partition-local
-    # aggregation, and Σ min(rc, cc) ≡ the former refg⋈candg inner join
-    # (grams on one side only contribute least(·,0) = 0). Docs lacking
-    # bigrams on either side are dropped by the totals filter — exactly
-    # the rows the former inner joins dropped. 3 shuffles + 1 gram join
-    # → 1 shuffle, nothing corpus-exploded ever crosses the network.
-    from ai_iceberg_demo_spark.tables import fan_out_by_key
+    return rouge2_scores(eval_sample(spark, sf_dir))
 
-    docs = load_table(spark, "documents", sf_dir).filter(F.col("doc_id") % 10 == 0)
-    pairs = fan_out_by_key(
-        docs.select(
-            "doc_id",
-            F.split("text", " ").alias("tr"),
-            F.split(
-                F.concat(F.col("text"), F.lit(" near duplicate footer variant")), " "
-            ).alias("tc"),
-        ),
+
+def rouge2_scores(sample: DataFrame) -> DataFrame:
+    """t98 over eval_sample's rows: the reference is the document, the
+    candidate the document plus the footer."""
+    pairs = sample.selectExpr("doc_id", "split(text, ' ') AS tr").selectExpr(
+        "doc_id", "tr", f"concat(tr, {_FOOTER_SQL}) AS tc"
+    )
+    ov = clipped_overlap(pairs, ngrams_sql("tr", (2,)), ngrams_sql("tc", (2,)))
+    return ov.selectExpr(
         "doc_id",
-    )
-
-    def bigrams(col: str):
-        t = F.col(col)
-        return F.when(
-            F.size(t) >= 2,
-            F.zip_with(
-                F.slice(t, 1, F.size(t) - 1),
-                F.slice(t, 2, F.size(t) - 1),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    def tag(arr, rc: int):
-        return F.transform(
-            arr, lambda g: F.struct(g.alias("gram"), F.lit(rc).alias("rc"))
-        )
-
-    g = pairs.select(
-        "doc_id", F.explode(F.concat(tag(bigrams("tr"), 1), tag(bigrams("tc"), 0))).alias("g")
-    )
-    per_gram = g.groupBy("doc_id", F.col("g.gram").alias("gram")).agg(
-        F.sum("g.rc").cast("bigint").alias("rc"),
-        (F.count("*") - F.sum("g.rc")).cast("bigint").alias("cc"),
-    )
-    per_doc = per_gram.groupBy("doc_id").agg(
-        F.sum(F.least("rc", "cc")).alias("clipped"),
-        F.sum("rc").alias("n_ref"),
-        F.sum("cc").alias("n_cand"),
-    )
-    return per_doc.filter((F.col("n_ref") > 0) & (F.col("n_cand") > 0)).select(
-        "doc_id",
-        F.col("clipped").cast("bigint").alias("clipped_bigrams"),
-        F.round(F.col("clipped").cast("double") / F.col("n_cand"), 6).alias("rouge2_precision"),
-        F.round(F.col("clipped").cast("double") / F.col("n_ref"), 6).alias("rouge2_recall"),
-        F.round(
-            2.0 * F.col("clipped") / (F.col("n_cand") + F.col("n_ref")), 6
-        ).alias("rouge2_f1"),
+        "CAST(m AS BIGINT) AS clipped_bigrams",
+        "round(CAST(m AS DOUBLE) / c_total, 6) AS rouge2_precision",
+        "round(CAST(m AS DOUBLE) / r_total, 6) AS rouge2_recall",
+        "round(2.0D * m / (c_total + r_total), 6) AS rouge2_f1",
     )
 
 
 # ---------------------------------------------------------------------------
 # T105: BLEU-4 — clipped n-gram precision + brevity penalty (generation eval)
 # ---------------------------------------------------------------------------
-
-_BLEU_MIN_WORDS = 12  # shortest 4-gram-able pair after 2/3 truncation
-
-
-def _bleu_ngram_structs_sql(col: str = "t") -> str:
-    """Spark-SQL expression: from the token-array column ``col``, the
-    flattened array of (n, gram) structs for n = 1..4 — one explode
-    covers all four orders instead of four scans. Parameterized so
-    consumers with a differently-named token column (t111) bind it
-    directly instead of string-rewriting the generated SQL."""
-    cases = []
-    for n in range(1, 5):
-        idxs = ", ".join(f"{col}[i+{j}]" for j in range(n))
-        cases.append(
-            f"CASE WHEN size({col}) >= {n} THEN "
-            f"transform(sequence(0, size({col}) - {n}), "
-            f"i -> named_struct('n', {n}, 'gram', concat_ws(' ', {idxs}))) "
-            f"ELSE cast(array() as array<struct<n:int,gram:string>>) END"
-        )
-    return "flatten(array(" + ", ".join(cases) + "))"
-
 
 @REGISTRY.register(
     name="t105_bleu_eval",
@@ -2872,12 +2939,13 @@ def _bleu_ngram_structs_sql(col: str = "t") -> str:
     "get a 2/3-truncation candidate (every candidate n-gram is a "
     "reference n-gram, so p1..p4 = 1 exactly and BLEU = BP < 1). "
     "Pairs need ≥ 12 words so the truncated side still has 4-grams. "
-    "Shape (r12): ONE hash exchange of the raw pair rows by doc_id; "
-    "a single side-tagged explode emits all four orders for BOTH "
-    "sides, per-gram clipping / per-(doc,n) precisions / the per-doc "
-    "pivot are all partition-local, and the length join is "
-    "co-partitioned — model-output scoring at 100 TB where only raw "
-    "text rows ever shuffle, same discipline as t98.",
+    "Shape: ONE hash exchange of the raw sample rows by doc_id "
+    "(eval_sample); a single side-tagged explode emits all four orders "
+    "for BOTH sides, and per-gram clipping, per-(doc,n) precisions and "
+    "the per-doc pivot, which also reads the lengths off the unigram "
+    "totals, are all partition-local with no join — model-output "
+    "scoring at 100 TB where only raw text rows ever shuffle, same "
+    "discipline as t98.",
     oracle=f"""
         WITH pairs AS (
             SELECT doc_id,
@@ -2948,96 +3016,30 @@ def _bleu_ngram_structs_sql(col: str = "t") -> str:
     """,
 )
 def t105_bleu_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12 optimization (guide §2.4/§8): everything downstream of
-    # `pairs` is doc_id-keyed, so ONE keyed exchange of the raw pair
-    # rows (fan_out_by_key) replaces the former per-stage exchanges of
-    # exploded (doc, n, gram) rows. Both sides' n-grams are emitted in
-    # a single side-tagged explode (rc=1 ref / 0 cand); one partition-
-    # local aggregation yields per-gram (rc, cc), and Σ min(rc, cc) per
-    # (doc, n) ≡ the former refg⋈candg inner join (one-side-only grams
-    # contribute least(·,0) = 0). total > 0 replicates the former
-    # candg-derived totals row-existence; the lens⋈wide join is
-    # co-partitioned on doc_id (shuffle_hash pinned per the d13 rule —
-    # strategy only, no exchange). 5 shuffles + 1 gram join → 1 shuffle
-    # of raw text rows; nothing corpus-exploded crosses the network.
-    from ai_iceberg_demo_spark.tables import fan_out_by_key
+    return bleu_scores(eval_pairs(eval_sample(spark, sf_dir)))
 
-    docs = load_table(spark, "documents", sf_dir)
-    toks0 = docs.select("doc_id", "text", F.split("text", " ").alias("w")).filter(
-        (F.col("doc_id") % 10 == 0) & (F.size("w") >= _BLEU_MIN_WORDS)
-    )
-    trunc_len = F.floor((2 * F.size("w")) / 3).cast("int")
-    pairs = fan_out_by_key(
-        toks0.select(
-            "doc_id",
-            F.when(F.col("doc_id") % 20 == 0, F.lit("footer"))
-            .otherwise(F.lit("truncated"))
-            .alias("variant"),
-            F.col("text").alias("ref_text"),
-            F.when(
-                F.col("doc_id") % 20 == 0,
-                F.concat(F.col("text"), F.lit(" near duplicate footer variant")),
-            )
-            .otherwise(F.array_join(F.slice(F.col("w"), 1, trunc_len), " "))
-            .alias("cand_text"),
-        ),
-        "doc_id",
-    )
-    # NOT persisted: a persisted repartition is wrapped in an
-    # AdaptiveSparkPlan whose output partitioning is opaque to the
-    # outer planner (ENSURE_REQUIREMENTS exchanges reappear, measured).
-    # Unpersisted, ReuseExchange shares the ONE keyed shuffle between
-    # the gram branch and the length branch, and HashPartitioning(
-    # doc_id) flows to every downstream aggregate/join.
 
-    both = pairs.select(
+def bleu_scores(pairs: DataFrame) -> DataFrame:
+    """t105 over eval_pairs' rows. The unigram totals are the token
+    counts, so the lengths come out of the same aggregation as p1..p4
+    and the variant from doc_id: one pass over the pairs, no join."""
+    orders = range(1, 5)
+    ov = clipped_overlap(pairs, ngrams_sql("tr", orders), ngrams_sql("tc", orders))
+    per_doc = (
+        ov.selectExpr("doc_id", "n", "CAST(m AS DOUBLE) / c_total AS p", "r_total", "c_total")
+        .groupBy("doc_id")
+        .agg(
+            *_p_wide(),
+            F.expr("max(CASE WHEN n = 1 THEN r_total END) AS r_len"),
+            F.expr("max(CASE WHEN n = 1 THEN c_total END) AS c_len"),
+        )
+    )
+    return per_doc.selectExpr(
         "doc_id",
-        F.split("ref_text", " ").alias("tr"),
-        F.split("cand_text", " ").alias("tc"),
-    )
-    sided = (
-        f"concat(transform({_bleu_ngram_structs_sql('tr')}, "
-        f"g -> named_struct('n', g.n, 'gram', g.gram, 'rc', 1)), "
-        f"transform({_bleu_ngram_structs_sql('tc')}, "
-        f"g -> named_struct('n', g.n, 'gram', g.gram, 'rc', 0)))"
-    )
-    g = both.select("doc_id", F.explode(F.expr(sided)).alias("g"))
-    per_gram = g.groupBy(
-        "doc_id", F.col("g.n").alias("n"), F.col("g.gram").alias("gram")
-    ).agg(
-        F.sum("g.rc").cast("bigint").alias("rc"),
-        (F.count("*") - F.sum("g.rc")).cast("bigint").alias("cc"),
-    )
-    per_n = per_gram.groupBy("doc_id", "n").agg(
-        F.sum(F.least("rc", "cc")).alias("m"), F.sum("cc").alias("total")
-    )
-    pn = per_n.filter(F.col("total") > 0).select(
-        "doc_id", "n", (F.col("m").cast("double") / F.col("total")).alias("p")
-    )
-    wide = pn.groupBy("doc_id").agg(
-        *[
-            F.max(F.when(F.col("n") == k, F.col("p"))).alias(f"p{k}")
-            for k in range(1, 5)
-        ]
-    )
-    lens = pairs.select(
-        "doc_id",
-        "variant",
-        F.size(F.split("ref_text", " ")).alias("r_len"),
-        F.size(F.split("cand_text", " ")).alias("c_len"),
-    )
-    bp = F.when(F.col("c_len") >= F.col("r_len"), F.lit(1.0)).otherwise(
-        F.exp(1.0 - F.col("r_len").cast("double") / F.col("c_len"))
-    )
-    prod = F.col("p1") * F.col("p2") * F.col("p3") * F.col("p4")
-    return lens.join(wide.hint("shuffle_hash"), "doc_id").select(
-        "doc_id",
-        "variant",
-        *[F.round(f"p{k}", 6).alias(f"p{k}") for k in range(1, 5)],
-        F.round(bp, 6).alias("brevity_penalty"),
-        F.round(
-            F.when(prod > 0, bp * F.sqrt(F.sqrt(prod))).otherwise(F.lit(0.0)), 6
-        ).alias("bleu4"),
+        _VARIANT_SQL,
+        *[f"round(p{k}, 6) AS p{k}" for k in orders],
+        f"round({brevity_sql('c_len', 'r_len')}, 6) AS brevity_penalty",
+        f"round({bleu4_sql('c_len', 'r_len')}, 6) AS bleu4",
     )
 
 
@@ -3047,23 +3049,6 @@ def t105_bleu_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CHRF_MAX_N = 6  # chrF's standard character n-gram orders 1..6
 _CHRF_BETA2 = 4.0  # beta = 2: recall weighted double (Popović 2015)
-
-
-def _chrf_ngram_structs_sql(col: str = "s") -> str:
-    """Spark-SQL expression: from the space-stripped string column
-    ``col``, the flattened array of (n, gram) structs for n = 1..6 —
-    one explode covers all six orders (t105's single-scan discipline,
-    characters instead of words). Parameterized so both sides of a
-    pair can be expanded from one row (t105's r12 rewrite)."""
-    cases = []
-    for n in range(1, _CHRF_MAX_N + 1):
-        cases.append(
-            f"CASE WHEN length({col}) >= {n} THEN "
-            f"transform(sequence(1, length({col}) - {n} + 1), "
-            f"i -> named_struct('n', {n}, 'gram', substring({col}, i, {n}))) "
-            f"ELSE cast(array() as array<struct<n:int,gram:string>>) END"
-        )
-    return "flatten(array(" + ", ".join(cases) + "))"
 
 
 @REGISTRY.register(
@@ -3083,13 +3068,12 @@ def _chrf_ngram_structs_sql(col: str = "s") -> str:
     "P_n < 1), truncated candidates are char-prefixes of the "
     "reference (P_n = 1 exactly, R_n < 1) — a prefix's char-n-gram "
     "multiset is dominated by the full string's, so the equalities "
-    "are exact, pinned per row. Shape (r12): ONE hash exchange of "
-    "the raw pair rows by doc_id; a single side-tagged explode emits "
-    "all six orders for both sides and every gram/order/doc "
+    "are exact, pinned per row. Shape: ONE hash exchange of the raw "
+    "sample rows by doc_id (eval_sample); a single side-tagged explode "
+    "emits all six orders for both sides and every gram/order/doc "
     "aggregate is partition-local — the former char-gram join (whose "
     "shuffle_hash build map OOMed at sf10 and had to be merge-"
-    "pinned) is gone outright; the output join is co-partitioned "
-    "shuffle_hash (d13 rule).",
+    "pinned) is gone outright, and so is the output join.",
     oracle=f"""
         WITH pairs AS (
             SELECT doc_id,
@@ -3149,87 +3133,32 @@ def _chrf_ngram_structs_sql(col: str = "s") -> str:
     """,
 )
 def t106_chrf_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan_out_by_key below is the parallelism source — an extra
-    # round-robin fan_out_small_input would just stack a second
-    # exchange under the keyed one
-    docs = load_table(spark, "documents", sf_dir)
-    toks0 = docs.select("doc_id", "text", F.split("text", " ").alias("w")).filter(
-        (F.col("doc_id") % 10 == 0) & (F.size("w") >= _BLEU_MIN_WORDS)
-    )
-    trunc_len = F.floor((2 * F.size("w")) / 3).cast("int")
-    pairs = toks0.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 20 == 0, F.lit("footer"))
-        .otherwise(F.lit("truncated"))
-        .alias("variant"),
-        F.translate(F.col("text"), " ", "").alias("ref_s"),
-        F.when(
-            F.col("doc_id") % 20 == 0,
-            F.translate(
-                F.concat(F.col("text"), F.lit(" near duplicate footer variant")),
-                " ",
-                "",
-            ),
-        )
-        .otherwise(
-            F.translate(F.array_join(F.slice(F.col("w"), 1, trunc_len), " "), " ", "")
-        )
-        .alias("cand_s"),
-    )
-    # r12 optimization (guide §2.4/§8, t105's rewrite applied to the
-    # char level): ONE keyed exchange of the raw pair rows replaces the
-    # former per-stage exchanges of exploded (doc, n, char-gram) rows
-    # (~6 orders × chars-per-doc per side) AND the gram join those fed
-    # — the join whose shuffle_hash build map OOMed at sf10 and had to
-    # be merge-pinned is GONE outright: both sides explode side-tagged
-    # in one pass, per-gram (rc, cc) come from a single partition-local
-    # aggregation, and Σ min(rc, cc) ≡ the former inner join. The
-    # r_total/c_total > 0 filter replicates the former rt⋈ct inner
-    # join's row existence; per-partition hash-agg state is bounded by
-    # docs-per-partition × grams-per-doc and spills gracefully where
-    # the former per-task join map could not.
-    from ai_iceberg_demo_spark.tables import fan_out_by_key
+    return chrf_scores(eval_pairs(eval_sample(spark, sf_dir)))
 
-    # not persisted — t105's rationale: ReuseExchange shares the keyed
-    # shuffle; persisting it would hide its partitioning behind the
-    # cached AdaptiveSparkPlan and resurrect the downstream exchanges
-    pairs = fan_out_by_key(pairs, "doc_id")
 
-    sided = (
-        f"concat(transform({_chrf_ngram_structs_sql('ref_s')}, "
-        f"g -> named_struct('n', g.n, 'gram', g.gram, 'rc', 1)), "
-        f"transform({_chrf_ngram_structs_sql('cand_s')}, "
-        f"g -> named_struct('n', g.n, 'gram', g.gram, 'rc', 0)))"
+def chrf_scores(pairs: DataFrame) -> DataFrame:
+    """t106 over eval_pairs' rows: each side's tokens joined with '' are
+    its space-stripped string. Both sides' char grams come from one
+    explode, so there is no char-gram join (its shuffle_hash build map
+    OOMed at sf10) and no output join."""
+    s = pairs.selectExpr("doc_id", "array_join(tr, '') AS rs", "array_join(tc, '') AS cs")
+    orders = range(1, _CHRF_MAX_N + 1)
+    avgd = (
+        clipped_overlap(s, ngrams_sql("rs", orders, "char"), ngrams_sql("cs", orders, "char"))
+        .groupBy("doc_id")
+        .agg(
+            F.expr("avg(CAST(m AS DOUBLE) / c_total) AS chrp"),
+            F.expr("avg(CAST(m AS DOUBLE) / r_total) AS chrr"),
+        )
     )
-    g = pairs.select("doc_id", F.explode(F.expr(sided)).alias("g"))
-    per_gram = g.groupBy(
-        "doc_id", F.col("g.n").alias("n"), F.col("g.gram").alias("gram")
-    ).agg(
-        F.sum("g.rc").cast("bigint").alias("rc"),
-        (F.count("*") - F.sum("g.rc")).cast("bigint").alias("cc"),
-    )
-    per_n = per_gram.groupBy("doc_id", "n").agg(
-        F.sum(F.least("rc", "cc")).alias("m"),
-        F.sum("rc").alias("r_total"),
-        F.sum("cc").alias("c_total"),
-    )
-    pn = per_n.filter((F.col("r_total") > 0) & (F.col("c_total") > 0)).select(
+    num = f"{1 + _CHRF_BETA2}D * chrp * chrr"
+    return avgd.selectExpr(
         "doc_id",
-        "n",
-        (F.col("m").cast("double") / F.col("c_total")).alias("p"),
-        (F.col("m").cast("double") / F.col("r_total")).alias("r"),
-    )
-    avgd = pn.groupBy("doc_id").agg(F.avg("p").alias("chrp"), F.avg("r").alias("chrr"))
-    num = (1 + _CHRF_BETA2) * F.col("chrp") * F.col("chrr")
-    den = _CHRF_BETA2 * F.col("chrp") + F.col("chrr")
-    return pairs.select("doc_id", "variant").join(
-        avgd.hint("shuffle_hash"), "doc_id"
-    ).select(
-        "doc_id",
-        "variant",
-        F.round("chrp", 6).alias("chrf_precision"),
-        F.round("chrr", 6).alias("chrf_recall"),
-        F.round(F.when(num == 0, F.lit(0.0)).otherwise(num / den), 6).alias("chrf2"),
+        _VARIANT_SQL,
+        "round(chrp, 6) AS chrf_precision",
+        "round(chrr, 6) AS chrf_recall",
+        f"round(CASE WHEN {num} = 0 THEN 0.0D ELSE {num} / ({_CHRF_BETA2}D * chrp + chrr) END, 6)"
+        " AS chrf2",
     )
 
 
@@ -3821,7 +3750,6 @@ def t108_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _WER_VOCAB_CAP = 94  # printable ASCII 33..126 after CHR(32 + rank)
-_WER_FOOTER = ["near", "duplicate", "footer", "variant"]
 
 
 @REGISTRY.register(
@@ -3866,7 +3794,7 @@ _WER_FOOTER = ["near", "duplicate", "footer", "variant"]
                         THEN LIST_TRANSFORM(STRING_SPLIT(text, ' '),
                              (x, i) -> CASE WHEN i % 5 = 0 THEN 'value' ELSE x END)
                         ELSE LIST_CONCAT(STRING_SPLIT(text, ' '),
-                             [{", ".join("'" + t.replace("'", "''") + "'" for t in _WER_FOOTER)}])
+                             [{", ".join("'" + t.replace("'", "''") + "'" for t in _FOOTER)}])
                    END AS ct
             FROM documents WHERE doc_id % 10 = 0
         ), toks AS (
@@ -3901,11 +3829,17 @@ _WER_FOOTER = ["near", "duplicate", "footer", "variant"]
     """,
 )
 def t109_wer_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ai_iceberg_demo_spark.tables import fan_out_small_input
-
-    docs = fan_out_small_input(
-        load_table(spark, "documents", sf_dir).filter(F.col("doc_id") % 10 == 0)
+    # round-robin fan-out, not eval_sample's doc_id-keyed one: nothing
+    # here is doc_id-keyed (the encode is map-side)
+    return wer_scores(
+        fan_out_small_input(
+            load_table(spark, "documents", sf_dir).filter(F.col("doc_id") % 10 == 0)
+        )
     )
+
+
+def wer_scores(docs: DataFrame) -> DataFrame:
+    """t109 over the (doc_id, text) rows of the 1-in-10 sample."""
     rt = F.split(F.col("text"), " ")
     trunc = F.slice(
         rt, 1, F.greatest(F.floor(F.size(rt) * 2 / 3).cast("int"), F.lit(1))
@@ -3916,7 +3850,7 @@ def t109_wer_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         rt,
         lambda x, i: F.when((i + 1) % 5 == 0, F.lit("value")).otherwise(x),
     )
-    footer = F.concat(rt, F.array(*[F.lit(t) for t in _WER_FOOTER]))
+    footer = F.concat(rt, F.expr(_FOOTER_SQL))
     pairs = docs.select(
         "doc_id",
         F.when(F.col("doc_id") % 30 == 0, "trunc")
@@ -4170,10 +4104,13 @@ def _eval_card_oracle() -> str:
     "pipeline publishes per model checkpoint so regressions in ANY of "
     "the four metric families surface in one place. The oracle "
     "composes the four parts' registered SQL verbatim; the Spark side "
-    "calls the registered operators and aggregates each to its "
-    "(n_pairs, mean) pair — every part is already pair-keyed and "
-    "linear, so the card costs four 1-row aggregates over the same "
-    "1-in-10 pair sample.",
+    "builds the 1-in-10 sample once (eval_sample, one doc_id-keyed "
+    "exchange) and passes it to the builders the four registered "
+    "queries wrap: t105 and t106 share one pair frame (eval_pairs), "
+    "and t98, t105 and t106 read the one exchange (AQE reuses it). "
+    "Each result is reduced to its (n_pairs, mean) pair in a 1-row "
+    "aggregate. t109 persists its own pair arrays, so its cached "
+    "relation runs the sample exchange once more.",
     oracle=_eval_card_oracle(),
 )
 def pipeline_eval_card(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4184,11 +4121,13 @@ def pipeline_eval_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return long_metrics(agg, family, ["n_pairs", mean_name])
 
+    sample = eval_sample(spark, sf_dir)
+    pairs = eval_pairs(sample)
     out = (
-        card(t105_bleu_eval(spark, sf_dir), "bleu", "bleu4", "mean_bleu4")
-        .unionAll(card(t98_rouge2_eval(spark, sf_dir), "rouge2", "rouge2_f1", "mean_f1"))
-        .unionAll(card(t106_chrf_eval(spark, sf_dir), "chrf", "chrf2", "mean_chrf2"))
-        .unionAll(card(t109_wer_eval(spark, sf_dir), "wer", "wer", "mean_wer"))
+        card(bleu_scores(pairs), "bleu", "bleu4", "mean_bleu4")
+        .unionAll(card(rouge2_scores(sample), "rouge2", "rouge2_f1", "mean_f1"))
+        .unionAll(card(chrf_scores(pairs), "chrf", "chrf2", "mean_chrf2"))
+        .unionAll(card(wer_scores(sample), "wer", "wer", "mean_wer"))
     )
     return out.orderBy("family", "metric")
 
@@ -4297,8 +4236,7 @@ def t111_self_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(persist_once)
     )
     g = (
-        sample.select("doc_id", F.explode(F.expr(_bleu_ngram_structs_sql(col="w"))).alias("g"))
-        .select("doc_id", F.col("g.n").alias("n"), F.col("g.gram").alias("gram"))
+        sample.selectExpr("doc_id", f"inline({ngrams_sql('w', range(1, 5))})")
         .groupBy("doc_id", "n", "gram")
         .agg(F.count("*").cast("bigint").alias("c"))
         .transform(persist_once)
@@ -4341,17 +4279,8 @@ def t111_self_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.coalesce("m", F.lit(0)) / F.col("total").cast("double")).alias("p"),
         )
     )
-    wide = p.groupBy("cand", "ref").agg(
-        *[
-            F.max(F.when(F.col("n") == k, F.col("p"))).alias(f"p{k}")
-            for k in range(1, 5)
-        ]
-    )
+    wide = p.groupBy("cand", "ref").agg(*_p_wide())
     lens = sample.select("doc_id", F.size("w").alias("l"))
-    prod = F.col("p1") * F.col("p2") * F.col("p3") * F.col("p4")
-    bp = F.when(F.col("lc") >= F.col("lr"), F.lit(1.0)).otherwise(
-        F.exp(1.0 - F.col("lr").cast("double") / F.col("lc"))
-    )
     bleu = (
         wide.join(
             lens.select(F.col("doc_id").alias("cand"), F.col("l").alias("lc")),
@@ -4361,11 +4290,7 @@ def t111_self_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
             lens.select(F.col("doc_id").alias("ref"), F.col("l").alias("lr")),
             "ref",
         )
-        .select(
-            F.round(
-                F.when(prod > 0, bp * F.sqrt(F.sqrt(prod))).otherwise(F.lit(0.0)), 6
-            ).alias("b")
-        )
+        .selectExpr(f"round({bleu4_sql('lc', 'lr')}, 6) AS b")
     )
     n_sample = sample.agg(F.count("*").cast("bigint").alias("n_sample"))
     return n_sample.crossJoin(
@@ -4401,7 +4326,7 @@ def t111_self_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     "same boilerplate), the per-doc mean catches within-document "
     "stutter (t18's repetition signal, here in metric form); the gap "
     "between the two localizes WHICH failure a low score means. "
-    "Reuses t105's n-gram struct helper (n filtered to 1..3). All "
+    "Built on the family's n-gram expression (ngrams_sql, n = 1..3). All "
     "counts are exact integers; the only floats are two ratios, "
     "rounded. Scale: one explode pass over the corpus feeding two "
     "aggregation trees — per-(n,gram) wordcount for the type count "
@@ -4440,67 +4365,35 @@ def t111_self_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t114_distinct_n(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, "documents", sf_dir)
-    g = (
-        docs.select("doc_id", F.split("text", " ").alias("t"))
-        .select("doc_id", F.explode(F.expr(_bleu_ngram_structs_sql())).alias("s"))
-        .filter(F.col("s.n") <= 3)
-        .select(F.col("s.n").alias("n"), F.col("s.gram").alias("gram"))
+    orders = range(1, 4)
+    toks = load_table(spark, "documents", sf_dir).selectExpr("split(text, ' ') AS t")
+    # corpus-level distinctness genuinely needs the gram exchange; it
+    # is the explode's only consumer, so the gram rows stream straight
+    # into the aggregation instead of persisting corpus-scaled gram rows
+    corpus = (
+        toks.selectExpr(f"inline({ngrams_sql('t', orders)})")
+        .groupBy("n")
+        .agg(
+            F.count("*").cast("bigint").alias("total_ngrams"),
+            F.countDistinct("gram").cast("bigint").alias("distinct_ngrams"),
+        )
     )
-    # corpus-level distinctness genuinely needs the gram exchange;
-    # it is now the explode's ONLY consumer, so the gram table streams
-    # straight into the aggregation instead of persisting corpus-scaled
-    # gram rows (r13 — the cache was the only reason both aggs shared it)
-    corpus = g.groupBy("n").agg(
-        F.count("*").cast("bigint").alias("total_ngrams"),
-        F.countDistinct("gram").cast("bigint").alias("distinct_ngrams"),
-    )
-    # r13 (guide §2.4, the minhash_sigs discipline): the per-DOC
-    # distinct ratio is a per-document reduction — size(array_distinct)
-    # over each n's gram array, map-side, no (doc, n, gram) distinct
-    # exchange and no (doc, n) agg exchange. Each array is bound once
-    # (nested single-element-array transforms) so nothing re-tokenizes.
-    tok_stats = F.element_at(
-        F.transform(
-            F.array(F.split(F.col("text"), " ")),
-            lambda t: F.transform(
-                F.sequence(F.lit(1), F.lit(3)),
-                lambda n: F.element_at(
-                    F.transform(
-                        F.array(
-                            F.when(
-                                F.size(t) >= n,
-                                F.transform(
-                                    F.sequence(F.lit(0), F.size(t) - n),
-                                    lambda i: F.concat_ws(
-                                        " ", F.slice(t, i + 1, n)
-                                    ),
-                                ),
-                            ).otherwise(F.array().cast("array<string>"))
-                        ),
-                        lambda gr: F.struct(
-                            n.cast("int").alias("n"),
-                            F.size(gr).cast("long").alias("tot"),
-                            F.size(F.array_distinct(gr)).cast("long").alias(
-                                "dist"
-                            ),
-                        ),
-                    ),
-                    1,
-                ),
-            ),
-        ),
-        1,
+    # the per-DOC distinct ratio is a per-document reduction (the
+    # minhash_sigs discipline): size(array_distinct) over each order's
+    # gram array, map-side, with no (doc, n, gram) distinct exchange and
+    # no (doc, n) agg exchange. Each gram array is bound once by its own
+    # projection, so nothing re-tokenizes.
+    stats = ", ".join(
+        f"named_struct('n', {n}, 'tot', CAST(size(g{n}) AS BIGINT),"
+        f" 'dist', CAST(size(array_distinct(g{n})) AS BIGINT))"
+        for n in orders
     )
     per_doc = (
-        docs.select(F.explode(tok_stats).alias("st"))
-        .filter(F.col("st.tot") > 0)
-        .groupBy(F.col("st.n").alias("n"))
-        .agg(
-            F.round(
-                F.avg(F.col("st.dist") / F.col("st.tot").cast("double")) + 0.0, 6
-            ).alias("mean_doc_distinct_ratio")
-        )
+        toks.selectExpr(*[f"{ngrams_sql('t', (n,))} AS g{n}" for n in orders])
+        .selectExpr(f"inline(array({stats}))")
+        .filter("tot > 0")
+        .groupBy("n")
+        .agg(F.expr("round(avg(dist / CAST(tot AS DOUBLE)) + 0.0D, 6) AS mean_doc_distinct_ratio"))
     )
     return (
         corpus.join(F.broadcast(per_doc), "n")
@@ -4557,15 +4450,20 @@ _BL_SQL = ", ".join(f"'{t}'" for t in _BLOCKLIST)
 )
 def t115_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    bl = F.array(*[F.lit(t) for t in _BLOCKLIST])
-    hits = F.size(
-        F.filter(F.split(F.lower(F.col("text")), " "), lambda t: F.array_contains(bl, t))
-    ).cast("bigint")
+    hits = blocklist_hits(F.col("text"))
     return docs.select(
         "doc_id",
         hits.alias("n_hits"),
         F.when(hits > _BLOCK_MAX_HITS, "drop").otherwise("keep").alias("verdict"),
     )
+
+
+def blocklist_hits(text: Column) -> Column:
+    """Occurrences of blocklist tokens among the lowercased words."""
+    bl = F.array(*[F.lit(t) for t in _BLOCKLIST])
+    return F.size(
+        F.filter(F.split(F.lower(text), " "), lambda t: F.array_contains(bl, t))
+    ).cast("bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -4625,50 +4523,50 @@ def _safety_card_oracle() -> str:
     "rate + hit volume (t115) — what a data lead reads before a "
     "crawl snapshot enters the curation funnel, and the numbers a "
     "safety review audits afterwards. Oracle composes the four "
-    "parts' registered SQL verbatim; every part is map-only, so the "
-    "card costs four summary aggregates over one corpus scan shape.",
+    "parts' registered SQL verbatim; the Spark side reads documents "
+    "once, selects the four gates' per-doc values with the column "
+    "expressions t2, t3, f29 and t115 use (quality_score, lang_guess, "
+    "pii_salted + n_matches, blocklist_hits), and reduces them in ONE "
+    "aggregate whose row is stacked into the long format.",
     oracle=_safety_card_oracle(),
 )
 def pipeline_safety_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q = t2_quality_score(spark, sf_dir).agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.round(
-            F.avg(
-                F.when(F.col("quality") >= _SAFETY_Q_FLOOR, 1.0).otherwise(0.0)
-            )
-            + 0.0,
-            6,
-        ).alias("keep_rate"),
-    )
-    lang = t3_langid(spark, sf_dir).agg(
-        F.round(
-            F.avg(
-                F.when(F.col("lang_guess") == F.col("lang"), 1.0).otherwise(0.0)
-            )
-            + 0.0,
-            6,
-        ).alias("declared_match_rate")
-    )
-    pii = f29_pii_redaction(spark, sf_dir).agg(
-        F.sum(
-            F.when(F.col("n_emails") + F.col("n_numbers") > 0, 1).otherwise(0)
+    text = F.col("text")
+    per_doc = (
+        load_table(spark, "documents", sf_dir)
+        .select(
+            quality_score(text).alias("quality"),
+            (lang_guess(text) == F.col("lang")).alias("lang_match"),
+            pii_salted(F.col("doc_id"), text).alias("salted"),
+            blocklist_hits(text).alias("n_hits"),
         )
-        .cast("double")
-        .alias("docs_redacted"),
-        F.sum(F.col("n_emails") + F.col("n_numbers"))
-        .cast("double")
-        .alias("total_redactions"),
+        .select(
+            "quality",
+            "lang_match",
+            (n_matches(F.col("salted"), _EMAIL_RE) + n_matches(F.col("salted"), _NUM_RE)).alias(
+                "n_pii"
+            ),
+            "n_hits",
+        )
     )
-    bl = t115_blocklist_filter(spark, sf_dir).agg(
-        F.round(
-            F.avg(F.when(F.col("verdict") == "drop", 1.0).otherwise(0.0)) + 0.0, 6
-        ).alias("drop_rate"),
-        F.sum("n_hits").cast("double").alias("total_hits"),
+
+    def rate(cond: str) -> str:
+        return f"round(avg(CASE WHEN {cond} THEN 1.0D ELSE 0.0D END) + 0.0D, 6)"
+
+    rows = {
+        ("quality", "n_docs"): "CAST(count(*) AS DOUBLE)",
+        ("quality", "keep_rate"): rate(f"quality >= {_SAFETY_Q_FLOOR}D"),
+        ("langid", "declared_match_rate"): rate("lang_match"),
+        ("pii", "docs_redacted"): "CAST(sum(CASE WHEN n_pii > 0 THEN 1 ELSE 0 END) AS DOUBLE)",
+        ("pii", "total_redactions"): "CAST(sum(n_pii) AS DOUBLE)",
+        ("blocklist", "drop_rate"): rate(f"n_hits > {_BLOCK_MAX_HITS}"),
+        ("blocklist", "total_hits"): "CAST(sum(n_hits) AS DOUBLE)",
+    }
+    agg = per_doc.agg(*[F.expr(f"{e} AS {m}") for (_f, m), e in rows.items()])
+    # one stack over the one aggregate row: a long_metrics call per
+    # family would prune the aggregate to that family's columns, and
+    # each of those four aggregates would scan documents again
+    stacked = ", ".join(f"'{f}', '{m}', {m}" for f, m in rows)
+    return agg.selectExpr(f"stack({len(rows)}, {stacked}) AS (family, metric, value)").orderBy(
+        "family", "metric"
     )
-    out = (
-        long_metrics(q, "quality", ["n_docs", "keep_rate"])
-        .unionAll(long_metrics(lang, "langid", ["declared_match_rate"]))
-        .unionAll(long_metrics(pii, "pii", ["docs_redacted", "total_redactions"]))
-        .unionAll(long_metrics(bl, "blocklist", ["drop_rate", "total_hits"]))
-    )
-    return out.orderBy("family", "metric")

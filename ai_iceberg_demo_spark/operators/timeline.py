@@ -18,7 +18,7 @@ only the page.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_iceberg_demo_spark.registry import Registry

@@ -40,7 +40,6 @@ from ai_iceberg_demo_spark.vector.similarity import (
     _COS_SQL,
     _MD5_PLANES_SQL,
     _MD5_SIGS_SQL,
-    cosine,
 )
 
 REGISTRY = Registry()

@@ -79,30 +79,33 @@ def test_pair_overlaps_match_all_overlaps_on_band_candidates(spark):
 
 
 def test_dedup_queries_call_no_registered_query():
-    """Composite dedup queries build their substrate through the
-    shingle/band builders: no query registered in vector/dedup.py or
-    pipeline/curation.py calls another query registered there through
-    its (spark, sf_dir) function and relies on CacheManager to match
-    the plan. (Curation's report cards that wrap other modules'
-    queries are not covered.)"""
+    """Composite queries build their substrate through shared builders
+    (the shingle/band builders, the eval sample and pair builders) and
+    pass it in: no query registered in vector/dedup.py or
+    pipeline/curation.py calls another query registered there, and no
+    query registered in functions/text.py calls another one of its own,
+    through its (spark, sf_dir) function, relying on CacheManager to
+    match the plan. (Curation's report cards that wrap other modules'
+    queries, text.py's t17 among them, are not covered.)"""
     import ast
     import inspect
 
+    from ai_iceberg_demo_spark.functions import text
     from ai_iceberg_demo_spark.pipeline import curation
     from ai_iceberg_demo_spark.vector import dedup
 
-    mods = (dedup, curation)
-    registered = {s.fn.__name__ for m in mods for s in m.REGISTRY.specs.values()}
     calls = []
-    for mod in mods:
-        for fn in ast.walk(ast.parse(inspect.getsource(mod))):
-            if not (isinstance(fn, ast.FunctionDef) and fn.name in registered):
-                continue
-            for node in ast.walk(fn):
-                if isinstance(node, ast.Call):
-                    callee = getattr(node.func, "id", getattr(node.func, "attr", None))
-                    if callee in registered and callee != fn.name:
-                        calls.append(f"{fn.name} -> {callee}")
+    for mods in ((dedup, curation), (text,)):
+        registered = {s.fn.__name__ for m in mods for s in m.REGISTRY.specs.values()}
+        for mod in mods:
+            for fn in ast.walk(ast.parse(inspect.getsource(mod))):
+                if not (isinstance(fn, ast.FunctionDef) and fn.name in registered):
+                    continue
+                for node in ast.walk(fn):
+                    if isinstance(node, ast.Call):
+                        callee = getattr(node.func, "id", getattr(node.func, "attr", None))
+                        if callee in registered and callee != fn.name:
+                            calls.append(f"{fn.name} -> {callee}")
     assert calls == []
 
 

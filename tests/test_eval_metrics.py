@@ -4,7 +4,6 @@ the property each one must hold BEYOND hashing its DuckDB oracle
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 import pytest
 

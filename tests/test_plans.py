@@ -17,8 +17,6 @@ the tripwire.
 
 from __future__ import annotations
 
-import pytest
-
 from ai_iceberg_demo_spark.registry import all_registries
 from tests.conftest import SF_DIR
 
@@ -478,6 +476,35 @@ def test_eval_metrics_single_keyed_exchange(spark):
         # the gram join is gone: at most one join node (the output join)
         n_join = tree.count("Join")
         assert n_join <= 1, f"{name}: {n_join} joins\n{tree}"
+
+
+def test_eval_card_reads_one_keyed_sample_exchange(spark):
+    """pipeline_eval_card builds the 1-in-10 sample once and hands it to
+    t98, t105 and t106: its executed plan runs ONE doc_id-keyed exchange
+    and the other two reads are ReusedExchange of it. (t109's persisted
+    pairs run their own, inside the cached relation, which this walk
+    does not open.)"""
+    df = all_registries().specs["pipeline_eval_card"].fn(spark, SF_DIR)
+    df.collect()
+    stack = [df._jdf.queryExecution().executedPlan().executedPlan()]
+    keyed = []
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        if "hashpartitioning(doc_id" in node.simpleString(100):
+            keyed.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    assert sorted(keyed) == ["Exchange", "ReusedExchange", "ReusedExchange"], keyed
+
+
+def test_safety_card_scans_documents_once(spark):
+    """pipeline_safety_card selects the four gates' per-doc values from
+    one read of documents and reduces them in one aggregate."""
+    tree = plan_of(spark, "pipeline_safety_card").split("\n\n")[0]
+    assert tree.count("Scan parquet") == 1, tree
 
 
 def test_wer_encode_is_map_side(spark):

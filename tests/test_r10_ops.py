@@ -114,25 +114,6 @@ def test_d26b_pairs_are_reciprocal_capped_edges(spark):
         assert (r.vec_a, r.vec_b) in graph and (r.vec_b, r.vec_a) in graph
 
 
-def test_t106_chrf_factor_separation(spark):
-    """chrF's two factor directions must separate by variant exactly:
-    a truncated candidate is a char-PREFIX of the reference (every
-    candidate n-gram clips fully -> P_n = 1, so chrf_precision = 1 and
-    recall < 1); a footer candidate makes the reference the prefix
-    (R_n = 1 -> chrf_recall = 1, precision < 1)."""
-    rows = _q("t106_chrf_eval")(spark, SF_DIR).collect()
-    assert rows, "no pairs at this SF"
-    assert {r.variant for r in rows} == {"footer", "truncated"}
-    for r in rows:
-        if r.variant == "truncated":
-            assert r.chrf_precision == 1.0, r
-            assert r.chrf_recall < 1.0, r
-        else:
-            assert r.chrf_recall == 1.0, r
-            assert r.chrf_precision < 1.0, r
-        assert 0.0 < r.chrf2 <= 1.0
-
-
 def test_t107_vocab_growth_curve_shape(spark):
     """The shingle-type growth curve must be a real curve: cumulative
     counts strictly increasing, types < tokens everywhere, and the

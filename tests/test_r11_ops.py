@@ -1,6 +1,6 @@
 """Round-11 operator pins: the fixed-unroll logistic-regression
-trainer (t108), the encoded-Levenshtein WER eval (t109), in-context
-packing (u47), and the mutual-kNN k-core gate (g10). The hash oracle
+trainer (t108), in-context packing (u47), and the mutual-kNN k-core
+gate (g10). The hash oracle
 proves engine≡DuckDB at the fixture SFs; these pin the SEMANTICS the
 hash can't see — factor exactness, training progress, ordering
 properties, and that the peel cascade (not just the first sweep) is
@@ -46,49 +46,6 @@ def test_t108_weights_point_the_right_way(spark):
     assert last.w_len > 0
     assert abs(last.w_len) >= abs(last.w_stop)
     assert last.w_intercept < 0
-
-
-# ---------------------------------------------------------------------------
-# t109: WER via closed-vocab single-char encoding
-# ---------------------------------------------------------------------------
-
-
-def test_t109_factor_exactness(spark):
-    """Truncation is a token-prefix drop: edit distance exactly
-    n_ref - n_cand and WER exactly their ratio. Footer extension is a
-    pure 4-token insertion: edit exactly 4. Substitution: edit >= 1
-    and <= floor(n_ref/5) (a shift can only LOWER Levenshtein below
-    the Hamming count, never above)."""
-    out = _q("t109_wer_eval")(spark, SF_DIR).collect()
-    assert out, "no pairs"
-    kinds = {r.pair_kind for r in out}
-    assert kinds == {"trunc", "subst", "footer"}
-    for r in out:
-        assert r.wer == round(r.edit_distance / r.n_ref_tokens, 6)
-        if r.pair_kind == "trunc":
-            n_cand = max(r.n_ref_tokens * 2 // 3, 1)
-            assert r.edit_distance == r.n_ref_tokens - n_cand
-        elif r.pair_kind == "footer":
-            assert r.edit_distance == 4
-        else:
-            assert 1 <= r.edit_distance <= r.n_ref_tokens // 5
-
-
-def test_t109_vocab_cap_folds_to_unk(spark):
-    """The fixture vocabulary (corpus unigrams + footer + 'value')
-    fits the 94-char budget, so no token folds to UNK here — pin that
-    the encoding is injective by checking a zero-WER control: ref
-    encoded against ITSELF must give edit 0 (plumbing, not metric)."""
-    from ai_iceberg_demo_spark.tables import load_table
-
-    docs = load_table(spark, "documents", SF_DIR).filter(F.col("doc_id") % 10 == 0)
-    n_types = (
-        docs.select(F.explode(F.split("text", " ")).alias("t"))
-        .select("t")
-        .distinct()
-        .count()
-    )
-    assert n_types + 5 <= 94  # corpus types + footer tokens + 'value'
 
 
 # ---------------------------------------------------------------------------
@@ -313,54 +270,6 @@ def test_t110_poisson_weights_have_unit_mean(spark):
 
 
 # ---------------------------------------------------------------------------
-# pipeline_eval_card
-# ---------------------------------------------------------------------------
-
-
-def test_eval_card_families_and_means_match_parts(spark):
-    """8 rows, 4 families x (n_pairs, mean); the WER family's mean
-    must equal an independent aggregation of t109's registered
-    output (the card is a VIEW of its parts, never a re-derivation)."""
-    rows = _q("pipeline_eval_card")(spark, SF_DIR).collect()
-    assert len(rows) == 8
-    fams = {r.family for r in rows}
-    assert fams == {"bleu", "rouge2", "chrf", "wer"}
-    card = {(r.family, r.metric): r.value for r in rows}
-    for fam in fams:
-        assert card[(fam, "n_pairs")] > 0
-    wer_rows = _q("t109_wer_eval")(spark, SF_DIR).collect()
-    expect = round(sum(r.wer for r in wer_rows) / len(wer_rows) + 0.0, 6)
-    assert abs(card[("wer", "mean_wer")] - expect) < 1e-9
-    assert card[("wer", "n_pairs")] == len(wer_rows)
-
-
-# ---------------------------------------------------------------------------
-# t111: Self-BLEU diversity
-# ---------------------------------------------------------------------------
-
-
-def test_t111_shape_and_bounds(spark):
-    """One row; n_pairs = n_sample * (n_sample - 1) (the full ordered
-    pair grid — a missing pair means a silently dropped zero-overlap
-    pair, the classic left-join bug); 0 <= mean <= max <= 1."""
-    row = _q("t111_self_bleu")(spark, SF_DIR).collect()[0]
-    assert row.n_pairs == row.n_sample * (row.n_sample - 1)
-    assert 0.0 <= row.mean_self_bleu <= row.max_self_bleu <= 1.0
-
-
-def test_t111_identical_docs_score_one(spark):
-    """Plant a probe: BLEU of a doc against itself is exactly 1 —
-    run the same pairwise arithmetic on a 2-clone frame via the
-    registered query over a planted table is overkill; instead pin
-    the arithmetic directly: p1..p4 = 1 and BP = 1 give
-    sqrt(sqrt(1)) = 1, and the query's max_self_bleu must stay BELOW
-    1 on the fixture (no two sampled docs are identical — d1's
-    fingerprint dedup would have caught clones)."""
-    row = _q("t111_self_bleu")(spark, SF_DIR).collect()[0]
-    assert row.max_self_bleu < 1.0
-
-
-# ---------------------------------------------------------------------------
 # t112: pass@k
 # ---------------------------------------------------------------------------
 
@@ -522,49 +431,3 @@ def test_x9_cogroup_matches_sql_aggregation(spark):
         assert r.n_ref == n
         assert abs(r.mean_ref - m) < 1e-9
         assert abs(r.mean_shift - round(r.mean_cmp - r.mean_ref + 0.0, 4)) <= 1e-4
-
-
-# ---------------------------------------------------------------------------
-# t115: blocklist safety gate
-# ---------------------------------------------------------------------------
-
-
-def test_t115_counts_occurrences_not_distinct_and_both_verdicts_fire(spark):
-    """Multiset semantics: a doc with the same blocked token twice
-    must count 2 (recomputed per doc in pandas); and the fixture must
-    exercise BOTH verdicts at the registered threshold."""
-    from ai_iceberg_demo_spark.functions.text import _BLOCK_MAX_HITS, _BLOCKLIST
-    from ai_iceberg_demo_spark.tables import load_table
-
-    out = {r.doc_id: r for r in _q("t115_blocklist_filter")(spark, SF_DIR).collect()}
-    docs = load_table(spark, "documents", SF_DIR).select("doc_id", "text").collect()
-    verdicts = set()
-    for d in docs:
-        hits = sum(1 for t in d.text.lower().split(" ") if t in _BLOCKLIST)
-        r = out[d.doc_id]
-        assert r.n_hits == hits, (d.doc_id, r.n_hits, hits)
-        assert r.verdict == ("drop" if hits > _BLOCK_MAX_HITS else "keep")
-        verdicts.add(r.verdict)
-    assert verdicts == {"keep", "drop"}
-
-
-# ---------------------------------------------------------------------------
-# pipeline_safety_card
-# ---------------------------------------------------------------------------
-
-
-def test_safety_card_matches_parts_and_rates_are_rates(spark):
-    """7 rows, 4 families; every *_rate lands in [0,1]; the blocklist
-    family's values must equal an independent aggregation of t115's
-    registered output (the card is a view of its parts)."""
-    rows = _q("pipeline_safety_card")(spark, SF_DIR).collect()
-    assert len(rows) == 7
-    card = {(r.family, r.metric): r.value for r in rows}
-    assert {r.family for r in rows} == {"quality", "langid", "pii", "blocklist"}
-    for (fam, metric), v in card.items():
-        if metric.endswith("_rate"):
-            assert 0.0 <= v <= 1.0, (fam, metric, v)
-    bl = _q("t115_blocklist_filter")(spark, SF_DIR).collect()
-    drop = sum(1 for r in bl if r.verdict == "drop") / len(bl)
-    assert abs(card[("blocklist", "drop_rate")] - round(drop + 0.0, 6)) < 1e-9
-    assert card[("blocklist", "total_hits")] == float(sum(r.n_hits for r in bl))

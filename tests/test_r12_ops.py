@@ -6,7 +6,6 @@ uniform time-stretch) and pair-output soundness."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ai_iceberg_demo_spark.multimodal.artifacts import (
@@ -129,26 +128,6 @@ def test_v8h_registered_pairs_sound_and_complete_to_pigeonhole(spark):
         for b in ids[i + 1 :]:
             if _ham(sigs[a], sigs[b]) <= 3:
                 assert (a, b) in seen, f"pigeonhole pair ({a},{b}) missed"
-
-
-def test_t114_distinct_n_structure(spark):
-    """Fixture pins beside the hash oracle: higher-order n-grams are
-    strictly more distinct (the reason the metric is reported per n);
-    n-gram totals shrink as n grows (L−n+1 per doc); and the closed
-    31-type fixture vocabulary keeps distinct-1 types far below the
-    corpus total — the regime where distinct-1 actually measures
-    collapse rather than saturating at 1.0."""
-    rows = {
-        r.n: r
-        for r in all_registries().specs["t114_distinct_n"].fn(spark, SF_DIR).collect()
-    }
-    assert set(rows) == {1, 2, 3}
-    assert rows[1].distinct_ratio < rows[2].distinct_ratio < rows[3].distinct_ratio
-    assert rows[1].total_ngrams > rows[2].total_ngrams > rows[3].total_ngrams
-    assert rows[1].distinct_ngrams < 100
-    for r in rows.values():
-        assert 0.0 < r.distinct_ratio <= 1.0
-        assert 0.0 < r.mean_doc_distinct_ratio <= 1.0
 
 
 def test_v8h_no_python_seam_after_signature(spark):

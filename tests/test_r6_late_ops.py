@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
-
 from tests.conftest import SF_DIR
 
 

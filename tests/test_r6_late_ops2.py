@@ -6,7 +6,6 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-import pytest
 
 from tests.conftest import SF_DIR
 

@@ -3,8 +3,6 @@ chart, mutual kNN, corpus diff, kNN probe, rolling corr, masking)."""
 
 from __future__ import annotations
 
-import pytest
-
 from tests.conftest import SF_DIR
 
 

@@ -3,8 +3,6 @@ sequential testing, exact-n sampling, range-partitioner audit)."""
 
 from __future__ import annotations
 
-import pytest
-
 from tests.conftest import SF_DIR
 
 

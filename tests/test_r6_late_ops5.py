@@ -3,8 +3,6 @@ rules, encoding advisor, storage card)."""
 
 from __future__ import annotations
 
-import pytest
-
 from tests.conftest import SF_DIR
 
 

@@ -140,37 +140,6 @@ def test_x7_plans_arrow_eval_never_batch_eval(spark):
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_rouge2_matches_hand_reference_and_exercises_asymmetry(spark):
-    """t98 vs a hand-computed ROUGE-2 on one fixture pair: recall 1.0
-    (the candidate extends the reference, so every ref bigram is
-    covered), precision < 1 (the footer adds bigrams), and the clipped
-    count equals the reference's bigram total plus zero clipping slack."""
-    from ai_iceberg_demo_spark.functions.text import t98_rouge2_eval
-
-    rows = t98_rouge2_eval(spark, SF_DIR).collect()
-    assert rows
-    from collections import Counter
-
-    docs = {
-        r["doc_id"]: r["text"]
-        for r in load_table(spark, "documents", SF_DIR)
-        .filter(F.col("doc_id") % 10 == 0)
-        .collect()
-    }
-    for r in rows[:5]:
-        ref = docs[r["doc_id"]].split(" ")
-        cand = (docs[r["doc_id"]] + " near duplicate footer variant").split(" ")
-        bg = lambda ws: Counter(zip(ws, ws[1:]))
-        rc, cc = bg(ref), bg(cand)
-        clipped = sum(min(c, cc.get(g, 0)) for g, c in rc.items())
-        assert r["clipped_bigrams"] == clipped
-        assert r["rouge2_recall"] == round(clipped / sum(rc.values()), 6)
-        assert r["rouge2_precision"] == round(clipped / sum(cc.values()), 6)
-    # asymmetry exercised corpus-wide
-    assert all(r["rouge2_recall"] >= r["rouge2_precision"] for r in rows)
-    assert any(r["rouge2_precision"] < 1.0 for r in rows)
-
-
 def test_license_propagates_across_bin_spans(spark):
     """u46: a doc that straddles a bin boundary must bind BOTH bins —
     recompute the truth in Python from u9's packing and compare every

@@ -52,27 +52,6 @@ def test_d28b_audit_has_paths_and_sane_counts(spark):
     assert row["single_linkage_safe"] == (unrounded_rate < 0.2)
 
 
-def test_t105_bleu_factor_separation(spark):
-    """The two BLEU factors must separate by variant: truncated
-    candidates are reference prefixes (every candidate n-gram clips
-    fully -> p1..p4 = 1, BLEU = BP < 1); footer candidates are longer
-    (BP = 1, precision < 1 -> BLEU < 1)."""
-    rows = _q("t105_bleu_eval")(spark, SF_DIR).collect()
-    assert rows, "no pairs at this SF"
-    variants = {r["variant"] for r in rows}
-    assert variants == {"footer", "truncated"}
-    for r in rows:
-        if r["variant"] == "truncated":
-            assert (r["p1"], r["p2"], r["p3"], r["p4"]) == (1.0, 1.0, 1.0, 1.0), r
-            assert r["brevity_penalty"] < 1.0, r
-            assert r["bleu4"] == r["brevity_penalty"], r
-        else:
-            assert r["brevity_penalty"] == 1.0, r
-            assert r["p4"] < 1.0, r
-            assert r["bleu4"] < 1.0, r
-        assert 0.0 <= r["bleu4"] <= 1.0
-
-
 def test_d9b_kept_id_is_argmax_quality(spark):
     """Recompute quality independently and check each cluster's kept_id
     is the (quality DESC, doc_id ASC) argmax over its members."""
