@@ -1985,6 +1985,11 @@ def t69_chi2_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t70_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return js_divergence(load_table(spark, "documents", sf_dir))
+
+
+def js_divergence(docs: DataFrame) -> DataFrame:
+    """t70's source-pair rows over ``docs``."""
     # r12 optimization (guide §2.4/§3): the former shape probed the
     # (vocab × src-pairs) frame with TWO (source, term)-keyed left
     # joins against the distribution table, plus a per-source window
@@ -1996,9 +2001,6 @@ def t70_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join-free, nothing larger than vocab×sources ever shuffles.
     # p = n/tot is exact (integral doubles), identical to the former
     # window division.
-    from ai_iceberg_demo_spark.tables import persist_once
-
-    docs = load_table(spark, "documents", sf_dir)
     st = (
         docs.select("source", F.explode(F.split("text", " ")).alias("term"))
         .groupBy("source", "term")
@@ -3862,7 +3864,7 @@ def wer_scores(docs: DataFrame) -> DataFrame:
         .when(F.col("doc_id") % 30 == 10, subst)
         .otherwise(footer)
         .alias("ct"),
-    ).transform(persist_once)
+    )
 
     # r12 optimization (guide §2.3/§2.4): the former encode path
     # exploded every token (pos, tok), broadcast-joined the vocab, and
@@ -4107,10 +4109,9 @@ def _eval_card_oracle() -> str:
     "builds the 1-in-10 sample once (eval_sample, one doc_id-keyed "
     "exchange) and passes it to the builders the four registered "
     "queries wrap: t105 and t106 share one pair frame (eval_pairs), "
-    "and t98, t105 and t106 read the one exchange (AQE reuses it). "
-    "Each result is reduced to its (n_pairs, mean) pair in a 1-row "
-    "aggregate. t109 persists its own pair arrays, so its cached "
-    "relation runs the sample exchange once more.",
+    "and t98, t105, t106 and t109 read the one exchange (AQE reuses "
+    "it). Each result is reduced to its (n_pairs, mean) pair in a "
+    "1-row aggregate.",
     oracle=_eval_card_oracle(),
 )
 def pipeline_eval_card(spark: SparkSession, sf_dir: str) -> DataFrame:

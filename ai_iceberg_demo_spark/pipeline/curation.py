@@ -1164,30 +1164,32 @@ def _model_eval_oracle() -> str:
     "an auto-labeling pipeline publishes before its labels train "
     "anything. The oracle REUSES the three parts' exact oracle "
     "strings as subqueries so the composition can never drift from "
-    "its parts; the Spark side calls the registered operators and "
-    "unpivots. Cost = the parts' closed-form aggregates over one "
-    "event scan each — every family reduces map-side before "
-    "anything joins.",
+    "its parts. The Spark side builds the parts' one labeled-score "
+    "frame (score, pos) once and passes it to the three builders; "
+    "each family is a closed-form aggregate that reduces map-side "
+    "before anything joins.",
     oracle=_model_eval_oracle(),
 )
 def pipeline_model_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_iceberg_demo_spark.streaming.events import (
-        t47_classifier_eval,
-        t64_calibration_bins,
-        t65_roc_auc,
+        calibration_bins,
+        classifier_eval,
+        labeled_scores,
+        roc_auc,
     )
 
+    labeled = labeled_scores(load_table(spark, "events", sf_dir))
     t47 = long_metrics(
-        t47_classifier_eval(spark, sf_dir),
+        classifier_eval(labeled),
         "threshold",
         ["precision", "recall", "f1", "accuracy"],
     )
     t64 = long_metrics(
-        t64_calibration_bins(spark, sf_dir).filter(F.col("bin") == 0),
+        calibration_bins(labeled).filter(F.col("bin") == 0),
         "calibration",
         ["ece", "brier"],
     )
-    t65 = long_metrics(t65_roc_auc(spark, sf_dir), "ranking", ["auc", "gini"])
+    t65 = long_metrics(roc_auc(labeled), "ranking", ["auc", "gini"])
     return t47.unionByName(t64).unionByName(t65).orderBy("family", "metric")
 
 
@@ -1250,32 +1252,34 @@ def _experiment_oracle() -> str:
     "(family, metric, value), the card an experiment review reads "
     "top to bottom. Oracle reuses the three parts' exact SQL as "
     "subqueries (pipeline_model_eval's discipline); the Spark side "
-    "calls the registered operators and unpivots. Each family is a "
+    "loads events once, passes it to the three parts' builders and "
+    "unpivots. Each family is a "
     "closed-form aggregate — event volume reduces map-side before "
     "any union.",
     oracle=_experiment_oracle(),
 )
 def pipeline_experiment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_iceberg_demo_spark.streaming.events import (
-        t27_ab_test,
-        t74_diff_in_diff,
-        t80_power_analysis,
+        ab_test,
+        diff_in_diff,
+        power_analysis,
     )
 
+    ev = load_table(spark, "events", sf_dir)
     design = long_metrics(
-        t80_power_analysis(spark, sf_dir).filter(
+        power_analysis(ev).filter(
             F.col("event_type") == "purchase"
         ),
         "design",
         ["n_per_arm_current", "n_per_arm_required", "adequately_powered"],
     )
     readout = long_metrics(
-        t27_ab_test(spark, sf_dir),
+        ab_test(ev),
         "readout",
         ["rate_a", "rate_b", "z_score", "significant"],
     )
     causal = long_metrics(
-        t74_diff_in_diff(spark, sf_dir),
+        diff_in_diff(ev),
         "causal",
         ["did_estimate", "did_se", "planted_effect", "recovered"],
     )
@@ -1328,24 +1332,29 @@ def _forecast_oracle() -> str:
     "the single interval width) and model quality (t79's MAE vs the "
     "persistence baseline with the beats-naive verdict and both "
     "coefficients). Oracle reuses the two parts' exact SQL as "
-    "subqueries; both parts already share t75's feature frame, so "
-    "the card's numbers provably describe the SAME features the "
-    "forecaster trained on. Day-table aggregates only.",
+    "subqueries. The Spark side builds t75's feature frame and its "
+    "60/40 day split once (one eager count) and passes the split to "
+    "both parts, so the card's numbers provably describe the SAME "
+    "features and days the forecaster trained on. Day-table "
+    "aggregates only.",
     oracle=_forecast_oracle(),
 )
 def pipeline_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_iceberg_demo_spark.streaming.events import (
-        t78_conformal_forecast,
-        t79_ols_forecast,
+        conformal_forecast,
+        daily_feature_frame,
+        forecast_split,
+        ols_forecast,
     )
 
-    t78 = t78_conformal_forecast(spark, sf_dir)
+    split, n_fit = forecast_split(daily_feature_frame(spark, sf_dir))
+    t78 = conformal_forecast(split, n_fit)
     unc = t78.agg(
         F.first("realized_coverage").alias("realized_coverage"),
         F.count("*").cast("double").alias("n_test_days"),
         F.first(F.round(F.col("hi") - F.col("lo"), 4)).alias("interval_width"),
     )
-    t79 = t79_ols_forecast(spark, sf_dir).select(
+    t79 = ols_forecast(split).select(
         "mae_ols",
         "mae_naive",
         F.when(F.col("beats_naive"), 1.0).otherwise(0.0).alias("beats_naive"),

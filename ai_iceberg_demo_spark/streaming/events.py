@@ -31,6 +31,10 @@ from ai_iceberg_demo_spark.tables import load_table, long_metrics, persist_once
 
 REGISTRY = Registry()
 
+#: the weak "active intent" label the eval queries score against, as
+#: SQL text (1 for click/purchase/signup, else 0); callers cast it
+_INTENT = "CASE WHEN event_type IN ('click', 'purchase', 'signup') THEN 1 ELSE 0 END"
+
 
 # ---------------------------------------------------------------------------
 # Transform library (batch == streaming bodies)
@@ -862,7 +866,11 @@ def t13_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t14_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
+    return funnel(load_table(spark, "events", sf_dir))
+
+
+def funnel(ev: DataFrame) -> DataFrame:
+    """t14's (user_id, view_ts, click_ts, purchase_ts, stage) over ``ev``."""
     arr = F.array_sort(F.collect_list(F.struct("ts", "event_type")))
     per_user = ev.groupBy("user_id").agg(arr.alias("evs"))
 
@@ -1093,7 +1101,7 @@ def t26_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stage-3 users): per first-touch hour cohort, how many users "
     "converted and the min/median/max seconds from first view to "
     "first purchase — the latency lens on the funnel. Built on t14's "
-    "one-shuffle funnel output; the stats aggregate its user-sized "
+    "one-shuffle funnel builder; the stats aggregate its user-sized "
     "result, so the added cost is independent of event volume.",
     oracle="""
         WITH s1 AS (
@@ -1123,12 +1131,12 @@ def t26_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t29_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    funnel = t14_funnel(spark, sf_dir).filter(F.col("stage") == 3)
+    done = funnel(load_table(spark, "events", sf_dir)).filter(F.col("stage") == 3)
     secs = (
         F.unix_micros(F.col("purchase_ts")) - F.unix_micros(F.col("view_ts"))
     ) / 1_000_000.0
     return (
-        funnel.select(
+        done.select(
             F.date_trunc("hour", "view_ts").alias("cohort_hr"), secs.alias("secs")
         )
         .groupBy("cohort_hr")
@@ -1194,7 +1202,11 @@ def t29_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t27_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
+    return ab_test(load_table(spark, "events", sf_dir))
+
+
+def ab_test(ev: DataFrame) -> DataFrame:
+    """t27's one-row readout over ``ev``."""
     per_unit = ev.groupBy("user_id", F.col("ts").cast("date").alias("d")).agg(
         F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("conv")
     ).select((F.col("user_id") % 2).alias("variant"), "conv")
@@ -1449,8 +1461,7 @@ def t34_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t33_rater_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).filter(F.col("value").isNotNull())
     a = F.when(F.col("value") >= 5, 1).otherwise(0)
-    b = F.when(F.col("event_type").isin("click", "purchase", "signup"), 1).otherwise(0)
-    c = ev.select(a.alias("a"), b.alias("b")).agg(
+    c = ev.select(a.alias("a"), F.expr(_INTENT).alias("b")).agg(
         F.count("*").cast("double").alias("n"),
         F.sum(F.when((F.col("a") == 1) & (F.col("b") == 1), 1).otherwise(0))
         .cast("double")
@@ -2194,24 +2205,24 @@ def t45_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t47_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir).filter(F.col("value").isNotNull())
-    pred = F.when(F.col("value") >= 5, 1).otherwise(0)
-    actual = F.when(
-        F.col("event_type").isin("click", "purchase", "signup"), 1
-    ).otherwise(0)
-    c = ev.select(pred.alias("p"), actual.alias("a")).agg(
-        F.sum(F.when((F.col("p") == 1) & (F.col("a") == 1), 1).otherwise(0))
-        .cast("bigint")
-        .alias("tp"),
-        F.sum(F.when((F.col("p") == 1) & (F.col("a") == 0), 1).otherwise(0))
-        .cast("bigint")
-        .alias("fp"),
-        F.sum(F.when((F.col("p") == 0) & (F.col("a") == 1), 1).otherwise(0))
-        .cast("bigint")
-        .alias("fn"),
-        F.sum(F.when((F.col("p") == 0) & (F.col("a") == 0), 1).otherwise(0))
-        .cast("bigint")
-        .alias("tn"),
+    return classifier_eval(labeled_scores(load_table(spark, "events", sf_dir)))
+
+
+def labeled_scores(ev: DataFrame) -> DataFrame:
+    """(score, pos): the value score and its intent label over the
+    events that carry a value — the one labeled frame t47, t64, t65
+    and pipeline_model_eval evaluate."""
+    return ev.where("value IS NOT NULL").selectExpr("value AS score", f"{_INTENT} AS pos")
+
+
+def classifier_eval(labeled: DataFrame) -> DataFrame:
+    """t47's row over labeled_scores' (score, pos): rater A predicts
+    positive at score ≥ 5."""
+    c = labeled.selectExpr(
+        "CAST(sum(CASE WHEN score >= 5 AND pos = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp",
+        "CAST(sum(CASE WHEN score >= 5 AND pos = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp",
+        "CAST(sum(CASE WHEN score < 5 AND pos = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn",
+        "CAST(sum(CASE WHEN score < 5 AND pos = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn",
     )
     tp, fp, fn, tn = (F.col(x).cast("double") for x in ("tp", "fp", "fn", "tn"))
     return c.select(
@@ -2760,10 +2771,11 @@ _T64_BINS = 10
     "p = v/(v+50) (monotone, deterministic on both sides), bucketed "
     f"into {_T64_BINS} equal-width bins; per bin the mean predicted "
     "probability vs the observed positive rate plus the bin's |gap| "
-    "ECE contribution, with the overall ECE and Brier score broadcast "
-    "onto every row. One map-side bin assignment + one "
-    f"{_T64_BINS}-key partial-agg shuffle — event volume reduces to "
-    f"{_T64_BINS} rows before anything ordered happens. THE chart "
+    "ECE contribution, with the overall ECE and Brier score as "
+    "windows over the bin table on every row. One map-side bin "
+    f"assignment + one {_T64_BINS}-key partial-agg shuffle — event "
+    f"volume reduces to {_T64_BINS} rows before anything ordered "
+    "happens. THE chart "
     "read before trusting auto-labels as training signal.",
     oracle=f"""
         WITH scored AS (
@@ -2798,12 +2810,14 @@ _T64_BINS = 10
     """,
 )
 def t64_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir).filter(F.col("value").isNotNull())
-    p = F.col("value") / (F.col("value") + 50.0)
-    y = F.when(
-        F.col("event_type").isin("click", "purchase", "signup"), 1.0
-    ).otherwise(0.0)
-    binned = ev.select(
+    return calibration_bins(labeled_scores(load_table(spark, "events", sf_dir)))
+
+
+def calibration_bins(labeled: DataFrame) -> DataFrame:
+    """t64's reliability rows over labeled_scores' (score, pos)."""
+    p = F.col("score") / (F.col("score") + 50.0)
+    y = F.col("pos").cast("double")
+    binned = labeled.select(
         F.least(F.lit(_T64_BINS - 1), F.floor(p * _T64_BINS).cast("int")).alias(
             "bin"
         ),
@@ -2816,26 +2830,19 @@ def t64_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("y") / F.count("*")).alias("pos_rate"),
         F.sum((F.col("p") - F.col("y")) * (F.col("p") - F.col("y"))).alias("_se"),
     )
-    overall = per_bin.agg(
-        (
-            F.sum(F.col("n") * F.abs(F.col("mean_pred") - F.col("pos_rate")))
-            / F.sum("n")
-        ).alias("ece"),
-        (F.sum("_se") / F.sum("n")).alias("brier"),
-    )
-    return (
-        per_bin.crossJoin(F.broadcast(overall))
-        .select(
-            "bin",
-            "n",
-            F.round("mean_pred", 6).alias("mean_pred"),
-            F.round("pos_rate", 6).alias("pos_rate"),
-            F.round(F.col("mean_pred") - F.col("pos_rate"), 6).alias("gap"),
-            F.round("ece", 6).alias("ece"),
-            F.round("brier", 6).alias("brier"),
-        )
-        .orderBy("bin")
-    )
+    # the overall rates are windows over the ≤ 10-row bin table, so the
+    # labeled rows are read once (a cross join with an aggregate of
+    # per_bin would read them twice)
+    w_all = "OVER ()"
+    return per_bin.selectExpr(
+        "bin",
+        "n",
+        "round(mean_pred, 6) AS mean_pred",
+        "round(pos_rate, 6) AS pos_rate",
+        "round(mean_pred - pos_rate, 6) AS gap",
+        f"round(sum(n * abs(mean_pred - pos_rate)) {w_all} / sum(n) {w_all}, 6) AS ece",
+        f"round(sum(_se) {w_all} / sum(n) {w_all}, 6) AS brier",
+    ).orderBy("bin")
 
 
 # ---------------------------------------------------------------------------
@@ -2894,19 +2901,16 @@ _T65_SCORE_SHARD = 50.0  # score-range width per rank shard
     """,
 )
 def t65_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return roc_auc(labeled_scores(load_table(spark, "events", sf_dir)))
+
+
+def roc_auc(labeled: DataFrame) -> DataFrame:
+    """t65's row over labeled_scores' (score, pos)."""
     from pyspark.sql import Window as W
 
-    ev = load_table(spark, "events", sf_dir).filter(F.col("value").isNotNull())
-    pos = F.when(
-        F.col("event_type").isin("click", "purchase", "signup"), 1
-    ).otherwise(0)
-    per_score = (
-        ev.select(F.col("value").alias("score"), pos.alias("pos"))
-        .groupBy("score")
-        .agg(
-            F.count("*").cast("double").alias("n"),
-            F.sum("pos").cast("double").alias("p"),
-        )
+    per_score = labeled.groupBy("score").agg(
+        F.count("*").cast("double").alias("n"),
+        F.sum("pos").cast("double").alias("p"),
     )
     # two-phase rows-below: bounded score-range shards, offsets
     # broadcast, per-row window bucket-partitioned (never global)
@@ -3075,7 +3079,12 @@ _T74_LIFT = 0.2  # planted multiplicative effect on treated-post rows
     """,
 )
 def t74_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir).filter(F.col("value").isNotNull())
+    return diff_in_diff(load_table(spark, "events", sf_dir))
+
+
+def diff_in_diff(events: DataFrame) -> DataFrame:
+    """t74's one-row DiD readout over ``events``."""
+    ev = events.filter(F.col("value").isNotNull())
     treated = F.col("user_id") % 2 == 1
     post = F.col("ts").cast("date") >= F.lit(_T74_POST)
     y = F.when(treated & post, F.col("value") * (1.0 + _T74_LIFT)).otherwise(
@@ -3249,49 +3258,51 @@ _T78_CALIB_FRAC = 0.6
     """,
 )
 def t78_conformal_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return conformal_forecast(*forecast_split(daily_feature_frame(spark, sf_dir)))
+
+
+def forecast_split(feats: DataFrame) -> tuple[DataFrame, int]:
+    """(split, n_fit): the feature days with ma7 defined as (day, y,
+    lag1, ma7, is_fit), where is_fit marks the first ⌈60%⌉ by date —
+    t78's calibration days and t79's training days — and n_fit counts
+    them. ma7 is defined only from the 8th day on and lag1 from the
+    2nd, so these are also the days t79's oracle keeps. One eager
+    count; it also fills the persisted day rows every reader shares."""
     from pyspark.sql import Window as W
 
-    feats = daily_feature_frame(spark, sf_dir).filter(F.col("ma7").isNotNull())
-    w_day = W.orderBy("day")
-    ranked = feats.select(
-        "day", "y", "ma7", F.row_number().over(w_day).alias("rn")
+    ranked = (
+        feats.filter(F.col("ma7").isNotNull())
+        .select("day", "y", "lag1", "ma7", F.row_number().over(W.orderBy("day")).alias("rn"))
+        .transform(persist_once)
     )
-    n_feat = ranked.count()
-    n_calib_bound = -(-_T78_CALIB_FRAC * n_feat // 1)  # ceil
-    split = ranked.withColumn("is_calib", F.col("rn") <= F.lit(n_calib_bound))
-    calib = split.filter("is_calib").select(
-        F.abs(F.col("y") - F.col("ma7")).alias("resid")
-    )
-    nc = calib.count()
-    k = min(int(-(-_T78_LEVEL * (nc + 1) // 1)), nc)
-    w_r = W.orderBy("resid")
+    n_fit = int(-(-_T78_CALIB_FRAC * ranked.count() // 1))  # ceil
+    return ranked.select("day", "y", "lag1", "ma7", (F.col("rn") <= n_fit).alias("is_fit")), n_fit
+
+
+def conformal_forecast(split: DataFrame, n_fit: int) -> DataFrame:
+    """t78's test-day intervals over forecast_split's output."""
+    k = min(int(-(-_T78_LEVEL * (n_fit + 1) // 1)), n_fit)
     q = (
-        calib.withColumn("rr", F.row_number().over(w_r))
-        .filter(F.col("rr") == k)
-        .select(F.col("resid").alias("qhat"))
+        split.where("is_fit")
+        .selectExpr("abs(y - ma7) AS resid")
+        .withColumn("rr", F.expr("row_number() OVER (ORDER BY resid)"))
+        .where(f"rr = {k}")
+        .selectExpr("resid AS qhat")
     )
-    test = (
-        split.filter(~F.col("is_calib"))
+    return (
+        split.where("NOT is_fit")
         .crossJoin(F.broadcast(q))
-        .select(
-            "day",
-            "y",
-            F.col("ma7").alias("yhat"),
-            F.round(F.col("ma7") - F.col("qhat"), 4).alias("lo"),
-            F.round(F.col("ma7") + F.col("qhat"), 4).alias("hi"),
-            (
-                (F.col("y") >= F.col("ma7") - F.col("qhat"))
-                & (F.col("y") <= F.col("ma7") + F.col("qhat"))
-            ).alias("covered"),
+        .selectExpr(
+            "day", "y", "ma7 AS yhat",
+            "round(ma7 - qhat, 4) AS lo", "round(ma7 + qhat, 4) AS hi",
+            "y >= ma7 - qhat AND y <= ma7 + qhat AS covered",
         )
+        .selectExpr(
+            "*",
+            "round(avg(CASE WHEN covered THEN 1.0D ELSE 0.0D END) OVER (), 4) AS realized_coverage",
+        )
+        .orderBy("day")
     )
-    w_all = W.partitionBy()
-    return test.select(
-        "*",
-        F.round(
-            F.avg(F.when(F.col("covered"), 1.0).otherwise(0.0)).over(w_all), 4
-        ).alias("realized_coverage"),
-    ).orderBy("day")
 
 
 # ---------------------------------------------------------------------------
@@ -3359,72 +3370,33 @@ def t78_conformal_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t79_ols_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
+    split, _ = forecast_split(daily_feature_frame(spark, sf_dir))
+    return ols_forecast(split)
 
-    feats = daily_feature_frame(spark, sf_dir).filter(
-        F.col("ma7").isNotNull() & F.col("lag1").isNotNull()
+
+def ols_forecast(split: DataFrame) -> DataFrame:
+    """t79's fit-and-evaluate row over forecast_split's frame: trains on
+    the is_fit days, scores the rest."""
+    fit = split.where("is_fit")
+    means = fit.selectExpr("avg(y) AS my", "avg(lag1) AS m1", "avg(ma7) AS m2")
+    c1, c2, cy = "(lag1 - m1)", "(ma7 - m2)", "(y - my)"
+    sums = fit.crossJoin(F.broadcast(means)).selectExpr(
+        f"sum({c1} * {c1}) AS s11", f"sum({c2} * {c2}) AS s22", f"sum({c1} * {c2}) AS s12",
+        f"sum({c1} * {cy}) AS s1y", f"sum({c2} * {cy}) AS s2y",
+        "first(my) AS my", "first(m1) AS m1", "first(m2) AS m2",
     )
-    w_day = W.orderBy("day")
-    ranked = feats.select(
-        "day", "y", "lag1", "ma7", F.row_number().over(w_day).alias("rn")
+    det = "(s11 * s22 - s12 * s12)"
+    named = sums.selectExpr(
+        f"(s22 * s1y - s12 * s2y) / {det} AS b1", f"(s11 * s2y - s12 * s1y) / {det} AS b2",
+        "my", "m1", "m2",
+    ).selectExpr("b1", "b2", "my - b1 * m1 - b2 * m2 AS a")
+    ev = split.where("NOT is_fit").crossJoin(F.broadcast(named)).selectExpr(
+        "avg(abs(y - (a + b1 * lag1 + b2 * ma7))) AS mae_ols", "avg(abs(y - lag1)) AS mae_naive"
     )
-    n_feat = ranked.count()
-    bound = -(-_T78_CALIB_FRAC * n_feat // 1)
-    split = ranked.withColumn("is_train", F.col("rn") <= F.lit(bound)).transform(persist_once)
-    means = split.filter("is_train").agg(
-        F.avg("y").alias("my"), F.avg("lag1").alias("m1"), F.avg("ma7").alias("m2")
-    )
-    c1 = F.col("lag1") - F.col("m1")
-    c2 = F.col("ma7") - F.col("m2")
-    cy = F.col("y") - F.col("my")
-    sums = (
-        split.filter("is_train")
-        .crossJoin(F.broadcast(means))
-        .agg(
-            F.sum(c1 * c1).alias("s11"),
-            F.sum(c2 * c2).alias("s22"),
-            F.sum(c1 * c2).alias("s12"),
-            F.sum(c1 * cy).alias("s1y"),
-            F.sum(c2 * cy).alias("s2y"),
-            F.first("my").alias("my"),
-            F.first("m1").alias("m1"),
-            F.first("m2").alias("m2"),
-        )
-    )
-    det = F.col("s11") * F.col("s22") - F.col("s12") * F.col("s12")
-    named = sums.select(
-        ((F.col("s22") * F.col("s1y") - F.col("s12") * F.col("s2y")) / det).alias(
-            "b1"
-        ),
-        ((F.col("s11") * F.col("s2y") - F.col("s12") * F.col("s1y")) / det).alias(
-            "b2"
-        ),
-        "my",
-        "m1",
-        "m2",
-    ).select(
-        "b1",
-        "b2",
-        (F.col("my") - F.col("b1") * F.col("m1") - F.col("b2") * F.col("m2")).alias(
-            "a"
-        ),
-    )
-    pred = F.col("a") + F.col("b1") * F.col("lag1") + F.col("b2") * F.col("ma7")
-    ev = (
-        split.filter(~F.col("is_train"))
-        .crossJoin(F.broadcast(named))
-        .agg(
-            F.avg(F.abs(F.col("y") - pred)).alias("mae_ols"),
-            F.avg(F.abs(F.col("y") - F.col("lag1"))).alias("mae_naive"),
-        )
-    )
-    return named.crossJoin(F.broadcast(ev)).select(
-        F.round("b1", 6).alias("beta_lag1"),
-        F.round("b2", 6).alias("beta_ma7"),
-        F.round("a", 4).alias("intercept"),
-        F.round("mae_ols", 4).alias("mae_ols"),
-        F.round("mae_naive", 4).alias("mae_naive"),
-        (F.col("mae_ols") < F.col("mae_naive")).alias("beats_naive"),
+    return named.crossJoin(F.broadcast(ev)).selectExpr(
+        "round(b1, 6) AS beta_lag1", "round(b2, 6) AS beta_ma7", "round(a, 4) AS intercept",
+        "round(mae_ols, 4) AS mae_ols", "round(mae_naive, 4) AS mae_naive",
+        "mae_ols < mae_naive AS beats_naive",
     )
 
 
@@ -3481,7 +3453,12 @@ _T80_REL_MDE = 0.10  # design lift: +10% relative
     """,
 )
 def t80_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir).filter(F.col("value").isNotNull())
+    return power_analysis(load_table(spark, "events", sf_dir))
+
+
+def power_analysis(events: DataFrame) -> DataFrame:
+    """t80's per-type design table over ``events``."""
+    ev = events.filter(F.col("value").isNotNull())
     rates = ev.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_events"),
         F.avg(F.when(F.col("value") >= 5, 1.0).otherwise(0.0)).alias("p0"),
@@ -3594,6 +3571,28 @@ _T84_ALERT = 0.2  # industry convention: <0.1 stable, 0.1-0.2 watch, >0.2 act
     """,
 )
 def t84_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return psi_drift(drift_sides(load_table(spark, "events", sf_dir)))
+
+
+def drift_sides(ev: DataFrame) -> DataFrame:
+    """(event_type, value, r): the one side-tagged scan t84, t113 and
+    pipeline_drift_card read. r = 1 marks the reference period (day <
+    split), r = 0 the comparison period, whose error values carry the
+    planted 2x shift. Rows without a value or a ts are dropped: a null
+    ts would give a null r, and a count(*) − Σr would then count the
+    row as comparison-side where both oracles exclude it from both
+    periods (the fixture's ts is never null)."""
+    day = "CAST(ts AS DATE)"
+    return ev.where("value IS NOT NULL AND ts IS NOT NULL").selectExpr(
+        "event_type",
+        f"CASE WHEN {day} >= DATE'{_T84_SPLIT}' AND event_type = 'error' "
+        "THEN value * 2.0 ELSE value END AS value",
+        f"CAST({day} < DATE'{_T84_SPLIT}' AS INT) AS r",
+    )
+
+
+def psi_drift(sides: DataFrame) -> DataFrame:
+    """t84's per-type PSI rows over drift_sides' frame."""
     # r12 optimization (guide §2.4, the t98 side-tag discipline): the
     # former shape binned ref and cmp as SEPARATE scans and built two
     # (type, bin) distributions (groupBy + per-type window each), then
@@ -3604,67 +3603,32 @@ def t84_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same row (join-free terms) and the per-type totals are
     # windows over the tiny ≤ types×bins frame. 2 events passes total
     # (edge quantiles, binning) — the floor of any frozen-bin PSI.
-    from pyspark.sql import Window as W
-
-    # ts guard (r12 ADVICE): the side tag r = (day < split) is null for
-    # null ts, and cn = count(*) − Σr would silently count such rows as
-    # comparison-side where the old two-filter shape excluded them from
-    # BOTH periods. The fixture's ts is never null (hashes unchanged),
-    # but the guard keeps the one-scan rewrite faithful if it ever is.
-    ev = load_table(spark, "events", sf_dir).filter(
-        F.col("value").isNotNull() & F.col("ts").isNotNull()
-    )
-    day = F.col("ts").cast("date")
-    cuts = [float(i) / _T84_BINS for i in range(1, _T84_BINS)]
-    edges = ev.filter(day < _T84_SPLIT).groupBy("event_type").agg(
-        F.percentile("value", F.array(*[F.lit(c) for c in cuts])).alias("cuts")
-    )
-    tagged = ev.select(
-        "event_type",
-        F.when(
-            (day >= _T84_SPLIT) & (F.col("event_type") == "error"),
-            F.col("value") * 2.0,
-        )
-        .otherwise(F.col("value"))
-        .alias("value"),
-        (day < _T84_SPLIT).cast("int").alias("r"),
+    cuts = ", ".join(f"{i / _T84_BINS}D" for i in range(1, _T84_BINS))
+    # reference values are unshifted, so the edges come off the r = 1 rows
+    edges = sides.where("r = 1").groupBy("event_type").agg(
+        F.expr(f"percentile(value, array({cuts})) AS cuts")
     )
     counts = (
-        tagged.join(F.broadcast(edges), "event_type")
-        .select(
-            "event_type",
-            F.size(F.filter(F.col("cuts"), lambda c: F.col("value") > c)).alias(
-                "bin"
-            ),
-            "r",
-        )
+        sides.join(F.broadcast(edges), "event_type")
+        .selectExpr("event_type", "size(filter(cuts, c -> value > c)) AS bin", "r")
         .groupBy("event_type", "bin")
-        .agg(
-            F.sum("r").alias("rn"),
-            (F.count("*") - F.sum("r")).alias("cn"),
-        )
+        .agg(F.sum("r").alias("rn"), (F.count("*") - F.sum("r")).alias("cn"))
     )
-    w_t = W.partitionBy("event_type")
-    dist = counts.select(
-        "event_type",
-        "rn",
-        (F.col("rn") / F.sum("rn").over(w_t)).alias("p"),
-        (F.col("cn") / F.sum("cn").over(w_t)).alias("q0"),
-    ).filter(F.col("rn") > 0)  # bins absent from ref never held an rp row
-    q = F.greatest(F.col("q0"), F.lit(1e-4))
-    terms = dist.select(
-        "event_type", ((F.col("p") - q) * F.log(F.col("p") / q)).alias("term")
+    w_t = "OVER (PARTITION BY event_type)"
+    q = "greatest(q0, 0.0001D)"
+    terms = (
+        counts.selectExpr("event_type", "rn", f"rn / sum(rn) {w_t} AS p", f"cn / sum(cn) {w_t} AS q0")
+        .where("rn > 0")  # bins absent from ref never held an rp row
+        .selectExpr("event_type", f"(p - {q}) * ln(p / {q}) AS term")
     )
     return (
         terms.groupBy("event_type")
         .agg(F.round(F.sum("term"), 6).alias("psi"))
-        .select(
+        .selectExpr(
             "event_type",
             "psi",
-            F.when(F.col("psi") > _T84_ALERT, "act")
-            .when(F.col("psi") > 0.1, "watch")
-            .otherwise("stable")
-            .alias("verdict"),
+            f"CASE WHEN psi > {_T84_ALERT} THEN 'act' WHEN psi > 0.1 THEN 'watch'"
+            " ELSE 'stable' END AS verdict",
         )
         .orderBy("event_type")
     )
@@ -4023,9 +3987,7 @@ def t92_lift_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     ev = load_table(spark, "events", sf_dir).filter(F.col("value").isNotNull())
-    pos = F.when(
-        F.col("event_type").isin("click", "purchase", "signup"), 1.0
-    ).otherwise(0.0)
+    pos = F.expr(f"CAST({_INTENT} AS DOUBLE)")
     labeled = ev.select(
         (F.col("value") + 1000.0 * pos).alias("score"), pos.alias("pos")
     )
@@ -4380,56 +4342,29 @@ _KS_BUCKET = 1.0  # value units per ECDF bucket (range-bounded, not corpus)
     """,
 )
 def t113_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
+    return ks_test(drift_sides(load_table(spark, "events", sf_dir)))
 
-    ev = load_table(spark, "events", sf_dir).filter(F.col("value").isNotNull())
-    split = F.lit(_T84_SPLIT).cast("date")
-    # r12 (guide §6.2): the former ref/cmp UNION of two filters over the
-    # same table planned as TWO full events scans; every row belongs to
-    # exactly one side, so ONE scan with a side indicator is equivalent
-    is_ref = (F.col("ts").cast("date") < split).cast("int")
-    tagged = ev.select(
-        "event_type",
-        F.when(
-            (F.col("ts").cast("date") >= split) & (F.col("event_type") == "error"),
-            F.col("value") * 2.0,
-        )
-        .otherwise(F.col("value"))
-        .alias("value"),
-        is_ref.alias("r"),
-        (1 - is_ref).alias("c"),
-    )
+
+def ks_test(sides: DataFrame) -> DataFrame:
+    """t113's per-type KS rows over drift_sides' frame."""
     pv = (
-        tagged.groupBy("event_type", "value")
-        .agg(
-            F.sum("r").cast("bigint").alias("cr"),
-            F.sum("c").cast("bigint").alias("cc"),
-        )
-        .withColumn("bucket", F.floor(F.col("value") / _KS_BUCKET))
+        sides.groupBy("event_type", "value")
+        .agg(F.expr("CAST(sum(r) AS BIGINT) AS cr"), F.expr("CAST(sum(1 - r) AS BIGINT) AS cc"))
+        .withColumn("bucket", F.expr(f"floor(value / {_KS_BUCKET}D)"))
         .transform(persist_once)
     )
     # phase 1: within-bucket cumulative counts (parallel windows)
     w_in = (
-        W.partitionBy("event_type", "bucket")
-        .orderBy("value")
-        .rowsBetween(W.unboundedPreceding, 0)
+        "OVER (PARTITION BY event_type, bucket ORDER BY value"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
-    within = pv.select(
-        "event_type",
-        "value",
-        "bucket",
-        F.sum("cr").over(w_in).alias("ar_in"),
-        F.sum("cc").over(w_in).alias("ac_in"),
+    within = pv.selectExpr(
+        "event_type", "value", "bucket", f"sum(cr) {w_in} AS ar_in", f"sum(cc) {w_in} AS ac_in"
     )
     # phase 2: bucket offsets — the bucket table is value-RANGE-sized
     # (domain-bounded), never corpus-sized; its window is per type
     btot = pv.groupBy("event_type", "bucket").agg(
         F.sum("cr").alias("tr"), F.sum("cc").alias("tc")
-    )
-    w_off = (
-        W.partitionBy("event_type")
-        .orderBy("bucket")
-        .rowsBetween(W.unboundedPreceding, -1)
     )
     # r13 (guide §2.4): the per-type totals nr/nc share the offsets
     # window's partition+order spec (only the frame differs —
@@ -4439,49 +4374,33 @@ def t113_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n⋈d assembly join are gone: Σ tr per type ≡ Σ cr (integer sums,
     # order-free), and nr/nc ride the broadcast rows into the
     # d-aggregation as per-type constants (max of a constant).
-    w_tot = W.partitionBy("event_type").orderBy("bucket").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    offs = btot.select(
+    w_off = "OVER (PARTITION BY event_type ORDER BY bucket ROWS BETWEEN UNBOUNDED PRECEDING AND {})"
+    offs = btot.selectExpr(
         "event_type",
         "bucket",
-        F.coalesce(F.sum("tr").over(w_off), F.lit(0)).alias("ar_off"),
-        F.coalesce(F.sum("tc").over(w_off), F.lit(0)).alias("ac_off"),
-        F.sum("tr").over(w_tot).cast("bigint").alias("nr"),
-        F.sum("tc").over(w_tot).cast("bigint").alias("nc"),
-    )
-    cum = within.join(F.broadcast(offs), ["event_type", "bucket"]).select(
-        "event_type",
-        "value",
-        (F.col("ar_off") + F.col("ar_in")).alias("ar"),
-        (F.col("ac_off") + F.col("ac_in")).alias("ac"),
-        "nr",
-        "nc",
+        f"coalesce(sum(tr) {w_off.format('1 PRECEDING')}, 0) AS ar_off",
+        f"coalesce(sum(tc) {w_off.format('1 PRECEDING')}, 0) AS ac_off",
+        f"CAST(sum(tr) {w_off.format('UNBOUNDED FOLLOWING')} AS BIGINT) AS nr",
+        f"CAST(sum(tc) {w_off.format('UNBOUNDED FOLLOWING')} AS BIGINT) AS nc",
     )
     d = (
-        cum.groupBy("event_type")
+        within.join(F.broadcast(offs), ["event_type", "bucket"])
+        .selectExpr("ar_off + ar_in AS ar", "ac_off + ac_in AS ac", "event_type", "nr", "nc")
+        .groupBy("event_type")
         .agg(
-            F.max(
-                F.abs(
-                    F.col("ar").cast("double") / F.col("nr")
-                    - F.col("ac").cast("double") / F.col("nc")
-                )
-            ).alias("d"),
+            F.expr("max(abs(CAST(ar AS DOUBLE) / nr - CAST(ac AS DOUBLE) / nc)) AS d"),
             F.max("nr").alias("nr"),
             F.max("nc").alias("nc"),
         )
     )
-    crit = F.lit(_KS_CRIT) * F.sqrt(
-        (F.col("nr") + F.col("nc")).cast("double")
-        / (F.col("nr").cast("double") * F.col("nc"))
-    )
-    return d.select(
+    crit = f"{_KS_CRIT}D * sqrt(CAST(nr + nc AS DOUBLE) / (CAST(nr AS DOUBLE) * nc))"
+    return d.selectExpr(
         "event_type",
-        F.col("nr").alias("n_ref"),
-        F.col("nc").alias("n_cmp"),
-        F.round(F.col("d") + 0.0, 6).alias("ks_d"),
-        F.round(crit, 6).alias("ks_crit"),
-        (F.col("d") > crit).alias("drifted"),
+        "nr AS n_ref",
+        "nc AS n_cmp",
+        "round(d + 0.0D, 6) AS ks_d",
+        f"round({crit}, 6) AS ks_crit",
+        f"d > {crit} AS drifted",
     )
 
 
@@ -4554,38 +4473,37 @@ def _drift_card_oracle() -> str:
     "(PSI's frozen bins smear shape changes KS catches; KS is "
     "univariate where v16 sees the embedding space; JSD compares "
     "SOURCES where the others compare TIME). Oracle composes the "
-    "four parts' registered SQL verbatim; the Spark side calls the "
-    "registered operators and reduces each to its 1-row summary — "
-    "every part is already linear, so the card costs four summary "
+    "four parts' registered SQL verbatim; the Spark side builds t84's "
+    "and t113's side-tagged events frame once (drift_sides), hands it "
+    "to both builders, runs t70 and v16 through their documents and "
+    "embeddings builders, and reduces each part to its 1-row summary "
+    "— every part is already linear, so the card costs four summary "
     "aggs.",
     oracle=_drift_card_oracle(),
 )
 def pipeline_drift_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ai_iceberg_demo_spark.functions.text import t70_js_divergence
-    from ai_iceberg_demo_spark.vector.clustering import v16_embedding_drift
+    from ai_iceberg_demo_spark.functions.text import js_divergence
+    from ai_iceberg_demo_spark.vector.clustering import embedding_drift
 
-    psi = t84_psi_drift(spark, sf_dir).agg(
-        F.count("*").cast("double").alias("n_types"),
-        F.sum(F.when(F.col("verdict") == "act", 1).otherwise(0))
-        .cast("double")
-        .alias("n_act"),
-        F.round(F.max("psi") + 0.0, 6).alias("max_psi"),
+    sides = drift_sides(load_table(spark, "events", sf_dir))
+    psi = psi_drift(sides).selectExpr(
+        "CAST(count(*) AS DOUBLE) AS n_types",
+        "CAST(sum(CASE WHEN verdict = 'act' THEN 1 ELSE 0 END) AS DOUBLE) AS n_act",
+        "round(max(psi) + 0.0D, 6) AS max_psi",
     )
-    jsd = t70_js_divergence(spark, sf_dir).agg(
-        F.count("*").cast("double").alias("n_pairs"),
-        F.round(F.max("jsd_normalized") + 0.0, 6).alias("max_jsd_normalized"),
+    jsd = js_divergence(load_table(spark, "documents", sf_dir)).selectExpr(
+        "CAST(count(*) AS DOUBLE) AS n_pairs",
+        "round(max(jsd_normalized) + 0.0D, 6) AS max_jsd_normalized",
     )
-    ks = t113_ks_test(spark, sf_dir).agg(
-        F.count("*").cast("double").alias("n_types"),
-        F.sum(F.when(F.col("drifted"), 1).otherwise(0))
-        .cast("double")
-        .alias("n_drifted"),
-        F.round(F.max("ks_d") + 0.0, 6).alias("max_ks_d"),
+    ks = ks_test(sides).selectExpr(
+        "CAST(count(*) AS DOUBLE) AS n_types",
+        "CAST(sum(CASE WHEN drifted THEN 1 ELSE 0 END) AS DOUBLE) AS n_drifted",
+        "round(max(ks_d) + 0.0D, 6) AS max_ks_d",
     )
-    emb = v16_embedding_drift(spark, sf_dir).agg(
-        F.count("*").cast("double").alias("n_dims"),
-        F.sum("drifted").cast("double").alias("n_drifted"),
-        F.round(F.max(F.abs(F.col("z"))) + 0.0, 6).alias("max_abs_z"),
+    emb = embedding_drift(load_table(spark, "embeddings", sf_dir)).selectExpr(
+        "CAST(count(*) AS DOUBLE) AS n_dims",
+        "CAST(sum(drifted) AS DOUBLE) AS n_drifted",
+        "round(max(abs(z)) + 0.0D, 6) AS max_abs_z",
     )
     out = (
         long_metrics(psi, "psi", ["n_types", "n_act", "max_psi"])

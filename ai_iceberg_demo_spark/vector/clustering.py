@@ -756,7 +756,12 @@ def drift_zscores(a_corpus: DataFrame, b_corpus: DataFrame) -> DataFrame:
 )
 
 def v16_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = load_table(spark, "embeddings", sf_dir)
+    return embedding_drift(load_table(spark, "embeddings", sf_dir))
+
+
+def embedding_drift(corpus: DataFrame) -> DataFrame:
+    """v16's per-dimension rows over ``corpus``, its vec_id halves as
+    the two slices."""
     n_max = corpus.agg((F.max("vec_id") + 1).alias("n"))
     dims = (
         corpus.crossJoin(F.broadcast(n_max))

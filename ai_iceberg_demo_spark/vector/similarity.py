@@ -1358,11 +1358,7 @@ def v25_ivf_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_out_small_input(load_table(spark, "embeddings", sf_dir))
     cen = seed_centroids(emb, _V25_CELLS)
     assigned = kmeans_assign(emb, cen).select("vec_id", "cell_id")
-    probes = emb.filter(F.col("vec_id") % _V25_PROBES_MOD == 0).select(
-        F.col("vec_id").alias("qid"), as_double("embedding").alias("qv")
-    )
-    n_probes_count = probes.count()
-
+    probes = _tuning_probes(emb)
     cr_w = W.partitionBy("qid").orderBy(
         F.desc(F.round(cosine("centroid", "qv"), 6)), F.asc("cell_id")
     )
@@ -1371,9 +1367,9 @@ def v25_ivf_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("crank", F.row_number().over(cr_w))
         .select("qid", "cell_id", "crank")
     )
-    # scored feeds exact3 AND the candidate expansion (which itself
-    # feeds approx3 + costs) — unpersisted, the corpus×probes cosine
-    # executed ~4x (fanout_audit: 16 embeddings scans)
+    # scored feeds the exact top-3 AND the candidate expansion (which
+    # itself feeds approx3 + costs) — unpersisted, the corpus×probes
+    # cosine executed ~4x (fanout_audit: 16 embeddings scans)
     scored = (
         emb.join(F.broadcast(probes), emb.vec_id != F.col("qid"))
         .join(assigned, "vec_id")
@@ -1383,39 +1379,13 @@ def v25_ivf_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .transform(persist_once)
     )
-    ex_w = W.partitionBy("qid").orderBy(F.desc("s"), F.asc("vec_id"))
-    exact3 = (
-        scored.withColumn("rn", F.row_number().over(ex_w))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "vec_id")
-    )
     np_df = spark.createDataFrame([(n,) for n in _V25_NPROBES], "n_probe int")
     cand = (
         scored.join(F.broadcast(cellrank), ["qid", "cell_id"])
         .join(F.broadcast(np_df), F.col("crank") <= F.col("n_probe"))
         .select("n_probe", "qid", "vec_id", "s")
-        .transform(persist_once)  # approx3 + costs
     )
-    ap_w = W.partitionBy("n_probe", "qid").orderBy(F.desc("s"), F.asc("vec_id"))
-    approx3 = (
-        cand.withColumn("rn", F.row_number().over(ap_w))
-        .filter(F.col("rn") <= 3)
-        .select("n_probe", "qid", "vec_id")
-    )
-    hits = approx3.join(exact3, ["qid", "vec_id"]).groupBy("n_probe", "qid").agg(
-        F.count("*").alias("h")
-    )
-    costs = cand.groupBy("n_probe", "qid").agg(F.count("*").alias("nc"))
-    return (
-        costs.join(hits, ["n_probe", "qid"], "left")
-        .groupBy("n_probe")
-        .agg(
-            F.round(
-                F.sum(F.coalesce("h", F.lit(0))) / (3.0 * n_probes_count), 4
-            ).alias("recall_at_3"),
-            F.round(F.avg("nc"), 2).alias("avg_candidates"),
-        )
-    )
+    return recall3_curve(scored, cand, "n_probe")
 
 
 # ---------------------------------------------------------------------------
@@ -1523,16 +1493,11 @@ def _md5_sig_table(emb: DataFrame) -> DataFrame:
     """,
 )
 def v27_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     # r12: md5 signature + brute-force HOF cosine map work serializes
     # on the single-file fixture scan — fan out (see t17b)
     emb = fan_out_small_input(load_table(spark, "embeddings", sf_dir))
     sigs = _md5_sig_table(emb)
-    probes = emb.filter(F.col("vec_id") % _V25_PROBES_MOD == 0).select(
-        F.col("vec_id").alias("qid"), as_double("embedding").alias("qv")
-    )
-    n_probes_count = probes.count()
+    probes = _tuning_probes(emb)
     psigs = (
         sigs.join(
             F.broadcast(probes.select("qid")), sigs.vec_id == F.col("qid")
@@ -1549,19 +1514,13 @@ def v27_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("p.qid").alias("qid"), F.col("c.vec_id").alias("vec_id"))
         .agg(F.min("c.t").alias("mt"))
     )
-    # scored feeds exact3 and the per-config candidate expansion —
-    # persist (fanout_audit: 12 embeddings scans unpersisted)
+    # scored feeds the exact top-3 and the per-config candidate
+    # expansion — persist (fanout_audit: 12 embeddings scans unpersisted)
     scored = emb.join(F.broadcast(probes), emb.vec_id != F.col("qid")).select(
         "qid",
         "vec_id",
         F.round(cosine("embedding", "qv"), 6).alias("s"),
     ).transform(persist_once)
-    ex_w = W.partitionBy("qid").orderBy(F.desc("s"), F.asc("vec_id"))
-    exact3 = (
-        scored.withColumn("rn", F.row_number().over(ex_w))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "vec_id")
-    )
     cfg = spark.createDataFrame([(n,) for n in _V27_CONFIGS], "n_tables int")
     # candidate set is probe-bounded (hundreds) vs the corpus-sized
     # scored scan -> broadcast the candidates, never sort-merge
@@ -1569,30 +1528,8 @@ def v27_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.join(F.broadcast(pairs), ["qid", "vec_id"])
         .join(F.broadcast(cfg), F.col("mt") < F.col("n_tables"))
         .select("n_tables", "qid", "vec_id", "s")
-        .transform(persist_once)  # approx3 + costs
     )
-    ap_w = W.partitionBy("n_tables", "qid").orderBy(F.desc("s"), F.asc("vec_id"))
-    approx3 = (
-        cand.withColumn("rn", F.row_number().over(ap_w))
-        .filter(F.col("rn") <= 3)
-        .select("n_tables", "qid", "vec_id")
-    )
-    hits = (
-        approx3.join(F.broadcast(exact3), ["qid", "vec_id"])
-        .groupBy("n_tables", "qid")
-        .agg(F.count("*").alias("h"))
-    )
-    costs = cand.groupBy("n_tables", "qid").agg(F.count("*").alias("nc"))
-    return (
-        costs.join(hits, ["n_tables", "qid"], "left")
-        .groupBy("n_tables")
-        .agg(
-            F.round(
-                F.sum(F.coalesce("h", F.lit(0))) / (3.0 * n_probes_count), 4
-            ).alias("recall_at_3"),
-            F.round(F.avg("nc"), 2).alias("avg_candidates"),
-        )
-    )
+    return recall3_curve(scored, cand, "n_tables")
 
 
 @REGISTRY.register(
@@ -2195,6 +2132,47 @@ def recall_tail(
             *extra,
         )
         .orderBy("probe_id", dists[0], "vec_id")
+    )
+
+
+def _tuning_probes(emb: DataFrame) -> DataFrame:
+    """(qid, qv): the ~1% probe sample v25 and v27 sweep."""
+    return emb.filter(F.col("vec_id") % _V25_PROBES_MOD == 0).select(
+        F.col("vec_id").alias("qid"), as_double("embedding").alias("qv")
+    )
+
+
+def recall3_curve(scored: DataFrame, cand: DataFrame, cfg_col: str) -> DataFrame:
+    """(cfg_col, recall_at_3, avg_candidates): v25's and v27's tuning
+    curve. ``scored`` holds every (qid, vec_id, s) of the exact search,
+    one row per probe and corpus vector; ``cand`` the (cfg_col, qid,
+    vec_id, s) rows each config's index would rerank. Recall@3 is the
+    share of each probe's exact top-3 found in its approximate top-3,
+    averaged over every probe (a probe with no candidates scores 0);
+    the cost axis is the mean candidate count of the probes that have
+    any."""
+    n_probes = scored.selectExpr("count(DISTINCT qid) AS n")
+    cand = cand.transform(persist_once)  # approx3 + costs
+
+    def top3(df: DataFrame, part: str) -> DataFrame:
+        return df.withColumn(
+            "rn", F.expr(f"row_number() OVER (PARTITION BY {part} ORDER BY s DESC, vec_id)")
+        ).where("rn <= 3")
+
+    exact3 = top3(scored, "qid").select("qid", "vec_id")
+    hits = (
+        top3(cand, f"{cfg_col}, qid")
+        .join(F.broadcast(exact3), ["qid", "vec_id"])
+        .groupBy(cfg_col, "qid")
+        .agg(F.count("*").alias("h"))
+    )
+    costs = cand.groupBy(cfg_col, "qid").agg(F.count("*").alias("nc"))
+    return (
+        costs.join(hits, [cfg_col, "qid"], "left")
+        .groupBy(cfg_col)
+        .agg(F.expr("sum(coalesce(h, 0)) AS h"), F.avg("nc").alias("nc"))
+        .crossJoin(F.broadcast(n_probes))
+        .selectExpr(cfg_col, "round(h / (3.0D * n), 4) AS recall_at_3", "round(nc, 2) AS avg_candidates")
     )
 
 

@@ -3,6 +3,7 @@ d10, d11, d12): invariants the oracle can't see."""
 
 from __future__ import annotations
 
+from ai_iceberg_demo_spark.registry import all_registries
 from tests.conftest import SF_DIR
 
 
@@ -78,35 +79,56 @@ def test_pair_overlaps_match_all_overlaps_on_band_candidates(spark):
     assert got == want
 
 
+#: registered queries that still call another registered query through
+#: its (spark, sf_dir) function: the mutation and sampling chains and
+#: the cards that wrap other modules' parts. The list may only shrink.
+_REGISTERED_CALLERS = {
+    "m6b_asof_dimension",
+    "m8b_changelog_apply",
+    "m12_maintenance_plan",
+    "u10b_mixture_apply",
+    "u11b_epoch_shuffle_2",
+    "u41_exact_stratified_sample",
+    "u46_license_propagation",
+    "pipeline_packing_card",
+    "pipeline_governance",
+    "pipeline_storage",
+    "pipeline_training_prep",
+    "pipeline_eval_prep",
+    "pipeline_multimodal_prep",
+}
+
+
 def test_dedup_queries_call_no_registered_query():
     """Composite queries build their substrate through shared builders
-    (the shingle/band builders, the eval sample and pair builders) and
-    pass it in: no query registered in vector/dedup.py or
-    pipeline/curation.py calls another query registered there, and no
-    query registered in functions/text.py calls another one of its own,
-    through its (spark, sf_dir) function, relying on CacheManager to
-    match the plan. (Curation's report cards that wrap other modules'
-    queries, text.py's t17 among them, are not covered.)"""
+    (the shingle/band builders, the eval sample, the events family's
+    side-tagged, labeled-score and forecast-split frames) and pass it
+    in, instead of calling another registered query through its
+    (spark, sf_dir) function and relying on CacheManager to match the
+    plan. Over every module of the registry, the queries that still do
+    are exactly _REGISTERED_CALLERS: a new caller fails, and so does a
+    listed name that no longer calls, so the list can only shrink."""
     import ast
+    import importlib
     import inspect
 
-    from ai_iceberg_demo_spark.functions import text
-    from ai_iceberg_demo_spark.pipeline import curation
-    from ai_iceberg_demo_spark.vector import dedup
-
-    calls = []
-    for mods in ((dedup, curation), (text,)):
-        registered = {s.fn.__name__ for m in mods for s in m.REGISTRY.specs.values()}
-        for mod in mods:
-            for fn in ast.walk(ast.parse(inspect.getsource(mod))):
-                if not (isinstance(fn, ast.FunctionDef) and fn.name in registered):
-                    continue
-                for node in ast.walk(fn):
-                    if isinstance(node, ast.Call):
-                        callee = getattr(node.func, "id", getattr(node.func, "attr", None))
-                        if callee in registered and callee != fn.name:
-                            calls.append(f"{fn.name} -> {callee}")
-    assert calls == []
+    specs = all_registries().specs.values()
+    registered = {s.fn.__name__ for s in specs}
+    callers = {}
+    for mod_name in sorted({s.fn.__module__ for s in specs}):
+        tree = ast.parse(inspect.getsource(importlib.import_module(mod_name)))
+        for fn in ast.walk(tree):
+            if not (isinstance(fn, ast.FunctionDef) and fn.name in registered):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call):
+                    callee = getattr(node.func, "id", getattr(node.func, "attr", None))
+                    if callee in registered and callee != fn.name:
+                        callers.setdefault(fn.name, set()).add(callee)
+    assert set(callers) == _REGISTERED_CALLERS, {
+        "new": {k: callers[k] for k in set(callers) - _REGISTERED_CALLERS},
+        "stale": _REGISTERED_CALLERS - set(callers),
+    }
 
 
 def test_exact_substring_removal_invariants(spark):

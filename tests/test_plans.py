@@ -480,10 +480,9 @@ def test_eval_metrics_single_keyed_exchange(spark):
 
 def test_eval_card_reads_one_keyed_sample_exchange(spark):
     """pipeline_eval_card builds the 1-in-10 sample once and hands it to
-    t98, t105 and t106: its executed plan runs ONE doc_id-keyed exchange
-    and the other two reads are ReusedExchange of it. (t109's persisted
-    pairs run their own, inside the cached relation, which this walk
-    does not open.)"""
+    t98, t105, t106 and t109: its executed plan runs ONE doc_id-keyed
+    exchange, and the other four reads (t109 reads its pairs twice: the
+    vocab count and the encode) are ReusedExchange of it."""
     df = all_registries().specs["pipeline_eval_card"].fn(spark, SF_DIR)
     df.collect()
     stack = [df._jdf.queryExecution().executedPlan().executedPlan()]
@@ -497,7 +496,7 @@ def test_eval_card_reads_one_keyed_sample_exchange(spark):
             keyed.append(node.nodeName())
         kids = node.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
-    assert sorted(keyed) == ["Exchange", "ReusedExchange", "ReusedExchange"], keyed
+    assert sorted(keyed) == ["Exchange"] + ["ReusedExchange"] * 4, keyed
 
 
 def test_safety_card_scans_documents_once(spark):
@@ -599,3 +598,48 @@ def test_drift_windows_only_see_aggregated_frames(spark):
         tree = plan_of(spark, name).split("\n\n")[0]
         assert "Window (" in tree, tree
         _window_subtrees_are_post_aggregate(tree)
+
+
+def test_drift_card_builds_its_side_tagged_frame_once(spark, monkeypatch):
+    """pipeline_drift_card builds drift_sides once and hands it to t84's
+    and t113's builders, so each of its events reads (t84's edge
+    quantiles and binning, t113's per-value counts, printed under each
+    reader of their cache) is that one ts-guarded side-tagged scan."""
+    import re
+
+    from ai_iceberg_demo_spark.streaming import events
+    from ai_iceberg_demo_spark.tables import clear_table_cache
+
+    calls = []
+    build = events.drift_sides
+
+    def counting(ev):
+        calls.append(1)
+        return build(ev)
+
+    monkeypatch.setattr(events, "drift_sides", counting)
+    spark.catalog.clearCache()
+    clear_table_cache(spark)  # the events handle is persisted again
+    plan = events.pipeline_drift_card(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    assert len(calls) == 1
+    reads = re.findall(r"InMemoryTableScan \[event_type#\d+, ts#\d+, value#\d+\], \[([^\n]*)", plan)
+    assert len(reads) >= 3, plan
+    assert all("isnotnull(ts#" in r for r in reads), reads
+
+
+def test_model_eval_reads_events_four_times(spark):
+    """pipeline_model_eval hands one labeled-score frame to t47, t64 and
+    t65, and t64's overall rates are windows over its bin table: the
+    card reads events four times (t47 once, t64 once, t65's two rank
+    phases), where calling the three registered queries read it five
+    times."""
+    import re
+
+    from ai_iceberg_demo_spark.tables import clear_table_cache
+
+    spark.catalog.clearCache()
+    clear_table_cache(spark)
+    df = all_registries().specs["pipeline_model_eval"].fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scans = re.findall(r"FileScan parquet[^\n]*", plan)
+    assert sum("events.parquet" in s for s in scans) == 4, plan

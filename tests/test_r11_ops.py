@@ -308,75 +308,6 @@ def test_t112_monotone_in_k_on_common_tasks(spark):
 
 
 # ---------------------------------------------------------------------------
-# t113: exact two-sample KS drift test
-# ---------------------------------------------------------------------------
-
-
-def test_t113_planted_shift_is_the_only_drift(spark):
-    """t84's planted 2x scale shift on the error type must be the one
-    type the exact KS flags (measured: D=0.27 vs crit 0.19 at
-    sf0.001, 0.26 vs 0.06 at sf0.01); every stationary type stays
-    under its critical value, and error's D dominates."""
-    rows = {r.event_type: r for r in _q("t113_ks_test")(spark, SF_DIR).collect()}
-    assert rows["error"].drifted
-    for t, r in rows.items():
-        assert 0.0 <= r.ks_d <= 1.0
-        if t != "error":
-            assert not r.drifted, (t, r.ks_d, r.ks_crit)
-            assert r.ks_d < rows["error"].ks_d
-
-
-def test_t113_ecdf_is_exact_against_numpy(spark):
-    """Recompute one stationary type's D with a brute-force numpy
-    ECDF over the raw events — the bucket-major two-phase cumulative
-    sum must agree to the rounding digit (this is the distributed
-    prefix-sum claim, checked end to end)."""
-    import numpy as np
-
-    from ai_iceberg_demo_spark.streaming.events import _T84_SPLIT
-    from ai_iceberg_demo_spark.tables import load_table
-
-    rows = {r.event_type: r for r in _q("t113_ks_test")(spark, SF_DIR).collect()}
-    ev = (
-        load_table(spark, "events", SF_DIR)
-        .filter(F.col("value").isNotNull() & (F.col("event_type") == "click"))
-        .select(F.col("ts").cast("date").alias("d"), "value")
-        .collect()
-    )
-    import datetime
-
-    split = datetime.date.fromisoformat(_T84_SPLIT)
-    a = np.sort([r.value for r in ev if r.d < split])
-    b = np.sort([r.value for r in ev if r.d >= split])
-    grid = np.union1d(a, b)
-    fa = np.searchsorted(a, grid, side="right") / len(a)
-    fb = np.searchsorted(b, grid, side="right") / len(b)
-    assert abs(rows["click"].ks_d - round(float(np.max(np.abs(fa - fb))), 6)) < 1e-9
-
-
-# ---------------------------------------------------------------------------
-# pipeline_drift_card
-# ---------------------------------------------------------------------------
-
-
-def test_drift_card_reflects_planted_drift_and_matches_parts(spark):
-    """11 rows, 4 families; the planted error-type shift must surface
-    in BOTH time-axis detectors (psi n_act >= 1, ks n_drifted >= 1 —
-    t84 and t113 share the split and the plant); the ks family's max
-    must equal an independent aggregation of t113's registered output
-    (the card is a view of its parts)."""
-    rows = _q("pipeline_drift_card")(spark, SF_DIR).collect()
-    assert len(rows) == 11
-    card = {(r.family, r.metric): r.value for r in rows}
-    assert {r.family for r in rows} == {"psi", "jsd", "ks", "embedding"}
-    assert card[("psi", "n_act")] >= 1.0
-    assert card[("ks", "n_drifted")] >= 1.0
-    ks_rows = _q("t113_ks_test")(spark, SF_DIR).collect()
-    assert abs(card[("ks", "max_ks_d")] - round(max(r.ks_d for r in ks_rows) + 0.0, 6)) < 1e-9
-    assert card[("ks", "n_types")] == float(len(ks_rows))
-
-
-# ---------------------------------------------------------------------------
 # pipeline_packing_card
 # ---------------------------------------------------------------------------
 

@@ -142,24 +142,3 @@ def test_t70_jsd_is_bounded_and_positive(spark):
     assert len(out) == 190  # C(20,2) source pairs
     assert ((out.jsd_normalized >= 0) & (out.jsd_normalized <= 1)).all()
     assert (out.jsd > 0).all(), "distinct sources must diverge"
-
-
-def test_t78_intervals_are_symmetric_and_coverage_is_their_mean(spark):
-    from ai_iceberg_demo_spark.streaming.events import t78_conformal_forecast
-
-    out = t78_conformal_forecast(spark, SF_DIR).toPandas()
-    assert len(out) > 0
-    assert ((out.lo < out.yhat) & (out.yhat < out.hi)).all()
-    width = (out.hi - out.lo).round(4)
-    assert width.nunique() == 1, "one conformal quantile -> one width"
-    assert abs(out.realized_coverage.iloc[0] - out.covered.mean()) < 1e-6
-
-
-def test_t79_fit_beats_persistence_and_is_finite(spark):
-    from ai_iceberg_demo_spark.streaming.events import t79_ols_forecast
-
-    r = t79_ols_forecast(spark, SF_DIR).toPandas().iloc[0]
-    assert bool(r.beats_naive)
-    assert r.mae_ols < r.mae_naive
-    for c in ("beta_lag1", "beta_ma7", "intercept"):
-        assert math.isfinite(r[c])

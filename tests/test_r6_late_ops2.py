@@ -32,14 +32,6 @@ def test_j11_matches_brute_force_pair_count(spark):
     assert bool(got.all_within_band)
 
 
-def test_t84_planted_type_is_the_argmax_psi(spark):
-    from ai_iceberg_demo_spark.streaming.events import t84_psi_drift
-
-    out = t84_psi_drift(spark, SF_DIR).toPandas()
-    assert out.loc[out.psi.idxmax(), "event_type"] == "error"
-    assert out[out.event_type == "error"].verdict.iloc[0] == "act"
-
-
 def test_t85_expansion_excludes_base_terms_and_ranks_descend(spark):
     from ai_iceberg_demo_spark.functions.retrieval import (
         QUERY_TERMS,
@@ -93,31 +85,3 @@ def test_t89_ttl_is_enforced_and_age_null_iff_no_prior(spark):
     assert stale.feature_value.isna().all()
     no_prior = out[out.feature_age_s.isna()]
     assert (~no_prior.is_stale).all() and no_prior.feature_value.isna().all()
-
-
-def test_t80_verdict_is_consistent_and_rates_are_proportions(spark):
-    from ai_iceberg_demo_spark.streaming.events import t80_power_analysis
-
-    out = t80_power_analysis(spark, SF_DIR).toPandas()
-    # the verdict IS the comparison (no drift between columns)
-    assert (
-        out.adequately_powered
-        == (out.n_per_arm_current >= out.n_per_arm_required)
-    ).all()
-    assert (out.target_rate > out.baseline_rate).all()
-    assert (out.target_rate <= 0.999).all(), "p1 must stay a proportion"
-
-
-def test_pipeline_experiment_has_the_three_families(spark):
-    from ai_iceberg_demo_spark.pipeline.curation import pipeline_experiment
-
-    out = pipeline_experiment(spark, SF_DIR).toPandas()
-    assert out.family.value_counts().to_dict() == {
-        "design": 3,
-        "readout": 4,
-        "causal": 4,
-    }
-    # composition consistency: the card's recovered flag is t74's
-    assert out.set_index(["family", "metric"]).loc[
-        ("causal", "recovered"), "value"
-    ] == 1.0

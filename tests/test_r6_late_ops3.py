@@ -96,17 +96,3 @@ def test_m18_masking_audit_verdicts(spark):
     assert out.joinable.all() and out.no_leaks.all()
     assert bool(out.loc["c_mktsegment", "freq_attack_risk"])
     assert not bool(out.loc["c_name", "freq_attack_risk"])
-
-
-def test_pipeline_forecast_card_matches_its_parts(spark):
-    from ai_iceberg_demo_spark.pipeline.curation import pipeline_forecast
-    from ai_iceberg_demo_spark.streaming.events import t78_conformal_forecast
-
-    card = pipeline_forecast(spark, SF_DIR).toPandas().set_index(
-        ["family", "metric"]
-    )
-    t78 = t78_conformal_forecast(spark, SF_DIR).toPandas()
-    assert card.loc[("uncertainty", "realized_coverage"), "value"] == (
-        t78.realized_coverage.iloc[0]
-    )
-    assert card.loc[("uncertainty", "n_test_days"), "value"] == len(t78)
