@@ -520,10 +520,14 @@ _DECON_N = 8  # word n-gram width for contamination matching
     """,
 )
 def t17_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return decontamination(load_table(spark, "documents", sf_dir))
+
+
+def decontamination(docs: DataFrame) -> DataFrame:
+    """t17's per-contaminated-doc rows; the prep cards anti-join them."""
     from ai_iceberg_demo_spark.tables import fan_out_small_input
     from ai_iceberg_demo_spark.vector.dedup import shingles
 
-    docs = load_table(spark, "documents", sf_dir)
     bench_docs = (
         docs.filter(F.col("doc_id") % 10 == 3)
         .alias("b")

@@ -822,9 +822,13 @@ _SCENE_CUT_SQL = f"""
     oracle=_SCENE_CUT_SQL,
 )
 def v8f_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return scene_cuts(load_table(spark, "documents", sf_dir))
+
+
+def scene_cuts(docs: DataFrame) -> DataFrame:
+    """v8f's (doc_id, frame_no, delta) cut rows over the documents."""
     from pyspark.sql import Window as W
 
-    docs = load_table(spark, "documents", sf_dir)
     n_frames = F.ceil(F.octet_length("text") / F.lit(64.0)).cast("bigint")
     starts = F.sequence(F.lit(0).cast("bigint"), n_frames - 1)
     frames = docs.select("doc_id", "text", F.explode(starts).alias("frame_no")).select(
@@ -1079,7 +1083,7 @@ def pipeline_multimodal_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_frames = F.ceil(F.octet_length("payload") / F.lit(64.0)).cast("bigint")
     frames = survivors.select("doc_id", n_frames.alias("n_frames"))
     cuts = (
-        v8f_scene_cut(spark, sf_dir)
+        scene_cuts(load_table(spark, "documents", sf_dir))
         .groupBy("doc_id")
         .agg(F.count("*").cast("bigint").alias("n_cuts"))
     )

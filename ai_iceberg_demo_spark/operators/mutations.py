@@ -357,7 +357,11 @@ def scd2_apply(
     """,
 )
 def m6_scd2_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load_table(spark, "customer", sf_dir)
+    return scd2_customers(load_table(spark, "customer", sf_dir))
+
+
+def scd2_customers(cust: DataFrame) -> DataFrame:
+    """m6's versioned customer dimension; m6b reads it as of a date."""
     dim = cust.select(
         "c_custkey",
         F.round(F.col("c_acctbal").cast("double"), 2).alias("acctbal"),
@@ -413,7 +417,11 @@ def apply_retention(
     """,
 )
 def m7_retention_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
+    return retention_audit(load_table(spark, "events", sf_dir))
+
+
+def retention_audit(ev: DataFrame) -> DataFrame:
+    """m7's per-event_type rows over the events table."""
     erased = F.col("user_id") % 37 == 0
     ttl = F.col("ts") < F.lit(_RETAIN_CUTOFF).cast("timestamp")
     return ev.groupBy("event_type").agg(
@@ -465,7 +473,7 @@ _ASOF_DATE = "2024-07-01"  # after the m6 update batch took effect
     """,
 )
 def m6b_asof_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
-    versioned = m6_scd2_upsert(spark, sf_dir)
+    versioned = scd2_customers(load_table(spark, "customer", sf_dir))
     return versioned.filter(
         (F.col("valid_from") <= _ASOF_DATE)
         & (F.col("valid_to").isNull() | (F.col("valid_to") > _ASOF_DATE))
@@ -567,7 +575,12 @@ def snapshot_diff(
     """,
 )
 def m8_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, "orders", sf_dir)
+    return orders_changelog(load_table(spark, "orders", sf_dir))[1]
+
+
+def orders_changelog(orders: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(snap0, diff): the day-1 orders snapshot and m8's changelog to
+    the simulated day-2 state; m8b applies the diff to this snap0."""
     snap0 = orders.select(
         "o_orderkey",
         F.round(F.col("o_totalprice").cast("double"), 2).alias("o_totalprice"),
@@ -585,7 +598,7 @@ def m8_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderkey") + 10_000_000).alias("o_orderkey"), "o_totalprice"
     )
     snap1 = survivors.unionByName(inserts)
-    return snapshot_diff(
+    return snap0, snapshot_diff(
         snap0, snap1, keys=["o_orderkey"], compare_cols=["o_totalprice"]
     )
 
@@ -634,13 +647,22 @@ _COMPACT_TARGET = 5_000  # bin capacity in size units (stands in for 128 MB)
     """,
 )
 def m9_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
+    return compaction_plan(file_inventory(load_table(spark, "lineitem", sf_dir)))
 
-    li = load_table(spark, "lineitem", sf_dir)
-    files = li.groupBy(
+
+def file_inventory(li: DataFrame) -> DataFrame:
+    """(part_month, file_id, size_units): the simulated file list m9
+    plans compaction on and m11 lists orphans against."""
+    return li.groupBy(
         F.date_format(F.col("l_shipdate").cast("date"), "yyyy-MM").alias("part_month"),
         (F.col("l_orderkey") % 40).alias("file_id"),
     ).agg(F.sum("l_quantity").cast("bigint").alias("size_units"))
+
+
+def compaction_plan(files: DataFrame) -> DataFrame:
+    """m9's per-file compaction groups over file_inventory's rows."""
+    from pyspark.sql import Window as W
+
     # single pass: the running sum counts ONLY small files, so at-target
     # files ride through the same window (marked -1) instead of forcing
     # a second agg/scan through a union branch — one inventory shuffle,
@@ -816,11 +838,13 @@ def m10_wap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def m11_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, "lineitem", sf_dir)
-    referenced = li.groupBy(
-        F.date_format(F.col("l_shipdate").cast("date"), "yyyy-MM").alias("part_month"),
-        (F.col("l_orderkey") % 40).alias("file_id"),
-    ).agg(F.sum("l_quantity").cast("bigint").alias("size_units")).transform(persist_once)
+    return orphan_files(file_inventory(load_table(spark, "lineitem", sf_dir)))
+
+
+def orphan_files(files: DataFrame) -> DataFrame:
+    """m11's orphan rows: the inventory plus planted debris, anti-joined
+    against the inventory (read twice, so persisted)."""
+    referenced = files.transform(persist_once)
     debris = referenced.filter(F.col("file_id") % 7 == 0).select(
         "part_month", (F.col("file_id") + 1000).alias("file_id"),
         F.lit(0).cast("bigint").alias("size_units"),
@@ -892,9 +916,11 @@ def m11_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def m12_maintenance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    plan = m9_compaction_plan(spark, sf_dir)
+    # one inventory for both branches; orphan_files persists it
+    files = file_inventory(load_table(spark, "lineitem", sf_dir))
     compact = (
-        plan.filter(F.col("compaction_group") >= 0)
+        compaction_plan(files)
+        .filter(F.col("compaction_group") >= 0)
         .groupBy("part_month", F.col("compaction_group").alias("item"))
         .agg(
             F.count("*").cast("bigint").alias("n_files"),
@@ -909,7 +935,7 @@ def m12_maintenance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_units",
         )
     )
-    orphans = m11_orphan_files(spark, sf_dir).select(
+    orphans = orphan_files(files).select(
         F.lit("delete_orphan").alias("action"),
         "part_month",
         F.col("file_id").alias("item"),
@@ -980,16 +1006,11 @@ def changelog_apply(
     """,
 )
 def m8b_changelog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, "orders", sf_dir)
-    snap0 = orders.select(
-        "o_orderkey",
-        F.round(F.col("o_totalprice").cast("double"), 2).alias("o_totalprice"),
-    )
+    snap0, diff = orders_changelog(load_table(spark, "orders", sf_dir))
     # the changelog is a diamond (update/delete/insert branches all
     # read it) — persist so the CDC join runs once, not three times
-    diff = m8_snapshot_diff(spark, sf_dir).transform(persist_once)
     return changelog_apply(
-        snap0, diff, keys=["o_orderkey"], value_cols=["o_totalprice"]
+        snap0, diff.transform(persist_once), keys=["o_orderkey"], value_cols=["o_totalprice"]
     )
 
 
@@ -1049,7 +1070,12 @@ _KANON_BUCKETS = 16
     """,
 )
 def m13_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir).select("event_type", "ts", "user_id")
+    return k_anonymity(load_table(spark, "events", sf_dir))
+
+
+def k_anonymity(ev: DataFrame) -> DataFrame:
+    """m13's per-fine-group verdict rows over the events table."""
+    ev = ev.select("event_type", "ts", "user_id")
     planted = [("debug", "2030-01-01 00:00:00", 7)] + [
         ("audit", "2030-01-02 00:00:00", 9)
     ] * 6

@@ -179,16 +179,20 @@ _PACK_SHARD = 1000  # docs per prefix-sum shard
     """,
 )
 def u9_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, "documents", sf_dir)
-    toks = docs.select(
-        "doc_id",
-        F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
-    )
     # doc_id DIV shard keeps shards contiguous in the global doc_id
     # order, so pack_positions' shard-local cumsum + shard offsets
     # reproduce the single global window exactly
+    toks = doc_tokens(load_table(spark, "documents", sf_dir))
     return pack_positions(toks, order_col="doc_id").select(
         "doc_id", "n_tokens", "bin_id", "bin_offset"
+    )
+
+
+def doc_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, source, n_tokens): the one whitespace-token count every
+    packer, mixer and card of the sampling family reads."""
+    return docs.select(
+        "doc_id", "source", F.size(F.split("text", " ")).cast("bigint").alias("n_tokens")
     )
 
 
@@ -227,26 +231,18 @@ def epoch_shuffle_positions(
     )
 
 
-def pack_positions(
-    df: DataFrame,
-    order_col: str,
-    tokens_col: str = "n_tokens",
-    budget: int = None,
-    shard_size: int = None,
-) -> DataFrame:
+def pack_positions(df: DataFrame, order_col: str, tokens_col: str = "n_tokens") -> DataFrame:
     """Append ``bin_id``/``bin_offset``: lay rows head-to-tail into
-    fixed token bins following ``order_col`` order — the two-phase
-    distributed prefix sum (u9's shape, shared with
-    pipeline_training_prep). Requires ``order_col DIV shard_size`` to
+    fixed PACK_BUDGET-token bins following ``order_col`` order — the
+    two-phase distributed prefix sum (u9's shape, shared with
+    pipeline_training_prep). Requires ``order_col DIV _PACK_SHARD`` to
     be contiguous in the global order (true for dense positions and
     for doc_id order). The caller persists ``df`` when its lineage is
     expensive — this helper reads it twice (shard totals + the ranked
     pass)."""
     from pyspark.sql import Window
 
-    budget = PACK_BUDGET if budget is None else budget
-    shard_size = _PACK_SHARD if shard_size is None else shard_size
-    sharded = df.withColumn("_shard", (F.col(order_col) / shard_size).cast("bigint"))
+    sharded = df.withColumn("_shard", (F.col(order_col) / _PACK_SHARD).cast("bigint"))
     s_tot = sharded.groupBy("_shard").agg(F.sum(tokens_col).alias("_tot"))
     w_soff = Window.orderBy("_shard").rowsBetween(Window.unboundedPreceding, -1)
     s_offsets = s_tot.select(
@@ -259,8 +255,8 @@ def pack_positions(
     start = F.col("_soff") + F.col("_local_end") - F.col(tokens_col)
     return (
         with_end.join(F.broadcast(s_offsets), "_shard")
-        .withColumn("bin_id", (start / budget).cast("bigint"))
-        .withColumn("bin_offset", (start % budget).cast("bigint"))
+        .withColumn("bin_id", (start / PACK_BUDGET).cast("bigint"))
+        .withColumn("bin_offset", (start % PACK_BUDGET).cast("bigint"))
         .drop("_shard", "_local_end", "_soff")
     )
 
@@ -276,11 +272,7 @@ def pack_positions(
     "per-bucket window ranks locally (256-way parallel), and the 256 "
     "bucket counts cumsum into offsets broadcast back. Bit-identical "
     "to the one-window spelling (the oracle) because lexicographic md5 "
-    "order IS (2-hex-prefix, remainder) order. ``epoch`` is a query "
-    "parameter: each value keys an independent permutation — reshuffle "
-    "per training epoch without rewriting data (u11b pins epoch=2; "
-    "tests/test_sampling.py pins cross-epoch independence via rank "
-    "correlation ≈ 0).",
+    "order IS (2-hex-prefix, remainder) order.",
     oracle=f"""
         SELECT doc_id,
                CAST(ROW_NUMBER() OVER (
@@ -289,11 +281,9 @@ def pack_positions(
         FROM documents
     """,
 )
-def u11_epoch_shuffle(
-    spark: SparkSession, sf_dir: str, epoch: int = _SHUFFLE_EPOCH
-) -> DataFrame:
+def u11_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir).select("doc_id")
-    return epoch_shuffle_positions(docs, epoch=epoch).select("doc_id", "position")
+    return epoch_shuffle_positions(docs).select("doc_id", "position")
 
 
 @REGISTRY.register(
@@ -312,7 +302,8 @@ def u11_epoch_shuffle(
     """,
 )
 def u11b_epoch_shuffle_2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return u11_epoch_shuffle(spark, sf_dir, epoch=2)
+    docs = load_table(spark, "documents", sf_dir).select("doc_id")
+    return epoch_shuffle_positions(docs, epoch=2).select("doc_id", "position")
 
 
 STRATA_FRAC = 0.2  # per-stratum sampling fraction
@@ -368,7 +359,7 @@ def mixture_rates(
     """Per-source mixture table for a uniform token budget of ``frac``
     × total: ``(source, src_tokens, share_tokens, sample_rate,
     *extra_aggs)`` over any per-row (source, tokens) frame. This is THE
-    rate formula — u10_mixture_plan, u10b_mixture_apply (via u10) and
+    rate formula — u10_mixture_plan, u10b_mixture_apply and
     pipeline_training_prep all derive their rates here, so the budget
     constant and the min(1, share/available) rule cannot desync.
 
@@ -420,10 +411,7 @@ def mixture_rates(
     """,
 )
 def u10_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, "documents", sf_dir)
-    toks = docs.select(
-        "source", F.size(F.split("text", " ")).cast("bigint").alias("n_tokens")
-    )
+    toks = doc_tokens(load_table(spark, "documents", sf_dir))
     # the shared rate formula; n_docs folds into the same single-scan
     # groupBy via extra_aggs, and share_tokens comes back so the
     # planned/deficit columns derive from the SAME share the rate used
@@ -474,7 +462,7 @@ def u10_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def u10b_mixture_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    rates = u10_mixture_plan(spark, sf_dir).select("source", "sample_rate")
+    rates = mixture_rates(doc_tokens(docs)).select("source", "sample_rate")
     return (
         docs.join(F.broadcast(rates), "source")
         .filter(hash_pct(F.col("doc_id")) < F.col("sample_rate") * 100)
@@ -964,24 +952,21 @@ def u18_upsample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def u19_packing_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, "documents", sf_dir)
-    toks = docs.select(
-        "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("n")
-    ).filter(F.col("n") > 0)
-    packed = pack_positions(toks, order_col="doc_id", tokens_col="n")
+    toks = doc_tokens(load_table(spark, "documents", sf_dir)).filter(F.col("n_tokens") > 0)
+    packed = pack_positions(toks, order_col="doc_id")
     budget = F.lit(PACK_BUDGET).cast("bigint")
     s = F.col("bin_id") * budget + F.col("bin_offset")
-    end = s + F.col("n")
+    end = s + F.col("n_tokens")
     segs = packed.select(
         "doc_id",
-        "n",
+        "n_tokens",
         s.alias("s"),
         F.explode(
             F.sequence((s / budget).cast("bigint"), ((end - 1) / budget).cast("bigint"))
         ).alias("b"),
     )
     seg_start = F.greatest(F.col("s"), F.col("b") * budget)
-    seg_end = F.least(F.col("s") + F.col("n"), (F.col("b") + 1) * budget)
+    seg_end = F.least(F.col("s") + F.col("n_tokens"), (F.col("b") + 1) * budget)
     return segs.select(
         "doc_id",
         F.col("b").alias("bin_id"),
@@ -1741,9 +1726,13 @@ _U39_BUDGET = 200  # documents to allocate (< every fixture corpus: an
     """,
 )
 def u39_hamilton_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return hamilton_allocation(load_table(spark, "documents", sf_dir))
+
+
+def hamilton_allocation(docs: DataFrame) -> DataFrame:
+    """u39's per-source apportionment rows; u41 executes them."""
     from pyspark.sql import Window as W
 
-    docs = load_table(spark, "documents", sf_dir)
     counts = docs.groupBy("source").agg(F.count("*").cast("double").alias("n"))
     # O(sources) table from here on — the unpartitioned windows run
     # over a frame the size of the source list, never the corpus
@@ -1927,7 +1916,7 @@ def u41_exact_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, "documents", sf_dir)
     # the u39 plan, re-derived (shared arithmetic, not a copied table)
-    alloc = u39_hamilton_allocation(spark, sf_dir).select("source", "allocated")
+    alloc = hamilton_allocation(docs).select("source", "allocated")
     w_rank = W.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), "doc_id"
     )
@@ -2014,8 +2003,9 @@ def _license_tier_sql(src: str) -> str:
     """,
 )
 def u46_license_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, "documents", sf_dir).select("doc_id", "source")
-    packed = u9_sequence_packing(spark, sf_dir).join(docs, "doc_id")
+    toks = doc_tokens(load_table(spark, "documents", sf_dir))
+    # source rides along from the token frame: no packed ⋈ documents re-join
+    packed = pack_positions(toks, order_col="doc_id")
     end_bin = (
         F.col("bin_id") * PACK_BUDGET + F.col("bin_offset") + F.col("n_tokens") - 1
     ) / PACK_BUDGET
@@ -2117,13 +2107,14 @@ def _u47_oracle() -> str:
     oracle=_u47_oracle(),
 )
 def u47_incontext_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    toks = doc_tokens(load_table(spark, "documents", sf_dir))
+    return incontext_packing(toks, load_table(spark, "embeddings", sf_dir))
+
+
+def incontext_packing(toks: DataFrame, embs: DataFrame) -> DataFrame:
+    """u47's rows over doc_tokens' frame and the embeddings table."""
     from pyspark.sql import Window as W
 
-    docs = load_table(spark, "documents", sf_dir)
-    embs = load_table(spark, "embeddings", sf_dir)
-    toks = docs.select(
-        "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("n_tokens")
-    )
     asg = kmeans_assign(embs, seed_centroids(embs)).select(
         F.col("vec_id").alias("doc_id"), F.col("cell_id").cast("bigint").alias("cell_id")
     )
@@ -2225,79 +2216,58 @@ def _packing_card_oracle() -> str:
     "lead reads to pick the batch constructor: crossing pollutes "
     "attention, splitting loses long-range structure, adjacency "
     "buys cross-document attention. Oracle composes the three "
-    "registered SQL strings verbatim; the Spark side calls the "
-    "registered operators and reduces each to summary aggregates — "
-    "the adjacency join is position-keyed corpus×corpus, pinned "
-    "shuffle_hash (d13 rule).",
+    "registered SQL strings verbatim; the Spark side builds one token "
+    "frame and one doc_id-order packing, shared by the overflow and "
+    "exact-split rows, and reduces each strategy to summary "
+    "aggregates — the adjacency join is position-keyed corpus×corpus, "
+    "pinned shuffle_hash (d13 rule).",
     oracle=_packing_card_oracle(),
 )
 def pipeline_packing_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    over = u9_sequence_packing(spark, sf_dir).agg(
-        F.count("*").cast("double").alias("n_docs"),
-        (F.max("bin_id") + 1).cast("double").alias("n_bins"),
-        F.sum(
-            F.when(F.col("bin_offset") + F.col("n_tokens") > PACK_BUDGET, 1).otherwise(0)
-        )
+    toks = doc_tokens(load_table(spark, "documents", sf_dir))
+    packed = pack_positions(toks, order_col="doc_id")
+    n_bins = (F.max("bin_id") + 1).cast("double").alias("n_bins")
+    crossers = (
+        F.sum(F.when(F.col("bin_offset") + F.col("n_tokens") > PACK_BUDGET, 1).otherwise(0))
         .cast("double")
-        .alias("boundary_crossers"),
+        .alias("boundary_crossers")
+    )
+    over = packed.agg(
+        F.count("*").cast("double").alias("n_docs"),
+        n_bins,
+        crossers,
         F.sum("n_tokens").cast("double").alias("total_tokens"),
     )
-    split = u19_packing_split(spark, sf_dir).transform(persist_once)
-    exact = split.agg(
-        F.countDistinct("doc_id").cast("double").alias("n_docs"),
-        (F.max("bin_id") + 1).cast("double").alias("n_bins"),
-        F.count("*").cast("double").alias("n_segments"),
-    ).crossJoin(
-        F.broadcast(
-            split.groupBy("doc_id")
-            .agg(F.count("*").alias("segs"))
-            .agg(
-                F.sum(F.when(F.col("segs") > 1, 1).otherwise(0))
-                .cast("double")
-                .alias("split_docs")
-            )
-        )
+    # u19 cuts a non-empty doc into one segment per bin from its first
+    # token's to its last token's, and empty docs move no start, so its
+    # summary comes off the same packing without the explode
+    last_bin = (
+        (F.col("bin_id") * PACK_BUDGET + F.col("bin_offset") + F.col("n_tokens") - 1)
+        / PACK_BUDGET
+    ).cast("bigint")
+    segs = last_bin - F.col("bin_id") + 1
+    exact = packed.filter(F.col("n_tokens") > 0).agg(
+        F.count("*").cast("double").alias("n_docs"),
+        (F.max(last_bin) + 1).cast("double").alias("n_bins"),
+        F.sum(segs).cast("double").alias("n_segments"),
+        F.sum(F.when(segs > 1, 1).otherwise(0)).cast("double").alias("split_docs"),
     )
-    icp = u47_incontext_packing(spark, sf_dir).transform(persist_once)
+    icp = incontext_packing(toks, load_table(spark, "embeddings", sf_dir)).transform(
+        persist_once
+    )
     a, b = icp.alias("a"), icp.alias("b")
-    adj = (
-        a.join(
-            b.hint("shuffle_hash"),
-            F.col("b.position") == F.col("a.position") + 1,
-        )
-        .agg(
-            F.round(
-                F.avg(
-                    F.when(F.col("a.cell_id") == F.col("b.cell_id"), 1.0).otherwise(
-                        0.0
-                    )
-                )
-                + 0.0,
-                6,
-            ).alias("same_cell_adjacency")
-        )
-    )
-    inc = icp.agg(
-        (F.max("bin_id") + 1).cast("double").alias("n_bins"),
-        F.sum(
-            F.when(F.col("bin_offset") + F.col("n_tokens") > PACK_BUDGET, 1).otherwise(0)
-        )
-        .cast("double")
-        .alias("boundary_crossers"),
-    ).crossJoin(F.broadcast(adj))
+    same = F.when(F.col("a.cell_id") == F.col("b.cell_id"), 1.0).otherwise(0.0)
+    adj = a.join(
+        b.hint("shuffle_hash"), F.col("b.position") == F.col("a.position") + 1
+    ).agg(F.round(F.avg(same) + 0.0, 6).alias("same_cell_adjacency"))
+    inc = icp.agg(n_bins, crossers).crossJoin(F.broadcast(adj))
     out = (
-        long_metrics(
-            over, "overflow", ["n_docs", "n_bins", "boundary_crossers", "total_tokens"]
+        long_metrics(over, "overflow", ["n_docs", "n_bins", "boundary_crossers", "total_tokens"])
+        .unionAll(
+            long_metrics(exact, "exact_split", ["n_docs", "n_bins", "n_segments", "split_docs"])
         )
         .unionAll(
-            long_metrics(
-                exact, "exact_split", ["n_docs", "n_bins", "n_segments", "split_docs"]
-            )
-        )
-        .unionAll(
-            long_metrics(
-                inc, "incontext", ["n_bins", "boundary_crossers", "same_cell_adjacency"]
-            )
+            long_metrics(inc, "incontext", ["n_bins", "boundary_crossers", "same_cell_adjacency"])
         )
     )
     return out.orderBy("family", "metric")

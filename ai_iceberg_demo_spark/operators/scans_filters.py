@@ -569,7 +569,11 @@ def s13_multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s14_expectation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, "lineitem", sf_dir)
+    return expectation_suite(load_table(spark, "lineitem", sf_dir))
+
+
+def expectation_suite(li: DataFrame) -> DataFrame:
+    """s14's per-expectation rows over the lineitem table."""
     s = li.agg(
         F.count("*").alias("n"),
         F.countDistinct("l_orderkey", "l_linenumber").alias("n_key"),
@@ -586,28 +590,17 @@ def s14_expectation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(~F.col("l_returnflag").isin("A", "N", "R"), 1)
         ).alias("n_flag_bad"),
     )
-
-    def row(name, observed, ok):
-        return s.select(
-            F.lit(name).alias("expectation"),
-            F.round(observed, 6).alias("observed"),
-            F.lit(1.0).alias("threshold"),
-            ok.alias("ok"),
-        )
-
-    n = F.col("n").cast("double")
-    return (
-        row("key_unique", F.col("n_key") / n, F.col("n_key") == F.col("n"))
-        .unionByName(row("not_null_rate", 1.0 - F.col("n_null") / n, F.col("n_null") == 0))
-        .unionByName(
-            row("quantity_in_bounds", 1.0 - F.col("n_qty_oob") / n, F.col("n_qty_oob") == 0)
-        )
-        .unionByName(
-            row("discount_in_bounds", 1.0 - F.col("n_disc_oob") / n, F.col("n_disc_oob") == 0)
-        )
-        .unionByName(
-            row("returnflag_domain", 1.0 - F.col("n_flag_bad") / n, F.col("n_flag_bad") == 0)
-        )
+    # one row per expectation off the one aggregate row: (observed, ok)
+    checks = {
+        "key_unique": ("n_key / n", "n_key = n"),
+        "not_null_rate": ("1D - n_null / n", "n_null = 0"),
+        "quantity_in_bounds": ("1D - n_qty_oob / n", "n_qty_oob = 0"),
+        "discount_in_bounds": ("1D - n_disc_oob / n", "n_disc_oob = 0"),
+        "returnflag_domain": ("1D - n_flag_bad / n", "n_flag_bad = 0"),
+    }
+    rows = ", ".join(f"'{k}', round({obs}, 6), 1D, {ok}" for k, (obs, ok) in checks.items())
+    return s.selectExpr(
+        f"stack({len(checks)}, {rows}) AS (expectation, observed, threshold, ok)"
     )
 
 
@@ -710,19 +703,20 @@ _S16_TARGET_BYTES = 128 * 1024 * 1024  # the classic 128 MiB target file
     """,
 )
 def s16_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, "documents", sf_dir)
-    widths = docs.select(
-        "source", "lang", (F.length("text") + F.lit(16)).alias("row_bytes")
-    )
+    return partition_plan(load_table(spark, "documents", sf_dir))
 
-    def by(col: str) -> DataFrame:
-        return (
-            widths.groupBy(F.col(col).alias("key"))
-            .agg(F.count("*").alias("n_rows"), F.sum("row_bytes").alias("n_bytes"))
-            .select(F.lit(col).alias("part_col"), "key", "n_rows", "n_bytes")
+
+def partition_plan(docs: DataFrame) -> DataFrame:
+    """s16's per-candidate-column rows over the documents table."""
+    # each row counts once under each candidate column: one groupBy
+    by_key = (
+        docs.selectExpr(
+            "stack(2, 'source', source, 'lang', lang) AS (part_col, key)",
+            "length(text) + 16 AS row_bytes",
         )
-
-    by_key = by("source").unionByName(by("lang"))
+        .groupBy("part_col", "key")
+        .agg(F.count("*").alias("n_rows"), F.sum("row_bytes").alias("n_bytes"))
+    )
     tgt = float(_S16_TARGET_BYTES)
     return (
         by_key.groupBy("part_col")
@@ -936,7 +930,11 @@ _S18_FILE_ROWS = 200  # simulated file granule (l_orderkey DIV this = file id; 8
     """,
 )
 def s18_zonemap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, "lineitem", sf_dir)
+    return zonemap_audit(load_table(spark, "lineitem", sf_dir))
+
+
+def zonemap_audit(li: DataFrame) -> DataFrame:
+    """s18's per-layout rows over the lineitem table."""
     filed = li.select(
         "l_orderkey",
         F.unix_timestamp("l_shipdate").cast("double").alias("d"),
@@ -983,23 +981,20 @@ def s18_zonemap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     k_skip = (F.col("zk_max") < F.col("k_from")) | (F.col("zk_min") > F.col("k_to"))
     d_skip = (F.col("zd_max") < F.col("d_from")) | (F.col("zd_min") > F.col("d_to"))
-    k_audit = zones.agg(
+    # both layouts' counts in one aggregate, stacked into a row each
+    audit = zones.agg(
         F.count("*").cast("bigint").alias("n_files"),
-        F.sum(F.when(k_skip, 1).otherwise(0)).cast("bigint").alias("n_skippable"),
-        F.sum(F.when(k_skip, F.col("k_hits")).otherwise(0))
-        .cast("bigint")
-        .alias("rows_lost_by_skip"),
-    ).select(F.lit("clustered_orderkey").alias("layout"), "*")
-    d_audit = zones.agg(
-        F.count("*").cast("bigint").alias("n_files"),
-        F.sum(F.when(d_skip, 1).otherwise(0)).cast("bigint").alias("n_skippable"),
-        F.sum(F.when(d_skip, F.col("d_hits")).otherwise(0))
-        .cast("bigint")
-        .alias("rows_lost_by_skip"),
-    ).select(F.lit("unclustered_shipdate").alias("layout"), "*")
+        F.sum(F.when(k_skip, 1).otherwise(0)).cast("bigint").alias("k_skip"),
+        F.sum(F.when(k_skip, F.col("k_hits")).otherwise(0)).cast("bigint").alias("k_lost"),
+        F.sum(F.when(d_skip, 1).otherwise(0)).cast("bigint").alias("d_skip"),
+        F.sum(F.when(d_skip, F.col("d_hits")).otherwise(0)).cast("bigint").alias("d_lost"),
+    ).selectExpr(
+        "n_files",
+        "stack(2, 'clustered_orderkey', k_skip, k_lost, 'unclustered_shipdate', d_skip, "
+        "d_lost) AS (layout, n_skippable, rows_lost_by_skip)",
+    )
     return (
-        k_audit.unionByName(d_audit)
-        .select(
+        audit.select(
             "layout",
             "n_files",
             "n_skippable",
@@ -1043,7 +1038,8 @@ _S19_RLE_MIN_RUN = 2.0  # avg run length above this → RLE on top
     "l_orderkey's ~4-row runs (lineitems of one order are adjacent "
     "in insertion order) make it the RLE poster child; l_partkey is "
     "plain (unique-ish, no runs); l_returnflag is dictionary. One "
-    "(bucket)-partitioned lag pass + per-column 1-row rollups.",
+    "(bucket)-partitioned lag pass flags all four columns, one 1-row "
+    "rollup counts them, and a stack emits a row per column.",
     oracle=f"""
         WITH filed AS (
             SELECT l_orderkey // 200 AS file_id,
@@ -1084,46 +1080,37 @@ _S19_RLE_MIN_RUN = 2.0  # avg run length above this → RLE on top
     """,
 )
 def s19_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return encoding_advisor(load_table(spark, "lineitem", sf_dir))
+
+
+def encoding_advisor(li: DataFrame) -> DataFrame:
+    """s19's per-column rows in one pass: one lag window in the total key
+    order flags new runs (rows tied under it are identical, so no rank
+    is needed), one aggregate counts all four columns, a stack splits
+    its row per column."""
     from pyspark.sql import Window as W
 
-    li = load_table(spark, "lineitem", sf_dir)
-    filed = li.select(
-        (F.col("l_orderkey") / 200).cast("bigint").alias("file_id"),
-        F.row_number()
-        .over(
-            W.partitionBy((F.col("l_orderkey") / 200).cast("bigint")).orderBy(
-                "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
-                "l_quantity", "l_extendedprice", "l_returnflag",
-                "l_linestatus", "l_shipdate",
-            )
-        )
-        .alias("pos"),
+    w = W.partitionBy((F.col("l_orderkey") / 200).cast("bigint")).orderBy(
+        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity",
+        "l_extendedprice", "l_returnflag", "l_linestatus", "l_shipdate",
+    )
+    vals = {c: F.col(c).cast("string") for c in _S19_COLS}
+    flagged = li.select(
+        *[v.alias(c) for c, v in vals.items()],
         *[
-            F.col(c).cast("string").alias(f"c_{c.split('_', 1)[1]}")
-            for c in _S19_COLS
+            F.when(v == F.lag(v).over(w), 0.0).otherwise(1.0).alias(f"r_{c}")
+            for c, v in vals.items()
         ],
     )
-    parts = []
-    w = W.partitionBy("file_id").orderBy("pos")
-    for c in _S19_COLS:
-        cc = f"c_{c.split('_', 1)[1]}"
-        flagged = filed.select(
-            cc,
-            F.when(F.col(cc) == F.lag(cc).over(w), 0.0)
-            .otherwise(1.0)
-            .alias("new_run"),
-        )
-        parts.append(
-            flagged.agg(
-                F.lit(c).alias("col"),
-                F.count("*").cast("double").alias("n"),
-                F.countDistinct(cc).cast("double").alias("n_distinct"),
-                F.sum("new_run").alias("n_runs"),
-            )
-        )
-    metrics = parts[0]
-    for p in parts[1:]:
-        metrics = metrics.unionByName(p)
+    totals = flagged.agg(
+        F.count("*").cast("double").alias("n"),
+        *[F.countDistinct(c).cast("double").alias(f"d_{c}") for c in _S19_COLS],
+        *[F.sum(f"r_{c}").alias(f"r_{c}") for c in _S19_COLS],
+    )
+    rows = ", ".join(f"'{c}', d_{c}, r_{c}" for c in _S19_COLS)
+    metrics = totals.selectExpr(
+        "n", f"stack({len(_S19_COLS)}, {rows}) AS (col, n_distinct, n_runs)"
+    )
     ratio = F.col("n_distinct") / F.col("n")
     run_len = F.col("n") / F.col("n_runs")
     return metrics.select(

@@ -32,6 +32,7 @@ from ai_iceberg_demo_spark.functions.text import (
     _HTML_FRAME_SQL,
     _HTML_STRIP_SQL,
     bpe_token_count,
+    decontamination,
     fingerprint,
     html_frame_col,
     html_strip_col,
@@ -41,6 +42,7 @@ from ai_iceberg_demo_spark.operators.sampling import (
     _SHUFFLE_EPOCH,
     MIXTURE_BUDGET_FRAC,
     PACK_BUDGET,
+    doc_tokens,
     epoch_shuffle_positions,
     hash_pct,
     mixture_rates,
@@ -231,31 +233,23 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pipeline_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ai_iceberg_demo_spark.functions.text import t17_decontamination
-
     docs = load_table(spark, "documents", sf_dir)
     corpus = docs.filter(F.col("doc_id") % 10 != 3)
 
     # 1. decontaminate: t17's flag list is tiny → broadcast anti-join
-    flagged = t17_decontamination(spark, sf_dir).select("doc_id")
+    flagged = decontamination(docs).select("doc_id")
     clean = corpus.join(F.broadcast(flagged), "doc_id", "left_anti")
 
     # 2. language + quality floor — map-side, fuses into the scan.
     # persist: kept feeds both the rate aggregate and the sampler (the
     # first diamond), and everything downstream — without it the whole
     # decontamination subtree re-executes per consumer.
-    kept = (
+    kept = doc_tokens(
         clean.filter(
             (F.col("text").contains("the ") | F.col("text").startswith("the "))
             & (quality_score(F.col("text")) >= QUALITY_MIN)
         )
-        .select(
-            "doc_id",
-            "source",
-            F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
-        )
-        .transform(persist_once)
-    )
+    ).transform(persist_once)
 
     # 3. mixture-planned per-source sampling (u10b's rate rule via the
     # shared mixture_rates helper): tiny rate table broadcasts
@@ -366,15 +360,13 @@ _EVAL_N = 8  # word n-gram width (t17's bar)
 def pipeline_eval_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from ai_iceberg_demo_spark.functions.text import fingerprint, t17_decontamination
-    from ai_iceberg_demo_spark.operators.sampling import hash_pct
     from ai_iceberg_demo_spark.vector.clustering import kmeans_assign, seed_centroids
     from ai_iceberg_demo_spark.vector.similarity import as_double, cos_normed, with_norm
 
     docs = load_table(spark, "documents", sf_dir)
     emb = load_table(spark, "embeddings", sf_dir)
 
-    lex_flagged = t17_decontamination(spark, sf_dir).select("doc_id")
+    lex_flagged = decontamination(docs).select("doc_id")
 
     base = emb.select("vec_id", as_double("embedding").alias("embedding"))
     bench = with_norm(base.filter(F.col("vec_id") % 10 == 3), "embedding", "bv", "bn")
@@ -565,19 +557,18 @@ def _governance_oracle() -> str:
     "must go (m7) — one verdict table a release manager reads before "
     "publishing a dataset. The oracle REUSES the constituent "
     "operators' exact oracle strings as subqueries, so the "
-    "composition can never drift from its parts. Cost = the three "
-    "parts' scans; nothing new moves.",
+    "composition can never drift from its parts. The Spark side loads "
+    "lineitem and events once and passes each to the parts' builders "
+    "that read it; cost = the three parts' scans, nothing new moves.",
     oracle=_governance_oracle(),
 )
 def pipeline_governance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ai_iceberg_demo_spark.operators.mutations import (
-        m7_retention_audit,
-        m13_k_anonymity,
-    )
-    from ai_iceberg_demo_spark.operators.scans_filters import s14_expectation_suite
+    from ai_iceberg_demo_spark.operators.mutations import k_anonymity, retention_audit
+    from ai_iceberg_demo_spark.operators.scans_filters import expectation_suite
 
+    ev = load_table(spark, "events", sf_dir)
     s14 = (
-        s14_expectation_suite(spark, sf_dir)
+        expectation_suite(load_table(spark, "lineitem", sf_dir))
         .groupBy(F.col("expectation").alias("check_name"))
         .agg(
             F.sum(F.when(F.col("ok"), 0).otherwise(1)).cast("bigint").alias("n_violations")
@@ -585,13 +576,13 @@ def pipeline_governance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("expectations").alias("family"), "check_name", "n_violations")
     )
     m13 = (
-        m13_k_anonymity(spark, sf_dir)
+        k_anonymity(ev)
         .filter(F.col("action") != "keep")
         .groupBy(F.col("action").alias("check_name"))
         .agg(F.count("*").cast("bigint").alias("n_violations"))
         .select(F.lit("k_anonymity").alias("family"), "check_name", "n_violations")
     )
-    m7 = m7_retention_audit(spark, sf_dir).agg(
+    m7 = retention_audit(ev).agg(
         F.sum(F.col("n_ttl_dropped") + F.col("n_erased"))
         .cast("bigint")
         .alias("n_violations")
@@ -1413,19 +1404,21 @@ def _storage_oracle() -> str:
     "sort/z-order per layout), and encoding picks (s19 — per-column "
     "run lengths with the dict/rle/plain verdict). Oracle reuses "
     "the three parts' exact SQL as subqueries (the card "
-    "discipline); the Spark side calls the registered operators and "
-    "reshapes. Everything is footer-stat-sized aggregates — the "
-    "whole card reads at planning cost.",
+    "discipline); the Spark side loads documents and lineitem once, "
+    "passes each to the parts' builders that read it, and reshapes. "
+    "Everything is footer-stat-sized aggregates — the whole card "
+    "reads at planning cost.",
     oracle=_storage_oracle(),
 )
 def pipeline_storage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_iceberg_demo_spark.operators.scans_filters import (
-        s16_partition_plan,
-        s18_zonemap_audit,
-        s19_encoding_advisor,
+        encoding_advisor,
+        partition_plan,
+        zonemap_audit,
     )
 
-    s16 = s16_partition_plan(spark, sf_dir).select(
+    li = load_table(spark, "lineitem", sf_dir)
+    s16 = partition_plan(load_table(spark, "documents", sf_dir)).select(
         F.lit("partitioning").alias("family"),
         F.col("part_col").alias("item"),
         F.round("skew_ratio", 4).cast("double").alias("value"),
@@ -1434,7 +1427,7 @@ def pipeline_storage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("ok")
         .alias("verdict"),
     )
-    s18 = s18_zonemap_audit(spark, sf_dir).select(
+    s18 = zonemap_audit(li).select(
         F.lit("zone_maps").alias("family"),
         F.col("layout").alias("item"),
         F.col("skip_rate").cast("double").alias("value"),
@@ -1442,7 +1435,7 @@ def pipeline_storage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("sort_or_zorder")
         .alias("verdict"),
     )
-    s19 = s19_encoding_advisor(spark, sf_dir).select(
+    s19 = encoding_advisor(li).select(
         F.lit("encodings").alias("family"),
         F.col("col").alias("item"),
         F.col("avg_run_len").cast("double").alias("value"),

@@ -79,35 +79,14 @@ def test_pair_overlaps_match_all_overlaps_on_band_candidates(spark):
     assert got == want
 
 
-#: registered queries that still call another registered query through
-#: its (spark, sf_dir) function: the mutation and sampling chains and
-#: the cards that wrap other modules' parts. The list may only shrink.
-_REGISTERED_CALLERS = {
-    "m6b_asof_dimension",
-    "m8b_changelog_apply",
-    "m12_maintenance_plan",
-    "u10b_mixture_apply",
-    "u11b_epoch_shuffle_2",
-    "u41_exact_stratified_sample",
-    "u46_license_propagation",
-    "pipeline_packing_card",
-    "pipeline_governance",
-    "pipeline_storage",
-    "pipeline_training_prep",
-    "pipeline_eval_prep",
-    "pipeline_multimodal_prep",
-}
-
-
 def test_dedup_queries_call_no_registered_query():
     """Composite queries build their substrate through shared builders
     (the shingle/band builders, the eval sample, the events family's
-    side-tagged, labeled-score and forecast-split frames) and pass it
-    in, instead of calling another registered query through its
+    frames, the sampling family's token frame, the mutation, storage
+    and governance parts' table-taking builders) and pass it in,
+    instead of calling another registered query through its
     (spark, sf_dir) function and relying on CacheManager to match the
-    plan. Over every module of the registry, the queries that still do
-    are exactly _REGISTERED_CALLERS: a new caller fails, and so does a
-    listed name that no longer calls, so the list can only shrink."""
+    plan. No registered query in any registry module calls another."""
     import ast
     import importlib
     import inspect
@@ -125,10 +104,7 @@ def test_dedup_queries_call_no_registered_query():
                     callee = getattr(node.func, "id", getattr(node.func, "attr", None))
                     if callee in registered and callee != fn.name:
                         callers.setdefault(fn.name, set()).add(callee)
-    assert set(callers) == _REGISTERED_CALLERS, {
-        "new": {k: callers[k] for k in set(callers) - _REGISTERED_CALLERS},
-        "stale": _REGISTERED_CALLERS - set(callers),
-    }
+    assert callers == {}
 
 
 def test_exact_substring_removal_invariants(spark):

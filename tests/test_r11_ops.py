@@ -1,10 +1,8 @@
 """Round-11 operator pins: the fixed-unroll logistic-regression
-trainer (t108), in-context packing (u47), and the mutual-kNN k-core
-gate (g10). The hash oracle
+trainer (t108) and the mutual-kNN k-core gate (g10). The hash oracle
 proves engine≡DuckDB at the fixture SFs; these pin the SEMANTICS the
-hash can't see — factor exactness, training progress, ordering
-properties, and that the peel cascade (not just the first sweep) is
-exercised."""
+hash can't see — factor exactness, training progress, and that the
+peel cascade (not just the first sweep) is exercised."""
 
 from __future__ import annotations
 
@@ -46,60 +44,6 @@ def test_t108_weights_point_the_right_way(spark):
     assert last.w_len > 0
     assert abs(last.w_len) >= abs(last.w_stop)
     assert last.w_intercept < 0
-
-
-# ---------------------------------------------------------------------------
-# u47: in-context packing
-# ---------------------------------------------------------------------------
-
-
-def test_u47_positions_are_a_dense_cluster_major_permutation(spark):
-    """Positions must be exactly 0..N-1 with each k-means cell's
-    documents CONTIGUOUS in the order (that is the whole point:
-    related docs share context windows)."""
-    rows = _q("u47_incontext_packing")(spark, SF_DIR).collect()
-    pos = sorted(r.position for r in rows)
-    assert pos == list(range(len(rows)))
-    by_cell: dict[int, list[int]] = {}
-    for r in rows:
-        by_cell.setdefault(r.cell_id, []).append(r.position)
-    for cell, ps in by_cell.items():
-        assert max(ps) - min(ps) + 1 == len(ps), f"cell {cell} not contiguous"
-
-
-def test_u47_packs_related_docs_adjacent_vs_u9_baseline(spark):
-    """The ICP claim: adjacent positions share a cluster far more
-    often than doc_id order does. With 8 cells the doc_id-order
-    baseline is ~1/8 of adjacent pairs; cluster-major order makes ALL
-    adjacent pairs same-cell except the <= 7 cell boundaries."""
-    rows = _q("u47_incontext_packing")(spark, SF_DIR).collect()
-    in_order = sorted(rows, key=lambda r: r.position)
-    same = sum(
-        a.cell_id == b.cell_id for a, b in zip(in_order, in_order[1:])
-    )
-    n_pairs = len(rows) - 1
-    assert same >= n_pairs - 7
-    by_id = sorted(rows, key=lambda r: r.doc_id)
-    base = sum(a.cell_id == b.cell_id for a, b in zip(by_id, by_id[1:]))
-    assert same / n_pairs > 2 * (base / n_pairs), "no adjacency gain over doc_id order"
-
-
-def test_u47_bins_respect_budget_and_running_sum(spark):
-    """bin layout invariants shared with u9: offsets stay inside the
-    2048 budget and the (bin, offset) sequence is the running sum of
-    token counts in position order."""
-    from ai_iceberg_demo_spark.operators.sampling import PACK_BUDGET
-
-    rows = sorted(
-        _q("u47_incontext_packing")(spark, SF_DIR).collect(),
-        key=lambda r: r.position,
-    )
-    run = 0
-    for r in rows:
-        assert 0 <= r.bin_offset < PACK_BUDGET
-        assert r.bin_id == run // PACK_BUDGET
-        assert r.bin_offset == run % PACK_BUDGET
-        run += r.n_tokens
 
 
 # ---------------------------------------------------------------------------
@@ -305,32 +249,6 @@ def test_t112_monotone_in_k_on_common_tasks(spark):
     for a, b in zip(rows, rows[1:]):
         if a.n_tasks == b.n_tasks and a.n_tasks > 0:
             assert b.mean_pass_at_k >= a.mean_pass_at_k - 1e-9
-
-
-# ---------------------------------------------------------------------------
-# pipeline_packing_card
-# ---------------------------------------------------------------------------
-
-
-def test_packing_card_strategy_tradeoffs_hold(spark):
-    """The card must reproduce the strategies' defining trade-offs:
-    exact_split has ZERO boundary crossing by construction (it has no
-    crossers metric — its fragment count carries the cost instead, so
-    n_segments >= n_docs with split_docs making up the difference);
-    overflow and incontext pack the SAME token stream (equal
-    n_bins — both are the running-sum layout, just reordered); and
-    incontext's same-cell adjacency exceeds the 1/k random baseline."""
-    rows = _q("pipeline_packing_card")(spark, SF_DIR).collect()
-    assert len(rows) == 11
-    card = {(r.family, r.metric): r.value for r in rows}
-    assert card[("exact_split", "n_segments")] >= card[("exact_split", "n_docs")]
-    assert (
-        card[("exact_split", "n_segments")] - card[("exact_split", "n_docs")]
-        >= card[("exact_split", "split_docs")]
-    )
-    assert card[("overflow", "n_bins")] == card[("incontext", "n_bins")]
-    assert card[("incontext", "same_cell_adjacency")] > 1.0 / 8 * 2
-    assert card[("overflow", "boundary_crossers")] > 0  # the cost it trades
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
 """Named invariants for the late-r6 operators (sketches, causal,
-layout, graph, features, chunking, privacy, LM scoring) — properties
+graph, features, chunking, privacy, LM scoring) — properties
 beyond the oracle hash, which tests/test_queries_oracle.py covers."""
 
 from __future__ import annotations
@@ -19,15 +19,6 @@ def test_a22_kmv_error_within_sketch_bound(spark):
     for _, r in out.iterrows():
         se = math.sqrt(max(r.exact_jaccard * (1 - r.exact_jaccard), 0.01) / _KMV_K)
         assert r.abs_err <= 4 * se, (r.type_a, r.type_b, r.abs_err, se)
-
-
-def test_s18_clustered_layout_skips_and_is_lossless(spark):
-    from ai_iceberg_demo_spark.operators.scans_filters import s18_zonemap_audit
-
-    out = s18_zonemap_audit(spark, SF_DIR).toPandas().set_index("layout")
-    assert out.loc["clustered_orderkey", "skip_rate"] > 0.5
-    assert out.loc["unclustered_shipdate", "skip_rate"] == 0.0
-    assert out.skipping_is_lossless.all()
 
 
 def test_t74_did_recovers_planted_effect_where_naive_does_not(spark):

@@ -1,9 +1,7 @@
 """Named invariants for the last r6 additions (band join, PSI, PRF,
-UDTF, apportionment, feature-store TTL, experiment card)."""
+UDTF, feature-store TTL, experiment card)."""
 
 from __future__ import annotations
-
-import math
 
 import pandas as pd
 
@@ -56,19 +54,6 @@ def test_x6_udtf_rowcount_matches_explode_arithmetic(spark):
     )
     assert len(out) == expect
     assert (out.n_tokens <= 16).all()
-
-
-def test_u39_allocations_hit_the_budget_exactly(spark):
-    from ai_iceberg_demo_spark.operators.sampling import (
-        _U39_BUDGET,
-        u39_hamilton_allocation,
-    )
-
-    out = u39_hamilton_allocation(spark, SF_DIR).toPandas()
-    assert out.allocated.sum() == _U39_BUDGET
-    assert out.sum_check.all()
-    # every allocation is floor(quota) or floor(quota)+1
-    assert ((out.allocated - out.quota.apply(math.floor)).isin([0, 1])).all()
 
 
 def test_t89_ttl_is_enforced_and_age_null_iff_no_prior(spark):

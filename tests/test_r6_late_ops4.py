@@ -1,5 +1,5 @@
 """Named invariants for the wrap-phase r6 operators (streaming top-k,
-sequential testing, exact-n sampling, range-partitioner audit)."""
+sequential testing, range-partitioner audit)."""
 
 from __future__ import annotations
 
@@ -51,18 +51,6 @@ def test_t94_null_never_stops_and_planted_stays_stopped(spark):
     assert s == sorted(s, key=lambda x: (x,)) or s.index(True) >= 0
     first = s.index(True)
     assert all(s[first:])
-
-
-def test_u41_realizes_the_u39_plan_exactly(spark):
-    from ai_iceberg_demo_spark.operators.sampling import (
-        _U39_BUDGET,
-        u41_exact_stratified_sample,
-    )
-
-    out = u41_exact_stratified_sample(spark, SF_DIR).toPandas()
-    assert out.per_source_exact.all() and out.total_exact.all()
-    assert out.n_sampled.sum() == _U39_BUDGET
-    assert (out.allocated == out.n_sampled).all()
 
 
 def test_o8_partitions_cover_everything_and_skew_is_the_max(spark):

@@ -140,41 +140,6 @@ def test_x7_plans_arrow_eval_never_batch_eval(spark):
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_license_propagates_across_bin_spans(spark):
-    """u46: a doc that straddles a bin boundary must bind BOTH bins —
-    recompute the truth in Python from u9's packing and compare every
-    bin's max tier and doc count."""
-    import hashlib
-
-    from ai_iceberg_demo_spark.operators.sampling import (
-        PACK_BUDGET,
-        u9_sequence_packing,
-        u46_license_propagation,
-    )
-
-    src = {
-        r["doc_id"]: r["source"]
-        for r in load_table(spark, "documents", SF_DIR).select("doc_id", "source").collect()
-    }
-    tier = lambda s: int(hashlib.md5(s.encode()).hexdigest()[:2], 16) % 3
-    bins = {}
-    spans = 0
-    for r in u9_sequence_packing(spark, SF_DIR).collect():
-        start = r["bin_id"] * PACK_BUDGET + r["bin_offset"]
-        end_bin = (start + r["n_tokens"] - 1) // PACK_BUDGET
-        if end_bin > r["bin_id"]:
-            spans += 1
-        for b in range(r["bin_id"], end_bin + 1):
-            bins.setdefault(b, []).append(tier(src[r["doc_id"]]))
-    assert spans > 0, "fixture must exercise the bin-spanning case"
-    got = {r["bin_id"]: r for r in u46_license_propagation(spark, SF_DIR).collect()}
-    assert set(got) == set(bins)
-    for b, tiers in bins.items():
-        assert got[b]["max_tier"] == max(tiers), b
-        assert got[b]["n_docs"] == len(tiers), b
-        assert got[b]["license"] == ["permissive", "attribution", "restricted"][max(tiers)]
-
-
 def test_bpe_training_curve_is_monotone_and_consistent_with_merges(spark):
     """t99: token totals strictly decrease as merges land (every learned
     merge fires somewhere), compression is cumulative-monotone, and

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from ai_iceberg_demo_spark.operators.sampling import hash_pct
@@ -105,14 +107,17 @@ def test_epoch_shuffle_is_a_permutation(spark):
 
 def test_epoch_shuffles_are_independent_permutations(spark):
     """Two epochs must give uncorrelated orders: Spearman rank
-    correlation between epoch-1 and epoch-2 positions ≈ 0 (md5 re-keyed
-    by the epoch prefix), while each epoch alone is a full permutation.
-    |rho| < 0.1 puts us ~25 sigma from a same-order leak at n≈6k
-    (sigma = 1/sqrt(n-1) ≈ 0.013)."""
-    from ai_iceberg_demo_spark.operators.sampling import u11_epoch_shuffle
+    correlation between u11's epoch-1 and u11b's epoch-2 positions ≈ 0
+    (md5 re-keyed by the epoch prefix), while each epoch alone is a
+    full permutation. |rho| < 0.1 puts us ~25 sigma from a same-order
+    leak at n≈6k (sigma = 1/sqrt(n-1) ≈ 0.013)."""
+    from ai_iceberg_demo_spark.operators.sampling import (
+        u11_epoch_shuffle,
+        u11b_epoch_shuffle_2,
+    )
 
-    e1 = u11_epoch_shuffle(spark, SF_DIR, epoch=1).withColumnRenamed("position", "p1")
-    e2 = u11_epoch_shuffle(spark, SF_DIR, epoch=2).withColumnRenamed("position", "p2")
+    e1 = u11_epoch_shuffle(spark, SF_DIR).withColumnRenamed("position", "p1")
+    e2 = u11b_epoch_shuffle_2(spark, SF_DIR).withColumnRenamed("position", "p2")
     stats = e1.join(e2, "doc_id").agg(
         F.corr("p1", "p2").alias("rho"), F.count("*").alias("n")
     ).first()
@@ -463,3 +468,161 @@ def test_budget_waterfill_reaches_fixpoint_and_conserves_budget(spark):
     assert all(r["alloc"] == _WF_CAP for r in capped)
     assert all(r["alloc"] <= _WF_CAP + 1e-6 for r in rows)
     assert abs(sum(r["alloc"] for r in rows) - _WF_BUDGET) < 0.01
+
+
+def test_u47_positions_are_a_dense_cluster_major_permutation(spark):
+    """Positions must be exactly 0..N-1 with each k-means cell's
+    documents CONTIGUOUS in the order (that is the whole point:
+    related docs share context windows)."""
+    from ai_iceberg_demo_spark.operators.sampling import u47_incontext_packing
+
+    rows = u47_incontext_packing(spark, SF_DIR).collect()
+    pos = sorted(r.position for r in rows)
+    assert pos == list(range(len(rows)))
+    by_cell: dict[int, list[int]] = {}
+    for r in rows:
+        by_cell.setdefault(r.cell_id, []).append(r.position)
+    for cell, ps in by_cell.items():
+        assert max(ps) - min(ps) + 1 == len(ps), f"cell {cell} not contiguous"
+
+
+def test_u47_packs_related_docs_adjacent_vs_u9_baseline(spark):
+    """The ICP claim: adjacent positions share a cluster far more
+    often than doc_id order does. With 8 cells the doc_id-order
+    baseline is ~1/8 of adjacent pairs; cluster-major order makes ALL
+    adjacent pairs same-cell except the <= 7 cell boundaries."""
+    from ai_iceberg_demo_spark.operators.sampling import u47_incontext_packing
+
+    rows = u47_incontext_packing(spark, SF_DIR).collect()
+    in_order = sorted(rows, key=lambda r: r.position)
+    same = sum(
+        a.cell_id == b.cell_id for a, b in zip(in_order, in_order[1:])
+    )
+    n_pairs = len(rows) - 1
+    assert same >= n_pairs - 7
+    by_id = sorted(rows, key=lambda r: r.doc_id)
+    base = sum(a.cell_id == b.cell_id for a, b in zip(by_id, by_id[1:]))
+    assert same / n_pairs > 2 * (base / n_pairs), "no adjacency gain over doc_id order"
+
+
+def test_u47_bins_respect_budget_and_running_sum(spark):
+    """bin layout invariants shared with u9: offsets stay inside the
+    2048 budget and the (bin, offset) sequence is the running sum of
+    token counts in position order."""
+    from ai_iceberg_demo_spark.operators.sampling import (
+        PACK_BUDGET,
+        u47_incontext_packing,
+    )
+
+    rows = sorted(
+        u47_incontext_packing(spark, SF_DIR).collect(),
+        key=lambda r: r.position,
+    )
+    run = 0
+    for r in rows:
+        assert 0 <= r.bin_offset < PACK_BUDGET
+        assert r.bin_id == run // PACK_BUDGET
+        assert r.bin_offset == run % PACK_BUDGET
+        run += r.n_tokens
+
+
+def test_packing_card_strategy_tradeoffs_hold(spark):
+    """The card must reproduce the strategies' defining trade-offs:
+    exact_split has ZERO boundary crossing by construction (it has no
+    crossers metric — its fragment count carries the cost instead, so
+    n_segments >= n_docs with split_docs making up the difference);
+    overflow and incontext pack the SAME token stream (equal
+    n_bins — both are the running-sum layout, just reordered); and
+    incontext's same-cell adjacency exceeds the 1/k random baseline."""
+    from ai_iceberg_demo_spark.operators.sampling import pipeline_packing_card
+
+    rows = pipeline_packing_card(spark, SF_DIR).collect()
+    assert len(rows) == 11
+    card = {(r.family, r.metric): r.value for r in rows}
+    assert card[("exact_split", "n_segments")] >= card[("exact_split", "n_docs")]
+    assert (
+        card[("exact_split", "n_segments")] - card[("exact_split", "n_docs")]
+        >= card[("exact_split", "split_docs")]
+    )
+    assert card[("overflow", "n_bins")] == card[("incontext", "n_bins")]
+    assert card[("incontext", "same_cell_adjacency")] > 1.0 / 8 * 2
+    assert card[("overflow", "boundary_crossers")] > 0  # the cost it trades
+
+
+def test_u39_allocations_hit_the_budget_exactly(spark):
+    from ai_iceberg_demo_spark.operators.sampling import (
+        _U39_BUDGET,
+        u39_hamilton_allocation,
+    )
+
+    out = u39_hamilton_allocation(spark, SF_DIR).toPandas()
+    assert out.allocated.sum() == _U39_BUDGET
+    assert out.sum_check.all()
+    # every allocation is floor(quota) or floor(quota)+1
+    assert ((out.allocated - out.quota.apply(math.floor)).isin([0, 1])).all()
+
+
+def test_u41_realizes_the_u39_plan_exactly(spark):
+    from ai_iceberg_demo_spark.operators.sampling import (
+        _U39_BUDGET,
+        u41_exact_stratified_sample,
+    )
+
+    out = u41_exact_stratified_sample(spark, SF_DIR).toPandas()
+    assert out.per_source_exact.all() and out.total_exact.all()
+    assert out.n_sampled.sum() == _U39_BUDGET
+    assert (out.allocated == out.n_sampled).all()
+
+
+def test_license_propagates_across_bin_spans(spark):
+    """u46: a doc that straddles a bin boundary must bind BOTH bins —
+    recompute the truth in Python from u9's packing and compare every
+    bin's max tier and doc count."""
+    import hashlib
+
+    from ai_iceberg_demo_spark.operators.sampling import (
+        PACK_BUDGET,
+        u9_sequence_packing,
+        u46_license_propagation,
+    )
+
+    src = {
+        r["doc_id"]: r["source"]
+        for r in load_table(spark, "documents", SF_DIR).select("doc_id", "source").collect()
+    }
+    tier = lambda s: int(hashlib.md5(s.encode()).hexdigest()[:2], 16) % 3
+    bins = {}
+    spans = 0
+    for r in u9_sequence_packing(spark, SF_DIR).collect():
+        start = r["bin_id"] * PACK_BUDGET + r["bin_offset"]
+        end_bin = (start + r["n_tokens"] - 1) // PACK_BUDGET
+        if end_bin > r["bin_id"]:
+            spans += 1
+        for b in range(r["bin_id"], end_bin + 1):
+            bins.setdefault(b, []).append(tier(src[r["doc_id"]]))
+    assert spans > 0, "fixture must exercise the bin-spanning case"
+    got = {r["bin_id"]: r for r in u46_license_propagation(spark, SF_DIR).collect()}
+    assert set(got) == set(bins)
+    for b, tiers in bins.items():
+        assert got[b]["max_tier"] == max(tiers), b
+        assert got[b]["n_docs"] == len(tiers), b
+        assert got[b]["license"] == ["permissive", "attribution", "restricted"][max(tiers)]
+
+
+def test_u46_plan_holds_only_the_packing_join(spark):
+    """u46 packs with ``source`` riding along from the token frame, so
+    its plan joins exactly what u9's does — pack_positions' broadcast
+    of the shard offsets — and has no packed ⋈ documents re-join
+    (corpus × corpus at scale)."""
+    from tests.test_plans import plan_of
+
+    joins = ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+             "BroadcastNestedLoopJoin", "CartesianProduct")
+
+    def join_counts(name):
+        plan = plan_of(spark, name, "simple")
+        return {j: plan.count(j) for j in joins}
+
+    u46 = join_counts("u46_license_propagation")
+    assert u46 == join_counts("u9_sequence_packing")
+    assert u46["BroadcastHashJoin"] == 1 and sum(u46.values()) == 1, u46
