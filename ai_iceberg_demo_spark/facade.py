@@ -147,9 +147,7 @@ class ConversationMemory:
         return self.conversations.sparkSession is not None
 
 
-def _append_once(
-    rows: DataFrame, table: str, count, bucket_by: tuple = ()
-) -> int:
+def _append_once(rows: DataFrame, table: str, count) -> int:
     """Append ``rows`` to ``table`` computing them ONCE: an eager
     ``localCheckpoint`` runs the caller's batch, gate, anti-join and
     hashing in one job, the count and the append read the checkpoint,
@@ -159,19 +157,31 @@ def _append_once(
     ``table`` (SCALE.md, r4), and the checkpoint keeps AQE's coalesced
     partitions, where a persisted plan keeps every shuffle partition
     and writes a file per partition (a 4-id tombstone batch: 3 files
-    instead of 1). Returns ``count(rows)``; an empty batch appends
+    instead of 1). ``INSERT INTO … BY NAME`` writes with the table's
+    own bucketing. Returns ``count(rows)``; an empty batch appends
     nothing."""
     rows = rows.localCheckpoint(eager=True)
     try:
         n = count(rows)
         if n:
-            writer = rows.write.format("parquet").mode("append")
-            if bucket_by:
-                writer = writer.bucketBy(*bucket_by)
-            writer.saveAsTable(table)
+            rows.sparkSession.sql(f"INSERT INTO {table} BY NAME SELECT * FROM {{rows}}", rows=rows)
         return n
     finally:
         release_checkpoint(rows)
+
+
+def index_properties(spark: SparkSession, name: str) -> tuple[str, dict]:
+    """``(kind, params)`` of index ``name``, as ``create_vector_index``
+    stored them in its table properties: lsh params are
+    ``build_lsh_index``'s keywords (n_tables, n_planes, seed, dim), ivf
+    params n_cells, n_probe, n_iter and dim. ``SHOW TBLPROPERTIES``
+    reads the catalog and runs no job. Raises ValueError when the index
+    does not exist — checked first, since a missing table would log a
+    Java stack trace."""
+    if not spark.catalog.tableExists(name):
+        raise ValueError(f"vector index {name!r} does not exist — create_vector_index first")
+    props = {r["key"]: r["value"] for r in spark.sql(f"SHOW TBLPROPERTIES {name}").collect()}
+    return props.pop("kind"), {k: int(v) for k, v in props.items()}
 
 
 class VectorRAG:
@@ -218,12 +228,14 @@ class VectorRAG:
     ) -> bool:
         """M5: ``CREATE VECTOR INDEX IF NOT EXISTS`` (neo4j_rag.py:144-157).
 
-        Two index kinds, both persisted as catalog tables clustered by
-        their probe key plus a one-row ``{name}__meta`` table so probes
-        rebuild identical parameters:
+        Two index kinds, both persisted as one catalog table clustered
+        by its probe key, its parameters stored as table properties
+        (``index_properties``) so probes rebuild identical parameters,
+        plus an empty ``{name}__tombstones`` table for ``delete_vectors``:
 
         - ``lsh``: random-hyperplane bucket relation (build_lsh_index),
-          bucketed by (table, bucket) — a probe reads L point buckets;
+          bucketed by (table, bucket) — a probe reads L point buckets,
+          and each row carries its embedding for the rerank;
         - ``ivf``: k-means-trained cells (clustering.kmeans_train →
           assign_cells), the assignment table bucketed by cell_id and
           the k×dim centroid table stored as ``{name}__centroids`` —
@@ -241,7 +253,7 @@ class VectorRAG:
             # IF NOT EXISTS only short-circuits for the SAME kind — a
             # caller asking for ivf over an existing lsh index would
             # otherwise silently probe a different index type.
-            existing = spark.table(f"{name}__meta").collect()[0]["kind"]
+            existing, _ = index_properties(spark, name)
             if existing != kind:
                 raise ValueError(
                     f"vector index {name!r} already exists with kind "
@@ -259,44 +271,40 @@ class VectorRAG:
             self.embeddings, dim=dim, norm_z=qa_norm_z
         )
         quarantined.createOrReplaceTempView(f"{name}__quarantine")
-        # Write order = commit protocol: auxiliary tables (meta,
-        # centroids) land FIRST with overwrite, the probed main table
-        # LAST with errorifexists. tableExists(name) is the existence
-        # check, so a failure mid-create leaves only overwritable aux
-        # tables behind and the next create call simply retries —
-        # never a "exists but unprobeable" index.
+        # Write order = commit protocol: auxiliary tables (centroids,
+        # the empty tombstones) land FIRST, replacing any leftover, the
+        # probed main table LAST, parameters included, by one CREATE
+        # TABLE … AS SELECT that fails if it exists. tableExists(name)
+        # is the existence check, so a failure mid-create leaves only
+        # replaceable aux tables behind and the next create call simply
+        # retries — never a "exists but unprobeable" index.
+        tomb = f"{name}__tombstones"
+        spark.sql(f"DROP TABLE IF EXISTS {tomb}")
+        spark.sql(f"CREATE TABLE {tomb} (vec_id BIGINT) USING parquet")
         if kind == "lsh":
             from ai_iceberg_demo_spark.vector.similarity import build_lsh_index
 
-            meta = spark.createDataFrame(
-                [(kind, n_tables, n_planes, seed, dim)],
-                "kind string, n_tables int, n_planes int, seed int, dim int",
-            )
-            meta.write.format("parquet").mode("overwrite").saveAsTable(f"{name}__meta")
-            index = build_lsh_index(
-                vectors, n_tables=n_tables, n_planes=n_planes, seed=seed, dim=dim
-            )
-            index.write.format("parquet").mode("errorifexists").bucketBy(
-                16, "t", "b"
-            ).saveAsTable(name)
+            params = {"n_tables": n_tables, "n_planes": n_planes, "seed": seed, "dim": dim}
+            rows = build_lsh_index(vectors, **params)
+            clustered = "(t, b) INTO 16 BUCKETS"
         else:
             from ai_iceberg_demo_spark.vector.clustering import kmeans_train
             from ai_iceberg_demo_spark.vector.similarity import assign_cells
 
-            meta = spark.createDataFrame(
-                [(kind, n_cells, n_probe, n_iter, dim)],
-                "kind string, n_cells int, n_probe int, n_iter int, dim int",
-            )
-            meta.write.format("parquet").mode("overwrite").saveAsTable(f"{name}__meta")
+            params = {"n_cells": n_cells, "n_probe": n_probe, "n_iter": n_iter, "dim": dim}
             centroids = kmeans_train(vectors, k=n_cells, n_iter=n_iter)
             centroids.write.format("parquet").mode("overwrite").saveAsTable(
                 f"{name}__centroids"
             )
             release_checkpoint(centroids)  # probes read the table
-            assigned = assign_cells(vectors, spark.table(f"{name}__centroids"))
-            assigned.write.format("parquet").mode("errorifexists").bucketBy(
-                min(16, n_cells), "cell_id"
-            ).saveAsTable(name)
+            rows = assign_cells(vectors, spark.table(f"{name}__centroids"))
+            clustered = f"(cell_id) INTO {min(16, n_cells)} BUCKETS"
+        props = ", ".join(f"'{k}' = '{v}'" for k, v in {"kind": kind, **params}.items())
+        spark.sql(
+            f"CREATE TABLE {name} USING parquet CLUSTERED BY {clustered}"
+            f" TBLPROPERTIES ({props}) AS SELECT * FROM {{rows}}",
+            rows=rows,
+        )
         return True
 
     def upsert_vector_index(
@@ -308,8 +316,8 @@ class VectorRAG:
         discipline applied to the M5 lifecycle: only vec_ids NOT yet in
         the index get their bucket/cell rows computed and appended;
         re-upserting a batch is a no-op. Parameters come from the
-        persisted ``{name}__meta`` so the appended rows are
-        probe-compatible by construction.
+        index's table properties (``index_properties``) so the appended
+        rows are probe-compatible by construction.
 
         Cost is O(new batch): an anti-join against the index's id set
         (at 100 TB: a partition-pruned id scan / bloom probe on the
@@ -336,39 +344,23 @@ class VectorRAG:
         the new rows (the REFRESH TABLE discipline any external
         appender needs)."""
         spark = new_vectors.sparkSession
-        if not spark.catalog.tableExists(name) or not spark.catalog.tableExists(
-            f"{name}__meta"
-        ):
-            raise ValueError(
-                f"vector index {name!r} does not exist — create_vector_index first"
-            )
+        kind, params = index_properties(spark, name)
         from ai_iceberg_demo_spark.vector.similarity import embedding_qa_gate
 
-        m = spark.table(f"{name}__meta").collect()[0]
         # the same v26 gate the build ran: an upserted batch is the
         # likeliest place a provider regression lands a degenerate row
-        gated, _ = embedding_qa_gate(new_vectors, dim=int(m["dim"]))
+        gated, _ = embedding_qa_gate(new_vectors, dim=params["dim"])
         existing_ids = spark.table(name).select("vec_id").distinct()
         fresh = gated.join(existing_ids, "vec_id", "left_anti")
-        if m["kind"] == "lsh":
+        if kind == "lsh":
             from ai_iceberg_demo_spark.vector.similarity import build_lsh_index
 
-            rows = build_lsh_index(
-                fresh,
-                n_tables=m["n_tables"],
-                n_planes=m["n_planes"],
-                seed=m["seed"],
-                dim=m["dim"],
-            )
-            bucket_by = (16, "t", "b")
+            rows = build_lsh_index(fresh, **params)
         else:
             from ai_iceberg_demo_spark.vector.similarity import assign_cells
 
             rows = assign_cells(fresh, spark.table(f"{name}__centroids"))
-            bucket_by = (min(16, int(m["n_cells"])), "cell_id")
-        n_new = _append_once(
-            rows, name, lambda r: r.select("vec_id").distinct().count(), bucket_by
-        )
+        n_new = _append_once(rows, name, lambda r: r.select("vec_id").distinct().count())
         owner = self.embeddings.sparkSession
         if owner is not spark:
             owner.catalog.refreshTable(name)
@@ -402,9 +394,7 @@ class VectorRAG:
                 f"vector index {name!r} does not exist — create_vector_index first"
             )
         tomb = f"{name}__tombstones"
-        new = ids.select("vec_id").distinct()
-        if spark.catalog.tableExists(tomb):
-            new = new.join(spark.table(tomb), "vec_id", "left_anti")
+        new = ids.select("vec_id").distinct().join(spark.table(tomb), "vec_id", "left_anti")
         n = _append_once(new, tomb, DataFrame.count)
         if n:
             owner = self.embeddings.sparkSession
@@ -424,12 +414,7 @@ class VectorRAG:
 
         spark = self.embeddings.sparkSession
         warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for t in (
-            name,
-            f"{name}__meta",
-            f"{name}__centroids",
-            f"{name}__tombstones",
-        ):
+        for t in (name, f"{name}__centroids", f"{name}__tombstones"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
             shutil.rmtree(os.path.join(warehouse, t.lower()), ignore_errors=True)
 
@@ -444,7 +429,10 @@ class VectorRAG:
         set to a table created by create_vector_index, the search routes
         through the persisted index (LSH buckets or IVF cells:
         candidates + exact rerank — the scale path) instead of the
-        exact full scan; the index kind is read from the meta table.
+        exact full scan; the index kind and parameters are read from
+        its table properties (``index_properties``, no job), and the
+        rerank reads the index rows' own embeddings, never the facade's
+        ``embeddings``.
 
         An index search resolves its query on the driver: ONE job
         collects ``query_vec.select("qvec")``, which must hold exactly
@@ -462,38 +450,23 @@ class VectorRAG:
         )
 
         spark = self.embeddings.sparkSession
-        if not spark.catalog.tableExists(index) or not spark.catalog.tableExists(
-            f"{index}__meta"
-        ):
-            raise ValueError(f"vector index {index!r} does not exist — create_vector_index first")
-        m = spark.table(f"{index}__meta").collect()[0]
+        kind, params = index_properties(spark, index)
         query = collect_query(query_vec)
         # soft-deleted ids (delete_vectors) are excluded from the
         # CANDIDATE set, before any top-k truncation — v31's discipline
-        idx = spark.table(index)
-        tomb = f"{index}__tombstones"
-        if spark.catalog.tableExists(tomb):
-            idx = idx.join(F.broadcast(spark.table(tomb)), "vec_id", "left_anti")
-        if m["kind"] == "ivf":
+        idx = spark.table(index).join(
+            F.broadcast(spark.table(f"{index}__tombstones")), "vec_id", "left_anti"
+        )
+        if kind == "ivf":
             return ivf_probe(
                 idx,
                 spark.table(f"{index}__centroids"),
                 query,
                 k=k,
-                n_probe=m["n_probe"],
+                n_probe=params["n_probe"],
                 min_score=min_score,
             )
-        return lsh_probe(
-            idx,
-            self.embeddings,
-            query,
-            k=k,
-            n_tables=m["n_tables"],
-            n_planes=m["n_planes"],
-            seed=m["seed"],
-            dim=m["dim"],
-            min_score=min_score,
-        )
+        return lsh_probe(idx, query, k=k, min_score=min_score, **params)
 
     def get_best_match(self, query_vec: DataFrame, min_score: float = 0.80) -> DataFrame:
         """Semantic-cache gate: top-1 ≥ 0.8 (neo4j_rag.py:305-331) — V4."""

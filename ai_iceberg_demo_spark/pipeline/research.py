@@ -143,7 +143,6 @@ def pipeline_interactive(
         with_norm,
     )
 
-    emb = with_norm(load_table(spark, "embeddings", sf_dir), "embedding", "cv", "cn")
     docs = load_table(spark, "documents", sf_dir)
     probes = with_norm(
         load_table(spark, "embeddings", sf_dir).filter(F.col("vec_id") < 5), "embedding", "qv", "qn"
@@ -152,6 +151,7 @@ def pipeline_interactive(
     if index is None:
         # exact path (the oracle-checked default): norms hoisted per
         # corpus row / per probe; only the dot is per pair
+        emb = with_norm(load_table(spark, "embeddings", sf_dir), "embedding", "cv", "cn")
         scored = emb.join(F.broadcast(probes), emb.vec_id != probes.qid).select(
             "qid", "vec_id", score_expr
         )
@@ -159,25 +159,28 @@ def pipeline_interactive(
         # index path (VERDICT r3 #7): every workflow's cache/context
         # probe routes through the persisted IVF index created by
         # facade.create_vector_index(kind="ivf") — candidate pairs from
-        # the cell_id equi-join (n_probe partitions per probe at scale),
-        # exact rerank with the IDENTICAL score arithmetic, so with
-        # n_probe == n_cells the output is bit-equal to the exact path
-        # (tests/test_facade.py pins this) and recall degrades only as
-        # n_probe shrinks.
-        meta = spark.table(f"{index}__meta").collect()[0]  # 1-row read
-        if meta["kind"] != "ivf":
+        # the cell_id equi-join (n_probe partitions per probe at scale)
+        # carry the index rows' embeddings, so the corpus is never
+        # read; exact rerank with the IDENTICAL score arithmetic, so
+        # with n_probe == n_cells the output is bit-equal to the exact
+        # path (tests/test_facade.py pins this) and recall degrades
+        # only as n_probe shrinks.
+        from ai_iceberg_demo_spark.facade import index_properties
+
+        kind, params = index_properties(spark, index)
+        if kind != "ivf":
             raise ValueError(
                 f"pipeline_interactive index routing needs an ivf index; "
-                f"{index!r} is {meta['kind']!r}"
+                f"{index!r} is {kind!r}"
             )
         pairs = ivf_candidate_pairs(
             spark.table(index),
             spark.table(f"{index}__centroids"),
             probes.select("qid", "qv"),
-            n_probe=meta["n_probe"],
+            n_probe=params["n_probe"],
         )
         scored = (
-            pairs.join(emb, "vec_id")
+            with_norm(pairs, "embedding", "cv", "cn")
             .join(F.broadcast(probes), "qid")
             .filter(F.col("vec_id") != F.col("qid"))
             .select("qid", "vec_id", score_expr)

@@ -269,7 +269,7 @@ def lsh_tables(n_tables: int, n_planes: int, seed: int, dim: int) -> list[np.nda
     """The deterministic plane family shared by index build and probe:
     L tables × k hyperplanes each, drawn from one seeded RNG. Build and
     probe MUST use identical (n_tables, n_planes, seed, dim) — the
-    persisted index stores them in its meta table."""
+    persisted index stores them as table properties."""
     rng = np.random.RandomState(seed)
     return [rng.randn(n_planes, dim) for _ in range(n_tables)]
 
@@ -281,15 +281,18 @@ def build_lsh_index(
     seed: int = 42,
     dim: int = 64,
 ) -> DataFrame:
-    """The persistable LSH index relation: (t, b, vec_id) — one row per
-    (table, bucket) membership. This is M5's index artifact: at 100 TB
+    """The persistable LSH index relation: (t, b, vec_id, sig, embedding)
+    — one row per (table, bucket) membership, carrying the vector's L
+    bucket ids ``sig`` and its embedding, so ``lsh_probe`` keeps each
+    candidate once and reranks it without reading the corpus. The
+    embedding is stored once per table: L× vector storage buys a
+    join-free probe (SCALE.md). This is M5's index artifact: at 100 TB
     it is written PARTITIONED BY (t, bucket(N, b)) on Iceberg so a
     probe prunes to L point-partition reads."""
     tables = lsh_tables(n_tables, n_planes, seed, dim)
     return corpus.select(
-        "vec_id",
-        F.posexplode(lsh_signatures(F.col("embedding"), tables)).alias("t", "b"),
-    ).select("t", "b", "vec_id")
+        "vec_id", "embedding", lsh_signatures(F.col("embedding"), tables).alias("sig")
+    ).select(F.posexplode("sig").alias("t", "b"), "vec_id", "sig", "embedding")
 
 
 def collect_query(query_vec: DataFrame) -> list[float]:
@@ -318,7 +321,6 @@ def _rerank(candidates: DataFrame, query: list[float], k: int, min_score: float)
 
 def lsh_probe(
     index: DataFrame,
-    corpus: DataFrame,
     query: list[float],
     k: int,
     n_tables: int,
@@ -327,19 +329,23 @@ def lsh_probe(
     dim: int,
     min_score: float = -1.0,
 ) -> DataFrame:
-    """Probe a persisted LSH index with a driver-side query vector
-    (``collect_query``): hash it with the build's plane family and
-    kernel, filter the index by a literal (t, b) predicate for
-    candidates, then exact-rerank candidates by cosine. The plan has
-    no Python worker and no query broadcast; a literal predicate is
-    pushed to the scan (at 100 TB it prunes (t, bucket(N, b)) Iceberg
-    partitions at plan time). The corpus is touched only for candidate
-    vec_ids."""
+    """Probe a persisted LSH index (``build_lsh_index`` rows) with a
+    driver-side query vector (``collect_query``): hash it with the
+    build's plane family and kernel, then filter the index by a literal
+    predicate that keeps a row only at the FIRST table where it
+    collides with the query — ``t = i AND b = s_i`` and ``sig[u] !=
+    s_u`` for every u < i. Each candidate passes exactly once, so the
+    exact rerank runs on the filtered rows' own embeddings: no Python
+    worker, no distinct, no exchange, no join. The (t, b) literals push
+    to the scan (at 100 TB they prune (t, bucket(N, b)) Iceberg
+    partitions at plan time)."""
     sign = signature_kernel(lsh_tables(n_tables, n_planes, seed, dim))
-    sig = sign(np.asarray([query], dtype=np.float64))[0]
-    hit = " OR ".join(f"(t = {t} AND b = {int(b)})" for t, b in enumerate(sig))
-    cand_ids = index.filter(F.expr(hit)).select("vec_id").distinct()
-    return _rerank(corpus.join(cand_ids, "vec_id"), query, k, min_score)
+    sig = [int(b) for b in sign(np.asarray([query], dtype=np.float64))[0]]
+    first = " OR ".join(
+        "(" + " AND ".join([f"t = {i}", f"b = {s}", *(f"sig[{u}] != {sig[u]}" for u in range(i))]) + ")"
+        for i, s in enumerate(sig)
+    )
+    return _rerank(index.filter(F.expr(first)), query, k, min_score)
 
 
 def ann_topk(
@@ -589,8 +595,8 @@ def ivf_topk(
 def ivf_candidate_pairs(
     assigned: DataFrame, centroids: DataFrame, probes: DataFrame, n_probe: int = 4
 ) -> DataFrame:
-    """(qid, vec_id) candidate pairs from a persisted IVF index for
-    MANY probe vectors at once — the multi-query sibling of
+    """(qid, vec_id, embedding) candidate pairs from a persisted IVF
+    index for MANY probe vectors at once — the multi-query sibling of
     ``ivf_probe``, feeding set-oriented pipelines (every workflow's
     probe in one plan). ``probes`` is (qid, qv).
 
@@ -598,9 +604,10 @@ def ivf_candidate_pairs(
     driver-free frame of a few hundred rows — then the n_probe cells
     per probe broadcast onto the index table's cell_id equi-join: at
     100 TB the index is partitioned by cell_id, so each probe touches
-    n_probe partitions and the corpus is never scanned whole. Rerank
-    (exact scoring of the pairs) is the caller's, so score arithmetic
-    stays identical to its exact path."""
+    n_probe partitions and the corpus is never scanned: each pair
+    carries the index row's own embedding. Rerank (exact scoring of the
+    pairs) is the caller's, so score arithmetic stays identical to its
+    exact path."""
     from pyspark.sql import Window
 
     cell_scores = centroids.crossJoin(
@@ -612,7 +619,7 @@ def ivf_candidate_pairs(
         .filter(F.col("_rn") <= n_probe)
         .select("qid", "cell_id")
     )
-    return assigned.join(F.broadcast(cells), "cell_id").select("qid", "vec_id")
+    return assigned.join(F.broadcast(cells), "cell_id").select("qid", "vec_id", "embedding")
 
 
 def ivf_probe(

@@ -332,18 +332,22 @@ def test_pipeline_interactive_routes_through_ivf_index(spark):
         rag.drop_vector_index("t_pipe_lsh_idx")
 
 
-def test_upsert_vector_index_appends_only_new_vectors(spark):
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_upsert_vector_index_appends_only_new_vectors(spark, kind):
     """M5 lifecycle: upsert indexes ONLY unseen vec_ids (re-upsert is a
-    0-row no-op), appended rows are probe-compatible, and a probe for a
-    new vector's own embedding finds it (self-collision)."""
+    0-row no-op), and the SAME facade's cache probe (top-1 ≥ 0.8) finds
+    a new vector by its own embedding — a stored result is hit by its
+    repeated question (neo4j_rag.py:305-331). The facade's
+    ``embeddings`` never held the batch, so the index reranks from its
+    own rows (LSH once joined the candidates to ``embeddings`` and
+    returned nothing here)."""
     emb = load_table(spark, "embeddings", SF_DIR)
     docs = load_table(spark, "documents", SF_DIR)
-    base = emb.filter(F.col("vec_id") < 400)
-    rag = VectorRAG(base, docs)
-    name = "t_vec_idx_upsert"
+    rag = VectorRAG(emb.filter(F.col("vec_id") < 400), docs)
+    name = f"t_vec_idx_upsert_{kind}"
     rag.drop_vector_index(name)
     try:
-        assert rag.create_vector_index(name) is True
+        assert rag.create_vector_index(name, kind=kind) is True
         n0 = spark.table(name).count()
 
         batch = emb.filter(F.col("vec_id") >= 400)
@@ -353,14 +357,12 @@ def test_upsert_vector_index_appends_only_new_vectors(spark):
         # idempotent: the same batch again appends nothing
         assert rag.upsert_vector_index(batch, name) == 0
 
-        # a probe with a new vector's embedding must find that vector
         new_id = batch.select(F.min("vec_id")).first()[0]
         qv = emb.filter(F.col("vec_id") == new_id).select(
             F.col("embedding").alias("qvec")
         )
-        full = VectorRAG(emb, docs)
-        hits = full.search_similar_results(qv, k=3, min_score=-1.0, index=name)
-        assert hits.first()["vec_id"] == new_id
+        hits = rag.search_similar_results(qv, k=1, min_score=0.8, index=name).collect()
+        assert [(r["vec_id"], r["score"]) for r in hits] == [(new_id, 1.0)]
 
         missing = pytest.raises(
             ValueError, rag.upsert_vector_index, batch, "no_such_idx"
@@ -543,9 +545,24 @@ def test_index_calls_read_their_input_once(spark, kind):
         rag.drop_vector_index(name)
 
 
+def _file_scans(node) -> list:
+    """Every file scan of an executed plan, through AQE's wrappers (the
+    tombstone broadcast makes every index search adaptive)."""
+    kind = node.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        return _file_scans(node.executedPlan())
+    if kind.endswith("QueryStageExec"):
+        return _file_scans(node.plan())
+    if kind == "FileSourceScanExec":
+        return [node]
+    children = node.children()
+    return [s for i in range(children.size()) for s in _file_scans(children.apply(i))]
+
+
 def test_index_probe_plans_hash_and_prune_on_the_driver(spark):
     """The LSH probe filters the index by literal (t, b) pairs — its
-    executed plan runs no Python worker — and the IVF probe's literal
+    executed plan runs no Python worker, reads no file of the
+    ``embeddings`` fixture and holds no shuffle — and the IVF probe's literal
     ``cell_id IN (...)`` prunes the cell-bucketed index to the bucket
     files of the probed cells. (Spark 4 prunes bucket files without a
     bucketed scan, so the plan reads ``Bucketed: false`` and shows no
@@ -567,6 +584,18 @@ def test_index_probe_plans_hash_and_prune_on_the_driver(spark):
             text = plan.toString()
             if kind == "lsh":
                 assert "ArrowEvalPython" not in text and "BatchEvalPython" not in text
+                # the rerank reads the index rows' own embeddings: no
+                # fixture scan, no shuffle (the one broadcast is the
+                # tombstone set), and the cosine filter sits in the
+                # index scan's literal-predicate Filter
+                assert SF_DIR not in text
+                assert re.search(r"(?<!Broadcast)Exchange", text) is None
+                joins = [ln for ln in text.splitlines() if "Join" in ln]
+                assert joins and all("LeftAnti" in ln for ln in joins)
+                cosine_filters = [
+                    ln for ln in text.splitlines() if "Filter" in ln and "aggregate(zip_with" in ln
+                ]
+                assert cosine_filters and all("sig#" in ln for ln in cosine_filters)
                 continue
             cells = re.search(r"cell_id#\d+L IN \(([\d,]+)\)", text).group(1)
             assert len(cells.split(",")) == 4
@@ -574,12 +603,42 @@ def test_index_probe_plans_hash_and_prune_on_the_driver(spark):
             in_probed_buckets = buckets.join(
                 buckets.filter(f"cell_id IN ({cells})").select("bkt").distinct(), "bkt"
             ).count()
-            scan = plan.collectLeaves().apply(0)
+            (scan,) = [s for s in _file_scans(plan) if f".{name}[" in s.toString()]
             read = scan.metrics().apply("numOutputRows").value()
             assert read == in_probed_buckets < spark.table(name).count()
         finally:
             spark.conf.set("spark.sql.parquet.filterPushdown", "true")
             rag.drop_vector_index(name)
+
+
+@pytest.mark.parametrize("kind, build_jobs", [("lsh", 1), ("ivf", 2)])
+def test_index_search_job_count(spark, kind, build_jobs):
+    """An index search reads its parameters from table properties (no
+    job) and reranks the index rows' own embeddings: building it runs
+    the query collect (plus, for IVF, the centroid ranking), and
+    collecting it runs the tombstone broadcast and the probe. Once a
+    meta-table collect, the corpus join and its distinct exchange added
+    jobs: LSH 5 in all, IVF 4, before any tombstone existed."""
+    sc = spark.sparkContext
+    rag, name, emb = _small_index(spark, kind)
+    qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        probe, n_build = jobs(f"search_build_{kind}", lambda: rag.search_similar_results(
+            qv, k=3, min_score=-1.0, index=name))
+        rows, n_exec = jobs(f"search_exec_{kind}", probe.collect)
+        assert rows[0]["vec_id"] == 0
+        assert (n_build, n_exec) == (build_jobs, 2)
+    finally:
+        rag.drop_vector_index(name)
 
 
 def test_erasure_pipeline_verifies_zero_residual(spark):
