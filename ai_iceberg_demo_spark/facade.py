@@ -23,7 +23,9 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ai_iceberg_demo_spark.operators.mutations import (
@@ -147,27 +149,20 @@ class ConversationMemory:
         return self.conversations.sparkSession is not None
 
 
-def _append_once(rows: DataFrame, table: str, count) -> int:
-    """Append ``rows`` to ``table`` computing them ONCE: an eager
-    ``localCheckpoint`` runs the caller's batch, gate, anti-join and
-    hashing in one job, the count and the append read the checkpoint,
-    and ``release_checkpoint`` frees it in a ``finally`` — a long-lived
-    session keeps no persisted frame. A checkpoint rather than
-    ``persist()``: the append never re-runs a lineage that reads
-    ``table`` (SCALE.md, r4), and the checkpoint keeps AQE's coalesced
-    partitions, where a persisted plan keeps every shuffle partition
-    and writes a file per partition (a 4-id tombstone batch: 3 files
-    instead of 1). ``INSERT INTO … BY NAME`` writes with the table's
-    own bucketing. Returns ``count(rows)``; an empty batch appends
-    nothing."""
-    rows = rows.localCheckpoint(eager=True)
-    try:
-        n = count(rows)
-        if n:
-            rows.sparkSession.sql(f"INSERT INTO {table} BY NAME SELECT * FROM {{rows}}", rows=rows)
-        return n
-    finally:
-        release_checkpoint(rows)
+#: Table property ``delete_vectors`` sets on an index before its first
+#: tombstone append; ``index_rows`` anti-joins the tombstones only when
+#: it is set.
+HAS_TOMBSTONES = "has_tombstones"
+
+
+def _index_properties(spark: SparkSession, name: str) -> tuple[str, dict, bool]:
+    """``(kind, params, has_tombstones)`` from the table properties of
+    index ``name`` (``index_properties``)."""
+    if not spark.catalog.tableExists(name):
+        raise ValueError(f"vector index {name!r} does not exist — create_vector_index first")
+    props = {r["key"]: r["value"] for r in spark.sql(f"SHOW TBLPROPERTIES {name}").collect()}
+    tombstoned = props.pop(HAS_TOMBSTONES, None) == "true"
+    return props.pop("kind"), {k: int(v) for k, v in props.items()}, tombstoned
 
 
 def index_properties(spark: SparkSession, name: str) -> tuple[str, dict]:
@@ -178,10 +173,39 @@ def index_properties(spark: SparkSession, name: str) -> tuple[str, dict]:
     reads the catalog and runs no job. Raises ValueError when the index
     does not exist — checked first, since a missing table would log a
     Java stack trace."""
-    if not spark.catalog.tableExists(name):
-        raise ValueError(f"vector index {name!r} does not exist — create_vector_index first")
-    props = {r["key"]: r["value"] for r in spark.sql(f"SHOW TBLPROPERTIES {name}").collect()}
-    return props.pop("kind"), {k: int(v) for k, v in props.items()}
+    kind, params, _ = _index_properties(spark, name)
+    return kind, params
+
+
+def index_rows(spark: SparkSession, index: str) -> tuple[DataFrame, str, dict]:
+    """``(live_rows, kind, params)`` of index ``index``: every reader of
+    an index (the facade's search, ``pipeline_interactive``) reads its
+    rows here, so a soft-deleted id (``delete_vectors``) is gone from
+    every read path. The live rows are the index table anti-joined with
+    a broadcast of ``{index}__tombstones``; while the index's
+    ``has_tombstones`` property is unset no id was ever deleted, and
+    the rows are the table itself — no broadcast job."""
+    kind, params, tombstoned = _index_properties(spark, index)
+    rows = spark.table(index)
+    if tombstoned:
+        rows = rows.join(F.broadcast(spark.table(f"{index}__tombstones")), "vec_id", "left_anti")
+    return rows, kind, params
+
+
+def _insert(table: str, rows: DataFrame) -> None:
+    """Append a driver-sized batch of ``rows`` with ``INSERT INTO … BY
+    NAME``, so the write takes the table's own bucketing, in ONE write
+    task: a local relation scans as one partition per row up to the
+    core count, and each partition would write its own file (a 4-id
+    tombstone batch: 4 files, which every later search lists and
+    reads)."""
+    rows.sparkSession.sql(f"INSERT INTO {table} BY NAME SELECT * FROM {{rows}}", rows=rows.coalesce(1))
+
+
+def _in_list(col: str, values: list) -> Column:
+    """``col IN (v1, …)`` as one parsed expression (one py4j call,
+    where ``Column.isin`` pays one per value)."""
+    return F.expr(f"{col} IN ({', '.join(map(str, values))})")
 
 
 class VectorRAG:
@@ -317,54 +341,81 @@ class VectorRAG:
         the index get their bucket/cell rows computed and appended;
         re-upserting a batch is a no-op. Parameters come from the
         index's table properties (``index_properties``) so the appended
-        rows are probe-compatible by construction.
+        rows are probe-compatible by construction. Returns the number of
+        distinct vec_ids appended; rows with a null vec_id are ignored,
+        and a vec_id repeated within one batch appends every copy but
+        counts once.
 
-        Cost is O(new batch): an anti-join against the index's id set
-        (at 100 TB: a partition-pruned id scan / bloom probe on the
-        bucketed table) plus hashing the fresh vectors. IVF rows are
-        assigned to the EXISTING trained centroids — the standard
-        freshness/drift trade; retrain (drop + create) when the
-        appended fraction grows past rebuild policy, which v16's drift
-        monitor is the alarm for. Returns the number of vectors
-        appended.
-
-        The batch is read ONCE: the gated, anti-joined and hashed (or
-        cell-assigned) rows are checkpointed, counted, appended from
-        the checkpoint and released (``_append_once``), so neither the
-        caller's lineage nor the hashing UDF runs twice, and the
-        session keeps no persisted frame afterwards.
+        Cost is O(new batch), and the batch is read ONCE: one collect
+        of the QA-gated ``(vec_id, embedding)`` rows to the driver (the
+        reference indexes one result at a time; bulk loads belong to
+        ``create_vector_index``), then one JVM job that finds which of
+        those ids the index already holds — a ``vec_id IN (…)`` filter
+        on the index (LSH: its ``t = 0`` rows, one per vector), no
+        index-wide distinct. LSH rows are hashed on the driver with the
+        kernel ``build_lsh_index`` runs per Arrow batch
+        (``signature_kernel``), so they are bit-identical to a build's;
+        IVF rows are assigned to the EXISTING trained centroids
+        (``assign_cells``) — the standard freshness/drift trade; retrain
+        (drop + create) when the appended fraction grows past rebuild
+        policy, which v16's drift monitor is the alarm for. The append
+        reads an Arrow-built local relation, so it starts no Python
+        worker, persists nothing and can never re-run a lineage that
+        reads the index it writes.
 
         Sessions: reads ride ``new_vectors``' OWN session, not the
         facade's. Under foreachBatch each micro-batch arrives in a
         cloned session whose fresh file-index cache sees all prior
         appends; the facade's long-lived session would serve a STALE
-        cached listing of the index table, breaking the anti-join's
-        idempotence contract for overlapping batches. After the append,
-        the facade session's cache is refreshed so its readers observe
-        the new rows (the REFRESH TABLE discipline any external
-        appender needs)."""
-        spark = new_vectors.sparkSession
-        kind, params = index_properties(spark, name)
+        cached listing of the index table, breaking the idempotence
+        contract for overlapping batches. After an append, the facade
+        session's cache is refreshed so its readers observe the new
+        rows (the REFRESH TABLE discipline any external appender
+        needs)."""
         from ai_iceberg_demo_spark.vector.similarity import embedding_qa_gate
 
+        spark = new_vectors.sparkSession
+        kind, params = index_properties(spark, name)
         # the same v26 gate the build ran: an upserted batch is the
         # likeliest place a provider regression lands a degenerate row
         gated, _ = embedding_qa_gate(new_vectors, dim=params["dim"])
-        existing_ids = spark.table(name).select("vec_id").distinct()
-        fresh = gated.join(existing_ids, "vec_id", "left_anti")
+        batch = gated.select("vec_id", "embedding").filter(F.col("vec_id").isNotNull())
+        rows = batch.collect()
+        if not rows:
+            return 0
+        index = spark.table(name)
+        probe = index.filter(_in_list("vec_id", sorted({r["vec_id"] for r in rows})))
         if kind == "lsh":
-            from ai_iceberg_demo_spark.vector.similarity import build_lsh_index
+            probe = probe.filter(F.col("t") == 0)
+        existing = {r["vec_id"] for r in probe.select("vec_id").collect()}
+        fresh = [r for r in rows if r["vec_id"] not in existing]
+        if not fresh:
+            return 0
+        ids = [r["vec_id"] for r in fresh]
+        vectors = [r["embedding"] for r in fresh]
+        if kind == "lsh":
+            from ai_iceberg_demo_spark.vector.similarity import lsh_tables, signature_kernel
 
-            rows = build_lsh_index(fresh, **params)
+            sigs = signature_kernel(lsh_tables(**params))(np.asarray(vectors, dtype=np.float64))
+            n_tables = sigs.shape[1]
+            lsh = pd.DataFrame({
+                "t": np.tile(np.arange(n_tables), len(ids)),
+                "b": sigs.ravel(),
+                "vec_id": np.repeat(ids, n_tables),
+                "sig": [sig for sig in sigs.tolist() for _ in range(n_tables)],
+                "embedding": [vec for vec in vectors for _ in range(n_tables)],
+            })
+            appended = spark.createDataFrame(lsh[index.columns], index.schema)
         else:
             from ai_iceberg_demo_spark.vector.similarity import assign_cells
 
-            rows = assign_cells(fresh, spark.table(f"{name}__centroids"))
-        n_new = _append_once(rows, name, lambda r: r.select("vec_id").distinct().count())
+            fresh_df = spark.createDataFrame(pd.DataFrame({"vec_id": ids, "embedding": vectors}), batch.schema)
+            appended = assign_cells(fresh_df, spark.table(f"{name}__centroids"))
+        _insert(name, appended)
         owner = self.embeddings.sparkSession
         if owner is not spark:
             owner.catalog.refreshTable(name)
-        return n_new
+        return len(set(ids))
 
     def delete_vectors(
         self,
@@ -374,33 +425,51 @@ class VectorRAG:
         """Soft-delete vectors from a persisted index — the DELETE leg
         of the M5 lifecycle (m7 retention / s12 erasure must reach the
         index, not just the base table). Ids append to
-        ``{name}__tombstones``; every index-routed search anti-joins
-        its candidates against that table BEFORE top-k truncation
-        (v31's audit pins why: filtering after truncation serves
-        k-minus-deleted results). This is Iceberg's delete-file model
-        — the index rows stay until the next retrain compacts them
-        out; re-adding a deleted id requires drop/recreate (upsert
+        ``{name}__tombstones``; every index reader (``index_rows``)
+        anti-joins its candidates against that table BEFORE top-k
+        truncation (v31's audit pins why: filtering after truncation
+        serves k-minus-deleted results). This is Iceberg's delete-file
+        model — the index rows stay until the next retrain compacts
+        them out; re-adding a deleted id requires drop/recreate (upsert
         treats indexed-but-tombstoned ids as existing). Returns the
-        number of newly tombstoned ids; re-deleting is a no-op. The new
-        ids are computed once and released after their append, the
-        same bounded checkpoint → count → append → release as upserts.
+        number of newly tombstoned ids: null ids are ignored, an id
+        repeated in the batch counts once, and re-deleting is a no-op.
+
+        The batch is read ONCE: one collect of its distinct non-null
+        ids to the driver (a delete batch is a request's worth of ids;
+        bulk erasure is a retrain), one JVM job probing the tombstones
+        with ``vec_id IN (…)`` (none before the first deletion), and an
+        append of the new ids from an
+        Arrow-built local relation. Before its first append the index
+        gets its ``has_tombstones`` table property (a catalog write, no
+        job): readers skip the anti-join while it is unset, and a crash
+        between the two steps can only cost them one wasted broadcast,
+        never serve a deleted id.
 
         Same session discipline as upsert_vector_index: reads ride the
         ids batch's session (fresh cache under foreachBatch), and the
         facade session's tombstone-table cache is refreshed after."""
         spark = ids.sparkSession
-        if not spark.catalog.tableExists(name):
-            raise ValueError(
-                f"vector index {name!r} does not exist — create_vector_index first"
-            )
+        _, _, tombstoned = _index_properties(spark, name)
         tomb = f"{name}__tombstones"
-        new = ids.select("vec_id").distinct().join(spark.table(tomb), "vec_id", "left_anti")
-        n = _append_once(new, tomb, DataFrame.count)
-        if n:
-            owner = self.embeddings.sparkSession
-            if owner is not spark:
-                owner.catalog.refreshTable(tomb)
-        return n
+        batch = sorted({r["vec_id"] for r in ids.select("vec_id").filter(F.col("vec_id").isNotNull()).collect()})
+        if not batch:
+            return 0
+        # unset flag: no append ever ran (the flag is set first), so
+        # the tombstones are empty and need no probe
+        dead = set()
+        if tombstoned:
+            dead = {r["vec_id"] for r in spark.table(tomb).filter(_in_list("vec_id", batch)).collect()}
+        new = [i for i in batch if i not in dead]
+        if not new:
+            return 0
+        if not tombstoned:
+            spark.sql(f"ALTER TABLE {name} SET TBLPROPERTIES ('{HAS_TOMBSTONES}' = 'true')")
+        _insert(tomb, spark.createDataFrame(pd.DataFrame({"vec_id": new}), "vec_id bigint"))
+        owner = self.embeddings.sparkSession
+        if owner is not spark:
+            owner.catalog.refreshTable(tomb)
+        return len(new)
 
     def drop_vector_index(self, name: str = "result_embeddings_index") -> None:
         """DROP ... IF EXISTS for all three index tables, plus a purge
@@ -420,43 +489,47 @@ class VectorRAG:
 
     def search_similar_results(
         self,
-        query_vec: DataFrame,
+        query_vec: DataFrame | Sequence[float] | np.ndarray,
         k: int = 5,
         min_score: float = 0.70,
         index: str | None = None,
     ) -> DataFrame:
-        """Top-k ≥ threshold (neo4j_rag.py:216-303) — V3. With ``index``
-        set to a table created by create_vector_index, the search routes
-        through the persisted index (LSH buckets or IVF cells:
-        candidates + exact rerank — the scale path) instead of the
-        exact full scan; the index kind and parameters are read from
-        its table properties (``index_properties``, no job), and the
-        rerank reads the index rows' own embeddings, never the facade's
-        ``embeddings``.
+        """Top-k ≥ threshold (neo4j_rag.py:216-303) — V3. The query is
+        the reference's ``query_embedding: List[float]`` (a list or a
+        1-d ndarray) or a one-row frame with a ``qvec`` column. With
+        ``index`` set to a table created by create_vector_index, the
+        search routes through the persisted index (LSH buckets or IVF
+        cells: candidates + exact rerank — the scale path) instead of
+        the exact full scan; the index's live rows, kind and parameters
+        come from ``index_rows`` (no job), and the rerank reads the
+        index rows' own embeddings, never the facade's ``embeddings``.
 
-        An index search resolves its query on the driver: ONE job
-        collects ``query_vec.select("qvec")``, which must hold exactly
-        one row (ValueError otherwise), and the probe is built from
-        that literal vector — literal (t, b) or ``cell_id IN (...)``
-        predicates on the index, a literal rerank — so the caller's
-        frame is never read again. Scores are bit-identical to the
-        exact path's."""
-        if index is None:
-            return cosine_topk(self.embeddings, query_vec, k=k, min_score=min_score)
+        An index search resolves its query on the driver: a list is
+        used as is, and a frame costs ONE job that collects
+        ``query_vec.select("qvec")``, which must hold exactly one row
+        (ValueError otherwise). The probe is built from that literal
+        vector — literal (t, b) or ``cell_id IN (...)`` predicates on
+        the index, a literal rerank — so the caller's frame is never
+        read again. Scores are bit-identical to the exact path's."""
         from ai_iceberg_demo_spark.vector.similarity import (
             collect_query,
             ivf_probe,
             lsh_probe,
+            vec_sql,
         )
 
         spark = self.embeddings.sparkSession
-        kind, params = index_properties(spark, index)
-        query = collect_query(query_vec)
+        if index is None:
+            if not isinstance(query_vec, DataFrame):
+                query_vec = spark.range(1).select(F.expr(vec_sql(query_vec)).alias("qvec"))
+            return cosine_topk(self.embeddings, query_vec, k=k, min_score=min_score)
         # soft-deleted ids (delete_vectors) are excluded from the
         # CANDIDATE set, before any top-k truncation — v31's discipline
-        idx = spark.table(index).join(
-            F.broadcast(spark.table(f"{index}__tombstones")), "vec_id", "left_anti"
-        )
+        idx, kind, params = index_rows(spark, index)
+        if isinstance(query_vec, DataFrame):
+            query = collect_query(query_vec)
+        else:
+            query = [float(x) for x in query_vec]
         if kind == "ivf":
             return ivf_probe(
                 idx,

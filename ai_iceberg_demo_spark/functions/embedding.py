@@ -33,7 +33,7 @@ from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import SparkSession
 from pyspark.sql.types import ArrayType, DoubleType
@@ -51,17 +51,6 @@ _TOKEN_RE = "[a-z0-9]+"
 # ---------------------------------------------------------------------------
 # JVM-side hash embedding (exact, oracle-checked)
 # ---------------------------------------------------------------------------
-
-
-def _bucket(tok: Column, dim: int) -> Column:
-    """Feature-hash bucket: first 8 md5 hex digits as an int, mod dim.
-    ``conv(hex,16,10)`` (Spark) == ``('0x'||hex)::BIGINT`` (DuckDB)."""
-    return (F.conv(F.substring(F.md5(F.encode(tok, "UTF-8")), 1, 8), 16, 10).cast("long") % dim).cast("int")
-
-
-def _sign(tok: Column) -> Column:
-    """Sign bit from the 9th md5 hex digit: '0'-'7' → +1, else -1."""
-    return F.when(F.substring(F.md5(F.encode(tok, "UTF-8")), 9, 1) <= "7", 1.0).otherwise(-1.0)
 
 
 def hash_embed_raw(

@@ -161,20 +161,21 @@ def pipeline_interactive(
         # facade.create_vector_index(kind="ivf") — candidate pairs from
         # the cell_id equi-join (n_probe partitions per probe at scale)
         # carry the index rows' embeddings, so the corpus is never
-        # read; exact rerank with the IDENTICAL score arithmetic, so
-        # with n_probe == n_cells the output is bit-equal to the exact
-        # path (tests/test_facade.py pins this) and recall degrades
-        # only as n_probe shrinks.
-        from ai_iceberg_demo_spark.facade import index_properties
+        # read; ``index_rows`` drops soft-deleted ids (delete_vectors)
+        # before any candidate is ranked. Exact rerank with the
+        # IDENTICAL score arithmetic, so with n_probe == n_cells the
+        # output is bit-equal to the exact path (tests/test_facade.py
+        # pins this) and recall degrades only as n_probe shrinks.
+        from ai_iceberg_demo_spark.facade import index_rows
 
-        kind, params = index_properties(spark, index)
+        live, kind, params = index_rows(spark, index)
         if kind != "ivf":
             raise ValueError(
                 f"pipeline_interactive index routing needs an ivf index; "
                 f"{index!r} is {kind!r}"
             )
         pairs = ivf_candidate_pairs(
-            spark.table(index),
+            live,
             spark.table(f"{index}__centroids"),
             probes.select("qid", "qv"),
             n_probe=params["n_probe"],

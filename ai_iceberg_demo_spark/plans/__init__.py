@@ -2,11 +2,12 @@
 
 The reference has no optimizer to inspect (SURVEY.md §4); in this
 engine the physical plan IS the performance contract, so it gets
-first-class helpers. `tests/test_plans.py` uses these to pin the
-shapes that must survive a 1000-executor scale-up: broadcast dimension
-joins, pushed filters, pruned scans, map-side partial aggregates,
-TakeOrderedAndProject top-k, whole-stage codegen, no cartesian
-fallbacks, no shuffle on bucketed co-located joins.
+first-class access: `explain_str` returns the plan text that
+`tests/test_plans.py` reads to pin the shapes that must survive a
+1000-executor scale-up: broadcast dimension joins, pushed filters,
+pruned scans, map-side partial aggregates, TakeOrderedAndProject
+top-k, whole-stage codegen, no cartesian fallbacks, no shuffle on
+bucketed co-located joins.
 """
 
 from __future__ import annotations
@@ -20,28 +21,3 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)  # type: ignore[union-attr]
     return df._jdf.queryExecution().explainString(jmode)  # type: ignore[attr-defined]
 
-
-def executed_plan_str(df: DataFrame) -> str:
-    """The executed (post-AQE-prep) physical plan, with codegen stars."""
-    return df._jdf.queryExecution().executedPlan().toString()  # type: ignore[attr-defined]
-
-
-def assert_no_shuffle(df: DataFrame) -> None:
-    plan = explain_str(df)
-    assert "Exchange" not in plan, f"unexpected shuffle exchange:\n{plan}"
-
-
-def assert_broadcasts(df: DataFrame, at_least: int = 1) -> None:
-    plan = explain_str(df)
-    n = plan.count("BroadcastHashJoin")
-    assert n >= at_least, f"expected >= {at_least} broadcast joins, saw {n}:\n{plan}"
-
-
-def assert_no_cartesian(df: DataFrame) -> None:
-    plan = explain_str(df)
-    assert "CartesianProduct" not in plan, f"cartesian fallback:\n{plan}"
-
-
-def assert_pushed_filters(df: DataFrame) -> None:
-    plan = explain_str(df)
-    assert "PushedFilters: [" in plan, f"no filters pushed to the scan:\n{plan}"

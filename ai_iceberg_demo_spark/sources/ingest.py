@@ -45,19 +45,6 @@ def read_jsonl(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     )
 
 
-def read_csv_strict(
-    spark: SparkSession, path: str, schema: StructType, header: bool = True
-) -> DataFrame:
-    """CSV reader: explicit schema, PERMISSIVE + corrupt capture."""
-    return (
-        spark.read.schema(_with_corrupt(schema))
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("header", str(header).lower())
-        .csv(path)
-    )
-
-
 def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(good_rows_without_corrupt_col, quarantined_raw_lines, parsed).
 

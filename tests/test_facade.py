@@ -332,6 +332,39 @@ def test_pipeline_interactive_routes_through_ivf_index(spark):
         rag.drop_vector_index("t_pipe_lsh_idx")
 
 
+def _named_ids(rows) -> set[int]:
+    """Result ids a pipeline_interactive report names: the cache hit's
+    stored result or the context summaries."""
+    import re
+
+    pairs = (p for r in rows for p in re.findall(r"result (\d+)\)|Summary\[(\d+)\]", r["report"]))
+    return {int(hit or ctx) for hit, ctx in pairs}
+
+
+def test_pipeline_interactive_never_routes_to_a_deleted_vector(spark):
+    """Erasure reaches the routed pipeline: after delete_vectors
+    tombstones every id a routed run named, the next routed run names
+    none of them (it once read the index table without its tombstones,
+    while the facade's search already excluded them) and still answers
+    every workflow from the live vectors."""
+    from ai_iceberg_demo_spark.pipeline.research import pipeline_interactive
+
+    rag = VectorRAG(load_table(spark, "embeddings", SF_DIR), load_table(spark, "documents", SF_DIR))
+    name = "t_pipe_del_idx"
+    rag.drop_vector_index(name)
+    try:
+        rag.create_vector_index(name, kind="ivf", n_cells=16, n_probe=16)
+        named = _named_ids(pipeline_interactive(spark, SF_DIR, index=name).collect())
+        assert named
+        victims = spark.createDataFrame([(i,) for i in sorted(named)], "vec_id long")
+        assert rag.delete_vectors(victims, name) == len(named)
+        again = pipeline_interactive(spark, SF_DIR, index=name).collect()
+        assert len(again) == 5 and _named_ids(again)
+        assert _named_ids(again).isdisjoint(named)
+    finally:
+        rag.drop_vector_index(name)
+
+
 @pytest.mark.parametrize("kind", ["lsh", "ivf"])
 def test_upsert_vector_index_appends_only_new_vectors(spark, kind):
     """M5 lifecycle: upsert indexes ONLY unseen vec_ids (re-upsert is a
@@ -547,7 +580,8 @@ def test_index_calls_read_their_input_once(spark, kind):
 
 def _file_scans(node) -> list:
     """Every file scan of an executed plan, through AQE's wrappers (the
-    tombstone broadcast makes every index search adaptive)."""
+    tombstone broadcast makes a search of an index with deletions
+    adaptive)."""
     kind = node.getClass().getSimpleName()
     if kind == "AdaptiveSparkPlanExec":
         return _file_scans(node.executedPlan())
@@ -585,13 +619,12 @@ def test_index_probe_plans_hash_and_prune_on_the_driver(spark):
             if kind == "lsh":
                 assert "ArrowEvalPython" not in text and "BatchEvalPython" not in text
                 # the rerank reads the index rows' own embeddings: no
-                # fixture scan, no shuffle (the one broadcast is the
-                # tombstone set), and the cosine filter sits in the
-                # index scan's literal-predicate Filter
+                # fixture scan, no shuffle and no join (a fresh index
+                # has no tombstones to anti-join), and the cosine filter
+                # sits in the index scan's literal-predicate Filter
                 assert SF_DIR not in text
-                assert re.search(r"(?<!Broadcast)Exchange", text) is None
-                joins = [ln for ln in text.splitlines() if "Join" in ln]
-                assert joins and all("LeftAnti" in ln for ln in joins)
+                assert "Exchange" not in text
+                assert [ln for ln in text.splitlines() if "Join" in ln] == []
                 cosine_filters = [
                     ln for ln in text.splitlines() if "Filter" in ln and "aggregate(zip_with" in ln
                 ]
@@ -611,32 +644,149 @@ def test_index_probe_plans_hash_and_prune_on_the_driver(spark):
             rag.drop_vector_index(name)
 
 
+def _scope_names(cluster) -> list[str]:
+    """Operation-scope and RDD names of one stage graph cluster, nested
+    clusters included."""
+    nodes, clusters = cluster.childNodes(), cluster.childClusters()
+    return [
+        cluster.name(),
+        *(nodes.apply(i).name() for i in range(nodes.size())),
+        *(n for i in range(clusters.size()) for n in _scope_names(clusters.apply(i))),
+    ]
+
+
+def _in_job_group(spark, group, fn):
+    """``(fn(), jobs, python)``: the jobs ``fn`` ran under job group
+    ``group``, and the scope and RDD names of their stages that belong
+    to a Python worker (``PythonRDD``, ``ArrowEvalPython``,
+    ``BatchEvalPython``) — read from the status store, which keeps each
+    job's stage graphs with the UI off too."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    store = sc._jsc.sc().statusStore()
+    graphs = [store.operationGraphForJob(j) for j in jobs]
+    names = [
+        n for g in graphs for i in range(g.size()) for n in _scope_names(g.apply(i).rootCluster())
+    ]
+    return out, len(jobs), sorted({n for n in names if "Python" in n})
+
+
 @pytest.mark.parametrize("kind, build_jobs", [("lsh", 1), ("ivf", 2)])
 def test_index_search_job_count(spark, kind, build_jobs):
     """An index search reads its parameters from table properties (no
     job) and reranks the index rows' own embeddings: building it runs
     the query collect (plus, for IVF, the centroid ranking), and
-    collecting it runs the tombstone broadcast and the probe. Once a
-    meta-table collect, the corpus join and its distinct exchange added
-    jobs: LSH 5 in all, IVF 4, before any tombstone existed."""
-    sc = spark.sparkContext
+    collecting it runs the probe alone — a fresh index has no
+    tombstones, so no broadcast job. Once a meta-table collect, the
+    corpus join and its distinct exchange added jobs (LSH 5 in all,
+    IVF 4), and later a tombstone broadcast ran even while the set was
+    empty (collect: 2 jobs)."""
     rag, name, emb = _small_index(spark, kind)
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
     try:
-        probe, n_build = jobs(f"search_build_{kind}", lambda: rag.search_similar_results(
+        probe, n_build, _ = _in_job_group(spark, f"search_build_{kind}", lambda: rag.search_similar_results(
             qv, k=3, min_score=-1.0, index=name))
-        rows, n_exec = jobs(f"search_exec_{kind}", probe.collect)
+        rows, n_exec, _ = _in_job_group(spark, f"search_exec_{kind}", probe.collect)
         assert rows[0]["vec_id"] == 0
-        assert (n_build, n_exec) == (build_jobs, 2)
+        assert (n_build, n_exec) == (build_jobs, 1)
+    finally:
+        rag.drop_vector_index(name)
+
+
+def test_search_takes_the_query_as_a_list(spark):
+    """The reference's ``query_embedding: List[float]``: a list or an
+    ndarray query ranks exactly as the one-row frame does, on the exact
+    path and through an index, and an LSH search from a list runs no
+    job while it is built and starts no Python worker (a frame costs a
+    collect, and a frame made from a Python list a Python worker)."""
+    import numpy as np
+
+    rag, name, emb = _small_index(spark, "lsh")
+    vec = emb.filter(F.col("vec_id") == 0).first()["embedding"]
+    qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
+    try:
+        for index in (None, name):
+            want = rag.search_similar_results(qv, k=3, min_score=-1.0, index=index).collect()
+            assert want[0]["vec_id"] == 0
+            for q in (vec, np.asarray(vec, dtype=np.float32)):
+                assert rag.search_similar_results(q, k=3, min_score=-1.0, index=index).collect() == want
+        probe, n_build, py_build = _in_job_group(spark, "list_build", lambda: rag.search_similar_results(
+            vec, k=3, min_score=-1.0, index=name))
+        rows, _, py_exec = _in_job_group(spark, "list_exec", probe.collect)
+        assert rows[0]["vec_id"] == 0
+        assert (n_build, py_build, py_exec) == (0, [], [])
+    finally:
+        rag.drop_vector_index(name)
+
+
+def test_lsh_rows_hashed_on_the_driver_equal_a_build(spark):
+    """An upsert hashes its batch on the driver with the kernel the
+    build runs per Arrow batch: the rows it appends for one vector
+    equal ``build_lsh_index``'s rows for that vector — every ``t``,
+    ``b``, ``sig`` bit and embedding."""
+    from ai_iceberg_demo_spark.facade import index_properties
+    from ai_iceberg_demo_spark.vector.similarity import build_lsh_index
+
+    rag, name, emb = _small_index(spark, "lsh")
+    one = emb.filter(F.col("vec_id") == 450).select("vec_id", "embedding")
+    try:
+        assert rag.upsert_vector_index(one, name) == 1
+        _, params = index_properties(spark, name)
+        appended = spark.table(name).filter(F.col("vec_id") == 450)
+        built = build_lsh_index(one, **params)
+        assert sorted(appended.collect()) == sorted(built.select(*appended.columns).collect())
+        assert appended.count() == params["n_tables"]
+    finally:
+        rag.drop_vector_index(name)
+
+
+@pytest.mark.parametrize("kind, copies", [("lsh", 16), ("ivf", 1)])
+def test_index_writes_count_each_id_once(spark, kind, copies):
+    """An id repeated within one batch counts once, in an upsert and in
+    a delete, and a null id in a delete batch is ignored. An upsert
+    appends each copy of a repeated id as it always has: LSH stores
+    both copies' L = 8 rows, IVF's cell assignment groups by vec_id
+    into one row."""
+    rag, name, emb = _small_index(spark, kind)
+    one = emb.filter(F.col("vec_id") == 450).select("vec_id", "embedding")
+    try:
+        assert rag.upsert_vector_index(one.unionAll(one), name) == 1
+        assert spark.table(name).filter(F.col("vec_id") == 450).count() == copies
+        victims = spark.createDataFrame([(7,), (7,), (None,)], "vec_id long")
+        assert rag.delete_vectors(victims, name) == 1
+        assert rag.delete_vectors(victims, name) == 0
+        assert [r["vec_id"] for r in spark.table(f"{name}__tombstones").collect()] == [7]
+    finally:
+        rag.drop_vector_index(name)
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_index_writes_start_no_python_worker(spark, kind):
+    """An upsert and a delete of a JVM-native batch (a fixture scan, a
+    ``range``) run no Python UDF and start no Python worker: the LSH
+    rows are hashed on the driver (once a ``pandas_udf`` job per
+    upsert), and both writes append an Arrow-built local relation in
+    one write task: a 2-id delete adds one tombstone file (once one per
+    id, as the local relation split). The delete also marks the index
+    ``has_tombstones``, after which a search anti-joins the tombstones
+    and the deleted ids are gone."""
+    rag, name, emb = _small_index(spark, kind)
+    try:
+        batch = emb.filter(F.col("vec_id").isin(450, 451)).select("vec_id", "embedding")
+        n, _, python = _in_job_group(spark, f"upsert_{kind}", lambda: rag.upsert_vector_index(batch, name))
+        assert (n, python) == (2, [])
+        ids = spark.range(450, 452).select(F.col("id").alias("vec_id"))
+        n, _, python = _in_job_group(spark, f"delete_{kind}", lambda: rag.delete_vectors(ids, name))
+        assert (n, python) == (2, [])
+        assert len(spark.table(f"{name}__tombstones").inputFiles()) == 1
+        qv = emb.filter(F.col("vec_id") == 450).select(F.col("embedding").alias("qvec"))
+        hits = rag.search_similar_results(qv, k=3, min_score=-1.0, index=name).collect()
+        assert hits and all(r["vec_id"] not in (450, 451) for r in hits)
     finally:
         rag.drop_vector_index(name)
 
