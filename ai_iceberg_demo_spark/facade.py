@@ -564,9 +564,9 @@ def release_caches(spark: SparkSession) -> int:
     diamonds, pipeline intermediates) that only pay off within their own
     plan; harnesses that run many queries in one session (the driver's
     gate, tools/oracle_check.py, tools/sweep.py) should call this
-    between queries or phases. Drops every persisted RDD AND this
-    session's table handles (so the canonical events persist is rebuilt
-    cleanly on next use, not left as a dangling unpersisted handle).
+    between queries or phases. Drops every persisted RDD and this
+    session's table handles (which hold no storage; the next load
+    re-lists the files).
     Returns the number of persisted RDDs that remain afterwards — 0 in
     a healthy session; callers can assert on it.
     """

@@ -1156,9 +1156,10 @@ def _model_eval_oracle() -> str:
     "anything. The oracle REUSES the three parts' exact oracle "
     "strings as subqueries so the composition can never drift from "
     "its parts. The Spark side builds the parts' one labeled-score "
-    "frame (score, pos) once and passes it to the three builders; "
-    "each family is a closed-form aggregate that reduces map-side "
-    "before anything joins.",
+    "frame (score, pos) once: t64 bins it, and t47's counters and "
+    "t65's ranks both read its one per-score aggregate, whose "
+    "exchange AQE reuses. Each family reduces map-side before "
+    "anything joins.",
     oracle=_model_eval_oracle(),
 )
 def pipeline_model_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1167,11 +1168,13 @@ def pipeline_model_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         classifier_eval,
         labeled_scores,
         roc_auc,
+        score_counts,
     )
 
     labeled = labeled_scores(load_table(spark, "events", sf_dir))
+    counts = score_counts(labeled)
     t47 = long_metrics(
-        classifier_eval(labeled),
+        classifier_eval(counts),
         "threshold",
         ["precision", "recall", "f1", "accuracy"],
     )
@@ -1180,7 +1183,7 @@ def pipeline_model_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "calibration",
         ["ece", "brier"],
     )
-    t65 = long_metrics(roc_auc(labeled), "ranking", ["auc", "gini"])
+    t65 = long_metrics(roc_auc(counts), "ranking", ["auc", "gini"])
     return t47.unionByName(t64).unionByName(t65).orderBy("family", "metric")
 
 

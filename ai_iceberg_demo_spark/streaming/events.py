@@ -2181,8 +2181,9 @@ def t45_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "B's 'active intent' label — confusion counts (tp/fp/fn/tn), "
     "precision, recall, F1, accuracy in one closed-form row. THE "
     "report every auto-labeling pipeline prints before its labels "
-    "train anything; one map-side aggregate (t27's shape), event "
-    "volume reduces to four counters.",
+    "train anything. Event volume reduces per distinct score (t65's "
+    "score_counts aggregate, reused where both run), then to four "
+    "counters.",
     oracle="""
         WITH labeled AS (
             SELECT CASE WHEN value >= 5 THEN 1 ELSE 0 END AS pred,
@@ -2205,7 +2206,8 @@ def t45_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t47_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return classifier_eval(labeled_scores(load_table(spark, "events", sf_dir)))
+    ev = load_table(spark, "events", sf_dir)
+    return classifier_eval(score_counts(labeled_scores(ev)))
 
 
 def labeled_scores(ev: DataFrame) -> DataFrame:
@@ -2215,14 +2217,25 @@ def labeled_scores(ev: DataFrame) -> DataFrame:
     return ev.where("value IS NOT NULL").selectExpr("value AS score", f"{_INTENT} AS pos")
 
 
-def classifier_eval(labeled: DataFrame) -> DataFrame:
-    """t47's row over labeled_scores' (score, pos): rater A predicts
+def score_counts(labeled: DataFrame) -> DataFrame:
+    """(score, n, p): labeled_scores reduced per distinct score, rows and
+    positives as doubles. t47's counters and t65's ranks both read it,
+    so a plan holding both runs one ``hashpartitioning(score)``
+    exchange and AQE reuses it."""
+    return labeled.groupBy("score").agg(
+        F.count("*").cast("double").alias("n"),
+        F.sum("pos").cast("double").alias("p"),
+    )
+
+
+def classifier_eval(counts: DataFrame) -> DataFrame:
+    """t47's row over score_counts' (score, n, p): rater A predicts
     positive at score ≥ 5."""
-    c = labeled.selectExpr(
-        "CAST(sum(CASE WHEN score >= 5 AND pos = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp",
-        "CAST(sum(CASE WHEN score >= 5 AND pos = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp",
-        "CAST(sum(CASE WHEN score < 5 AND pos = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn",
-        "CAST(sum(CASE WHEN score < 5 AND pos = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn",
+    c = counts.selectExpr(
+        "CAST(sum(CASE WHEN score >= 5 THEN p ELSE 0 END) AS BIGINT) AS tp",
+        "CAST(sum(CASE WHEN score >= 5 THEN n - p ELSE 0 END) AS BIGINT) AS fp",
+        "CAST(sum(CASE WHEN score < 5 THEN p ELSE 0 END) AS BIGINT) AS fn",
+        "CAST(sum(CASE WHEN score < 5 THEN n - p ELSE 0 END) AS BIGINT) AS tn",
     )
     tp, fp, fn, tn = (F.col(x).cast("double") for x in ("tp", "fp", "fn", "tn"))
     return c.select(
@@ -2865,8 +2878,9 @@ _T65_SCORE_SHARD = 50.0  # score-range width per rank shard
     "Scale shape: scores first reduce per distinct value (one "
     "partial-agg shuffle), then the rows-below prefix sum runs "
     "TWO-PHASE — scores shard by FLOOR(score/50) into a bounded "
-    "range-contiguous bucket table, per-bucket totals cumsum into "
-    "broadcast offsets, and the only per-row window is "
+    "range-contiguous bucket table, each bucket ranks its own scores "
+    "and reduces to (rows, positives, rank sum), and bucket offsets "
+    "cumsum over that bucket table; the only per-row window is "
     "bucket-partitioned (u9/u11's proven shape; no global "
     "rangepartitioning anywhere). Output also carries the Gini "
     "coefficient 2*AUC-1 the credit-scoring world quotes.",
@@ -2901,43 +2915,41 @@ _T65_SCORE_SHARD = 50.0  # score-range width per rank shard
     """,
 )
 def t65_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return roc_auc(labeled_scores(load_table(spark, "events", sf_dir)))
+    ev = load_table(spark, "events", sf_dir)
+    return roc_auc(score_counts(labeled_scores(ev)))
 
 
-def roc_auc(labeled: DataFrame) -> DataFrame:
-    """t65's row over labeled_scores' (score, pos)."""
+def roc_auc(counts: DataFrame) -> DataFrame:
+    """t65's row over score_counts' (score, n, p)."""
     from pyspark.sql import Window as W
 
-    per_score = labeled.groupBy("score").agg(
-        F.count("*").cast("double").alias("n"),
-        F.sum("pos").cast("double").alias("p"),
-    )
-    # two-phase rows-below: bounded score-range shards, offsets
-    # broadcast, per-row window bucket-partitioned (never global)
-    sharded = per_score.withColumn(
-        "_b", F.floor(F.col("score") / _T65_SCORE_SHARD).cast("bigint")
-    )
-    b_tot = sharded.groupBy("_b").agg(F.sum("n").alias("_bn"))
-    w_off = W.orderBy("_b").rowsBetween(W.unboundedPreceding, -1)
-    offsets = b_tot.select(
-        "_b", F.coalesce(F.sum("_bn").over(w_off), F.lit(0.0)).alias("_off")
-    )
+    # two-phase ranks: each bounded score-range shard ranks its own
+    # scores (per-row window shard-partitioned, never global) and
+    # reduces to one row; shard offsets then cumsum over the shard
+    # table, so the per-score frame is read once. Every term is a
+    # multiple of 0.5, so while rows² < 2^53 the sums are exact in
+    # any order.
     w_local = W.partitionBy("_b").orderBy("score").rowsBetween(
         W.unboundedPreceding, -1
     )
-    ranked = sharded.join(F.broadcast(offsets), "_b").select(
-        "n",
-        "p",
-        (F.col("_off") + F.coalesce(F.sum("n").over(w_local), F.lit(0.0))).alias(
-            "below"
-        ),
+    shards = (
+        counts.withColumn(
+            "_b", F.floor(F.col("score") / _T65_SCORE_SHARD).cast("bigint")
+        )
+        .withColumn("_below", F.coalesce(F.sum("n").over(w_local), F.lit(0.0)))
+        .groupBy("_b")
+        .agg(
+            F.sum("n").alias("_bn"),
+            F.sum("p").alias("_bp"),
+            F.sum(F.col("p") * (F.col("_below") + (F.col("n") + 1) / 2.0)).alias("_br"),
+        )
     )
-    agg = ranked.agg(
-        F.sum("p").alias("np"),
-        (F.sum("n") - F.sum("p")).alias("nn"),
-        F.sum(F.col("p") * (F.col("below") + (F.col("n") + 1) / 2.0)).alias(
-            "r_pos"
-        ),
+    w_off = W.orderBy("_b").rowsBetween(W.unboundedPreceding, -1)
+    off = F.coalesce(F.sum("_bn").over(w_off), F.lit(0.0))
+    agg = shards.select("_bn", "_bp", (F.col("_br") + off * F.col("_bp")).alias("_r")).agg(
+        F.sum("_bp").alias("np"),
+        (F.sum("_bn") - F.sum("_bp")).alias("nn"),
+        F.sum("_r").alias("r_pos"),
     )
     auc = (F.col("r_pos") - F.col("np") * (F.col("np") + 1) / 2.0) / (
         F.col("np") * F.col("nn")

@@ -118,19 +118,10 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     """Load one fixture table as a DataFrame (parquet scan w/ pushdown).
 
     Schemas are normalized (see normalize_schema) so fixture-physical-
-    type churn between driver rounds never reaches query code.
-
-    For ``events``, when normalization actually rewrote a column, the
-    normalized frame is ``persist()``-ed (lazy; first action
-    materializes):
-    otherwise every query in the session re-executes the cast on every
-    action — the round-3 bench showed exactly that tax on the events
-    consumers (t8 3.3×, t5 1.8×, j8 1.7×). Locally the cache is a few
-    MB; at 100 TB the equivalent is a ONE-TIME canonical-schema rewrite
-    (Iceberg schema migration / ETL step), not a cache — the persist
-    here stands in for that materialization. A fixture regen that lands
-    on TIMESTAMP_LTZ natively makes ``changed`` False and skips the
-    cache entirely, restoring straight parquet pushdown.
+    type churn between fixture regenerations never reaches query code. The
+    handle is a plain scan: nothing is persisted, so parquet pushdown
+    and AQE exchange reuse see every reader. At 100 TB the canonical
+    ``ts`` type is a one-time Iceberg schema migration, not a cache.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
@@ -143,31 +134,16 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         # Tolerate a future fixture regen back to TIMESTAMP(NANOS),
         # which Spark 4 otherwise rejects ([PARQUET_TYPE_ILLEGAL]).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(path)
-    df = normalize_schema(raw)
-    if name == "events" and df is not raw:
-        # Only events: its consumers (windows, sessions, as-of joins)
-        # re-scan the whole table, so the cast tax multiplies; lineitem/
-        # orders queries instead rely on parquet predicate pushdown and
-        # column pruning, which an InMemoryRelation would hide — their
-        # single date-column cast rides along with the pruned scan.
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df = normalize_schema(spark.read.parquet(path))
     _DF_CACHE[key] = df
     return df
 
 
 def clear_table_cache(spark: SparkSession) -> None:
-    """Drop this session's table handles and unpersist their storage.
-
-    Long sweeps (the 140-query registry run, repeated facade use) should
-    call this between phases so session-lifetime persists don't pile up.
-    """
+    """Drop this session's table handles, so the next load re-lists the
+    files (a handle holds no storage)."""
     sid = id(spark)
     for key in [k for k in _DF_CACHE if k[0] == sid]:
-        try:
-            _DF_CACHE[key].unpersist()
-        except Exception:
-            pass
         del _DF_CACHE[key]
 
 

@@ -67,10 +67,9 @@ def time_query(spark, spec, sf_dir: str, runs: int) -> float:
     substrate build for everyone after (r11→r12: v18c 2.1 s → 0.74 s
     and g10 3.0 s → 3.7 s from the reorder alone, zero code diff).
     Clearing the cache BEFORE the warm run makes every number
-    self-contained: the warm run rebuilds the query's own diamonds (and
-    the session-lifetime table persists), the timed runs reuse them —
-    the steady state a long-lived cluster job sees, in whatever order
-    queries are listed."""
+    self-contained: the warm run rebuilds the query's own diamonds, the
+    timed runs reuse them — the steady state a long-lived cluster job
+    sees, in whatever order queries are listed."""
     from ai_iceberg_demo_spark.tables import clear_table_cache
 
     spark.catalog.clearCache()

@@ -603,8 +603,8 @@ def test_drift_windows_only_see_aggregated_frames(spark):
 def test_drift_card_builds_its_side_tagged_frame_once(spark, monkeypatch):
     """pipeline_drift_card builds drift_sides once and hands it to t84's
     and t113's builders, so each of its events reads (t84's edge
-    quantiles and binning, t113's per-value counts, printed under each
-    reader of their cache) is that one ts-guarded side-tagged scan."""
+    quantiles and binning, t113's per-value counts) is a parquet scan
+    carrying that one frame's ts guard in its data filters."""
     import re
 
     from ai_iceberg_demo_spark.streaming import events
@@ -619,20 +619,26 @@ def test_drift_card_builds_its_side_tagged_frame_once(spark, monkeypatch):
 
     monkeypatch.setattr(events, "drift_sides", counting)
     spark.catalog.clearCache()
-    clear_table_cache(spark)  # the events handle is persisted again
+    clear_table_cache(spark)
     plan = events.pipeline_drift_card(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
     assert len(calls) == 1
-    reads = re.findall(r"InMemoryTableScan \[event_type#\d+, ts#\d+, value#\d+\], \[([^\n]*)", plan)
+    reads = [s for s in re.findall(r"FileScan parquet[^\n]*", plan) if "events.parquet" in s]
     assert len(reads) >= 3, plan
-    assert all("isnotnull(ts#" in r for r in reads), reads
+    assert all(re.search(r"DataFilters: \[[^\]]*isnotnull\(ts#", r) for r in reads), reads
 
 
-def test_model_eval_reads_events_four_times(spark):
+def _final_plan(df) -> str:
+    """The AQE final plan of an executed frame, without the initial plan
+    AdaptiveSparkPlanExec prints below it."""
+    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def test_model_eval_reuses_the_per_score_exchange(spark):
     """pipeline_model_eval hands one labeled-score frame to t47, t64 and
-    t65, and t64's overall rates are windows over its bin table: the
-    card reads events four times (t47 once, t64 once, t65's two rank
-    phases), where calling the three registered queries read it five
-    times."""
+    t65, and t47's counters and t65's ranks read one score_counts
+    aggregate: after a collect, the final plan runs its
+    hashpartitioning(score) exchange once and reuses it, so the card
+    scans events twice (t64's bins and the per-score aggregate)."""
     import re
 
     from ai_iceberg_demo_spark.tables import clear_table_cache
@@ -640,6 +646,27 @@ def test_model_eval_reads_events_four_times(spark):
     spark.catalog.clearCache()
     clear_table_cache(spark)
     df = all_registries().specs["pipeline_model_eval"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    df.collect()
+    plan = _final_plan(df)
+    assert re.search(r"ReusedExchange [^\n]*Exchange hashpartitioning\(score#", plan), plan
     scans = re.findall(r"FileScan parquet[^\n]*", plan)
-    assert sum("events.parquet" in s for s in scans) == 4, plan
+    assert sum("events.parquet" in s for s in scans) == 2, plan
+
+
+def test_events_is_a_plain_scan_so_aqe_reuses_its_exchanges(spark):
+    """load_table persists nothing, so two identical events aggregates
+    in one plan run one exchange and AQE reuses it."""
+    from pyspark.storagelevel import StorageLevel
+
+    from ai_iceberg_demo_spark.tables import TABLE_NAMES, clear_table_cache, load_table
+
+    # CacheManager matches canonical plans: a plain read made after a
+    # persisted one would still be served from memory
+    spark.catalog.clearCache()
+    clear_table_cache(spark)
+    ev = load_table(spark, "events", SF_DIR)
+    both = ev.groupBy("event_type").count().union(ev.groupBy("event_type").count())
+    both.collect()
+    assert _final_plan(both).count("ReusedExchange") == 1, _final_plan(both)
+    for name in TABLE_NAMES:
+        assert load_table(spark, name, SF_DIR).storageLevel == StorageLevel.NONE, name

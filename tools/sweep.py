@@ -33,8 +33,6 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     slow_s = float(sys.argv[2]) if len(sys.argv) > 2 else 3.0
 
-    from ai_iceberg_demo_spark.tables import clear_table_cache
-
     # load evidence with every run (r11 verdict #3): this VM hosts a
     # co-tenant process whose load explains 2x zero-diff swings; print
     # start/end loadavg so any flagged timing carries its context
@@ -55,10 +53,6 @@ def main() -> int:
         # fresh on every call — drop them so a 140-query sweep doesn't
         # accumulate a session's worth of dead cached partitions
         spark.catalog.clearCache()
-    # the global clearCache also dropped the session-lifetime table
-    # handles; rebuild them so post-sweep work starts clean (the floor
-    # check below re-isolates per query regardless)
-    clear_table_cache(spark)
     for dt, name in sorted(timings, reverse=True):
         if dt > slow_s:
             print(f"SLOW {dt:6.1f}s  {name}")
