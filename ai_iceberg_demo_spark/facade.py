@@ -343,8 +343,8 @@ class VectorRAG:
         index's table properties (``index_properties``) so the appended
         rows are probe-compatible by construction. Returns the number of
         distinct vec_ids appended; rows with a null vec_id are ignored,
-        and a vec_id repeated within one batch appends every copy but
-        counts once.
+        and a vec_id repeated within one batch appends its first copy
+        only, so a search returns it once on either kind.
 
         Cost is O(new batch), and the batch is read ONCE: one collect
         of the QA-gated ``(vec_id, embedding)`` rows to the driver (the
@@ -388,7 +388,10 @@ class VectorRAG:
         if kind == "lsh":
             probe = probe.filter(F.col("t") == 0)
         existing = {r["vec_id"] for r in probe.select("vec_id").collect()}
-        fresh = [r for r in rows if r["vec_id"] not in existing]
+        first = {}
+        for r in rows:
+            first.setdefault(r["vec_id"], r)
+        fresh = [r for i, r in first.items() if i not in existing]
         if not fresh:
             return 0
         ids = [r["vec_id"] for r in fresh]
@@ -415,7 +418,7 @@ class VectorRAG:
         owner = self.embeddings.sparkSession
         if owner is not spark:
             owner.catalog.refreshTable(name)
-        return len(set(ids))
+        return len(ids)
 
     def delete_vectors(
         self,

@@ -101,6 +101,39 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "))
 
 
+# unit -> (length function, the order-n gram starting at 1-based position i)
+_NGRAM_UNITS = {
+    "word": ("size", "concat_ws(' ', slice({col}, i, {n}))"),
+    "char": ("length", "substring({col}, i, {n})"),
+}
+
+
+def grams_sql(col: str, n: int, unit: str = "word") -> str:
+    """Spark-SQL ``array<string>``: the order-n grams of ``col`` in start
+    order, the package's one n-gram builder. ``unit`` "word" reads
+    ``col`` as a token array and joins each gram's tokens with ' ';
+    "char" reads it as a string and takes substrings. Empty when ``col``
+    is shorter than n, so ``sequence`` never runs descending. Positional
+    callers ``posexplode`` it: a gram's 1-based start is pos + 1.
+
+    ``col`` must name a column or a lambda variable (``bind_sql``): an
+    expression in its place is re-evaluated for every gram."""
+    length, gram = _NGRAM_UNITS[unit]
+    return (
+        f"CASE WHEN {length}({col}) >= {n} THEN "
+        f"transform(sequence(1, {length}({col}) - {n} + 1), i -> {gram.format(col=col, n=n)}) "
+        "ELSE cast(array() as array<string>) END"
+    )
+
+
+def bind_sql(var: str, value: str, body: str) -> str:
+    """Spark-SQL ``body`` with lambda variable ``var`` bound ONCE per row
+    to ``value`` (a one-element transform). Inlined instead, ``value``
+    is re-evaluated at every use in ``body``, and inside a per-gram
+    lambda once per gram."""
+    return f"transform(array({value}), {var} -> {body})[0]"
+
+
 # ---------------------------------------------------------------------------
 # Oracle-checked queries
 # ---------------------------------------------------------------------------
@@ -526,27 +559,27 @@ def t17_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def decontamination(docs: DataFrame) -> DataFrame:
     """t17's per-contaminated-doc rows; the prep cards anti-join them."""
     from ai_iceberg_demo_spark.tables import fan_out_small_input
-    from ai_iceberg_demo_spark.vector.dedup import shingles
 
     bench_docs = (
         docs.filter(F.col("doc_id") % 10 == 3)
         .alias("b")
         .join(docs.alias("c"), F.col("c.doc_id") == F.col("b.doc_id") + 1)
         .select(
-            F.col("b.doc_id").alias("doc_id"),
-            F.concat(F.col("b.text"), F.lit(" "), F.col("c.text")).alias("text"),
+            F.col("b.doc_id").alias("bench_id"),
+            F.split(F.concat(F.col("b.text"), F.lit(" "), F.col("c.text")), " ").alias("t"),
         )
     )
-    bench_grams = bench_docs.select(
-        F.col("doc_id").alias("bench_id"),
-        F.explode(shingles(F.col("text"), _DECON_N)).alias("gram"),
+    bench_grams = bench_docs.selectExpr(
+        "bench_id", f"explode({grams_sql('t', _DECON_N)}) AS gram"
     ).distinct()
     # NO pre-distinct on the corpus side: the final countDistinct
     # already collapses within-doc repeats, so the raw exploded grams
     # flow map-side into the broadcast join — the corpus is never
     # shuffled at its exploded width, only the post-join hits are.
-    corpus_grams = fan_out_small_input(docs.filter(F.col("doc_id") % 10 != 3)).select(
-        "doc_id", F.explode(shingles(F.col("text"), _DECON_N)).alias("gram")
+    corpus_grams = (
+        fan_out_small_input(docs.filter(F.col("doc_id") % 10 != 3))
+        .selectExpr("doc_id", "split(text, ' ') AS t")
+        .selectExpr("doc_id", f"explode({grams_sql('t', _DECON_N)}) AS gram")
     )
     return (
         corpus_grams.join(F.broadcast(bench_grams), "gram")
@@ -708,21 +741,16 @@ _BOILER_MIN_DOCS = 20  # shingle must appear in >= this many distinct docs
 )
 def t20_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_iceberg_demo_spark.tables import fan_out_small_input
-    from ai_iceberg_demo_spark.vector.dedup import shingles
 
     docs = fan_out_small_input(load_table(spark, "documents", sf_dir))
-    salted = docs.select(
+    salted = docs.selectExpr(
         "doc_id",
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" copyright footer all rights reserved contact site admin"),
-            ),
-        ).otherwise(F.col("text")).alias("text"),
+        "split(CASE WHEN doc_id % 4 = 0 THEN text ||"
+        " ' copyright footer all rights reserved contact site admin'"
+        " ELSE text END, ' ') AS t",
     )
-    grams = salted.select(
-        "doc_id", F.explode(shingles(F.col("text"), _BOILER_N)).alias("gram")
+    grams = salted.selectExpr(
+        "doc_id", f"explode({grams_sql('t', _BOILER_N)}) AS gram"
     ).distinct()
     return (
         grams.groupBy("gram")
@@ -739,10 +767,10 @@ _BIGRAM_TOPK = 20
     survey_ref="training-data (tokenizer induction)",
     doc="the statistic a BPE/WordPiece merge step consumes: corpus-wide "
     "adjacent-token-pair frequencies, top-20 by count (ties broken by "
-    "pair text for a total deterministic order). Pairs are built "
-    "JVM-side with zip_with over two slices of the ONE bound token "
-    "array (the r3 lambda-binding lesson: never re-split inside the "
-    "lambda), so the map side is a single pass; the only shuffle is "
+    "pair text for a total deterministic order). Pairs are the word "
+    "2-grams (grams_sql) of the ONE bound token array (the r3 "
+    "lambda-binding lesson: never re-split inside the lambda), so "
+    "the map side is a single pass; the only shuffle is "
     "the partial-aggregated pair count and the top-k compiles to "
     "TakeOrderedAndProject — at 100 TB this is exactly a wordcount.",
     oracle=f"""
@@ -766,19 +794,8 @@ def t21_bigram_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_iceberg_demo_spark.tables import fan_out_small_input
 
     docs = fan_out_small_input(load_table(spark, "documents", sf_dir))
-    toks = docs.select(F.split("text", " ").alias("t"))
-    pairs = toks.select(
-        F.explode(
-            F.when(
-                F.size("t") >= 2,
-                F.zip_with(
-                    F.slice(F.col("t"), 1, F.size("t") - 1),
-                    F.slice(F.col("t"), 2, F.size("t") - 1),
-                    lambda a, b: F.concat(a, F.lit(" "), b),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("pair")
-    )
+    toks = docs.selectExpr("split(text, ' ') AS t")
+    pairs = toks.selectExpr(f"explode({grams_sql('t', 2)}) AS pair")
     return (
         pairs.groupBy("pair")
         .agg(F.count("*").cast("bigint").alias("n"))
@@ -1639,7 +1656,7 @@ _PMI_MIN_PAIR = 5  # pairs rarer than this have junk PMI estimates
     name="t67_pmi_collocations",
     survey_ref="training-data (collocation mining); t21's scored layer",
     doc="pointwise-mutual-information collocations: adjacent token "
-    "pairs (t21's zip_with construction — one bound array, never "
+    "pairs (t21's word 2-grams — one bound array, never "
     "re-split in the lambda) scored PMI = ln(n_ab * N / (n_a * n_b)) "
     f"against unigram counts, min pair count {_PMI_MIN_PAIR}, top "
     f"{_PMI_TOPK} by PMI. Raw frequency (t21) surfaces 'of the'; PMI "
@@ -1690,18 +1707,7 @@ def t67_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("n_w"))
     )
     tot = uni_n.agg(F.sum("n_w").cast("double").alias("n"))
-    pairs = toks.select(
-        F.explode(
-            F.when(
-                F.size("t") >= 2,
-                F.zip_with(
-                    F.slice(F.col("t"), 1, F.size("t") - 1),
-                    F.slice(F.col("t"), 2, F.size("t") - 1),
-                    lambda a, b: F.concat(a, F.lit(" "), b),
-                ),
-            ).otherwise(F.array())
-        ).alias("pair")
-    )
+    pairs = toks.selectExpr(f"explode({grams_sql('t', 2)}) AS pair")
     pair_n = (
         pairs.groupBy("pair")
         .agg(F.count("*").cast("bigint").alias("n_ab"))
@@ -2418,19 +2424,7 @@ def t77_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("double").alias("n_w"))
     )
     tot = uni_n.agg(F.sum("n_w").alias("n"))
-    doc_pairs = toks.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size("t") >= 2,
-                F.zip_with(
-                    F.slice(F.col("t"), 1, F.size("t") - 1),
-                    F.slice(F.col("t"), 2, F.size("t") - 1),
-                    lambda a, b: F.concat(a, F.lit(" "), b),
-                ),
-            ).otherwise(F.array())
-        ).alias("pair"),
-    )
+    doc_pairs = toks.selectExpr("doc_id", f"explode({grams_sql('t', 2)}) AS pair")
     pair_n = doc_pairs.groupBy("pair").agg(
         F.count("*").cast("double").alias("n_ab")
     )
@@ -2517,16 +2511,8 @@ _T96_BUCKETS = 10
 def t96_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     toks = docs.select("doc_id", F.split("text", " ").alias("t"))
-    grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.size("t") - (_T96_N - 1), F.lit(0))
-                ),
-                lambda i: F.array_join(F.slice(F.col("t"), i, _T96_N), " "),
-            )
-        ).alias("gram"),
+    grams = toks.selectExpr(
+        "doc_id", f"explode({grams_sql('t', _T96_N)}) AS gram"
     ).transform(persist_once)
     bounds = grams.agg(
         F.min("doc_id").alias("lo"), (F.max("doc_id") + 1).alias("hi")
@@ -2735,12 +2721,6 @@ _FOOTER = ["near", "duplicate", "footer", "variant"]  # the planted candidate ta
 _FOOTER_SQL = "array(" + ", ".join(f"'{t}'" for t in _FOOTER) + ")"
 _VARIANT_SQL = "CASE WHEN doc_id % 20 = 0 THEN 'footer' ELSE 'truncated' END AS variant"
 
-# unit -> (length function, the order-n gram starting at 1-based position i)
-_NGRAM_UNITS = {
-    "word": ("size", "concat_ws(' ', slice({col}, i, {n}))"),
-    "char": ("length", "substring({col}, i, {n})"),
-}
-
 
 def eval_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, text) of every 10th document, hash-partitioned by doc_id
@@ -2776,16 +2756,12 @@ def ngrams_sql(col: str, orders, unit: str = "word") -> str:
     column ``col`` for every n in ``orders`` — one explode covers all
     orders instead of one scan per order. ``unit`` "word" reads ``col``
     as a token array and joins each gram's tokens with ' '; "char" reads
-    it as a string and takes substrings."""
-    length, gram = _NGRAM_UNITS[unit]
-    cases = [
-        f"CASE WHEN {length}({col}) >= {n} THEN "
-        f"transform(sequence(1, {length}({col}) - {n} + 1), "
-        f"i -> named_struct('n', {n}, 'gram', {gram.format(col=col, n=n)})) "
-        "ELSE cast(array() as array<struct<n:int,gram:string>>) END"
+    it as a string and takes substrings (``grams_sql``)."""
+    per_order = [
+        f"transform({grams_sql(col, n, unit)}, g -> named_struct('n', {n}, 'gram', g))"
         for n in orders
     ]
-    return "flatten(array(" + ", ".join(cases) + "))"
+    return "flatten(array(" + ", ".join(per_order) + "))"
 
 
 def clipped_overlap(pairs: DataFrame, ref: str, cand: str) -> DataFrame:
@@ -4394,7 +4370,7 @@ def t114_distinct_n(spark: SparkSession, sf_dir: str) -> DataFrame:
         for n in orders
     )
     per_doc = (
-        toks.selectExpr(*[f"{ngrams_sql('t', (n,))} AS g{n}" for n in orders])
+        toks.selectExpr(*[f"{grams_sql('t', n)} AS g{n}" for n in orders])
         .selectExpr(f"inline(array({stats}))")
         .filter("tot > 0")
         .groupBy("n")

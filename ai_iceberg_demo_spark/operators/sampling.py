@@ -2219,8 +2219,9 @@ def _packing_card_oracle() -> str:
     "registered SQL strings verbatim; the Spark side builds one token "
     "frame and one doc_id-order packing, shared by the overflow and "
     "exact-split rows, and reduces each strategy to summary "
-    "aggregates — the adjacency join is position-keyed corpus×corpus, "
-    "pinned shuffle_hash (d13 rule).",
+    "aggregates — u47's cell-major positions make the same-cell "
+    "adjacency share (n - distinct cells) / (n - 1), read off the same "
+    "aggregate as its bin count, with no position self-join.",
     oracle=_packing_card_oracle(),
 )
 def pipeline_packing_card(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2252,15 +2253,17 @@ def pipeline_packing_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(segs).cast("double").alias("n_segments"),
         F.sum(F.when(segs > 1, 1).otherwise(0)).cast("double").alias("split_docs"),
     )
-    icp = incontext_packing(toks, load_table(spark, "embeddings", sf_dir)).transform(
-        persist_once
+    # u47 ranks positions cell-major, so of its n - 1 adjacent pairs
+    # exactly (distinct cells - 1) cross a cell boundary: the adjacency
+    # share is one aggregate, not a position self-join
+    inc = incontext_packing(toks, load_table(spark, "embeddings", sf_dir)).agg(
+        n_bins,
+        crossers,
+        F.expr(
+            "CASE WHEN count(*) > 1 THEN round((count(*) - count(DISTINCT cell_id))"
+            " / (count(*) - 1) + 0.0, 6) END AS same_cell_adjacency"
+        ),
     )
-    a, b = icp.alias("a"), icp.alias("b")
-    same = F.when(F.col("a.cell_id") == F.col("b.cell_id"), 1.0).otherwise(0.0)
-    adj = a.join(
-        b.hint("shuffle_hash"), F.col("b.position") == F.col("a.position") + 1
-    ).agg(F.round(F.avg(same) + 0.0, 6).alias("same_cell_adjacency"))
-    inc = icp.agg(n_bins, crossers).crossJoin(F.broadcast(adj))
     out = (
         long_metrics(over, "overflow", ["n_docs", "n_bins", "boundary_crossers", "total_tokens"])
         .unionAll(

@@ -22,6 +22,13 @@ N permutations as affine maps (a_i·x + b_i mod 2^31−1) — the classic
 construction; pure integer arithmetic reproduces identically on any
 engine and the token stream pays one digest instead of N.
 
+Every word n-gram here comes from ``functions.text.grams_sql``, the
+package's one n-gram builder, so a document shorter than n has no gram
+in either engine. The shingle sets, the MinHash signatures, the band
+keys and the twin salting are each one SQL-text ``selectExpr``: one
+parsed expression instead of a Column tree built node by node over
+py4j.
+
 Scale notes: every pipeline is explode → equi-join on a compact key
 (shingle / band / bucket) → agg. No cross joins anywhere; shuffle keys
 are high-cardinality; band width tunes the candidate-pair volume.
@@ -32,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ai_iceberg_demo_spark.functions.text import _URL_NORM_SQL
+from ai_iceberg_demo_spark.functions.text import _URL_NORM_SQL, bind_sql, grams_sql
 from ai_iceberg_demo_spark.operators.graph import connected_components
 from ai_iceberg_demo_spark.registry import Registry
 from ai_iceberg_demo_spark.tables import load_table, persist_once
@@ -53,31 +60,11 @@ def tokens(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles (1-based slice matches the oracle).
-
-    The token array is bound ONCE per row as a lambda variable (the
-    single-element outer transform): referencing ``split(text)`` inside
-    the per-gram lambda would inline the split into every element and
-    re-tokenize the document n_grams×n times — measured 3.2× slower on
-    the 8-gram corpus explode. One ``slice`` per gram, not n
-    ``element_at``s, for the same reason.
-    """
-    return F.flatten(
-        F.transform(
-            F.array(tokens(text)),
-            lambda t: F.when(
-                F.size(t) >= n,
-                F.transform(
-                    # lower bound 1 so sequence() never runs descending;
-                    # the when-guard discards the dummy index for docs
-                    # shorter than n tokens
-                    F.sequence(F.lit(1), F.greatest(F.size(t) - (n - 1), F.lit(1))),
-                    lambda i: F.concat_ws(" ", F.slice(t, i, n)),
-                ),
-            ).otherwise(F.array().cast("array<string>")),
-        )
-    )
+# A document's word-3-gram shingles: its token array is bound ONCE per
+# row (bind_sql); inlining split(text) into the per-gram lambda would
+# re-tokenize the document once per gram (measured 3.2x slower on the
+# 8-gram corpus explode).
+_SHINGLES_SQL = bind_sql("t", "split(text, ' ')", grams_sql("t", 3))
 
 
 # ---------------------------------------------------------------------------
@@ -99,22 +86,16 @@ def shingle_sets(docs: DataFrame) -> DataFrame:
     (doc, shingle) distinct exchange, and n_sh riding each row (+8
     bytes) replaces a sizes aggregation and its two size-attach joins:
     the overlap builders recover each side's size as min(n_sh), a
-    per-doc constant, inside their own aggregation. The shingle array
-    is bound once per row (the shingles() outer-transform discipline)
-    so size() can't re-tokenize the document. Contract: unique doc_ids
-    (a repeated id keeps two sets instead of merging them); docs under
-    3 tokens have no rows."""
-    per_doc = F.transform(
-        F.array(F.array_distinct(shingles(F.col("text")))),
-        lambda a: F.transform(
-            a, lambda t: F.struct(t.alias("shingle"), F.size(a).cast("long").alias("n_sh"))
-        ),
+    per-doc constant, inside their own aggregation. The shingle set
+    is bound once per row (bind_sql) so size() can't re-tokenize the
+    document. Contract: unique doc_ids (a repeated id keeps two sets
+    instead of merging them); docs under 3 tokens have no rows."""
+    per_doc = bind_sql(
+        "a",
+        f"array_distinct({_SHINGLES_SQL})",
+        "transform(a, g -> named_struct('shingle', g, 'n_sh', CAST(size(a) AS BIGINT)))",
     )
-    return (
-        docs.select("doc_id", F.explode(F.flatten(per_doc)).alias("_e"))
-        .select("doc_id", "_e.shingle", "_e.n_sh")
-        .transform(persist_once)
-    )
+    return docs.selectExpr("doc_id", f"inline({per_doc})").transform(persist_once)
 
 
 def band_pairs(bands: DataFrame) -> DataFrame:
@@ -387,28 +368,23 @@ _TWIN_FOOTER = " near duplicate footer variant"
 
 
 def _guard_below_twin_offset(
-    col: F.Column,
+    col: str = "doc_id",
     offset: int = _TWIN_DOC_OFFSET,
-    id_name: str = "doc_id",
     offset_name: str = "_TWIN_DOC_OFFSET",
-) -> F.Column:
-    """Per-row guard (no extra job): the twin-vs-corpus split is an
-    id threshold on the ORACLE side, so a fixture whose genuine ids
-    reach the twin offset would silently misclassify there. Fail
-    loudly on the Spark side instead. Folded into the used
-    expression so Catalyst cannot prune it."""
-    return F.when(col < offset, col).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"{id_name} >= {offset_name} ({offset}): the "
-                    "planted-twin id range overlaps genuine corpus ids — "
-                    f"raise {offset_name} (and its oracle twin) above "
-                    f"max({id_name}); offending id: "
-                ),
-                col.cast("string"),
-            )
-        ).cast("long")
+) -> str:
+    """Spark-SQL per-row guard on id column ``col`` (no extra job): the
+    twin-vs-corpus split is an id threshold on the ORACLE side, so a
+    fixture whose genuine ids reach the twin offset would silently
+    misclassify there. Fail loudly on the Spark side instead. Folded
+    into the used expression so Catalyst cannot prune it."""
+    msg = (
+        f"{col} >= {offset_name} ({offset}): the planted-twin id range "
+        f"overlaps genuine corpus ids — raise {offset_name} (and its "
+        f"oracle twin) above max({col}); offending id: "
+    )
+    return (
+        f"CASE WHEN {col} < {offset} THEN {col} "
+        f"ELSE CAST(raise_error(concat('{msg}', CAST({col} AS STRING))) AS BIGINT) END"
     )
 
 
@@ -418,21 +394,13 @@ def salt_doc_twins(sample: DataFrame, every: int = 30) -> DataFrame:
     # r13 (guide §6): ONE pass — each row explodes into itself (guarded)
     # plus, for every-th docs, its footer twin. The former two-branch
     # union read the sample twice; same row multiset, one scan.
-    variants = F.array(
-        F.struct(
-            _guard_below_twin_offset(F.col("doc_id")).alias("doc_id"),
-            F.col("text").alias("text"),
-        ),
-        F.struct(
-            (F.col("doc_id") + _TWIN_DOC_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(_TWIN_FOOTER)).alias("text"),
-        ),
+    variants = (
+        f"array(named_struct('doc_id', {_guard_below_twin_offset()}, 'text', text), "
+        f"named_struct('doc_id', doc_id + {_TWIN_DOC_OFFSET}, "
+        f"'text', concat(text, '{_TWIN_FOOTER}')))"
     )
-    keep = F.filter(
-        variants, lambda v, i: (i == 0) | (F.col("doc_id") % every == 0)
-    )
-    return sample.select(F.explode(keep).alias("_v")).select(
-        "_v.doc_id", "_v.text"
+    return sample.selectExpr(
+        f"inline(filter({variants}, (v, i) -> i = 0 OR doc_id % {every} = 0))"
     )
 
 
@@ -506,31 +474,18 @@ def minhash_sigs(docs: DataFrame) -> DataFrame:
     # full-core fan-out: the build is exchange-free now, so no later
     # shuffle will re-spread the md5 work the old agg exchange did
     docs = fan_out_small_input(docs, factor=64)
-    xs = F.transform(
-        F.array_distinct(shingles(F.col("text"))),
-        lambda t: F.conv(F.substring(F.md5(F.encode(t, "UTF-8")), 1, 7), 16, 10).cast(
-            "long"
-        ),
+    xs = (
+        f"transform(array_distinct({_SHINGLES_SQL}), "
+        "g -> CAST(conv(substring(md5(encode(g, 'UTF-8')), 1, 7), 16, 10) AS BIGINT))"
     )
-    # bind the hash array ONCE per row (the shingles() single-element
-    # outer-transform discipline): referencing xs inside each of the 16
-    # min expressions would inline the md5 transform 16×
-    sig = F.transform(
-        F.array(xs),
-        lambda v: F.struct(
-            *[
-                F.array_min(
-                    F.transform(v, lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(_MERSENNE_P))
-                ).alias(f"h{i}")
-                for i, (a, b) in enumerate(zip(_MINHASH_A, _MINHASH_B))
-            ]
-        ),
+    mins = ", ".join(
+        f"'h{i}', array_min(transform(v, x -> ({a} * x + {b}) % {_MERSENNE_P}))"
+        for i, (a, b) in enumerate(zip(_MINHASH_A, _MINHASH_B))
     )
-    return (
-        docs.select("doc_id", F.explode(sig).alias("_s"))
-        .filter(F.col("_s.h0").isNotNull())
-        .select("doc_id", "_s.*")
-    )
+    # the hash array is bound ONCE per row: referencing xs inside each
+    # of the 16 min expressions would inline the md5 transform 16×
+    sig = bind_sql("v", xs, f"named_struct({mins})")
+    return docs.selectExpr("doc_id", f"inline(array({sig}))").filter("h0 IS NOT NULL")
 
 
 def minhash_bands(docs: DataFrame) -> DataFrame:
@@ -539,24 +494,13 @@ def minhash_bands(docs: DataFrame) -> DataFrame:
     incremental batch-vs-corpus). In production the corpus' bands are
     PERSISTED (bucketed by band_val) so each new crawl batch only
     hashes itself and probes the index."""
-    sigs = minhash_sigs(docs)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.md5(
-                F.encode(
-                    F.concat_ws(
-                        "_", *[F.col(f"h{4 * b + j}").cast("string") for j in range(BAND_SIZE)]
-                    ),
-                    "UTF-8",
-                )
-            ).alias("band_val"),
-        )
+    bands = ", ".join(
+        f"named_struct('band_idx', {b}, 'band_val', md5(encode(concat_ws('_', "
+        + ", ".join(f"CAST(h{BAND_SIZE * b + j} AS STRING)" for j in range(BAND_SIZE))
+        + "), 'UTF-8')))"
         for b in range(N_HASHES // BAND_SIZE)
-    ]
-    return sigs.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("band")
-    ).select("doc_id", "band.band_idx", "band.band_val")
+    )
+    return minhash_sigs(docs).selectExpr("doc_id", f"inline(array({bands}))")
 
 
 @REGISTRY.register(
@@ -582,13 +526,13 @@ def d7_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would silently DROP a genuine corpus id at/above the offset while
     # Spark kept it (r8 ADVICE — the new-batch guard alone misses this).
     corpus = docs.filter(F.col("doc_id") % 10 == 0).select(
-        _guard_below_twin_offset(F.col("doc_id")).alias("doc_id"), "text"
+        F.expr(_guard_below_twin_offset()).alias("doc_id"), "text"
     )
     # the arriving batch carries footer twins of indexed corpus docs
     # (doc_id%30==0 → always a corpus doc), so the cross-side probe
     # provably fires at every SF
     new = docs.filter(F.col("doc_id") % 10 == 5).select(
-        _guard_below_twin_offset(F.col("doc_id")).alias("doc_id"), "text"
+        F.expr(_guard_below_twin_offset()).alias("doc_id"), "text"
     ).unionByName(
         corpus.filter(F.col("doc_id") % 30 == 0).select(
             (F.col("doc_id") + _TWIN_DOC_OFFSET).alias("doc_id"),
@@ -1172,15 +1116,9 @@ def d10_exact_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", tokens(F.col("text")).alias("t"))
     # positional grams: ONE bound token array (t is a projected column,
     # the r3 lambda-binding lesson), 1-based starts to match the oracle
-    grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, greatest(size(t) - {_SPAN_N - 1}, 0)), "
-                f"s -> struct(s as s, concat_ws(' ', slice(t, s, {_SPAN_N})) as g))"
-            )
-        ).alias("sg"),
-    ).select("doc_id", F.col("sg.s").alias("s"), F.col("sg.g").alias("g"))
+    grams = toks.selectExpr(
+        "doc_id", f"posexplode({grams_sql('t', _SPAN_N)}) AS (s0, g)"
+    ).selectExpr("doc_id", "s0 + 1 AS s", "g")
     dup = (
         grams.groupBy("g")
         .agg(F.countDistinct("doc_id").alias("nd"))
@@ -1277,9 +1215,8 @@ def d11_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = fan_out_small_input(load_table(spark, "documents", sf_dir))
     grams = (
-        docs.select(
-            "doc_id", "source", F.explode(shingles(F.col("text"), _OVL_N)).alias("gram")
-        )
+        docs.selectExpr("doc_id", "source", "split(text, ' ') AS t")
+        .selectExpr("doc_id", "source", f"explode({grams_sql('t', _OVL_N)}) AS gram")
         .distinct()
         # three consumers below (gsrc twice via a/b, dochits) — pay the
         # explode+distinct shuffle once
@@ -1478,15 +1415,9 @@ def d13_intradoc_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("text"),
     )
     toks = salted.select("doc_id", tokens(F.col("text")).alias("t"))
-    grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, greatest(size(t) - {_INTRA_N - 1}, 0)), "
-                f"s -> struct(s as s, concat_ws(' ', slice(t, s, {_INTRA_N})) as g))"
-            )
-        ).alias("sg"),
-    ).select("doc_id", F.col("sg.s").alias("s"), F.col("sg.g").alias("g"))
+    grams = toks.selectExpr(
+        "doc_id", f"posexplode({grams_sql('t', _INTRA_N)}) AS (s0, g)"
+    ).selectExpr("doc_id", "s0 + 1 AS s", "g")
     firsts = grams.groupBy("doc_id", "g").agg(F.min("s").alias("first_s"))
     # every join below is doc_id-keyed and BOTH sides are corpus-sized:
     # pin sort-merge so neither the optimizer's static size estimate
@@ -1605,7 +1536,7 @@ def d14_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash — estimator and truth measure one metric. Sizes come from
     # their own table, not pair_overlaps: a candidate with zero shingle
     # overlap has no overlap row, yet its true Jaccard (0) is reported
-    toks = sample.select("doc_id", F.explode(shingles(F.col("text"))).alias("tok")).distinct()
+    toks = sample.selectExpr("doc_id", f"explode({_SHINGLES_SQL}) AS tok").distinct()
     sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
     ta, tb = toks.alias("ta"), toks.alias("tb")
     inter = (
@@ -2201,22 +2132,10 @@ def d27_shingle_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(persist_once)
     )
 
-    def grams(col: str, n: int):
-        # n-gram strings from ONE bound token array (the r3 lesson)
-        t = F.col(col)
-        return F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(t) - (n - 1), F.lit(0))),
-            lambda i: F.array_join(F.slice(t, i, n), " "),
-        )
-
     outs = []
     for n in _D27_NS:
-        ga = docs.select(
-            "doc_id", F.explode(grams("ta", n)).alias("gram")
-        ).distinct()
-        gb = docs.select(
-            "doc_id", F.explode(grams("tb", n)).alias("gram")
-        ).distinct()
+        ga = docs.selectExpr("doc_id", f"explode({grams_sql('ta', n)}) AS gram").distinct()
+        gb = docs.selectExpr("doc_id", f"explode({grams_sql('tb', n)}) AS gram").distinct()
         na = ga.groupBy("doc_id").agg(F.count("*").alias("ca"))
         nb = gb.groupBy("doc_id").agg(F.count("*").alias("cb"))
         inter = (
@@ -2484,7 +2403,7 @@ def d28b_transitivity_at_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = load_table(spark, "documents", sf_dir).filter(F.col("doc_id") % 10 == 0)
     guarded = base.select(
-        _guard_below_twin_offset(F.col("doc_id")).alias("doc_id"), "text"
+        F.expr(_guard_below_twin_offset()).alias("doc_id"), "text"
     )
     sel = base.filter(F.col("doc_id") % 30 == 0)
     twins = sel.select(
@@ -2748,9 +2667,7 @@ def d5b_lsh_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # survives (guarding before the twin filter wrapped vec_id in a
     # CASE and blocked pushdown).
     raw = load_table(spark, "embeddings", sf_dir)
-    guarded = _guard_below_twin_offset(
-        F.col("vec_id"), _D5B_TWIN_OFFSET, "vec_id", "_D5B_TWIN_OFFSET"
-    )
+    guarded = F.expr(_guard_below_twin_offset("vec_id", _D5B_TWIN_OFFSET, "_D5B_TWIN_OFFSET"))
     emb = raw.select(
         guarded.alias("vec_id"), as_double("embedding").alias("embedding")
     )

@@ -260,3 +260,14 @@ def test_two_level_assignment_agrees_with_brute_force(spark):
     assert set(two) == set(brute)  # every vector assigned exactly once
     agree = sum(1 for v, c in two.items() if brute[v] == c)
     assert agree / len(two) >= 0.8, f"agreement {agree}/{len(two)}"
+
+
+def test_v34_nmi_identities(spark):
+    from ai_iceberg_demo_spark.vector.clustering import v34_cluster_label_nmi
+
+    r = v34_cluster_label_nmi(spark, SF_DIR).toPandas().iloc[0]
+    assert 0 <= r.nmi <= 1
+    assert r.mutual_information <= min(r.h_clusters, r.h_labels) + 1e-9
+    assert abs(
+        r.nmi - r.mutual_information / ((r.h_clusters + r.h_labels) / 2)
+    ) < 1e-4

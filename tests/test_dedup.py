@@ -1,3 +1,9 @@
+"""Dedup operators (vector/dedup.py): planted-signal and consistency
+properties beyond the oracle hash."""
+
+from __future__ import annotations
+
+from tests.conftest import SF_DIR
 
 
 def test_intradoc_span_dedup_removes_planted_stutter(spark):
@@ -50,3 +56,25 @@ def test_documents_fixture_has_unique_doc_ids(spark):
     docs = load_table(spark, "documents", SF_DIR)
     n, n_ids = docs.agg(PF.count("*"), PF.countDistinct("doc_id")).first()
     assert n > 0 and n == n_ids
+
+
+def test_d27_detection_degrades_with_shingle_size(spark):
+    from ai_iceberg_demo_spark.vector.dedup import d27_shingle_sensitivity
+
+    out = d27_shingle_sensitivity(spark, SF_DIR).toPandas().sort_values("shingle_n")
+    assert (out.mean_jaccard.diff().dropna() <= 1e-9).all(), (
+        "larger shingles must not raise Jaccard under a fixed mutation"
+    )
+    assert out.n_pairs.nunique() == 1  # same planted pairs at every n
+    assert (out.n_detected <= out.n_pairs).all()
+
+
+def test_d28_counts_are_consistent(spark):
+    from ai_iceberg_demo_spark.vector.dedup import d28_transitivity_audit
+
+    r = d28_transitivity_audit(spark, SF_DIR).toPandas().iloc[0]
+    assert r.n_closed <= r.n_paths2
+    assert abs(
+        r.violation_rate - (1 - r.n_closed / r.n_paths2 if r.n_paths2 else 0)
+    ) < 1e-3
+    assert r.n_edges >= 0 and r.n_paths2 >= 0

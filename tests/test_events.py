@@ -162,3 +162,22 @@ def test_drift_card_reflects_planted_drift_and_matches_parts(spark):
     ks_rows = events.t113_ks_test(spark, SF_DIR).collect()
     assert abs(card[("ks", "max_ks_d")] - round(max(r.ks_d for r in ks_rows) + 0.0, 6)) < 1e-9
     assert card[("ks", "n_types")] == float(len(ks_rows))
+
+
+def test_t94_null_never_stops_and_planted_stays_stopped(spark):
+    from ai_iceberg_demo_spark.streaming.events import t94_msprt_sequential
+
+    out = t94_msprt_sequential(spark, SF_DIR).toPandas()
+    null = out[out.scenario == "null"]
+    planted = out[out.scenario == "planted"].sort_values("day")
+    assert not null.stopped_by_today.any()
+    assert planted.stopped_by_today.any()
+    # always-valid p is non-increasing (running-max construction)
+    for scen in ("null", "planted"):
+        p = out[out.scenario == scen].sort_values("day").always_valid_p
+        assert (p.diff().dropna() <= 1e-12).all()
+    # once stopped, stays stopped
+    s = planted.stopped_by_today.tolist()
+    assert s == sorted(s, key=lambda x: (x,)) or s.index(True) >= 0
+    first = s.index(True)
+    assert all(s[first:])

@@ -745,18 +745,20 @@ def test_lsh_rows_hashed_on_the_driver_equal_a_build(spark):
         rag.drop_vector_index(name)
 
 
-@pytest.mark.parametrize("kind, copies", [("lsh", 16), ("ivf", 1)])
+@pytest.mark.parametrize("kind, copies", [("lsh", 8), ("ivf", 1)])
 def test_index_writes_count_each_id_once(spark, kind, copies):
     """An id repeated within one batch counts once, in an upsert and in
     a delete, and a null id in a delete batch is ignored. An upsert
-    appends each copy of a repeated id as it always has: LSH stores
-    both copies' L = 8 rows, IVF's cell assignment groups by vec_id
-    into one row."""
+    appends the first copy of a repeated id only (LSH: its L = 8 rows,
+    IVF: one row), so a search for it returns it once."""
     rag, name, emb = _small_index(spark, kind)
     one = emb.filter(F.col("vec_id") == 450).select("vec_id", "embedding")
     try:
         assert rag.upsert_vector_index(one.unionAll(one), name) == 1
         assert spark.table(name).filter(F.col("vec_id") == 450).count() == copies
+        qv = one.select(F.col("embedding").alias("qvec"))
+        hits = [r["vec_id"] for r in rag.search_similar_results(qv, k=3, min_score=-1.0, index=name).collect()]
+        assert hits[0] == 450 and hits.count(450) == 1
         victims = spark.createDataFrame([(7,), (7,), (None,)], "vec_id long")
         assert rag.delete_vectors(victims, name) == 1
         assert rag.delete_vectors(victims, name) == 0

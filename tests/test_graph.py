@@ -212,3 +212,12 @@ def test_g8_components_are_exactly_the_user_chains(spark):
         truth.setdefault(r["user_id"], []).append(r["event_id"])
     want = {e: min(es) for es in truth.values() for e in es}
     assert got == want
+
+
+def test_g7_assortativity_is_a_correlation(spark):
+    from ai_iceberg_demo_spark.operators.graph import g7_degree_assortativity
+
+    r = g7_degree_assortativity(spark, SF_DIR).toPandas().iloc[0]
+    assert -1.0 <= r.assortativity <= 1.0
+    assert r.n_edges > 0
+    assert bool(r.neutral_as_expected)

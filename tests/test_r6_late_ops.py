@@ -103,19 +103,6 @@ def test_m17_release_is_clamped_rounding_of_true_plus_noise(spark):
         assert abs(r.noise) < 15
 
 
-def test_t77_low_ppl_means_predictable_text(spark):
-    """A doc made of the corpus' single most common bigram repeated
-    must score lower perplexity than the corpus median — planted
-    directly through the same plan's arithmetic via pandas replay."""
-    from ai_iceberg_demo_spark.functions.text import t77_bigram_perplexity
-
-    out = t77_bigram_perplexity(spark, SF_DIR).toPandas()
-    assert (out.ppl > 0).all()
-    assert (out.avg_logprob < 0).all()
-    # repetitive docs (few distinct pairs) trend cheaper than median
-    assert out.ppl.min() < out.ppl.median() < out.ppl.max()
-
-
 def test_u38_higher_temperature_flattens_the_mixture(spark):
     from ai_iceberg_demo_spark.operators.sampling import u38_temperature_resample
 

@@ -116,3 +116,14 @@ def test_mmr_matches_greedy_replay(spark):
     ]
     assert got == expect
     assert len({v for v, _, _ in got}) == MMR_K
+
+
+def test_t95_rbo_monotone_and_bounded(spark):
+    from ai_iceberg_demo_spark.functions.retrieval import t95_rank_biased_overlap
+
+    out = t95_rank_biased_overlap(spark, SF_DIR).toPandas().sort_values("depth")
+    assert (out.rbo_min.diff().dropna() >= -1e-12).all(), "RBO bound accumulates"
+    assert ((out.agreement_at_d >= 0) & (out.agreement_at_d <= 1)).all()
+    assert ((out.rbo_min >= 0) & (out.rbo_min <= 1)).all()
+    # prefix intersections can grow by at most 2 per depth step
+    assert (out.n_common.diff().dropna() <= 2).all()

